@@ -347,8 +347,12 @@ def main() -> int:
                 queries["scan_parquet"], "__wrapped__", queries["scan_parquet"]
             )
             _warm(spark, SF_DIR).count()
-        except Exception:
-            pass
+        except Exception as exc:
+            print(
+                f"bench: sweep pre-warm (scan_parquet) failed: "
+                f"{type(exc).__name__}: {exc}".splitlines()[0],
+                file=sys.stderr,
+            )
         sweep: dict[str, float] = {}
         for name in sorted(queries):
             fresh = getattr(queries[name], "__wrapped__", queries[name])

@@ -560,18 +560,26 @@ def _side_value(bc, key):
 # applicationId so a restarted session never sees a stale handle; inserts
 # drop entries of other (stopped) applications, mirroring swap_persist,
 # so cycling SparkSessions can't pin dead broadcasts until FIFO eviction.
-_BC_CACHE: dict[tuple, object] = {}
+_BC_CACHE: dict[tuple, tuple] = {}  # -> (Broadcast, side rows)
 _BC_CACHE_MAX = 4
 
 
 def _side_broadcast(spark, sf_dir: str, emb) -> tuple:
-    """(Broadcast[(ids, f32 matrix)], side_key) — cached per session+corpus.
+    """(Broadcast[(ids, matrix)], side_key) — see _side_broadcast_n."""
+    return _side_broadcast_n(spark, sf_dir, emb)[:2]
+
+
+def _side_broadcast_n(spark, sf_dir: str, emb) -> tuple:
+    """(Broadcast[(ids, matrix)], side_key, side rows) — cached per
+    session+corpus.
 
     A hit skips both the parquet read and the broadcast publish: the key
     (path, mtime_ns, nrows) is computed from the footer + stat alone, the
     same identity _broadcast_side stamps, so a rewritten corpus misses.
-    side_key None (toPandas fallback: corpus identity unprovable) always
-    builds a fresh broadcast."""
+    The side row count (vectors left after the NULL/modal-dim filter) is
+    cached beside the handle so kernels can size their tasks without
+    touching the data. side_key None (toPandas fallback: corpus identity
+    unprovable) always builds a fresh broadcast."""
     try:
         import os
 
@@ -581,24 +589,22 @@ def _side_broadcast(spark, sf_dir: str, emb) -> tuple:
         n = parquet_num_rows(path)
         if n is not None and n <= _MAX_BROADCAST_VECTORS:
             side_key = (os.path.abspath(path), os.stat(path).st_mtime_ns, int(n))
-            ck = (spark.sparkContext.applicationId, side_key)
-            bc = _BC_CACHE.get(ck)
-            if bc is not None:
-                return bc, side_key
+            hit = _BC_CACHE.get((spark.sparkContext.applicationId, side_key))
+            if hit is not None:
+                return hit[0], side_key, hit[1]
     except Exception:
         pass
     b_ids, b_mat, side_key = _broadcast_side(spark, sf_dir, emb)
-    if side_key is None:
-        return spark.sparkContext.broadcast((b_ids, b_mat)), None
-    app = spark.sparkContext.applicationId
-    ck = (app, side_key)
     bc = spark.sparkContext.broadcast((b_ids, b_mat))
+    if side_key is None:
+        return bc, None, len(b_ids)
+    app = spark.sparkContext.applicationId
     for k in [k for k in _BC_CACHE if k[0] != app]:
         _BC_CACHE.pop(k, None)
     if len(_BC_CACHE) >= _BC_CACHE_MAX:
         _BC_CACHE.pop(next(iter(_BC_CACHE)))
-    _BC_CACHE[ck] = bc
-    return bc, side_key
+    _BC_CACHE[(app, side_key)] = (bc, len(b_ids))
+    return bc, side_key, len(b_ids)
 
 
 def _broadcast_side(spark, sf_dir: str, emb) -> tuple:
@@ -611,7 +617,10 @@ def _broadcast_side(spark, sf_dir: str, emb) -> tuple:
     exact) — while an array<double> source stays f64 (narrowing it would
     quantize values and break bit-identity with the oracle's f64 dots).
     Every kernel consuming this side is dtype-agnostic (numpy upcasts at
-    the refine gather). cache_key identifies the corpus bytes
+    the refine gather). Rows are sorted by vec_id, so in the triangle
+    kernels (_triangle_pairs) position order matches a_id < b_id order
+    and each tile only multiplies against columns from its own start
+    onward. cache_key identifies the corpus bytes
     (path, mtime_ns, nrows) for the per-worker _SIDE_CACHE; None when the
     source isn't a stat-able path (toPandas fallback) — then every task
     loads bc.value as before.
@@ -655,6 +664,7 @@ def _broadcast_side(spark, sf_dir: str, emb) -> tuple:
             lens = pc.list_value_length(t.column("embedding"))
             modal = pc.mode(lens, n=1).to_pylist()[0]["mode"]
             t = t.filter(pc.equal(lens, modal))
+        t = t.sort_by("vec_id")  # position order == id order (see docstring)
         b_ids = t.column("vec_id").to_numpy()
         flat = t.column("embedding").combine_chunks().flatten().to_numpy(
             zero_copy_only=False
@@ -693,6 +703,7 @@ def _broadcast_side(spark, sf_dir: str, emb) -> tuple:
             # same contract as the pyarrow fast path above
             lens = side["embedding"].map(len)
             side = side[lens == lens.mode().min()]
+        side = side.sort_values("vec_id", kind="stable")
         b_ids = side["vec_id"].to_numpy()
         from pyspark.sql.types import FloatType
 
@@ -705,6 +716,132 @@ def _broadcast_side(spark, sf_dir: str, emb) -> tuple:
         )
         key = None
     return b_ids, b_mat, key
+
+
+# Task sizing for the upper-triangle pair kernels (_triangle_pairs). A
+# Python task has a fixed cost that dwarfs small kernels: on a 4-vCPU
+# host a pass-through mapInArrow costs ~0.26 s of process-tree CPU over 1
+# task and ~0.98 s over 4, i.e. ~0.24 s per extra task before the UDF
+# runs (PySpark re-reads pyspark.zip on every task; docs/SCALE.md rule 2).
+# The tiled triangle kernel scores ~70M pairs/s (n = 2000, dim 64: 2M
+# pairs in ~28 ms). A task is split off only once it carries as much
+# kernel work as its own fixed cost: 0.24 s x 70M pairs/s ~ 16M pairs.
+_PAIRS_PER_TASK = 1 << 24
+# Cells of one tile's similarity matrix: 4 MiB as f32 (8 MiB for an f64
+# source). Not below _MAX_BROADCAST_VECTORS, so one full row always fits.
+# Measured at n = 2000: 2^18..2^20 cells run the triangle in 28-42 ms,
+# one 4M-cell tile (the full square) in 51-55 ms.
+_TILE_CELLS = 1 << 20
+
+
+def _pair_width(spark, n: int) -> int:
+    """Tasks for the n(n-1)/2-pair triangle: one per _PAIRS_PER_TASK
+    pairs, at least 1, at most defaultParallelism."""
+    pairs = n * (n - 1) // 2
+    return max(1, min(pairs // _PAIRS_PER_TASK, spark.sparkContext.defaultParallelism))
+
+
+def _triangle_bounds(n: int, width: int) -> list[int]:
+    """Row bounds [0, ..., n] cutting the strict upper triangle of an n x n
+    pair matrix into width blocks of equal pair count (each within one
+    row's pairs, n - 1, of n(n-1)/2/width). Row i holds n - 1 - i pairs."""
+    import numpy as np
+
+    rows = np.arange(n, dtype=np.int64)
+    before = rows * (n - 1) - rows * (rows - 1) // 2  # pairs in rows < i
+    total = n * (n - 1) // 2
+    cuts = np.searchsorted(before, [total * b // width for b in range(1, width)])
+    return [0, *(int(c) for c in cuts), n]
+
+
+def _triangle_pairs(spark, sf_dir: str, floor, keep, limit=None) -> DataFrame:
+    """(a_id, b_id, sim) pairs, a_id < b_id, of the embedding vectors by a
+    blocked upper-triangle matmul against the broadcast side.
+
+    Blocks: spark.range(width) partitions, width = _pair_width (one task
+    at the bench corpus); block b owns rows _triangle_bounds[b:b+2] of the
+    id-sorted side matrix. Tiles: inside a block, rows are walked in tiles
+    of at most _TILE_CELLS cells, each multiplied only against the columns
+    from its own start onward, so below the diagonal only each tile's own
+    diagonal square is computed (and masked). Per-task `sims` memory is
+    bounded by _TILE_CELLS x 4 B (f32 source; 8 B for f64) whatever n is:
+    a tile has at least one row, and the broadcast gate keeps a row
+    (n <= _MAX_BROADCAST_VECTORS) within _TILE_CELLS.
+
+    Per tile: f32 select (cells >= floor(flat tile sims); masked cells
+    are -inf), exact f64 refine of those candidates (the f32->f64 upcast
+    is exact), then keep(exact) -> (mask, published sims). limit=k merges
+    a block's tile results with the (-sim, a_id, b_id) lexsort and emits
+    its first k; limit None emits every kept pair, tile by tile.
+
+    floor/keep must be closures that need only numpy: the kernel is
+    shipped by value, and the engine package is imported on the worker
+    only for the optional per-process side cache."""
+    import numpy as np
+    import pyarrow as pa
+
+    from engine.tables import vectors
+
+    emb = vectors(spark, sf_dir)
+    # side_key lets reused workers skip re-deserializing the side per task
+    bc, side_key, n = _side_broadcast_n(spark, sf_dir, emb)
+    width = _pair_width(spark, n)
+    bounds = _triangle_bounds(n, width)
+    tile_cells = _TILE_CELLS
+
+    def emit(a, b, v):
+        return pa.RecordBatch.from_pydict(
+            {
+                "a_id": pa.array(a, pa.int64()),
+                "b_id": pa.array(b, pa.int64()),
+                "sim": pa.array(v, pa.float64()),
+            }
+        )
+
+    def kernel(batches):
+        try:  # per-worker-process cache (see _side_value)
+            from engine.llmops import _side_value
+
+            ids, m = _side_value(bc, side_key)
+        except ImportError:
+            ids, m = bc.value
+        n = len(ids)
+        for rb in batches:
+            for blk in rb.column("id").to_pylist():
+                parts = []
+                s, hi = min(bounds[blk], n), min(bounds[blk + 1], n)
+                while s < hi:
+                    e = min(hi, s + max(1, tile_cells // (n - s)))
+                    sims = m[s:e] @ m[s:].T
+                    # a_id < b_id. ids are sorted, so a_id >= b_id holds
+                    # only left of the end of the tile's last id run.
+                    w = int(np.searchsorted(ids, ids[e - 1], "right")) - s
+                    sims[:, :w][ids[s:e, None] >= ids[None, s : s + w]] = -np.inf
+                    fs = sims.ravel()
+                    ai, bi = np.unravel_index(
+                        np.flatnonzero(fs >= floor(fs)), sims.shape
+                    )
+                    ai, bi = ai + s, bi + s
+                    exact = np.einsum(
+                        "ij,ij->i",
+                        m[ai].astype(np.float64),
+                        m[bi].astype(np.float64),
+                    )
+                    sel, vals = keep(exact)
+                    part = (ids[ai[sel]], ids[bi[sel]], vals[sel])
+                    if limit is None:
+                        yield emit(*part)
+                    else:
+                        parts.append(part)
+                    s = e
+                if parts:
+                    a, b, v = (np.concatenate(c) for c in zip(*parts))
+                    order = np.lexsort((b, a, -v))[:limit]
+                    yield emit(a[order], b[order], v[order])
+
+    return spark.range(0, width, 1, width).mapInArrow(
+        kernel, "a_id long, b_id long, sim double"
+    )
 
 
 def _dot(a, b):  # JVM-side higher-order dot product, float→double first
@@ -734,13 +871,11 @@ def _dot(a, b):  # JVM-side higher-order dot product, float→double first
 )
 def sim_topk_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-10 most-similar embedding pairs by cosine (≡ dot, vectors are
-    L2-normalized). Blocked matrix multiply: one side is broadcast as a
-    float32 matrix (source precision; r11 — halves the worker-side
-    deserialization, and a per-worker cache skips it after the first
-    task), each Arrow batch of the other side does a single BLAS
-    matmul + per-block top-k (ties at the k-th rounded sim all kept), then a
-    global top-k merges ≤ k rows per block. ~60× faster than evaluating the
-    dot as a per-pair higher-order function.
+    L2-normalized). Upper-triangle tiled matmul against the broadcast side
+    (_triangle_pairs): one Python task at the bench corpus, each tile keeps
+    its top-k (ties at the k-th rounded sim all kept), each block emits
+    ≤ k rows, and a global top-k merges them. ~60× faster than evaluating
+    the dot as a per-pair higher-order function.
 
     Rounded sim IS the sort key (with id tie-breaks) so the top-10 cut is
     identical across engines.
@@ -749,89 +884,32 @@ def sim_topk_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     + flat partition finds a candidate superset (k-th value minus a 2e-4
     margin — covering the 5e-5 rounding-tie window plus f32 dot error ~1e-6
     on unit vectors); exact f64 dots + rounding run only on those few
-    candidates. This replaces the old full-matrix np.round (94 ms) + 2M-pair
-    gather/partition (~130 ms) with a 14 ms f32 partition. I/O is mapInArrow
-    (zero pandas materialization on either side of the Python boundary).
+    candidates. I/O is mapInArrow (zero pandas materialization on either
+    side of the Python boundary).
 
     100 TB: broadcasting one full side stops scaling past ~1M vectors; the
     same per-block kernel then runs over LSH/IVF candidate buckets instead
     (engine.simsearch), keeping this exact path as the per-bucket inner loop.
     """
     import numpy as np
-    import pyarrow as pa
-
-    from engine.tables import vectors
 
     k = 10
-    emb = vectors(spark, sf_dir)
-    # Broadcast side: the full id+matrix pair (float32 — source precision —
-    # once, not per-pair), size-gated + pyarrow-direct via the shared helper;
-    # side_key lets reused workers skip re-deserializing it per task.
-    bc, side_key = _side_broadcast(spark, sf_dir, emb)
 
-    # Probe side = block index, not a second scan (r11): both sides of the
-    # pair space are the SAME ≤1M-row table (the broadcast gate bounds it),
-    # so re-scanning + repartition-shuffling the probe rows bought nothing —
-    # every task already holds the full matrix. Partitioning spark.range(
-    # width) instead drops the parquet scan and the spread_cpu exchange from
-    # the job (2 stages → 1 + TakeOrdered), and each task slices its probe
-    # block out of the cached side. (Old shape for reference: spread_cpu
-    # width 4 over emb, r03 sweep 2→217 ms, 4→206 ms, 8→232 ms, 16→317 ms.)
-    width = 4
+    def floor(fs):
+        lowest = np.finfo(fs.dtype).min  # excludes the -inf masked cells
+        if fs.size <= k:
+            return lowest
+        vk = np.partition(fs, fs.size - k)[fs.size - k]
+        return max(vk - 2e-4, lowest)
 
-    def block_topk(batches):
-        try:  # per-worker-process cache (engine importable on all our runners)
-            from engine.llmops import _side_value
+    def keep(exact):
+        vals = np.round(exact, 4)
+        if len(vals) <= k:
+            return np.ones(len(vals), bool), vals
+        # keep every pair tied with the k-th sim
+        return vals >= np.sort(vals)[len(vals) - k], vals
 
-            ids_all, m32 = _side_value(bc, side_key)
-        except ImportError:
-            ids_all, m32 = bc.value
-        n = len(ids_all)
-        for rb in batches:
-            for blk in rb.column("id").to_pylist():
-                lo = n * blk // width
-                hi = n * (blk + 1) // width
-                if lo >= hi:
-                    continue
-                a_ids = ids_all[lo:hi]
-                a32 = m32[lo:hi]
-                sims = a32 @ m32.T
-                sims[a_ids[:, None] >= ids_all[None, :]] = -2.0  # a_id < b_id
-                fs = sims.ravel()
-                if fs.size > k:
-                    vk = np.partition(fs, fs.size - k)[fs.size - k]
-                    cand = np.flatnonzero(fs >= max(vk - 2e-4, -1.0))
-                else:
-                    cand = np.flatnonzero(fs > -2.0)
-                if len(cand) == 0:
-                    continue
-                ai, bi = np.unravel_index(cand, sims.shape)
-                # f32→f64 upcast is exact (parquet column is array<float>),
-                # so refine dots are bit-identical to a broadcast f64 matrix.
-                vals = np.round(
-                    np.einsum(
-                        "ij,ij->i",
-                        a32[ai].astype(np.float64),
-                        m32[bi].astype(np.float64),
-                    ),
-                    4,
-                )
-                if len(vals) > k:  # keep every pair tied with the k-th sim
-                    rk = np.sort(vals)[len(vals) - k]
-                    keep = vals >= rk
-                    ai, bi, vals = ai[keep], bi[keep], vals[keep]
-                order = np.lexsort((ids_all[bi], a_ids[ai], -vals))[:k]
-                yield pa.RecordBatch.from_pydict(
-                    {
-                        "a_id": pa.array(a_ids[ai][order], pa.int64()),
-                        "b_id": pa.array(ids_all[bi][order], pa.int64()),
-                        "sim": pa.array(vals[order], pa.float64()),
-                    }
-                )
-
-    out = spark.range(0, width, 1, width).mapInArrow(
-        block_topk, "a_id long, b_id long, sim double"
-    )
+    out = _triangle_pairs(spark, sf_dir, floor, keep, limit=k)
     return out.orderBy(F.col("sim").desc(), "a_id", "b_id").limit(k)
 
 

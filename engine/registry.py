@@ -209,62 +209,64 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 # pre-registered rotation — verified by re-running the script, not by
 # pasting). tests/test_registry_window.py pins this list == policy
 # output; a hand-edit that diverges fails the suite.
-# r15 expectation: next_window.py 15 → the remaining r06 greens plus
-# the oldest r07 greens (re-run the script at the boundary, don't
-# paste — a red r14 key re-enters and displaces rotation slots).
-_WINDOW_ROUND = 14  # CORRECTNESS_r{N}.json this window is aimed at
+# r15: the window was not swapped, so CORRECTNESS_r15 re-checked the
+# r14 keys (50/50 green).
+# r16 window (this list): `python scripts/next_window.py 16` — the
+# remaining r06/r07 greens, oldest-green-first, alphabetical within a
+# tier. Re-run the script at each boundary rather than hand-editing.
+_WINDOW_ROUND = 16  # CORRECTNESS_r{N}.json this window is aimed at
 
 _ATTEST_FIRST = [
-    "scan_partition_prune",
-    "scan_python_stream_source",
-    "sink_compression_codecs",
-    "sort_multi_nulls",
-    "sql_cache_table",
-    "sql_ddl_insert_view",
-    "sql_parameterized_exec",
-    "text_perplexity_ngram",
-    "text_quality_logreg",
-    "text_zipf_fit",
-    "udaf_arrow_group",
-    "win_anomaly_zscore",
-    "win_ewma_smoothing",
-    "win_gaps_islands",
-    "agg_decimal_exact",
-    "dedup_exact_embedding",
-    "dedup_pair_explain",
-    "emb_isotropy_audit",
-    "emb_norm_profile",
-    "emb_outlier_distance",
-    "emb_random_projection_jl",
-    "graph_bfs_hops",
-    "join_dynamic_partition_prune",
-    "multimodal_chunk_fingerprint",
-    "multimodal_decode_pipeline",
-    "multimodal_signal_energy",
-    "pipeline_ann_index_build",
-    "pipeline_dedup_cascade",
-    "pipeline_incremental_refresh",
-    "pipeline_pretrain_mix",
-    "pipeline_rag_index",
-    "pipeline_stream_serving",
-    "plan_analyze_stats",
-    "plan_exchange_reuse",
-    "scan_binary_files",
-    "scan_csv_schema_drift",
-    "scan_json_corrupt_permissive",
-    "scan_metadata_columns",
-    "scan_parquet_nested_pushdown",
-    "sim_eval_ndcg",
-    "sim_hybrid_rrf_fusion",
-    "sink_python_datasource",
-    "sql_pivot_clause",
-    "sql_unpivot_clause",
-    "stream_checkpoint_exactly_once",
-    "stream_event_time_timeout",
-    "text_bm25_rank",
-    "text_chat_template_render",
-    "text_cooccurrence_pmi",
-    "text_eval_token_f1",
+    "text_gopher_quality_rules",
+    "text_hapax_ratio",
+    "text_html_strip",
+    "text_ngram_novelty",
+    "text_source_vocab_jaccard",
+    "text_top_bigrams_per_lang",
+    "tpch_q11_important_stock_adapted",
+    "tpch_q12_late_shipping_adapted",
+    "tpch_q20_excess_supplier_adapted",
+    "tpch_q21_waiting_adapted",
+    "tpch_q2_min_cost_adapted",
+    "udf_mapinpandas_stream",
+    "udf_python_arrow_scalar",
+    "udtf_table_argument",
+    "agg_ab_ttest",
+    "agg_benford_digit_audit",
+    "agg_covariance_matrix",
+    "agg_dau_mau",
+    "agg_gini_concentration",
+    "agg_grouping_id",
+    "agg_histogram_2d",
+    "agg_hour_dow_heatmap",
+    "agg_listagg_native",
+    "agg_mad_robust",
+    "agg_markov_transitions",
+    "agg_new_vs_returning",
+    "agg_percentile_cont_disc",
+    "agg_rate_smoothing",
+    "agg_rfm_segmentation",
+    "agg_seasonality_index",
+    "agg_share_of_parent",
+    "agg_skyline_pareto_frontier",
+    "agg_top_paths",
+    "agg_weighted_moments",
+    "emb_centroid_confusion",
+    "emb_cosine_histogram",
+    "emb_dim_variance_rank",
+    "etl_anomaly_iqr_fences",
+    "etl_attribution_last_touch",
+    "etl_checksum_reconcile",
+    "etl_conversion_latency",
+    "etl_golden_record",
+    "etl_incremental_agg_merge",
+    "etl_interval_audit",
+    "etl_multi_sink_fanout",
+    "etl_ohlc_resample",
+    "etl_partition_overwrite_dynamic",
+    "etl_retention_cohort",
+    "etl_shard_manifest",
+    "etl_surrogate_hash_keys",
 ]
 
 

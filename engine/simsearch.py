@@ -25,7 +25,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from engine.registry import query
-from engine.tables import load
 
 _COS_THRESH = 0.4  # corpus max pair-sim is 0.51; 0.4 keeps a small stable set
 
@@ -49,9 +48,9 @@ _COS_THRESH = 0.4  # corpus max pair-sim is 0.51; 0.4 keeps a small stable set
 )
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-duplicate pairs: cosine ≥ 0.4 (cosine ≡ dot on the
-    L2-normalized corpus). Blocked BLAS matmul per Arrow batch against a
-    broadcast matrix — same kernel as sim_topk_pairs but threshold-cut
-    instead of top-k, so output size is data-dependent and exact.
+    L2-normalized corpus). The same upper-triangle tiled matmul as
+    sim_topk_pairs (llmops._triangle_pairs) but threshold-cut instead of
+    top-k, so output size is data-dependent and exact.
 
     100 TB: swap the broadcast side for IVF buckets (sim_ann_ivf's layout)
     and run the identical block kernel per bucket. The broadcast side rides
@@ -65,59 +64,18 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     error on unit vectors); exact f64 dots decide the REAL >= thresh cut on
     the small candidate set, so the published sims are full-precision."""
     import numpy as np
-    import pyarrow as pa
 
-    from engine.llmops import _side_broadcast
-    from engine.tables import vectors
+    from engine.llmops import _triangle_pairs
 
-    emb = vectors(spark, sf_dir)
-    bc, side_key = _side_broadcast(spark, sf_dir, emb)
     thresh = _COS_THRESH
 
-    # Probe side = block index over the SAME gated ≤1M-row table (see
-    # sim_topk_pairs r11 note): partitioning spark.range(width) drops the
-    # second parquet scan and the spread_cpu exchange; each task slices its
-    # probe block from the per-worker-cached f32 side.
-    width = 8
+    def floor(fs):
+        return thresh - 2e-4
 
-    def block_pairs(batches):
-        try:  # per-worker cache of the f32 side (see llmops._side_value)
-            from engine.llmops import _side_value
+    def keep(exact):
+        return exact >= thresh, np.round(exact, 4)
 
-            ids_all, m32 = _side_value(bc, side_key)
-        except ImportError:
-            ids_all, m32 = bc.value
-        n = len(ids_all)
-        for rb in batches:
-            for blk in rb.column("id").to_pylist():
-                lo = n * blk // width
-                hi = n * (blk + 1) // width
-                if lo >= hi:
-                    continue
-                a_ids = ids_all[lo:hi]
-                a32 = m32[lo:hi]
-                sims = a32 @ m32.T
-                sims[a_ids[:, None] >= ids_all[None, :]] = -2.0  # a_id < b_id
-                ai, bi = np.nonzero(sims >= thresh - 2e-4)
-                # f32→f64 upcast is exact (source column is array<float>)
-                exact = np.einsum(
-                    "ij,ij->i",
-                    a32[ai].astype(np.float64),
-                    m32[bi].astype(np.float64),
-                )
-                keep = exact >= thresh
-                ai, bi, exact = ai[keep], bi[keep], exact[keep]
-                yield pa.RecordBatch.from_pydict(
-                    {
-                        "a_id": pa.array(a_ids[ai], pa.int64()),
-                        "b_id": pa.array(ids_all[bi], pa.int64()),
-                        "sim": pa.array(np.round(exact, 4), pa.float64()),
-                    }
-                )
-
-    return spark.range(0, width, 1, width).mapInArrow(
-        block_pairs, "a_id long, b_id long, sim double"
-    )
+    return _triangle_pairs(spark, sf_dir, floor, keep)
 
 
 @query(

@@ -5,11 +5,12 @@ increments (zero rows — artifact content unchanged), time refresh again.
 Any delta is pure increment-count overhead."""
 
 import shutil
+import os
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = "/root/testdata/sf0.1"
 

@@ -28,10 +28,11 @@ small scale; this script adds wall-clock numbers at larger N.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # AQE + skew thresholds scaled to local partition sizes. On a cluster the
 # defaults (256 MB threshold, 64 MB advisory) do the same thing to

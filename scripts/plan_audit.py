@@ -20,10 +20,11 @@ import sys
 import traceback
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-OUTDIR = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/plans/r14/audit"
+OUTDIR = sys.argv[2] if len(sys.argv) > 2 else os.path.join(ROOT, "plans", "r14", "audit")
 ONLY = set(sys.argv[3:])
 
 

@@ -7,9 +7,12 @@ version at 20M rows lives in scripts/aqe_skew_rehearsal.py (AQE off
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo/scripts")
+sys.path.insert(
+    0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts")
+)
 
 
 def test_aqe_splits_manufactured_skew_and_preserves_result(spark):

@@ -150,3 +150,147 @@ def test_broadcast_side_keeps_double_source_precision(spark, tmp_path):
     a = mat_f[np.argsort(ids_f)].astype(np.float64)
     b = mat_d[np.argsort(ids_d)]
     assert np.array_equal(a, b)
+
+
+# ---------------------------------------------------------------------------
+# upper-triangle pair kernel (_triangle_pairs): task sizing, block bounds,
+# tiling exactness
+# ---------------------------------------------------------------------------
+
+
+def _write_embeddings(out, ids, mat, order=None):
+    """embeddings.parquet in FIXTURES shape (vec_id, array<float>, label),
+    rows written in `order` (default: as given)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    order = np.arange(len(ids)) if order is None else order
+    out.mkdir(exist_ok=True)
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array(np.asarray(ids)[order], pa.int64()),
+                "embedding": pa.array(
+                    [r.tolist() for r in mat[order]], pa.list_(pa.float32())
+                ),
+                "label": pa.array(np.zeros(len(ids)), pa.int32()),
+            }
+        ),
+        str(out / "embeddings.parquet"),
+    )
+    return str(out)
+
+
+def _unit_rows(rng, n, dim):
+    import numpy as np
+
+    m = rng.standard_normal((n, dim)).astype(np.float32)
+    return m / np.linalg.norm(m, axis=1, keepdims=True)
+
+
+def test_sim_topk_pairs_one_task_at_bench_size(spark, tmp_path):
+    """n = 2000 (the bench corpus) is 2M pairs, below _PAIRS_PER_TASK: the
+    kernel runs as ONE Python task — each extra task costs more fixed
+    worker time than its share of the matmul."""
+    import numpy as np
+
+    from engine.registry import collect
+
+    sf = _write_embeddings(
+        tmp_path / "n2000", np.arange(2000), _unit_rows(np.random.default_rng(0), 2000, 8)
+    )
+    queries, _ = collect()
+    plan = (
+        queries["sim_topk_pairs"](spark, sf)._jdf.queryExecution().executedPlan().toString()
+    )
+    assert "MapInArrow" in plan, plan
+    assert "Range (0, 1, step=1, splits=1)" in plan, plan
+    assert plan.index("MapInArrow") < plan.index("Range (0, 1,"), plan
+
+
+@pytest.mark.parametrize("n", [0, 1, 2, 3, 10, 97, 1000, 2000])
+@pytest.mark.parametrize("width", [1, 2, 3, 4, 7, 8])
+def test_triangle_bounds_balance_pairs(n, width):
+    """Bounds cover [0, n), are monotone, and each block's pair count is
+    within one row's pairs (n - 1) of an equal share."""
+    from engine.llmops import _triangle_bounds
+
+    b = _triangle_bounds(n, width)
+    assert len(b) == width + 1 and b[0] == 0 and b[-1] == n
+    assert all(x <= y for x, y in zip(b, b[1:]))
+
+    def pairs(lo, hi):  # row i holds n - 1 - i pairs
+        return sum(n - 1 - i for i in range(lo, hi))
+
+    share = n * (n - 1) / 2 / width
+    for lo, hi in zip(b, b[1:]):
+        assert abs(pairs(lo, hi) - share) <= max(n - 1, 1), (n, width, b)
+
+
+def _tie_corpus(rng, n=90, dim=64):
+    """n unit vectors: 4 identical copies of one vector (6 pairs at sim
+    1.0), and 15 vectors c*e0 + s*e_j whose 105 pairs all tie at c^2 =
+    0.81, so the k=10 cut falls inside that tie; every other pair sits
+    well below. Tie members are spread over the whole id range."""
+    import numpy as np
+
+    m = _unit_rows(rng, n, dim)
+    hot = [5, 41, 77, 88]
+    m[hot] = m[hot[0]]
+    ties = [int(i) for i in np.linspace(0, n - 1, 15)]
+    ties = [i if i not in hot else i + 1 for i in ties]
+    c, s = np.float32(0.9), np.float32(np.sqrt(1 - 0.81))
+    for j, i in enumerate(ties):
+        m[i] = 0
+        m[i, 0], m[i, j + 1] = c, s
+    return m, ties
+
+
+@pytest.mark.parametrize("key", ["sim_topk_pairs", "dedup_embedding_cosine"])
+@pytest.mark.parametrize("corpus", ["ties", "shuffled"])
+def test_triangle_kernel_many_blocks_and_tiles_match_oracle(
+    spark, tmp_path, monkeypatch, key, corpus
+):
+    """Forcing several blocks and many small tiles must not change the
+    answer: the k-th sim ties cross tile and block boundaries, and the
+    shuffled corpus has non-contiguous vec_ids, rows out of id order and
+    two duplicate ids, one replayed with the same vector (its sim-1.0 self
+    pair must stay out: a_id < b_id) and one re-embedded."""
+    import duckdb
+    import numpy as np
+
+    import engine.llmops as llmops
+    from engine.registry import collect
+    from tests.conftest import assert_frames_match
+
+    rng = np.random.default_rng(11)
+    m, ties = _tie_corpus(rng)
+    n = len(m)
+    ids = np.arange(n) * 3
+    order = None
+    if corpus == "shuffled":
+        ids = rng.choice(10**6, size=n, replace=False)
+        ids[[10, 60]] = ids[[20, 70]]  # duplicate ids
+        m[10] = m[20]  # replayed: same id, same vector
+        order = rng.permutation(n)
+    sf = _write_embeddings(tmp_path / corpus, ids, m, order)
+
+    cells = 64
+    monkeypatch.setattr(llmops, "_PAIRS_PER_TASK", 1)
+    monkeypatch.setattr(llmops, "_TILE_CELLS", cells)
+    assert llmops._pair_width(spark, n) > 1  # several blocks
+    first_tile_rows = cells // n or 1
+    # the tie group's rows straddle many tiles, not one
+    assert max(ties) - min(ties) > 10 * first_tile_rows
+
+    queries, oracles = collect()
+    sp = queries[key].__wrapped__(spark, sf).toPandas()
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW embeddings AS SELECT * FROM '{sf}/embeddings.parquet'")
+    du = con.sql(oracles[key]).df()
+    con.close()
+    if key == "sim_topk_pairs":
+        # the cut really falls inside the 0.81 tie
+        assert (du["sim"] == 0.81).sum() == 4 and (du["sim"] == 1.0).sum() == 6
+    assert_frames_match(sp, du, key)
