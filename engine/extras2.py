@@ -21,13 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from engine.registry import query
-from engine.tables import load, sftag
-
-# stream_foreachbatch_upsert's deterministic replay fixture, one dir per
-# (events path, mtime_ns) per process — see the key's body (r15; the
-# r05 _LATE_SRC_CACHE precedent). Dirs come from scratch_dir, so the
-# process-exit sweep removes them.
-_FB_SRC_CACHE: dict[tuple, str] = {}
+from engine.tables import load, replay_fixture, sftag
 
 
 def _mg_partition_fn(k: int):
@@ -330,32 +324,17 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    from engine.streaming import read_events_stream
-
     state_dir = f"{tempfile.gettempdir()}/sg_fb_upsert_{sftag(sf_dir)}"
     shutil.rmtree(state_dir, ignore_errors=True)
-    # The three replay files are a deterministic function of the corpus —
-    # build once per (sf_dir, source identity) per process and reuse, the
-    # r05 _LATE_SRC_CACHE precedent stream_late_data already follows
-    # (r15: the rebuild was 3 sequential coalesce(1) jobs ≈ 1-2 s of
-    # every warm run, all fixture prep). Every timed run still executes a
-    # REAL streaming query: fresh checkpoint, fresh state table, real
-    # merges.
-    st = os.stat(f"{sf_dir}/events.parquet")
-    fb_key = (os.path.realpath(f"{sf_dir}/events.parquet"), st.st_mtime_ns)
-    src = _FB_SRC_CACHE.get(fb_key)
-    if src is None or not os.path.isdir(src):
-        src = scratch_dir(prefix=f"sg-fb-src-{sftag(sf_dir)}-")
-        e = load(spark, sf_dir, "events").select("event_id", "user_id")
-        for i in range(3):
-            part = e.filter(F.col("event_id") % 3 == i)
-            sub = scratch_dir(prefix=f"sg-fb-part{i}-")
-            part.coalesce(1).write.mode("overwrite").parquet(sub)
-            name = next(f for f in os.listdir(sub) if f.endswith(".parquet"))
-            dest = f"{src}/batch{i}.parquet"
-            os.rename(f"{sub}/{name}", dest)
-            os.utime(dest, (1_000_000 + i * 1000,) * 2)
-        _FB_SRC_CACHE[fb_key] = src
+    # The three replay files are fixture prep, built once per corpus file
+    # identity. Every timed run still executes a REAL streaming query:
+    # fresh checkpoint, fresh state table, real merges.
+    src = replay_fixture(
+        f"{sf_dir}/events.parquet",
+        "fb-src",
+        lambda: load(spark, sf_dir, "events").select("event_id", "user_id"),
+        [F.col("event_id") % 3 == i for i in range(3)],
+    )
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
         sp = batch_df.sparkSession

@@ -510,7 +510,7 @@ def minhash_near_pairs(d: DataFrame, detail: bool = False) -> DataFrame:
 _MAX_BROADCAST_VECTORS = 1_000_000  # float32 broadcast budget (~0.25 GB at dim 64)
 
 # Worker-process cache of deserialized broadcast sides, keyed by the
-# (path, mtime_ns, nrows) identity _broadcast_side stamps. PySpark's
+# (file_identity, nrows) key _broadcast_side stamps. PySpark's
 # worker re-registers each broadcast per TASK (a fresh Broadcast(path=…)
 # whose pickle is re-loaded on .value), so with python-worker reuse every
 # task of every collect() re-paid the full matrix deserialization — the
@@ -574,21 +574,19 @@ def _side_broadcast_n(spark, sf_dir: str, emb) -> tuple:
     session+corpus.
 
     A hit skips both the parquet read and the broadcast publish: the key
-    (path, mtime_ns, nrows) is computed from the footer + stat alone, the
+    (file_identity, nrows) is computed from the footer + stat alone, the
     same identity _broadcast_side stamps, so a rewritten corpus misses.
     The side row count (vectors left after the NULL/modal-dim filter) is
     cached beside the handle so kernels can size their tasks without
     touching the data. side_key None (toPandas fallback: corpus identity
     unprovable) always builds a fresh broadcast."""
     try:
-        import os
-
-        from engine.tables import parquet_num_rows
+        from engine.tables import file_identity, parquet_num_rows
 
         path = f"{sf_dir}/embeddings.parquet"
         n = parquet_num_rows(path)
         if n is not None and n <= _MAX_BROADCAST_VECTORS:
-            side_key = (os.path.abspath(path), os.stat(path).st_mtime_ns, int(n))
+            side_key = (file_identity(path), int(n))
             hit = _BC_CACHE.get((spark.sparkContext.applicationId, side_key))
             if hit is not None:
                 return hit[0], side_key, hit[1]
@@ -621,7 +619,7 @@ def _broadcast_side(spark, sf_dir: str, emb) -> tuple:
     kernels (_triangle_pairs) position order matches a_id < b_id order
     and each tile only multiplies against columns from its own start
     onward. cache_key identifies the corpus bytes
-    (path, mtime_ns, nrows) for the per-worker _SIDE_CACHE; None when the
+    (file_identity, nrows) for the per-worker _SIDE_CACHE; None when the
     source isn't a stat-able path (toPandas fallback) — then every task
     loads bc.value as before.
 
@@ -635,11 +633,9 @@ def _broadcast_side(spark, sf_dir: str, emb) -> tuple:
 
     path = f"{sf_dir}/embeddings.parquet"
     try:
-        import os
-
         import pyarrow.parquet as pq
 
-        from engine.tables import parquet_num_rows
+        from engine.tables import file_identity, parquet_num_rows
 
         n = parquet_num_rows(path)  # footer-only
         if n is None:
@@ -682,7 +678,7 @@ def _broadcast_side(spark, sf_dir: str, emb) -> tuple:
             if len(b_ids)
             else np.zeros((0, 0), dtype=dt)
         )
-        key = (os.path.abspath(path), os.stat(path).st_mtime_ns, int(n))
+        key = (file_identity(path), int(n))
     except RuntimeError:
         raise
     except Exception:

@@ -12,7 +12,6 @@ refresh is O(new × collisions), not O((old+new)²).
 
 from __future__ import annotations
 
-import atexit
 import contextlib
 import errno
 import fcntl
@@ -23,13 +22,11 @@ import tempfile
 import time
 import warnings
 
-from engine.tmpdirs import scratch_dir
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from engine.registry import query
-from engine.tables import load, sftag
+from engine.tables import fixture_dir, load
 
 
 # Above this many within-new near-dup pairs, components run distributed
@@ -230,62 +227,18 @@ def pipeline_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # The index is the PERSISTED state of the accepted corpus — in
     # production it outlives every refresh run and is only ever appended
-    # to. Model that here: build once per (corpus file identity) per
-    # process and reuse across invocations (bench warm runs, repeated
-    # driver checks), keyed on the parquet's (path, mtime, size) so a
-    # regenerated corpus rebuilds. Deleting the temp dir under a live
-    # entry just makes the next call rebuild (reads would fail loudly).
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    ck = (os.path.realpath(src), st.st_mtime_ns, st.st_size)
-    base = _INDEX_CACHE.get(ck)
-    if base is None or _current_gen(base) is None:
-        if base is not None:
-            # Torn cached dir (CURRENT gone but subdirs survive, e.g. a tmp
-            # cleaner): evict the entry so the rebuild doesn't overwrite the
-            # only reference, but do NOT rmtree — a manifest returned before
-            # the tear may still lazily read the surviving parquet (the same
-            # lazy-plan grace the superseded-retention below gives), and
-            # every cached dir was allocated via scratch_dir, so the exit
-            # sweep removes it; no leak beyond the process.
-            _INDEX_CACHE.pop(ck)
-        base = scratch_dir(prefix=f"sg-refreshidx-{sftag(sf_dir)}-")
-        try:
-            build_refresh_index(spark, old, base)
-        except BaseException:
-            # A failed build never reaches _INDEX_CACHE, so neither the
-            # eviction loop nor the atexit hook would ever remove it —
-            # each retry under disk pressure would leak another dir.
-            shutil.rmtree(base, ignore_errors=True)
-            raise
-        # Evict superseded entries for the SAME corpus path (regenerated
-        # parquet → new (mtime, size) key): a long-lived process would
-        # otherwise leak one full index dir in /tmp per regeneration.
-        # Retention mirrors _prune_generations: the MOST RECENT superseded
-        # index survives one more regeneration (a manifest returned before
-        # the regen may still be un-collected — lazy plans read at
-        # execution time), older ones are deleted; leak bound 2 dirs/path.
-        superseded = [k for k in _INDEX_CACHE if k[0] == ck[0] and k != ck]
-        for k in superseded[:-1]:
-            shutil.rmtree(_INDEX_CACHE.pop(k), ignore_errors=True)
-        _INDEX_CACHE[ck] = base
+    # to. Model that here: build once per corpus file identity per process
+    # (fixture_dir) and reuse across invocations (bench warm runs, repeated
+    # driver checks); a regenerated corpus or a torn index (CURRENT gone,
+    # e.g. a tmp cleaner) rebuilds.
+    base = fixture_dir(
+        os.path.join(sf_dir, "documents.parquet"),
+        "refreshidx",
+        lambda d: build_refresh_index(spark, old, d),
+        lambda d: _current_gen(d) is not None,
+    )
     return refresh_against_index(spark, new, base)
 
-
-_INDEX_CACHE: dict[tuple, str] = {}
-
-
-@atexit.register
-def _cleanup_index_cache() -> None:
-    # The cache dirs are per-process mkdtemps; in-process eviction keeps
-    # the live + one superseded entry, but nothing removed them at exit —
-    # every short-lived process (test run, bench, driver check) leaked
-    # one index dir per corpus into /tmp (~90 dirs/240 MB after one
-    # build day). Entries are never shared across processes by design,
-    # so exit-time removal is safe; any lazy plan still holding file
-    # references dies with the session anyway.
-    for d in _INDEX_CACHE.values():
-        shutil.rmtree(d, ignore_errors=True)
 
 # Increment-aging policy (measured: scripts/refresh_rehearsal.py --aging-raw,
 # table in docs/SCALE.md r08). The per-bucket candidate cap is per-increment,

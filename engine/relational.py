@@ -8,6 +8,7 @@ by plan-shape tests in tests/test_plan_shape.py). Per-operator 100 TB notes inli
 
 from __future__ import annotations
 
+import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -15,7 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from engine.registry import query
-from engine.tables import SCHEMAS, load, sftag
+from engine.tables import SCHEMAS, fixture_dir, load, sftag
 
 _TMP = tempfile.gettempdir()
 
@@ -89,10 +90,6 @@ def sink_parquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# fixture cache for scan_partition_prune: sf_dir -> (path, source mtime_ns)
-_PRUNE_FIXTURE_CACHE: dict[str, tuple] = {}
-
-
 @query(
     "scan_partition_prune",
     oracle=f"SELECT {_LINEITEM_COLS} FROM lineitem WHERE l_returnflag = 'R'",
@@ -102,29 +99,19 @@ def scan_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     matching directory (PartitionFilters in the plan — asserted in tests).
 
     The partitioned copy is fixture PREP (the demonstrated semantic is the
-    pruned SCAN), a deterministic function of the corpus — build it once
-    per (sf_dir, source mtime) per process instead of re-writing ~600k rows
-    per invocation (r14; the _LATE_SRC_CACHE precedent from r05: the sweep
-    re-paid the write 3× per bench run, pure overhead). The mtime key makes
-    a regenerated corpus rebuild; the query still computes fresh from the
-    fixture every run."""
-    import os
-
-    path = f"{_TMP}/spark_graft_prune_lineitem_{sftag(sf_dir)}"
-    src_mtime = os.stat(f"{sf_dir}/lineitem.parquet").st_mtime_ns
-    # isdir guard (r15, ADVICE fix): a tmp cleaner removing the fixture
-    # mid-process would otherwise leave a valid-looking cache entry and
-    # fail every subsequent invocation until restart.
-    if _PRUNE_FIXTURE_CACHE.get(sf_dir) != (path, src_mtime) or not os.path.isdir(
-        path
-    ):
-        (
-            load(spark, sf_dir, "lineitem")
-            .write.mode("overwrite")
-            .partitionBy("l_returnflag")
-            .parquet(path)
-        )
-        _PRUNE_FIXTURE_CACHE[sf_dir] = (path, src_mtime)
+    pruned SCAN), a deterministic function of the corpus — built once per
+    corpus file identity (fixture_dir) instead of re-writing ~600k rows per
+    invocation; the query still computes fresh from the fixture every
+    run."""
+    path = fixture_dir(
+        f"{sf_dir}/lineitem.parquet",
+        "prune-lineitem",
+        lambda d: load(spark, sf_dir, "lineitem")
+        .write.mode("overwrite")
+        .partitionBy("l_returnflag")
+        .parquet(d),
+        lambda d: os.path.exists(f"{d}/_SUCCESS"),
+    )
     # explicit schema: no inference pass, robust to a zero-row write
     df = spark.read.schema(SCHEMAS["lineitem"]).parquet(path).filter(
         F.col("l_returnflag") == "R"

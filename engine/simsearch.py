@@ -156,7 +156,7 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = vectors(spark, sf_dir)
     # r09 dup probe (see docstring), r11: shared memoized helper —
-    # int64 hashes shuffle, never arrays; cached per (session, corpus).
+    # int64 hashes shuffle, never arrays; cached per corpus file identity.
     has_dups = not all_rows_distinct(
         spark, f"{sf_dir}/embeddings.parquet", emb, "embedding"
     )

@@ -13,12 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from engine.registry import query
-from engine.tables import load, sftag
-
-# Deterministic per-corpus source trees for scan_recursive_glob (built once;
-# rebuilding per sweep run would be pure setup overhead — same policy as
-# engine/streaming's replay-file cache).
-_GLOB_SRC_CACHE: dict[str, str] = {}
+from engine.tables import fixture_dir, load, sftag
 
 
 @query(
@@ -90,16 +85,23 @@ def scan_recursive_glob(spark: SparkSession, sf_dir: str) -> DataFrame:
     count — the reason real lakes either register partitions or compact
     (etl_compact_small_files); the scan itself parallelizes per file
     split as usual."""
-    src = _GLOB_SRC_CACHE.get(sf_dir)
-    if src is None:
+
+    def build(src: str) -> None:
         d = load(spark, sf_dir, "documents")
-        src = scratch_dir(prefix=f"sg-globsrc-{sftag(sf_dir)}-")
-        os.makedirs(f"{src}/a/b", exist_ok=True)
+        os.makedirs(f"{src}/a/b")
         d.filter(F.col("doc_id") % 2 == 0).write.parquet(f"{src}/a/even.parquet")
         d.filter(F.col("doc_id") % 2 == 1).write.parquet(f"{src}/a/b/odd.parquet")
         with open(f"{src}/a/decoy.json", "w") as fh:
             fh.write('{"not": "parquet"}\n')
-        _GLOB_SRC_CACHE[sf_dir] = src
+
+    # The source tree is fixture prep, built once per corpus file identity.
+    parts = ("a/even.parquet/_SUCCESS", "a/b/odd.parquet/_SUCCESS", "a/decoy.json")
+    src = fixture_dir(
+        f"{sf_dir}/documents.parquet",
+        "globsrc",
+        build,
+        lambda t: all(os.path.exists(f"{t}/{p}") for p in parts),
+    )
     back = (
         spark.read.option("recursiveFileLookup", "true")
         .option("pathGlobFilter", "*.parquet")

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from engine.registry import query
-from engine.tables import load, sftag
+from engine.tables import corpus_memo, fixture_dir, load, replay_fixture, sftag
 
 # ---------------------------------------------------------------------------
 # batch-equivalent window semantics (FULL oracle)
@@ -141,14 +141,6 @@ def stream_session_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
 # true Structured Streaming (ROWS — engine-internal semantics)
 # ---------------------------------------------------------------------------
 
-# Deterministic per-corpus setup caches (r05 sweep-cost trim): the schema
-# probe, the symlink source dir, and the late-data replay files depend only
-# on sf_dir, so re-running a streaming key re-uses them instead of paying a
-# footer-probe job / mkdir / three batch writes per run. Every timed run
-# still executes a REAL streaming query (fresh checkpoint + state store).
-_SCHEMA_CACHE: dict[str, tuple[T.StructType, bool]] = {}
-_SRC_DIR_CACHE: dict[str, str] = {}
-_LATE_SRC_CACHE: dict[str, str] = {}
 _CKPT_ROOT: list[str] = []  # one shared checkpoint root per process
 
 
@@ -156,34 +148,35 @@ def _events_raw_schema(spark: SparkSession, sf_dir: str) -> tuple[T.StructType, 
     """Raw file-source schema for events + whether ts needs the nanos→ntz
     conversion. The corpus's ts physical type has varied across generations
     (int64 nanos vs native timestamp[us]); probe the batch reader's
-    footer-derived dtype once per corpus so the streaming source matches
-    either."""
-    cached = _SCHEMA_CACHE.get(sf_dir)
-    if cached is not None:
-        return cached
-    ts_dtype = dict(spark.read.parquet(f"{sf_dir}/events.parquet").dtypes).get("ts")
-    # Match KNOWN corpus variants only: a third variant (e.g. UTC-adjusted
-    # timestamp[us], batch dtype 'timestamp') must fail loudly here rather
-    # than let a pinned NTZ readStream schema silently shift event time.
-    if ts_dtype not in ("bigint", "timestamp_ntz"):
-        raise ValueError(
-            f"events.ts has unexpected dtype {ts_dtype!r}; extend "
-            "_events_raw_schema deliberately for this corpus variant"
+    footer-derived dtype once per corpus file identity so the streaming
+    source matches either."""
+    path = f"{sf_dir}/events.parquet"
+
+    def probe() -> tuple[T.StructType, bool]:
+        ts_dtype = dict(spark.read.parquet(path).dtypes).get("ts")
+        # Match KNOWN corpus variants only: a third variant (e.g. UTC-adjusted
+        # timestamp[us], batch dtype 'timestamp') must fail loudly here rather
+        # than let a pinned NTZ readStream schema silently shift event time.
+        if ts_dtype not in ("bigint", "timestamp_ntz"):
+            raise ValueError(
+                f"events.ts has unexpected dtype {ts_dtype!r}; extend "
+                "_events_raw_schema deliberately for this corpus variant"
+            )
+        ts_is_long = ts_dtype == "bigint"
+        ts_type = T.LongType() if ts_is_long else T.TimestampNTZType()
+        schema = T.StructType(
+            [
+                T.StructField("event_id", T.LongType()),
+                T.StructField("ts", ts_type),
+                T.StructField("user_id", T.LongType()),
+                T.StructField("event_type", T.StringType()),
+                T.StructField("value", T.DoubleType()),
+                T.StructField("props", T.StringType()),
+            ]
         )
-    ts_is_long = ts_dtype == "bigint"
-    ts_type = T.LongType() if ts_is_long else T.TimestampNTZType()
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", ts_type),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-    _SCHEMA_CACHE[sf_dir] = (schema, ts_is_long)
-    return schema, ts_is_long
+        return schema, ts_is_long
+
+    return corpus_memo(path, "events-schema", probe)
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -209,11 +202,12 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     if os.path.isdir(src):
         d = src  # Spark-written dataset: monitor the part-file dir itself
     else:
-        d = _SRC_DIR_CACHE.get(sf_dir)
-        if d is None:
-            d = scratch_dir(prefix="sg-events-src-")
-            os.symlink(src, f"{d}/events.parquet")
-            _SRC_DIR_CACHE[sf_dir] = d
+        d = fixture_dir(
+            src,
+            "events-src",
+            lambda t: os.symlink(src, f"{t}/events.parquet"),
+            lambda t: os.path.exists(f"{t}/events.parquet"),
+        )
     raw = spark.readStream.schema(schema).format("parquet").load(d)
     if ts_is_long:
         return raw.withColumn(
@@ -233,7 +227,6 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the bounded source's row count — rather than sit at a constant tuned
 # for either local mode or one cluster size.
 _STREAM_ROWS_PER_INSTANCE = 25_000
-_DERIVED_PARTS_CACHE: dict[str, int] = {}
 
 
 def _derived_stream_parts(spark: SparkSession, sf_dir: str) -> int:
@@ -246,13 +239,15 @@ def _derived_stream_parts(spark: SparkSession, sf_dir: str) -> int:
     laptop doesn't. SPARK_GRAFT_STREAM_PARTS still wins over everything
     (the cluster-sizing contract) — a production operator who KNOWS the
     keys-in-horizon sets it directly."""
-    got = _DERIVED_PARTS_CACHE.get(sf_dir)
-    if got is None:
+    path = f"{sf_dir}/events.parquet"
+
+    def derive() -> int:
         from engine.tables import parquet_num_rows
 
-        n = parquet_num_rows(f"{sf_dir}/events.parquet")
-        got = 4 if n is None else max(2, -(-int(n) // _STREAM_ROWS_PER_INSTANCE))
-        _DERIVED_PARTS_CACHE[sf_dir] = got
+        n = parquet_num_rows(path)
+        return 4 if n is None else max(2, -(-int(n) // _STREAM_ROWS_PER_INSTANCE))
+
+    got = corpus_memo(path, "stream-parts", derive)
     try:
         ceiling = 2 * spark.sparkContext.defaultParallelism
     except Exception:
@@ -422,36 +417,23 @@ def stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB/day: this is the state-eviction contract — without the watermark
     bound, window state grows O(stream); with it, state is O(windows per
     horizon) and late arrivals cost nothing."""
-    import os
-
     from engine.session import tune
 
     tune(spark)
     cutoff = "2024-01-02 00:00:00"
     gap = "2024-01-30 00:00:00"
-    e = load(spark, sf_dir, "events").select(
-        "event_id", F.col("ts").cast("timestamp").alias("ts"), "user_id"
+    src = replay_fixture(
+        f"{sf_dir}/events.parquet",
+        "late-src",
+        lambda: load(spark, sf_dir, "events").select(
+            "event_id", F.col("ts").cast("timestamp").alias("ts"), "user_id"
+        ),
+        [
+            (F.col("ts") >= cutoff) & (F.col("ts") < gap),
+            F.col("ts") >= gap,
+            F.col("ts") < cutoff,
+        ],
     )
-    # The three replay files are a deterministic function of the corpus —
-    # build them once per sf_dir (r05: re-running this key previously paid
-    # three batch write jobs per run, pure sweep overhead).
-    src = _LATE_SRC_CACHE.get(sf_dir)
-    if src is None:
-        src = scratch_dir(prefix=f"sg-late-src-{sftag(sf_dir)}-")
-        for i, part in enumerate(
-            [
-                e.filter((F.col("ts") >= cutoff) & (F.col("ts") < gap)),
-                e.filter(F.col("ts") >= gap),
-                e.filter(F.col("ts") < cutoff),
-            ]
-        ):
-            sub = scratch_dir(prefix=f"sg-late-part{i}-")
-            part.coalesce(1).write.mode("overwrite").parquet(sub)
-            name = next(f for f in os.listdir(sub) if f.endswith(".parquet"))
-            dest = f"{src}/batch{i}.parquet"
-            os.rename(f"{sub}/{name}", dest)
-            os.utime(dest, (1_000_000 + i * 1000,) * 2)  # replay order = file order
-        _LATE_SRC_CACHE[sf_dir] = src
     s = (
         spark.readStream.schema("event_id long, ts timestamp, user_id long")
         .option("maxFilesPerTrigger", "1")

@@ -16,19 +16,14 @@ carries a FULL SQL oracle.
 
 from __future__ import annotations
 
-import os
-
-from engine.tmpdirs import scratch_dir
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from engine.registry import query
-from engine.tables import load, sftag
+from engine.tables import load, replay_fixture, sftag
 from engine.streaming import run_to_memory
 
-_TIMEOUT_SRC_CACHE: dict[str, str] = {}
 _SPLIT = "2024-01-30 00:00:00"
 _IDLE_MS = 2 * 3600 * 1000  # 2h inactivity closes a session
 # Far-future sentinel guard (r14 adversarial-timestamp axis): event times
@@ -167,32 +162,21 @@ def stream_event_time_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
     from engine.session import tune
 
     tune(spark)
-    e = load(spark, sf_dir, "events").select(
-        "user_id",
-        F.greatest(
-            F.least(
-                F.col("ts").cast("timestamp"),
-                F.lit(_TS_HORIZON).cast("timestamp"),
-            ),
-            F.lit(_TS_FLOOR).cast("timestamp"),
-        ).alias("ts"),
+    src = replay_fixture(
+        f"{sf_dir}/events.parquet",
+        "ett-src",
+        lambda: load(spark, sf_dir, "events").select(
+            "user_id",
+            F.greatest(
+                F.least(
+                    F.col("ts").cast("timestamp"),
+                    F.lit(_TS_HORIZON).cast("timestamp"),
+                ),
+                F.lit(_TS_FLOOR).cast("timestamp"),
+            ).alias("ts"),
+        ),
+        [F.col("ts") < _SPLIT, F.col("ts") >= _SPLIT],
     )
-    src = _TIMEOUT_SRC_CACHE.get(sf_dir)
-    if src is None:
-        src = scratch_dir(prefix=f"sg-ett-src-{sftag(sf_dir)}-")
-        for i, part in enumerate(
-            [
-                e.filter(F.col("ts") < _SPLIT),
-                e.filter(F.col("ts") >= _SPLIT),
-            ]
-        ):
-            sub = scratch_dir(prefix=f"sg-ett-part{i}-")
-            part.coalesce(1).write.mode("overwrite").parquet(sub)
-            name = next(f for f in os.listdir(sub) if f.endswith(".parquet"))
-            dest = f"{src}/batch{i}.parquet"
-            os.rename(f"{sub}/{name}", dest)
-            os.utime(dest, (1_000_000 + i * 1000,) * 2)  # replay order
-        _TIMEOUT_SRC_CACHE[sf_dir] = src
     s = (
         spark.readStream.schema("user_id long, ts timestamp")
         .option("maxFilesPerTrigger", "1")

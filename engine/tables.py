@@ -20,9 +20,15 @@ time by the sinks (engine.relational §2.A), not here.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import os
+import shutil
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from engine.tmpdirs import scratch_dir
 
 TABLES = [
     "region",
@@ -145,8 +151,6 @@ def sftag(sf_dir: str) -> str:
     return "".join(c if c.isalnum() else "_" for c in sf_dir.strip("/"))
 
 
-_EMB_DIM_CACHE: dict[tuple, "int | None"] = {}
-
 # SQL twin of emb_dim() for the vector-family oracles: the corpus's modal
 # embedding dimensionality (ties broken to the smaller dim). DuckDB scalar
 # subquery; NULL (hence an all-false predicate) on an all-NULL/empty corpus,
@@ -159,26 +163,13 @@ VEC_DIM_SQL = (
 
 def emb_dim(spark: SparkSession, sf_dir: str) -> "int | None":
     """Modal embedding dimensionality of the corpus (ties to the smaller
-    dim) — ONE tiny columnar agg job, cached per (applicationId, sf_dir,
-    mtime_ns, footer_rows) like the footer-row probe (r14 ADVICE: keying
-    only on (app, sf_dir) went stale when a rehearsal rewrote
-    embeddings.parquet in place within one session — vectors() then
-    silently filtered to the WRONG subspace); None on an all-NULL/empty
-    corpus. A missing/unstat-able file keys on (None, None): such a
-    corpus can't be rewritten in place, and the probe below raises its
-    own read error if truly absent."""
-    import os
-
-    app = spark.sparkContext.applicationId
+    dim) — ONE tiny columnar agg job per corpus file identity plus footer
+    row count (corpus_memo), so a rehearsal that rewrites
+    embeddings.parquet in place re-probes instead of filtering vectors()
+    to a stale subspace; None on an all-NULL/empty corpus."""
     path = f"{sf_dir}/embeddings.parquet"
-    try:
-        mtime = os.stat(path).st_mtime_ns
-    except OSError:
-        mtime = None
-    key = (app, sf_dir, mtime, parquet_num_rows(path))
-    if key not in _EMB_DIM_CACHE:
-        for k in [k for k in _EMB_DIM_CACHE if k[0] != app]:
-            _EMB_DIM_CACHE.pop(k, None)
+
+    def probe() -> "int | None":
         row = (
             load(spark, sf_dir, "embeddings")
             .filter(F.col("embedding").isNotNull())
@@ -187,8 +178,9 @@ def emb_dim(spark: SparkSession, sf_dir: str) -> "int | None":
             .orderBy(F.col("count").desc(), F.col("d"))
             .first()
         )
-        _EMB_DIM_CACHE[key] = None if row is None else int(row["d"])
-    return _EMB_DIM_CACHE[key]
+        return None if row is None else int(row["d"])
+
+    return corpus_memo(path, "emb_dim", probe, parquet_num_rows(path))
 
 
 def vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -252,7 +244,6 @@ def parquet_num_rows(path: str) -> int | None:
     cheap statistics probe behind adaptive operating points (LSH signature
     width, broadcast-vs-join verify gates)."""
     import glob
-    import os
 
     try:
         import pyarrow.parquet as pq
@@ -265,6 +256,101 @@ def parquet_num_rows(path: str) -> int | None:
         return pq.ParquetFile(path).metadata.num_rows
     except Exception:
         return None
+
+
+# ---------------------------------------------------------------------------
+# corpus memo: work derived only from a corpus file, done once per file
+# identity
+# ---------------------------------------------------------------------------
+
+# (tag, realpath, *extra) -> (file identity, value). One live entry per key:
+# a new identity replaces the old entry, so the store is bounded by the
+# number of call sites × corpus files, whatever the process runs.
+_MEMO: dict[tuple, tuple] = {}
+
+
+def file_identity(path: str) -> "tuple | None":
+    """(realpath, st_mtime_ns, st_size) of ``path``; None when it cannot
+    be stat-ed. A rewrite in place changes it, so anything keyed on it
+    misses on a regenerated corpus."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return (os.path.realpath(path), st.st_mtime_ns, st.st_size)
+
+
+def corpus_memo(path: str, tag: str, build: Callable, *extra):
+    """``build()``, computed once per identity of the file at ``path``.
+    ``extra`` adds key parts the identity does not cover (a column name,
+    a footer row count)."""
+    ident = file_identity(path)
+    key = (tag, os.path.realpath(path), *extra)
+    hit = _MEMO.get(key)
+    if hit is None or hit[0] != ident:
+        hit = _MEMO[key] = (ident, build())
+    return hit[1]
+
+
+def fixture_dir(
+    path: str, tag: str, build: Callable[[str], None], valid: Callable[[str], bool]
+) -> str:
+    """A scratch directory filled by ``build(dir)`` from the file at
+    ``path``, reused while that file is unchanged and ``valid(dir)`` holds.
+
+    Directories come from scratch_dir, so the process-exit sweep removes
+    them. Plans are lazy and may still read a directory after it stops
+    being served, so:
+    - an invalid directory (e.g. a tmp cleaner removed part of it) is
+      dropped from the memo but not deleted;
+    - a superseded directory (the source changed) is kept until the next
+      change of source, then deleted — at most two directories per source;
+    - a failed build deletes its new directory and re-raises."""
+    ident = file_identity(path)
+    key = (tag, os.path.realpath(path))
+    hit = _MEMO.get(key)
+    if hit is not None and hit[0] == ident and valid(hit[1][0]):
+        return hit[1][0]
+    d = scratch_dir(prefix=f"sg-{tag}-")
+    try:
+        build(d)
+    except BaseException:
+        shutil.rmtree(d, ignore_errors=True)
+        raise
+    kept = None
+    if hit is not None:
+        served, kept = hit[1]
+        if hit[0] != ident:
+            if kept is not None:
+                shutil.rmtree(kept, ignore_errors=True)
+            kept = served
+    _MEMO[key] = (ident, (d, kept))
+    return d
+
+
+def replay_fixture(
+    path: str, tag: str, base: Callable[[], DataFrame], preds: list[Column]
+) -> str:
+    """Replay source for a file-source stream: one ``batch{i}.parquet`` per
+    predicate, holding ``base().filter(preds[i])``, with ascending mtimes
+    so that ``maxFilesPerTrigger=1`` replays them in list order. Built once
+    per identity of ``path``; valid only while every batch file exists."""
+
+    def build(d: str) -> None:
+        src = base()
+        for i, pred in enumerate(preds):
+            sub = f"{d}/_part{i}"
+            src.filter(pred).coalesce(1).write.parquet(sub)
+            name = next(f for f in os.listdir(sub) if f.endswith(".parquet"))
+            dest = f"{d}/batch{i}.parquet"
+            os.rename(f"{sub}/{name}", dest)
+            shutil.rmtree(sub)
+            os.utime(dest, (1_000_000 + i * 1000,) * 2)
+
+    def valid(d: str) -> bool:
+        return all(os.path.isfile(f"{d}/batch{i}.parquet") for i in range(len(preds)))
+
+    return fixture_dir(path, tag, build, valid)
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -307,14 +393,6 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # exact-dup collapse shared machinery (r11 review consolidation)
 # ---------------------------------------------------------------------------
 
-# Probe results memoized per (applicationId, path, mtime_ns, nrows, col): the
-# probe is a full countDistinct scan, and each collapse-family key
-# (sim_ann_ivf, dedup_semdedup, emb_kmeans_lloyd, dedup_ngram_jaccard) runs
-# it on every invocation otherwise — a bench sweep paid several extra corpus
-# scans per round.
-_PROBE_CACHE: dict[tuple, bool] = {}
-_PROBE_CACHE_MAX = 64
-
 # Persisted collapse relations per (applicationId, tag): the returned plans
 # read their dup-group relation lazily, so the persist can't be scoped in
 # the query function — each new invocation swaps out the previous one
@@ -328,34 +406,24 @@ def all_rows_distinct(spark: SparkSession, path: str, df: DataFrame, col: str) -
     footer rows == countDistinct(xxhash64(col)). False when unprovable
     (no readable footer): callers route to their collapse path, whose
     grouping key is the full column value — a hash collision or missing
-    footer only costs work, never correctness (collisions UNDER-count)."""
-    import os
-
+    footer only costs work, never correctness (collisions UNDER-count).
+    The probe is a full scan, so it runs once per corpus file identity
+    (corpus_memo) rather than on every invocation of the collapse-family
+    keys (sim_ann_ivf, dedup_semdedup, emb_kmeans_lloyd,
+    dedup_ngram_jaccard)."""
     n = parquet_num_rows(path)
     if n is None:
         return False
-    try:
-        ck = (
-            spark.sparkContext.applicationId,
-            os.path.abspath(path),
-            os.stat(path).st_mtime_ns,
-            int(n),
-            str(col),
-        )
-    except OSError:
-        return False
-    hit = _PROBE_CACHE.get(ck)
-    if hit is None:
+
+    def probe() -> bool:
         nd = (
             df.select(F.xxhash64(col).alias("h"))
             .agg(F.count_distinct("h"))
             .first()[0]
         )
-        hit = nd == n
-        if len(_PROBE_CACHE) >= _PROBE_CACHE_MAX:
-            _PROBE_CACHE.pop(next(iter(_PROBE_CACHE)))
-        _PROBE_CACHE[ck] = hit
-    return hit
+        return nd == n
+
+    return corpus_memo(path, "rows_distinct", probe, int(n), str(col))
 
 
 def swap_persist(spark: SparkSession, df: DataFrame, tag: str) -> DataFrame:

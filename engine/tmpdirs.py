@@ -2,11 +2,10 @@
 intermediate files (sink roundtrips, streaming sources/checkpoints,
 stored indexes).
 
-Every operator that wrote to a bare ``tempfile.mkdtemp`` leaked one dir
-per invocation per process — harmless for a single run, but a day of
-test/bench/driver cycles accumulated hundreds of corpus-sized dirs in
-/tmp (the refresh-index cache hit the same class first and grew its own
-atexit hook; this generalizes that fix to all ~40 sites).
+The rule: a fixture derived from a corpus file (replay batches, a
+partitioned copy, a stored index) goes through
+``engine.tables.fixture_dir``, which builds it in a scratch dir once per
+file identity; per-call scratch goes through ``scratch_dir``.
 
 ``scratch_dir(prefix)`` is a drop-in mkdtemp: dirs live for the PROCESS
 lifetime — required, because operators return LAZY DataFrames that

@@ -18,6 +18,7 @@ SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 from pyspark import StorageLevel  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
+from engine import tables  # noqa: E402
 from engine.session import get_spark, tune  # noqa: E402
 from engine.tables import load  # noqa: E402
 
@@ -45,9 +46,7 @@ def main() -> int:
     d = load(spark, SF, "documents").select("doc_id", "source", "text")
     new = d.filter(F.col("doc_id") % 5 == 0)
     src = os.path.join(SF, "documents.parquet")
-    st = os.stat(src)
-    ck = (os.path.realpath(src), st.st_mtime_ns, st.st_size)
-    base = p6._INDEX_CACHE[ck]
+    base = tables._MEMO[("refreshidx", os.path.realpath(src))][1][0]
     gen = p6._current_gen(base)
     old_exact = spark.read.parquet(*p6._artifact_paths(gen, "exact"))
     old_sigs = spark.read.parquet(*p6._artifact_paths(gen, "sigs"))

@@ -606,18 +606,19 @@ def test_auto_compaction_bounds_increment_count(spark, tmp_path):
 
 def test_failed_index_build_leaves_no_tmp_dir(spark, monkeypatch):
     """A build_refresh_index failure (disk full, killed job) must not
-    leak the freshly-created index dir: it never reaches _INDEX_CACHE,
-    so neither superseded-eviction nor the atexit hook would ever see it
-    — the cleanup has to happen on the failure path itself. The check
-    records the dirs THIS call creates (wrapping scratch_dir) rather
-    than globbing /tmp, which raced concurrent test/bench processes
-    creating their own index dirs."""
+    leak the freshly-created index dir: it never reaches the corpus memo,
+    so neither superseded-eviction nor a later rebuild would ever see it
+    — the cleanup has to happen on the failure path itself
+    (engine.tables.fixture_dir). The check records the dirs THIS call
+    creates (wrapping scratch_dir) rather than globbing /tmp, which raced
+    concurrent test/bench processes creating their own index dirs."""
     import pytest as _pytest
 
     import engine.pipeline6 as p6
+    import engine.tables as tables
     from engine.tmpdirs import scratch_dir as real_scratch
 
-    monkeypatch.setattr(p6, "_INDEX_CACHE", {})
+    monkeypatch.setattr(tables, "_MEMO", {})
     created: list[str] = []
 
     def recording_scratch(prefix):
@@ -625,7 +626,7 @@ def test_failed_index_build_leaves_no_tmp_dir(spark, monkeypatch):
         created.append(d)
         return d
 
-    monkeypatch.setattr(p6, "scratch_dir", recording_scratch)
+    monkeypatch.setattr(tables, "scratch_dir", recording_scratch)
 
     def boom(*a, **k):
         raise RuntimeError("simulated build failure")
@@ -638,40 +639,42 @@ def test_failed_index_build_leaves_no_tmp_dir(spark, monkeypatch):
         p6.pipeline_incremental_refresh.__wrapped__(spark, SF_DIR)
     assert created, "pipeline never allocated an index dir?"
     assert not any(os.path.exists(d) for d in created)
-    assert p6._INDEX_CACHE == {}
+    assert tables._MEMO == {}
 
 
 def test_torn_cache_entry_is_evicted_but_kept_on_disk(spark, monkeypatch, tmp_path):
-    """A cached index dir whose CURRENT pointer vanished (e.g. a /tmp
-    cleaner) must be EVICTED from the cache (or the rebuild overwrites
+    """A memoized index dir whose CURRENT pointer vanished (e.g. a /tmp
+    cleaner) must be EVICTED from the memo (or the rebuild overwrites
     the only reference) but NOT rmtree'd: a manifest returned before the
     tear may still lazily read the surviving parquet — the same grace the
-    superseded-retention gives. No leak results: cached dirs are always
+    superseded-retention gives. No leak results: memoized dirs are always
     scratch_dir allocations, removed by the exit sweep."""
     import shutil as _shutil
 
     import engine.pipeline6 as p6
+    import engine.tables as tables
     from engine import tmpdirs
 
     torn = tmp_path / "torn-idx"
     (torn / "gen-000001").mkdir(parents=True)  # subdir survives, CURRENT gone
     src = os.path.join(SF_DIR, "documents.parquet")
-    st = os.stat(src)
-    ck = (os.path.realpath(src), st.st_mtime_ns, st.st_size)
-    monkeypatch.setattr(p6, "_INDEX_CACHE", {ck: str(torn)})
+    key = ("refreshidx", os.path.realpath(src))
+    monkeypatch.setattr(
+        tables, "_MEMO", {key: (tables.file_identity(src), (str(torn), None))}
+    )
     try:
         # __wrapped__ bypasses the @query plan memo (see previous test)
         assert p6.pipeline_incremental_refresh.__wrapped__(spark, SF_DIR).count() > 0
         assert torn.exists()  # lazy-plan grace: surviving files untouched
-        new_base = p6._INDEX_CACHE.get(ck)
+        new_base = tables._MEMO[key][1][0]
         assert new_base is not None and new_base != str(torn)
         # the rebuilt dir is exit-sweep managed, so nothing leaks past exit
         assert new_base in tmpdirs._SCRATCH
     finally:
-        # monkeypatch restores the original cache dict on exit, so the
-        # rebuilt dir would linger until process exit without removal here
-        for d in p6._INDEX_CACHE.values():
-            _shutil.rmtree(d, ignore_errors=True)
+        # monkeypatch restores the original memo on exit, so the rebuilt
+        # dir would linger until process exit without removal here
+        if key in tables._MEMO:
+            _shutil.rmtree(tables._MEMO[key][1][0], ignore_errors=True)
 
 
 _LOCK_HOLDER = """

@@ -196,18 +196,13 @@ def test_derived_stream_parts_scales_with_source(spark):
     assert _derived_stream_parts(spark, "/root/testdata/sf0.001") == 2
     # a corpus 100x the calibration point derives wider, but never past
     # 2x the session's cores
-    import math
+    import engine.tables as tables
 
-    from engine.streaming import _DERIVED_PARTS_CACHE
-
-    _DERIVED_PARTS_CACHE["fake://huge"] = math.ceil(
-        100 * 100_000 / _STREAM_ROWS_PER_INSTANCE
-    )
-    try:
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(tables, "_MEMO", {})
+        mp.setattr(tables, "parquet_num_rows", lambda p: 100 * 100_000)
         got = _derived_stream_parts(spark, "fake://huge")
+        assert 100 * 100_000 // _STREAM_ROWS_PER_INSTANCE == 400
         assert got == min(400, 2 * spark.sparkContext.defaultParallelism)
-    finally:
-        _DERIVED_PARTS_CACHE.pop("fake://huge", None)
     # an unreadable source falls back to the r14 constant
-    _DERIVED_PARTS_CACHE.pop("/nonexistent", None)
     assert _derived_stream_parts(spark, "/nonexistent") == 4
