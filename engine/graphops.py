@@ -34,6 +34,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from engine.registry import query
+from engine.session import session_memo
 from engine.tables import load
 
 _EDGE_SQL = """
@@ -328,12 +329,6 @@ _KMEANS_CTES = """
 """
 
 
-# Built assignment plans per (session, corpus): the centroid fit is
-# deterministic, and both emb_kmeans_lloyd and dedup_semdedup need it —
-# caching the plan skips repeating the two bounded centroid collects.
-_ASSIGN_CACHE: dict[tuple, DataFrame] = {}
-
-
 def kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared Lloyd-step assignment pipeline: (vec_id, cid, d2) after one
     centroid update from the k lowest-vec_id seeds, k =
@@ -348,11 +343,13 @@ def kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     what keeps the n×k assignment cost linear here.
 
     See emb_kmeans_lloyd for the determinism contract; dedup_semdedup
-    reuses these clusters as its semantic blocking structure."""
-    ck = (spark, sf_dir)
-    cached = _ASSIGN_CACHE.get(ck)
-    if cached is not None:
-        return cached
+    reuses these clusters as its semantic blocking structure. Both keys
+    need the same deterministic fit, so the built plan is kept per session
+    and corpus and the second key does not rebuild it."""
+    return session_memo(spark, lambda: _kmeans_assign(spark, sf_dir), "kmeans", sf_dir)
+
+
+def _kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     from engine.tables import vectors
 
     # vectors(): NULL and wrong-dim embeddings are un-embeddable in the
@@ -378,9 +375,7 @@ def kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("cid", "pos")
         .agg(F.round(F.avg("col"), 8).alias("v"))
     )
-    out = _assign_step(emb, _rebuild_centroids(c0, c1m))
-    _ASSIGN_CACHE[ck] = out
-    return out
+    return _assign_step(emb, _rebuild_centroids(c0, c1m))
 
 
 def _assign_step(pts: DataFrame, cents: DataFrame) -> DataFrame:

@@ -16,11 +16,14 @@ Scale designs (100 TB):
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from engine.registry import query
+from engine.session import session_memo
 from engine.tables import load
 
 # ---------------------------------------------------------------------------
@@ -550,59 +553,29 @@ def _side_value(bc, key):
     return val
 
 
-# Driver-side cache of the Broadcast OBJECT itself, keyed by
-# (applicationId, side_key): repeated blocked-matmul queries in one session
-# previously re-pickled and re-published the same (ids, matrix) pair per
-# invocation (~15-20 ms warm at sf0.1 — measured r11). A session reusing the
-# broadcast is the driver-side twin of the worker _SIDE_CACHE. Evicted
-# entries are dropped without destroy(): a running plan may still hold the
-# broadcast, and Spark's ContextCleaner reclaims it on GC. Keyed by
-# applicationId so a restarted session never sees a stale handle; inserts
-# drop entries of other (stopped) applications, mirroring swap_persist,
-# so cycling SparkSessions can't pin dead broadcasts until FIFO eviction.
-_BC_CACHE: dict[tuple, tuple] = {}  # -> (Broadcast, side rows)
-_BC_CACHE_MAX = 4
-
-
 def _side_broadcast(spark, sf_dir: str, emb) -> tuple:
-    """(Broadcast[(ids, matrix)], side_key) — see _side_broadcast_n."""
-    return _side_broadcast_n(spark, sf_dir, emb)[:2]
+    """(Broadcast[(ids, matrix)], side_key, side rows), kept in the session
+    store per corpus path, the driver-side twin of the worker _SIDE_CACHE:
+    a hit skips the parquet read and the re-publish (~15-20 ms warm at
+    sf0.1). Its validity (file_identity, nrows) needs only a stat + footer,
+    so a rewritten corpus replaces the path's one entry. The replaced handle
+    is not destroy()ed: a running plan may still hold it, and Spark's
+    ContextCleaner reclaims it on GC. Side rows (vectors left after the
+    NULL/modal-dim filter) let kernels size their tasks. With no readable
+    footer every call builds a fresh broadcast."""
+    from engine.tables import file_identity, parquet_num_rows
 
+    path = f"{sf_dir}/embeddings.parquet"
+    n = parquet_num_rows(path)
 
-def _side_broadcast_n(spark, sf_dir: str, emb) -> tuple:
-    """(Broadcast[(ids, matrix)], side_key, side rows) — cached per
-    session+corpus.
+    def build() -> tuple:
+        b_ids, b_mat, side_key = _broadcast_side(spark, sf_dir, emb)
+        return spark.sparkContext.broadcast((b_ids, b_mat)), side_key, len(b_ids)
 
-    A hit skips both the parquet read and the broadcast publish: the key
-    (file_identity, nrows) is computed from the footer + stat alone, the
-    same identity _broadcast_side stamps, so a rewritten corpus misses.
-    The side row count (vectors left after the NULL/modal-dim filter) is
-    cached beside the handle so kernels can size their tasks without
-    touching the data. side_key None (toPandas fallback: corpus identity
-    unprovable) always builds a fresh broadcast."""
-    try:
-        from engine.tables import file_identity, parquet_num_rows
-
-        path = f"{sf_dir}/embeddings.parquet"
-        n = parquet_num_rows(path)
-        if n is not None and n <= _MAX_BROADCAST_VECTORS:
-            side_key = (file_identity(path), int(n))
-            hit = _BC_CACHE.get((spark.sparkContext.applicationId, side_key))
-            if hit is not None:
-                return hit[0], side_key, hit[1]
-    except Exception:
-        pass
-    b_ids, b_mat, side_key = _broadcast_side(spark, sf_dir, emb)
-    bc = spark.sparkContext.broadcast((b_ids, b_mat))
-    if side_key is None:
-        return bc, None, len(b_ids)
-    app = spark.sparkContext.applicationId
-    for k in [k for k in _BC_CACHE if k[0] != app]:
-        _BC_CACHE.pop(k, None)
-    if len(_BC_CACHE) >= _BC_CACHE_MAX:
-        _BC_CACHE.pop(next(iter(_BC_CACHE)))
-    _BC_CACHE[(app, side_key)] = (bc, len(b_ids))
-    return bc, side_key, len(b_ids)
+    if n is None or n > _MAX_BROADCAST_VECTORS:
+        return build()
+    valid = (file_identity(path), int(n))
+    return session_memo(spark, build, "side_bc", os.path.realpath(path), valid=valid)
 
 
 def _broadcast_side(spark, sf_dir: str, emb) -> tuple:
@@ -780,7 +753,7 @@ def _triangle_pairs(spark, sf_dir: str, floor, keep, limit=None) -> DataFrame:
 
     emb = vectors(spark, sf_dir)
     # side_key lets reused workers skip re-deserializing the side per task
-    bc, side_key, n = _side_broadcast_n(spark, sf_dir, emb)
+    bc, side_key, n = _side_broadcast(spark, sf_dir, emb)
     width = _pair_width(spark, n)
     bounds = _triangle_bounds(n, width)
     tile_cells = _TILE_CELLS

@@ -1,12 +1,15 @@
 """SparkSession factory + runtime tuning.
 
-Two entry points:
+Three entry points:
 
 - ``get_spark()``: build a tuned local session (tests / bench own the session).
 - ``tune(spark)``: idempotently apply the *runtime-settable* subset of our
   tuning to a session we did NOT build (the driver's harness owns its session
   and constructs it with unknown confs). Called from every table loader so
   driver-run queries still get nanosAsLong + sane shuffle parallelism.
+- ``session_memo(spark, build, tag, *key)``: the one store for objects bound
+  to a live SparkContext (built plans, table loads, persisted relations,
+  broadcasts, tune state). A new context drops the whole store.
 
 Scale notes (100 TB): these confs are the local-mode projection of a cluster
 config. On a real cluster the same code runs with AQE coalescing/skew-join,
@@ -18,6 +21,8 @@ fans out to ~800k input splits; nothing in the engine assumes local mode.
 from __future__ import annotations
 
 import os
+import warnings
+from typing import Callable
 
 from pyspark.sql import SparkSession
 
@@ -51,27 +56,58 @@ def _aqe() -> str:
     return os.environ.get("SPARK_GRAFT_AQE", "false")
 
 
-_TUNED: "set[SparkSession]" = set()
+# ---------------------------------------------------------------------------
+# session store: objects bound to one live SparkContext
+# ---------------------------------------------------------------------------
+
+# (session, tag, *key) -> (validity, value) for plans, table loads,
+# persisted relations, broadcasts and tune state. The store belongs to the
+# context in _STORE_SC. A different context means the held one was stopped
+# and its objects are dead, so the whole store is dropped without release.
+_STORE: dict[tuple, tuple] = {}
+_STORE_SC = None
+
+
+def session_memo(
+    spark: SparkSession, build: Callable, tag: str, *key, valid=None, release=None
+):
+    """``build()``, once per (``spark``, ``tag``, ``*key``) while the entry's
+    ``valid`` equals the caller's. A miss first passes the replaced value to
+    ``release`` (an unpersist, say). Liveness is an identity check on the
+    context object, so a hit makes no Py4J call."""
+    global _STORE_SC
+    if spark.sparkContext is not _STORE_SC:
+        _STORE.clear()
+        _STORE_SC = spark.sparkContext
+    k = (spark, tag, *key)
+    hit = _STORE.get(k)
+    if hit is not None and hit[0] == valid:
+        return hit[1]
+    if hit is not None and release is not None:
+        release(hit[1])
+    value = build()
+    _STORE[k] = (valid, value)
+    return value
 
 
 def tune(spark: SparkSession) -> SparkSession:
-    """Apply runtime confs to any session; safe to call repeatedly.
+    """Apply runtime confs to any session, once per session: each conf
+    get/set is a Py4J round-trip, and tune() sits on the per-query hot path
+    via the table loaders. A conf this build cannot set keeps its session
+    default, with a warning that names it."""
 
-    Cached per session object (strong ref, so a dead session's slot can't be
-    reused) — each conf get/set is a Py4J round-trip, and tune() sits on the
-    per-query hot path via the table loaders."""
-    if spark in _TUNED:
-        return spark
-    confs = dict(_RUNTIME_CONFS)
-    confs["spark.sql.shuffle.partitions"] = _cpus()
-    confs["spark.sql.adaptive.enabled"] = _aqe()
-    for k, v in confs.items():
-        try:
-            if spark.conf.get(k, None) != v:
-                spark.conf.set(k, v)
-        except Exception:
-            pass  # non-settable on this build — leave session default
-    _TUNED.add(spark)
+    def apply() -> None:
+        confs = dict(_RUNTIME_CONFS)
+        confs["spark.sql.shuffle.partitions"] = _cpus()
+        confs["spark.sql.adaptive.enabled"] = _aqe()
+        for k, v in confs.items():
+            try:
+                if spark.conf.get(k, None) != v:
+                    spark.conf.set(k, v)
+            except Exception as e:
+                warnings.warn(f"tune: cannot set {k}={v!r}: {e!r}")
+
+    session_memo(spark, apply, "tuned")
     return spark
 
 

@@ -24,10 +24,12 @@ import os
 import shutil
 from typing import Callable
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from engine.session import session_memo, tune
 from engine.tmpdirs import scratch_dir
 
 TABLES = [
@@ -232,9 +234,6 @@ def lit_table(spark: SparkSession, rows: list, cols: list[str]) -> DataFrame:
     return spark.sql(f"SELECT * FROM (VALUES {values}) AS t({', '.join(cols)})")
 
 
-_CACHE: dict[tuple, DataFrame] = {}
-
-
 def parquet_num_rows(path: str) -> int | None:
     """Footer-only row count for a parquet FILE or a directory of part
     files (Spark writes directories; the driver testdata is single files).
@@ -360,12 +359,12 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     and share across queries in the same session. Caching skips the repeated
     footer read + analysis round-trips that otherwise dominate sub-second
     queries (no data is pinned; execution stays streaming)."""
-    key = (spark, sf_dir, name)
-    cached = _CACHE.get(key)
-    if cached is not None:
-        return cached
-    from engine.session import tune
+    return session_memo(
+        spark, lambda: _read(spark, sf_dir, name), "table", sf_dir, name
+    )
 
+
+def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     tune(spark)
     path = f"{sf_dir}/{name}.parquet"
     if name == "events":
@@ -380,26 +379,15 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             ts = F.expr("cast(timestamp_micros(ts div 1000) as timestamp_ntz)")
         else:
             ts = F.col("ts").cast("timestamp_ntz")
-        df = raw.withColumn("ts", ts).select(
+        return raw.withColumn("ts", ts).select(
             "event_id", "ts", "user_id", "event_type", "value", "props"
         )
-    else:
-        df = spark.read.schema(SCHEMAS[name]).parquet(path)
-    _CACHE[key] = df
-    return df
+    return spark.read.schema(SCHEMAS[name]).parquet(path)
 
 
 # ---------------------------------------------------------------------------
-# exact-dup collapse shared machinery (r11 review consolidation)
+# exact-dup collapse shared machinery
 # ---------------------------------------------------------------------------
-
-# Persisted collapse relations per (applicationId, tag): the returned plans
-# read their dup-group relation lazily, so the persist can't be scoped in
-# the query function — each new invocation swaps out the previous one
-# (ADVICE r10), and entries from other applications (stopped sessions) are
-# evicted so a process cycling SparkSessions doesn't pin dead wrappers.
-_COLLAPSE_PERSISTED: dict[tuple, DataFrame] = {}
-
 
 def all_rows_distinct(spark: SparkSession, path: str, df: DataFrame, col: str) -> bool:
     """True iff every row of `df` has a distinct `col` value, proven by
@@ -427,18 +415,17 @@ def all_rows_distinct(spark: SparkSession, path: str, df: DataFrame, col: str) -
 
 
 def swap_persist(spark: SparkSession, df: DataFrame, tag: str) -> DataFrame:
-    """Persist MEMORY_AND_DISK under (applicationId, tag), unpersisting
-    the previous relation stored under the same key and dropping entries
-    of other (stopped) applications. At most one cached relation per tag
-    per live session."""
-    from pyspark import StorageLevel
+    """Persist ``df`` MEMORY_AND_DISK as the session's relation for ``tag``.
 
-    app = spark.sparkContext.applicationId
-    prev = _COLLAPSE_PERSISTED.pop((app, tag), None)
-    if prev is not None:
-        prev.unpersist(blocking=False)
-    for k in [k for k in _COLLAPSE_PERSISTED if k[0] != app]:
-        _COLLAPSE_PERSISTED.pop(k, None)
-    out = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _COLLAPSE_PERSISTED[(app, tag)] = out
-    return out
+    The returned plans read their relation lazily, so the persist cannot be
+    scoped in the query function. Instead the relation held under the same
+    tag is unpersisted first, so each tag pins at most one cached relation
+    per live session."""
+    return session_memo(
+        spark,
+        lambda: df.persist(StorageLevel.MEMORY_AND_DISK),
+        "persist",
+        tag,
+        valid=df,
+        release=lambda old: old.unpersist(blocking=False),
+    )

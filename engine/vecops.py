@@ -355,7 +355,7 @@ def sim_ann_rp_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Small-corpus fast path: one gather+einsum per Arrow batch against
         # the broadcast float32 matrix (reusing sim_topk_pairs' side; f32 is
         # the parquet source precision, upcast to f64 at the gather).
-        bc_side, side_key = llmops._side_broadcast(spark, sf_dir, emb)
+        bc_side, side_key, _ = llmops._side_broadcast(spark, sf_dir, emb)
 
         def pair_sims(batches):
             try:  # per-worker cache of the f32 side (see llmops._side_value)
@@ -484,36 +484,20 @@ def sim_ann_rp_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# per-corpus PCA fit diagnostics (mean, eigenvalues, orthonormality error),
-# written by pca_project_vectors and read by the emb_pca_project key
-_PCA_FITS: dict[str, dict] = {}
-
-
-def pca_project_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed PCA: project every embedding onto the corpus's top-4
-    principal components — (vec_id, pc1..pc4). The classic two-pass shape —
-    (1) one distributed pass accumulates per-partition Gram blocks (x_sum,
-    outer-product sum, count), (2) the driver assembles the dim x dim
-    covariance (64x64 — O(d²) driver memory, NOT O(n)) and eigendecomposes
-    it, (3) a broadcast matmul projects. Component sign is fixed
-    (largest-|loading| coordinate made positive) so output is
-    deterministic; orthogonality + variance ordering + a numpy reference
-    comparison are property-tested in tests/test_vecops.py. The
-    ``emb_pca_project`` queries() key wraps this with a self-validating
-    summary (projection values themselves are eigh-derived floats — not
-    SQL-reproducible).
-
-    100 TB: pass 1 is mapInArrow -> a 1 + d + d²-float row per PARTITION,
-    reduced driver-side; nothing O(n) ever leaves the executors. This is
-    exactly how MLlib's RowMatrix.computePrincipalComponents works, restated
-    on the DataFrame API."""
+def pca_fit(spark: SparkSession, sf_dir: str) -> "dict | None":
+    """Top-4 PCA fit of the corpus's embeddings (None when empty): one
+    distributed pass accumulates per-partition Gram blocks (x_sum,
+    outer-product sum, count), then the driver assembles the dim x dim
+    covariance (O(d²) driver memory, NOT O(n)) and eigendecomposes it.
+    Component sign is fixed (largest-|loading| coordinate positive), so the
+    fit is deterministic. Returns the mean, the (d, 4) loadings ``comps``
+    and the diagnostics emb_pca_project validates. 100 TB: one
+    (1 + d + d²)-float row per PARTITION leaves the executors."""
     import numpy as np
     import pyarrow as pa
 
     n_comp = 4
     from engine.tables import vectors
-
-    emb = vectors(spark, sf_dir)
 
     def gram(batches):
         s = None
@@ -538,16 +522,12 @@ def pca_project_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     from engine.textops import spread_cpu
 
     parts = (
-        spread_cpu(emb.select("embedding"), width=8)
+        spread_cpu(vectors(spark, sf_dir).select("embedding"), width=8)
         .mapInArrow(gram, "n double, xsum array<double>, gram array<double>")
         .collect()  # bounded: one (1 + d + d²)-float row PER PARTITION
     )
     if not parts:
-        # empty corpus/shard: no Gram blocks, no fit (callers check
-        # _PCA_FITS), no projections (r12 empty-corpus hardening)
-        return spark.createDataFrame(
-            [], "vec_id long, pc1 double, pc2 double, pc3 double, pc4 double"
-        )
+        return None
     n = sum(r["n"] for r in parts)
     xsum = np.sum([np.array(r["xsum"]) for r in parts], axis=0)
     g = np.sum([np.array(r["gram"]) for r in parts], axis=0)
@@ -562,20 +542,34 @@ def pca_project_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
         i = int(np.argmax(np.abs(comps[:, j])))
         if comps[i, j] < 0:
             comps[:, j] = -comps[:, j]
-    # diagnostics for the self-validating queries() key, keyed by sf_dir so
-    # interleaved fits for different corpora can never cross-contaminate
-    # the validation flags (the fit is deterministic per corpus, so a
-    # same-key overwrite is idempotent)
-    _PCA_FITS[sf_dir] = {
+    return {
         "evals_top": evals[::-1][:n_comp].tolist(),
         "trace": float(np.trace(cov)),
         "orth_err": float(np.abs(comps.T @ comps - np.eye(n_comp)).max()),
         "mean": mean.tolist(),
-        # loadings kept for the self-validating key's joinless Bessel pass
-        # (r14 dup-id axis: a vec_id join fans out on colliding ids)
         "comps": comps.tolist(),
     }
-    bc = spark.sparkContext.broadcast((mean, comps))
+
+
+def pca_project_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distributed PCA: project every embedding onto the corpus's top-4
+    principal components — (vec_id, pc1..pc4) — by a broadcast matmul over
+    pca_fit, the way MLlib's RowMatrix.computePrincipalComponents works.
+    Property-tested against numpy in tests/test_vecops.py; the
+    ``emb_pca_project`` key validates the fit itself (the projection floats
+    are eigh-derived, not SQL-reproducible)."""
+    import numpy as np
+    import pyarrow as pa
+
+    from engine.tables import vectors
+    from engine.textops import spread_cpu
+
+    schema = "vec_id long, pc1 double, pc2 double, pc3 double, pc4 double"
+    fit = pca_fit(spark, sf_dir)
+    if fit is None:
+        # empty corpus/shard: no fit, no projections
+        return spark.createDataFrame([], schema)
+    bc = spark.sparkContext.broadcast((np.array(fit["mean"]), np.array(fit["comps"])))
 
     def project(batches):
         mu, w = bc.value
@@ -592,10 +586,8 @@ def pca_project_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
                 cols[f"pc{j + 1}"] = pa.array(proj[:, j])
             yield pa.RecordBatch.from_pydict(cols)
 
-    out = spread_cpu(emb.select("vec_id", "embedding"), width=8).mapInArrow(
-        project, "vec_id long, pc1 double, pc2 double, pc3 double, pc4 double"
-    )
-    return out.orderBy("vec_id")
+    emb = vectors(spark, sf_dir).select("vec_id", "embedding")
+    return spread_cpu(emb, width=8).mapInArrow(project, schema).orderBy("vec_id")
 
 
 @query(
@@ -626,8 +618,7 @@ def emb_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured ~12% on this corpus)."""
     import numpy as np
 
-    pca_project_vectors(spark, sf_dir)  # Gram pass collects eagerly → fit
-    fit = _PCA_FITS.get(sf_dir)
+    fit = pca_fit(spark, sf_dir)
     if fit is None:
         # empty corpus: every invariant holds vacuously over zero vectors —
         # the oracle's global aggregate emits exactly this one row

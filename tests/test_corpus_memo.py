@@ -16,17 +16,12 @@ from tests.conftest import SF_DIR, assert_frames_match
 
 ENGINE = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "engine")
 
-# Module-level empty dicts allowed in engine/: each holds live Spark or
-# worker objects per session (a different lifetime from corpus facts, with
-# unpersist/destroy handling), is the memo's own store, or is the registry.
+# Module-level empty dicts and sets allowed in engine/: the two stores, the
+# one cache with a worker-process lifetime, and the registry.
 ALLOWED_MODULE_DICTS = {
-    ("tables.py", "_CACHE"): "lazy table DataFrames per (session, sf_dir, name)",
-    ("tables.py", "_COLLAPSE_PERSISTED"): "persisted relations, unpersisted on swap",
-    ("tables.py", "_MEMO"): "the corpus memo's store",
-    ("graphops.py", "_ASSIGN_CACHE"): "per-session component DataFrames",
-    ("llmops.py", "_BC_CACHE"): "driver-side Broadcast handles per application",
-    ("llmops.py", "_SIDE_CACHE"): "worker-process deserialized broadcast sides",
-    ("vecops.py", "_PCA_FITS"): "per-session fitted PCA models",
+    ("tables.py", "_MEMO"): "the corpus memo's store: facts that outlive a session",
+    ("session.py", "_STORE"): "the session store: objects bound to a live SparkContext",
+    ("llmops.py", "_SIDE_CACHE"): "worker-process broadcast sides, bounded by bytes",
     ("registry.py", "QUERIES"): "the key registry, filled by @query at import",
     ("registry.py", "ORACLES"): "the oracle registry, filled by @query at import",
 }
@@ -44,7 +39,7 @@ def _module_dicts(path: str) -> list[str]:
         empty = (isinstance(value, ast.Dict) and not value.keys) or (
             isinstance(value, ast.Call)
             and isinstance(value.func, ast.Name)
-            and value.func.id == "dict"
+            and value.func.id in ("dict", "set")
             and not value.args
             and not value.keywords
         )
@@ -54,11 +49,12 @@ def _module_dicts(path: str) -> list[str]:
 
 
 def test_no_hand_rolled_module_dict_caches():
-    """A new module-level dict in engine/ is almost always a hand-rolled
-    corpus cache with its own keying and validity rule. Corpus-derived
+    """A new module-level dict or set in engine/ is almost always a
+    hand-rolled cache with its own keying and lifetime. Corpus-derived
     values go through engine.tables.corpus_memo and corpus-derived
-    directories through fixture_dir; anything else must be listed above
-    with its reason."""
+    directories through fixture_dir; objects bound to a SparkContext go
+    through engine.session.session_memo; anything else must be listed
+    above with its reason."""
     found = {
         (os.path.basename(f), name)
         for f in glob.glob(os.path.join(ENGINE, "*.py"))

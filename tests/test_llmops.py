@@ -93,17 +93,21 @@ def test_dedup_exact_idempotent(spark):
 
 def test_side_broadcast_cached_per_session_corpus(spark, tmp_path):
     """_side_broadcast returns the SAME Broadcast handle for repeated calls
-    on an unchanged corpus (the r11 driver-side cache), and a NEW handle when
-    the corpus bytes change (mtime/nrows key miss) — a stale hit would serve
-    old vectors to every blocked-matmul kernel."""
+    on an unchanged corpus (the driver-side session store entry), and a NEW
+    handle when the corpus bytes change (mtime/nrows key miss) — a stale hit
+    would serve old vectors to every blocked-matmul kernel."""
+    import os
     import shutil
 
+    import pyarrow.parquet as pq
+
     from engine.llmops import _side_broadcast
+    from engine.session import _STORE
     from engine.tables import load
 
     emb = load(spark, SF_DIR, "embeddings")
-    bc1, key1 = _side_broadcast(spark, SF_DIR, emb)
-    bc2, key2 = _side_broadcast(spark, SF_DIR, emb)
+    bc1, key1, _ = _side_broadcast(spark, SF_DIR, emb)
+    bc2, key2, _ = _side_broadcast(spark, SF_DIR, emb)
     assert key1 is not None and key1 == key2
     assert bc1 is bc2  # hit: no re-publish
 
@@ -112,12 +116,25 @@ def test_side_broadcast_cached_per_session_corpus(spark, tmp_path):
     alt.mkdir()
     shutil.copy2(f"{SF_DIR}/embeddings.parquet", alt / "embeddings.parquet")
     emb_alt = spark.read.parquet(str(alt / "embeddings.parquet"))
-    bc3, key3 = _side_broadcast(spark, str(alt), emb_alt)
+    bc3, key3, _ = _side_broadcast(spark, str(alt), emb_alt)
     assert key3 != key1
     assert bc3 is not bc1
     # cached value matches the on-disk side row count
     ids, mat = bc1.value
     assert len(ids) == emb.count() and mat.dtype.name == "float32"
+
+    # Rewritten in place (same path, bumped mtime, fewer rows): a new
+    # handle with the new rows replaces the path's one store entry.
+    path = alt / "embeddings.parquet"
+    old = pq.read_table(path)
+    mtime = os.stat(path).st_mtime_ns
+    pq.write_table(old.slice(0, old.num_rows // 2), path)
+    os.utime(path, ns=(mtime + 10**9, mtime + 10**9))
+    bc4, key4, _ = _side_broadcast(spark, str(alt), emb_alt)
+    assert key4 != key3 and bc4 is not bc3
+    assert len(bc4.value[0]) == old.num_rows // 2
+    entries = [k for k in _STORE if k[1:] == ("side_bc", os.path.realpath(path))]
+    assert len(entries) == 1
 
 
 def test_broadcast_side_keeps_double_source_precision(spark, tmp_path):
