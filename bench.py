@@ -40,6 +40,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from perfbench.procstat import cpu_jiffies, steal_pct  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
@@ -87,16 +89,27 @@ def _load_note() -> dict:
         }
     except OSError:
         return {}
-    try:
-        # raw cumulative jiffies; hypervisor steal between two _load_note()
-        # stamps = steal_jiffies delta / total delta (r09: engine-asymmetric
-        # host slowdowns that loadavg alone cannot see).
-        f = open("/proc/stat").readline().split()
-        note["steal_jiffies"] = int(f[8])
-        note["total_jiffies"] = sum(int(x) for x in f[1:9])
-    except (OSError, IndexError, ValueError):
-        pass
+    # raw cumulative jiffies; hypervisor steal between two _load_note()
+    # stamps = steal_jiffies delta / total delta (r09: engine-asymmetric
+    # host slowdowns that loadavg alone cannot see).
+    jiffies = _steal_now()
+    if jiffies:
+        note["steal_jiffies"], note["total_jiffies"] = jiffies
     return note
+
+
+def _steal_now() -> tuple[int, int] | None:
+    """(steal, total) host jiffies, or None where /proc/stat is unreadable."""
+    try:
+        return cpu_jiffies()
+    except (OSError, IndexError, ValueError):
+        return None
+
+
+def _steal_between(s0, s1) -> float | None:
+    """Steal percent between two _steal_now() readings; None if either is
+    missing or no jiffies passed."""
+    return round(steal_pct(s0, s1), 2) if s0 and s1 and s1[1] > s0[1] else None
 
 
 def _host_calibration(spark) -> dict:
@@ -261,13 +274,6 @@ def main() -> int:
     # host-speed constants, not JIT-warmup measurements.
     host_calib = _host_calibration(spark)
 
-    def _steal_now() -> tuple[int, int] | None:
-        try:
-            f = open("/proc/stat").readline().split()
-            return int(f[8]), sum(int(x) for x in f[1:9])
-        except (OSError, IndexError, ValueError):
-            return None
-
     # r14 (VERDICT r13 item 5): interleaved min-of-5. 5 round-robin passes
     # (rotated start so adjacency varies); per query the WARM claim is the
     # min over passes and the median rides along — min is the noise-robust
@@ -287,12 +293,7 @@ def main() -> int:
             dt = time.perf_counter() - t0
             s1 = _steal_now()
             run_times[name].append(dt)
-            if s0 and s1 and s1[1] > s0[1]:
-                run_steal[name].append(
-                    round(100.0 * (s1[0] - s0[0]) / (s1[1] - s0[1]), 2)
-                )
-            else:
-                run_steal[name].append(None)
+            run_steal[name].append(_steal_between(s0, s1))
     times = {n: round(min(r), 4) for n, r in run_times.items()}
     times_median = {
         n: round(sorted(r)[len(r) // 2], 4) for n, r in run_times.items()

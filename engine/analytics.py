@@ -14,15 +14,13 @@ are broadcast, and every aggregate is partial+final (map-side combine).
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from engine.registry import query
+from engine.session import session_memo
 from engine.tables import load, sftag
-
-_TMP = tempfile.gettempdir()
+from engine.tmpdirs import scratch_dir
 
 
 @query(
@@ -266,7 +264,7 @@ def scan_merge_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass) and declare the evolved schema explicitly; it's enabled here to
     prove the reconciliation semantics."""
     part = load(spark, sf_dir, "part")
-    base = f"{_TMP}/spark_graft_merge_schema_{sftag(sf_dir)}"
+    base = scratch_dir(prefix=f"sg-merge-schema-{sftag(sf_dir)}-")
     old = part.filter(F.col("p_partkey") % 2 == 0).select("p_partkey", "p_name")
     new = part.filter(F.col("p_partkey") % 2 == 1).select("p_partkey", "p_name", "p_retailprice")
     old.write.mode("overwrite").parquet(f"{base}/batch=0")
@@ -396,14 +394,15 @@ def join_bucketed_colocate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # while the data is per-scale, so a shared name would serve stale buckets
     # to a second scale factor in the same session
     tag = sftag(sf_dir)
-    base = f"{_TMP}/spark_graft_bucketed_{tag}"
     orders = load(spark, sf_dir, "orders")
     cust = load(spark, sf_dir, "customer")
-    for name, df, key in (
-        (f"sg_bucket_orders_{tag}", orders, "o_custkey"),
-        (f"sg_bucket_customer_{tag}", cust, "c_custkey"),
-    ):
-        if not spark.catalog.tableExists(name):
+
+    def write_buckets() -> None:
+        base = scratch_dir(prefix=f"sg-bucketed-{tag}-")
+        for name, df, key in (
+            (f"sg_bucket_orders_{tag}", orders, "o_custkey"),
+            (f"sg_bucket_customer_{tag}", cust, "c_custkey"),
+        ):
             (
                 df.write.bucketBy(8, key)
                 .sortBy(key)
@@ -412,6 +411,8 @@ def join_bucketed_colocate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .format("parquet")
                 .saveAsTable(name)
             )
+
+    session_memo(spark, write_buckets, "bucketed", sf_dir)
     bo = spark.table(f"sg_bucket_orders_{tag}")
     bc = spark.table(f"sg_bucket_customer_{tag}")
     return (

@@ -9,15 +9,12 @@ written so its result is provably identical to the plain equi-join.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from engine.registry import query
 from engine.tables import SCHEMAS, load, sftag
-
-_TMP = tempfile.gettempdir()
+from engine.tmpdirs import scratch_dir
 
 
 @query(
@@ -28,7 +25,7 @@ def scan_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC sink + source round-trip with pinned schema (the other columnar
     format Spark ships a vectorized reader for; splittable + predicate
     pushdown, same scan properties as parquet)."""
-    path = f"{_TMP}/spark_graft_orc_supplier_{sftag(sf_dir)}"
+    path = scratch_dir(prefix=f"sg-orc-supplier-{sftag(sf_dir)}-")
     load(spark, sf_dir, "supplier").write.mode("overwrite").orc(path)
     return spark.read.schema(SCHEMAS["supplier"]).orc(path)
 
@@ -165,7 +162,7 @@ def scan_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     the quarantine route (etl_validate_quarantine has the routing shape);
     DROPMALFORMED is the ingest-and-continue route. Parsing is per-row and
     partition-local — tolerance costs nothing in plan shape at any scale."""
-    path = f"{_TMP}/spark_graft_csv_malformed_{sftag(sf_dir)}"
+    path = scratch_dir(prefix=f"sg-csv-malformed-{sftag(sf_dir)}-")
     n = load(spark, sf_dir, "nation")
     n.coalesce(1).write.mode("overwrite").option("header", True).csv(path)
     import glob as _glob
@@ -207,7 +204,7 @@ def sink_sorted_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     time-series fact tables at 100 TB — same data, same query, a fraction
     of the I/O. Boundaries come from sampling (nondeterministic splits, but
     content-identical), so the read-back equals the plain filtered table."""
-    path = f"{_TMP}/spark_graft_clustered_lineitem_{sftag(sf_dir)}"
+    path = scratch_dir(prefix=f"sg-clustered-lineitem-{sftag(sf_dir)}-")
     li = load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_shipdate", "l_extendedprice"
     )

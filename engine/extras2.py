@@ -13,15 +13,12 @@ multimodal pipeline). Registered after the 50-key attestation window.
 
 from __future__ import annotations
 
-import tempfile
-
-from engine.tmpdirs import scratch_dir
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from engine.registry import query
 from engine.tables import load, replay_fixture, sftag
+from engine.tmpdirs import scratch_dir
 
 
 def _mg_partition_fn(k: int):
@@ -324,8 +321,7 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    state_dir = f"{tempfile.gettempdir()}/sg_fb_upsert_{sftag(sf_dir)}"
-    shutil.rmtree(state_dir, ignore_errors=True)
+    state_dir = scratch_dir(prefix=f"sg-fb-upsert-{sftag(sf_dir)}-")
     # The three replay files are fixture prep, built once per corpus file
     # identity. Every timed run still executes a REAL streaming query:
     # fresh checkpoint, fresh state table, real merges.

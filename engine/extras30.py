@@ -14,15 +14,12 @@ merge is associative integer/sum arithmetic with the batch order fixed.
 
 from __future__ import annotations
 
-import tempfile
-
-from engine.tmpdirs import scratch_dir
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from engine.registry import query
 from engine.tables import load, sftag
+from engine.tmpdirs import scratch_dir
 
 
 @query(
@@ -95,9 +92,7 @@ def etl_incremental_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    state_dir = f"{tempfile.gettempdir()}/sg_incagg_{sftag(sf_dir)}"
-    shutil.rmtree(state_dir, ignore_errors=True)
-    os.makedirs(state_dir, exist_ok=True)
+    state_dir = scratch_dir(prefix=f"sg-incagg-{sftag(sf_dir)}-")
     e = load(spark, sf_dir, "events").select("event_id", "event_type", "value")
     for i in range(3):
         delta = (

@@ -13,15 +13,13 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
-
-from engine.tmpdirs import scratch_dir
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from engine.registry import query
 from engine.tables import load, replay_fixture, sftag
+from engine.tmpdirs import scratch_dir
 
 
 @query(
@@ -60,8 +58,7 @@ def pipeline_stream_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     foreachBatch's per-batch transactionality caveat (and the
     table-format upgrade path) is documented at
     stream_foreachbatch_upsert."""
-    state_dir = f"{tempfile.gettempdir()}/sg_serving_{sftag(sf_dir)}"
-    shutil.rmtree(state_dir, ignore_errors=True)
+    state_dir = scratch_dir(prefix=f"sg-serving-{sftag(sf_dir)}-")
     # The three batch files are fixture prep, built once per corpus file
     # identity. Every timed run still executes a real streaming query:
     # fresh checkpoint, fresh serving table, real merges.

@@ -12,16 +12,13 @@ families.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from engine.registry import query
 from engine.tables import load, sftag
 from engine.textops import explode_nonempty, word_ngram_ids
-
-_TMP = tempfile.gettempdir()
+from engine.tmpdirs import scratch_dir
 
 
 @query(
@@ -314,7 +311,7 @@ def scan_text_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     out like any other source; parsing is per-row projection (zero shuffle).
     The tab-split uses instr+substring, not split(), to keep any tabs INSIDE
     the payload intact."""
-    path = f"{_TMP}/spark_graft_text_lines_{sftag(sf_dir)}"
+    path = scratch_dir(prefix=f"sg-text-lines-{sftag(sf_dir)}-")
     d = load(spark, sf_dir, "documents")
     d.select(
         F.concat_ws("\t", F.col("doc_id").cast("string"), F.col("text"))

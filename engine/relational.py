@@ -9,7 +9,6 @@ by plan-shape tests in tests/test_plan_shape.py). Per-operator 100 TB notes inli
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -17,8 +16,7 @@ from pyspark.sql.window import Window
 
 from engine.registry import query
 from engine.tables import SCHEMAS, fixture_dir, load, sftag
-
-_TMP = tempfile.gettempdir()
+from engine.tmpdirs import scratch_dir
 
 
 # ---------------------------------------------------------------------------
@@ -43,7 +41,7 @@ def scan_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: CSV reads are splittable (uncompressed/bzip2); schema is always
     explicit so no inference pass over the data.
     """
-    path = f"{_TMP}/spark_graft_csv_nation_{sftag(sf_dir)}"
+    path = scratch_dir(prefix=f"sg-csv-nation-{sftag(sf_dir)}-")
     load(spark, sf_dir, "nation").write.mode("overwrite").option("header", True).csv(path)
     return spark.read.schema(SCHEMAS["nation"]).option("header", True).csv(path)
 
@@ -54,7 +52,7 @@ def scan_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def scan_json_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-lines source with explicit schema (no sampling-based inference)."""
-    path = f"{_TMP}/spark_graft_json_region_{sftag(sf_dir)}"
+    path = scratch_dir(prefix=f"sg-json-region-{sftag(sf_dir)}-")
     load(spark, sf_dir, "region").write.mode("overwrite").json(path)
     return spark.read.schema(SCHEMAS["region"]).json(path)
 
@@ -72,7 +70,7 @@ def sink_parquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: partitionBy on a low-cardinality column (3 values) keeps file
     counts bounded; high-cardinality keys would use bucketing instead.
     """
-    path = f"{_TMP}/spark_graft_sink_lineitem_{sftag(sf_dir)}"
+    path = scratch_dir(prefix=f"sg-sink-lineitem-{sftag(sf_dir)}-")
     (
         load(spark, sf_dir, "lineitem")
         .filter(F.col("l_quantity") <= 10)

@@ -25,17 +25,12 @@ operative spec).
 
 from __future__ import annotations
 
-import tempfile
-
-from engine.tmpdirs import scratch_dir
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from engine.registry import query
 from engine.tables import load, sftag
-
-_TMP = tempfile.gettempdir()
+from engine.tmpdirs import scratch_dir
 
 
 @query(
@@ -546,9 +541,6 @@ def etl_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     (128-1024 MB) trades open() overhead against scan parallelism, and
     range clustering doubles as the sort-order contract for
     sink_sorted_clustered-style pruning."""
-    # Per-invocation dirs (mkdtemp), NOT fixed paths: a concurrent
-    # invocation for the same sf_dir (parallel pytest, bench re-runs)
-    # would otherwise overwrite part files mid-scan of the other's read.
     frag_dir = scratch_dir(prefix=f"sg_compact_frag_{sftag(sf_dir)}_")
     comp_dir = scratch_dir(prefix=f"sg_compact_out_{sftag(sf_dir)}_")
     etl_compact_small_files._last_dirs = (frag_dir, comp_dir)  # for tests

@@ -21,16 +21,13 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-import tempfile
-
-from engine.tmpdirs import scratch_dir
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from engine.registry import query
 from engine.tables import corpus_memo, fixture_dir, load, replay_fixture, sftag
+from engine.tmpdirs import scratch_dir
 
 # ---------------------------------------------------------------------------
 # batch-equivalent window semantics (FULL oracle)
@@ -140,8 +137,6 @@ def stream_session_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # true Structured Streaming (ROWS — engine-internal semantics)
 # ---------------------------------------------------------------------------
-
-_CKPT_ROOT: list[str] = []  # one shared checkpoint root per process
 
 
 def _events_raw_schema(spark: SparkSession, sf_dir: str) -> tuple[T.StructType, bool]:
@@ -292,11 +287,8 @@ def _run_stream(
     import os
 
     spark = stream_df.sparkSession
-    # One shared checkpoint root per process; each run still gets its own
-    # fresh checkpoint subtree (a reused checkpoint would replay nothing).
-    if not _CKPT_ROOT:
-        _CKPT_ROOT.append(scratch_dir(prefix="sg-ckpt-root-"))
-    ckpt = tempfile.mkdtemp(prefix=f"{name}-", dir=_CKPT_ROOT[0])
+    # A fresh checkpoint per run: a reused checkpoint would replay nothing.
+    ckpt = scratch_dir(prefix=f"{name}-")
     old = spark.conf.get("spark.sql.shuffle.partitions")
     default = (
         _derived_stream_parts(spark, sf_dir) if sf_dir is not None else 4

@@ -142,14 +142,9 @@ SCHEMAS: dict[str, T.StructType] = {
 
 
 def sftag(sf_dir: str) -> str:
-    """Filesystem/identifier-safe tag derived from sf_dir.
-
-    Every side-effecting operator (temp CSV/JSON/ORC/parquet sinks, bucketed
-    tables, streaming memory sinks) must scope its name with this tag:
-    registry plan memoization is per-(session, sf_dir), so a FIXED path would
-    let a second scale factor overwrite the bytes a first scale's memoized
-    lazy plan still reads — the stale-scale hazard fixed for bucketed tables
-    in round 1 and generalized in round 2 (ADVICE r01)."""
+    """Filesystem/identifier-safe tag derived from sf_dir: the readable
+    part of a scratch-dir prefix, and the scale-scoped suffix of names that
+    are session-global (catalog tables, streaming memory sinks)."""
     return "".join(c if c.isalnum() else "_" for c in sf_dir.strip("/"))
 
 

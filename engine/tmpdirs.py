@@ -1,18 +1,26 @@
 """Process-scoped scratch directories for operators that materialize
-intermediate files (sink roundtrips, streaming sources/checkpoints,
-stored indexes).
+intermediate files (sink roundtrips, state tables, streaming
+sources/checkpoints, stored indexes).
 
 The rule: a fixture derived from a corpus file (replay batches, a
 partitioned copy, a stored index) goes through
 ``engine.tables.fixture_dir``, which builds it in a scratch dir once per
-file identity; per-call scratch goes through ``scratch_dir``.
+file identity; per-call scratch goes through ``scratch_dir``. This is the
+only engine module that picks a temp location: no other module calls
+``gettempdir()``, builds a fixed ``/tmp`` path, or calls ``mkdtemp``
+without a ``dir=`` inside a directory it already owns
+(``tests/test_corpus_memo.py::test_scratch_location_decided_only_in_tmpdirs``).
 
-``scratch_dir(prefix)`` is a drop-in mkdtemp: dirs live for the PROCESS
-lifetime — required, because operators return LAZY DataFrames that
-resolve their files at execution time, so removal any earlier than exit
-could break a plan the caller hasn't collected yet — and one atexit
-sweep removes everything. Scratch dirs are per-process by construction
-(mkdtemp), so exit-time removal cannot race another process.
+``scratch_dir(prefix)`` is a drop-in mkdtemp, so every call gets its own
+directory: a plan a key returned stays readable after the key runs again
+(``tests/test_catalogops.py::test_plan_stays_readable_after_rerun``).
+Dirs live for the PROCESS lifetime — required, because operators return
+LAZY DataFrames that resolve their files at execution time, so removal
+any earlier than exit could break a plan the caller hasn't collected yet —
+and one atexit sweep removes everything
+(``test_scratch_dirs_removed_at_process_exit``). Scratch dirs are
+per-process by construction (mkdtemp), so exit-time removal cannot race
+another process.
 """
 
 from __future__ import annotations

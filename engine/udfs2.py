@@ -19,7 +19,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from engine.registry import query
-from engine.tables import load
+from engine.tables import load, sftag
+from engine.tmpdirs import scratch_dir
 
 
 @query(
@@ -141,18 +142,12 @@ def scan_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     XML is the interchange format here, not the analytics format — at
     100 TB you land XML once and convert to parquet (this key IS that
     landing step)."""
-    import os
-    import tempfile
-
     src = (
         load(spark, sf_dir, "orders")
         .filter(F.col("o_orderkey") % 40 == 0)
         .select("o_orderkey", "o_orderstatus", "o_totalprice", "o_orderpriority")
     )
-    out = os.path.join(
-        tempfile.gettempdir(),
-        f"sg_xml_rt_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
+    out = scratch_dir(prefix=f"sg-xml-rt-{sftag(sf_dir)}-")
     src.write.mode("overwrite").option("rowTag", "order").format("xml").save(out)
     return (
         spark.read.format("xml")

@@ -20,13 +20,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-
-def _steal_now():
-    try:
-        f = open("/proc/stat").readline().split()
-        return int(f[8]), sum(int(x) for x in f[1:9])
-    except (OSError, IndexError, ValueError):
-        return None
+from bench import _steal_between, _steal_now  # noqa: E402
 
 
 def main() -> int:
@@ -63,11 +57,7 @@ def main() -> int:
             dt = time.perf_counter() - t0
             s1 = _steal_now()
             times.append(round(dt, 4))
-            steals.append(
-                round(100.0 * (s1[0] - s0[0]) / (s1[1] - s0[1]), 2)
-                if s0 and s1 and s1[1] > s0[1]
-                else None
-            )
+            steals.append(_steal_between(s0, s1))
         tail = sorted(times[1:]) if len(times) > 1 else sorted(times)
         rec = {
             "times": times,

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from tests.conftest import SF_DIR
 
 
@@ -108,11 +110,34 @@ def test_lateral_topk_ties_short_and_empty_groups(spark, tmp_path):
     ]
 
 
-def test_scratch_dirs_removed_at_process_exit():
+# Every key that writes files and reads them back in its returned plan.
+SCRATCH_KEYS = [
+    "scan_orc_roundtrip",
+    "scan_csv_malformed",
+    "sink_sorted_clustered",
+    "scan_csv_roundtrip",
+    "scan_json_lines",
+    "sink_parquet_roundtrip",
+    "scan_merge_schema",
+    "etl_upsert_keyed",
+    "scan_text_lines",
+    "agg_hll_sketch_merge",
+    "scan_csv_dialect",
+    "scan_xml_roundtrip",
+    "stream_foreachbatch_upsert",
+    "etl_incremental_agg_merge",
+    "pipeline_stream_serving",
+    "join_bucketed_colocate",
+]
+
+
+def test_scratch_dirs_removed_at_process_exit(tmp_path):
     """engine.tmpdirs.scratch_dir: every operator scratch dir is removed
     by the atexit sweep — previously ~40 bare mkdtemp sites leaked one
     corpus-sized dir per invocation per process (see engine/tmpdirs.py).
-    Run a child interpreter so the exit hook actually fires."""
+    The keys that write files put them nowhere else, so a process that ran
+    them leaves its TMPDIR empty. Run child interpreters so the exit hook
+    actually fires."""
     import os
     import subprocess
     import sys
@@ -131,3 +156,37 @@ def test_scratch_dirs_removed_at_process_exit():
     d = out.stdout.strip().splitlines()[-1]
     assert "sg-scratchtest-" in d
     assert not os.path.exists(d)
+
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    code = (
+        f"import sys; sys.path.insert(0, {root!r})\n"
+        "from engine.registry import collect\n"
+        "from engine.session import get_spark\n"
+        "spark = get_spark('scratch-exit', cpus='1')\n"
+        "queries, _ = collect()\n"
+        f"for k in {SCRATCH_KEYS!r}:\n"
+        f"    assert queries[k](spark, {SF_DIR!r}).collect(), k\n"
+        "spark.stop()\n"
+    )
+    subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=root,
+        env={**os.environ, "TMPDIR": str(tmp)},
+        check=True,
+    )
+    assert os.listdir(tmp) == []
+
+
+@pytest.mark.parametrize("key", SCRATCH_KEYS)
+def test_plan_stays_readable_after_rerun(spark, key):
+    """A returned plan reads files its own call wrote: building the same
+    key again must not overwrite or delete them under the first plan."""
+    from engine.registry import collect
+
+    fn = collect()[0][key].__wrapped__
+    first = fn(spark, SF_DIR)
+    second = fn(spark, SF_DIR)
+    a = sorted(str(tuple(r)) for r in first.collect())
+    b = sorted(str(tuple(r)) for r in second.collect())
+    assert a and a == b

@@ -64,6 +64,41 @@ def test_no_hand_rolled_module_dict_caches():
     assert set(ALLOWED_MODULE_DICTS) - found == set(), "stale allow-list entry"
 
 
+def _temp_locations(path: str) -> list[str]:
+    hits = []
+    for node in ast.walk(ast.parse(open(path).read())):
+        if isinstance(node, (ast.Attribute, ast.Name)):
+            name = node.attr if isinstance(node, ast.Attribute) else node.id
+            if name == "gettempdir":
+                hits.append(f"{node.lineno}: gettempdir")
+        elif isinstance(node, ast.Call):
+            f = node.func
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", "")
+            if name in ("mkdtemp", "TemporaryDirectory") and not any(
+                kw.arg == "dir" for kw in node.keywords
+            ):
+                hits.append(f"{node.lineno}: {name} without dir=")
+        elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+            if node.value.startswith("/tmp"):
+                hits.append(f"{node.lineno}: {node.value!r}")
+    return hits
+
+
+def test_scratch_location_decided_only_in_tmpdirs():
+    """engine.tmpdirs is the one module that picks where scratch files
+    live. A fixed path under the temp dir is shared by every call and
+    every process, so a second call overwrites the files a first call's
+    lazy plan still reads, and the files outlive the process."""
+    found = {
+        os.path.basename(f): hits
+        for f in sorted(glob.glob(os.path.join(ENGINE, "*.py")))
+        if os.path.basename(f) != "tmpdirs.py"
+        for hits in [_temp_locations(f)]
+        if hits
+    }
+    assert found == {}
+
+
 def _rewrite(path, text: str) -> None:
     st = os.stat(path)
     with open(path, "w") as fh:

@@ -90,20 +90,18 @@ def test_bucketed_join_no_exchange(spark):
     assert "Exchange" not in plan, plan
 
 
-def test_bucketed_join_mismatched_counts_shuffles_correctly(spark):
+def test_bucketed_join_mismatched_counts_shuffles_correctly(spark, tmp_path):
     # docs/SCALE.md: bucket counts must MATCH across sides for exchange-free
     # colocation. A mismatched count (8 vs 4 here) must degrade to a correct
     # shuffled join — Spark re-exchanges at least one side — never silently
     # colocate bucket i with the wrong bucket i. Guards against a planner or
     # write-path regression that no correctness test would otherwise see.
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from engine.tables import load
 
     tag = "".join(c if c.isalnum() else "_" for c in SF_DIR.strip("/"))
-    base = f"{tempfile.gettempdir()}/spark_graft_bucketed_mismatch_{tag}"
+    base = str(tmp_path)
     cust = load(spark, SF_DIR, "customer")
     name4 = f"sg_bucket_customer4_{tag}"
     if not spark.catalog.tableExists(name4):

@@ -47,16 +47,13 @@ def test_mapinpandas_batch_boundary_invariance(spark):
     assert baseline == tiny and baseline
 
 
-def test_xml_roundtrip_escapes_special_chars(spark):
+def test_xml_roundtrip_escapes_special_chars(spark, tmp_path):
     """A value containing XML metacharacters must survive the write+read
     (entity escaping), proven on a synthetic frame."""
-    import os
-    import tempfile
-
     df = spark.createDataFrame(
         [(1, 'a<b>&"c"'), (2, "plain")], "id int, s string"
     )
-    out = os.path.join(tempfile.gettempdir(), "sg_xml_escape_probe")
+    out = str(tmp_path / "sg_xml_escape_probe")
     df.write.mode("overwrite").option("rowTag", "r").format("xml").save(out)
     back = (
         spark.read.format("xml")
