@@ -1,13 +1,10 @@
 """Training-corpus curation operators (r03 batch): the data-engineering ops
 an LLM training pipeline runs between raw corpus and tokenizer that were not
 yet covered by engine.llmops/textops/trainext/pipeops — eval-set
-decontamination, fixed-context sequence packing, domain-mix resampling, and
-streaming enrichment against a static dimension.
+decontamination, fixed-context sequence packing and domain-mix resampling.
 
-All four are SURVEY §2.I/L-family extensions (the reference corpus at
-/root/reference is an empty directory — SURVEY.md §2 is the operative spec,
-as established in §0): each key has a full DuckDB oracle except none — all
-four are SQL-expressible and FULL-checked.
+All three are SURVEY §2.I/L-family extensions, SQL-expressible and
+FULL-checked against a DuckDB oracle.
 
 Scale notes (100 TB) are per-operator; the common theme is that every one is
 a broadcast join or a per-group window — no global sort, no driver
@@ -318,41 +315,3 @@ def sample_source_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") <= F.ceil(F.col("cnt") * 0.4).cast("long"))
         .select("doc_id", "source")
     )
-
-
-@query(
-    "stream_static_enrich",
-    oracle="""
-    SELECT c_mktsegment, count(*) AS n_events, round(sum(value), 2) AS sum_value
-    FROM events e JOIN customer c ON e.user_id = c.c_custkey
-    GROUP BY 1
-    """,
-)
-def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-static enrichment: the events stream joined to the static
-    customer dimension (broadcast — no state, unlike stream-stream joins),
-    then aggregated per segment. The missing sibling of stream_stream_join
-    in §2.J: dimension enrichment is the most common streaming join in
-    practice and needs NO watermark, because the static side is re-read per
-    micro-batch, not buffered.
-
-    FULL-oracle for the same reason as the windowed streaming keys: the
-    corpus is one file ⇒ one AvailableNow micro-batch ⇒ the completed
-    memory-sink table equals the batch join+agg bit-for-bit.
-    100 TB/day: the static side broadcasts per batch (refreshable dim); the
-    aggregation state is O(segments). Complete output mode is fine because
-    the result cardinality IS the segment count."""
-    from engine.streaming import _run_stream, read_events_stream
-    from engine.tables import sftag
-
-    s = read_events_stream(spark, sf_dir)
-    cust = load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    joined = s.join(F.broadcast(cust), s.user_id == cust.c_custkey)
-    agg = joined.groupBy("c_mktsegment").agg(
-        F.count("*").alias("n_events"),
-        F.round(F.sum("value"), 2).alias("sum_value"),
-    )
-    out = _run_stream(
-        agg, f"sg_static_enrich_{sftag(sf_dir)}", "complete", sf_dir=sf_dir
-    )
-    return out

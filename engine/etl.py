@@ -160,38 +160,6 @@ def etl_upsert_keyed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "stream_rollup_cascade",
-    oracle="""
-    WITH hourly AS (
-      SELECT time_bucket(INTERVAL '1 hour', ts) AS h, event_type,
-             count(*) AS cnt, sum(value) AS sv
-      FROM events GROUP BY 1, 2)
-    SELECT time_bucket(INTERVAL '1 day', h) AS day_start, event_type,
-           sum(cnt)::BIGINT AS cnt, round(sum(sv), 2) AS sum_value
-    FROM hourly GROUP BY 1, 2
-    """,
-)
-def stream_rollup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hierarchical time rollup (hypertable continuous-aggregate shape):
-    daily aggregates computed FROM the hourly aggregates, not the raw rows —
-    at 100 TB the cascade means each coarser grain reads the (tiny) finer
-    aggregate, and count/sum re-aggregate losslessly."""
-    e = load(spark, sf_dir, "events")
-    hourly = e.groupBy(
-        F.window("ts", "1 hour").alias("w"), "event_type"
-    ).agg(F.count("*").alias("cnt"), F.sum("value").alias("sv"))
-    return (
-        hourly.select(F.col("w.start").alias("h"), "event_type", "cnt", "sv")
-        .groupBy(F.window("h", "1 day").alias("d"), "event_type")
-        .agg(
-            F.sum("cnt").alias("cnt"),
-            F.round(F.sum("sv"), 2).alias("sum_value"),
-        )
-        .select(F.col("d.start").alias("day_start"), "event_type", "cnt", "sum_value")
-    )
-
-
-@query(
     "etl_scd2_intervals",
     oracle="""
     SELECT user_id, event_type, ts AS valid_from,

@@ -1,14 +1,13 @@
 """Operator batch 4 (r02): exact two-pass heavy hitters, snapshot diffing,
-nearest-as-of join, per-doc keyword extraction, foreachBatch streaming
-upsert, and the binary-file ingestion source.
+nearest-as-of join, per-doc keyword extraction, and the binary-file
+ingestion source.
 
 Rounds out §2 families from the operational side: the sketch→exact-recount
 pattern every telemetry pipeline uses (heavy hitters), snapshot reconciliation
 (the "what changed since yesterday's drop" question), the third as-of variant
 (nearest, after backward/forward), keyword tagging on top of the tf-idf
-relation, the foreachBatch escape hatch (how Structured Streaming writes to
-systems without a native sink), and binaryFile (how image/audio bytes enter a
-multimodal pipeline). Registered after the 50-key attestation window.
+relation, and binaryFile (how image/audio bytes enter a multimodal
+pipeline). Registered after the 50-key attestation window.
 """
 
 from __future__ import annotations
@@ -17,8 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from engine.registry import query
-from engine.tables import load, replay_fixture, sftag
-from engine.tmpdirs import scratch_dir
+from engine.tables import load
 
 
 def _mg_partition_fn(k: int):
@@ -291,81 +289,6 @@ def text_keyword_topterm(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("doc_id", F.col("k.token").alias("keyword"), F.col("k.tfidf").alias("tfidf"))
     )
-
-
-@query(
-    "stream_foreachbatch_upsert",
-    # FULL oracle (r04): the three-batch replay is deterministic and the
-    # merge is associative (per-user count sums), so the final state table
-    # equals the plain batch aggregate — the same equivalence
-    # tests/test_extras2.py asserts, now driver-hash-checked.
-    oracle="""
-    SELECT user_id, count(*) AS cnt FROM events GROUP BY user_id
-    ORDER BY user_id
-    """,
-)
-def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming upsert via foreachBatch — the escape hatch for sinks with
-    no native streaming writer (JDBC, key-value stores, MERGE targets):
-    each micro-batch's per-user counts are merged into a keyed parquet
-    state table (new keys inserted, existing keys summed). Three replayed
-    files ⇒ three merges; the final table equals the batch groupBy — that
-    equivalence is the test, and the run is deterministic.
-
-    100 TB: foreachBatch gives exactly-once PER BATCH only if the merge
-    itself is idempotent/transactional — here each merge rewrites the state
-    atomically via write-then-swap (the parquet stand-in for a MERGE
-    transaction). State is keyed, so each merge shuffles O(batch keys) +
-    reads O(state); a real deployment points this at a transactional table
-    format instead of bare parquet."""
-    import os
-    import shutil
-
-    state_dir = scratch_dir(prefix=f"sg-fb-upsert-{sftag(sf_dir)}-")
-    # The three replay files are fixture prep, built once per corpus file
-    # identity. Every timed run still executes a REAL streaming query:
-    # fresh checkpoint, fresh state table, real merges.
-    src = replay_fixture(
-        f"{sf_dir}/events.parquet",
-        "fb-src",
-        lambda: load(spark, sf_dir, "events").select("event_id", "user_id"),
-        [F.col("event_id") % 3 == i for i in range(3)],
-    )
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
-        delta = batch_df.groupBy("user_id").agg(F.count("*").alias("cnt"))
-        if os.path.exists(f"{state_dir}/cur"):
-            cur = sp.read.parquet(f"{state_dir}/cur")
-            merged = (
-                cur.unionByName(delta)
-                .groupBy("user_id")
-                .agg(F.sum("cnt").alias("cnt"))
-            )
-        else:
-            merged = delta
-        # Bound the state table's file count (guide §6 small-files; the
-        # _INCREMENT_MAX_FILES precedent): merged sits just past the
-        # groupBy shuffle, so a narrow coalesce only merges reduce
-        # outputs — without it every merge wrote shuffle-partition-many
-        # (32 locally) tiny files that the NEXT merge and the final read
-        # re-listed and re-opened. A real deployment sizes output files
-        # to 128MB-1GB via the table format's compaction instead.
-        merged.coalesce(4).write.mode("overwrite").parquet(f"{state_dir}/next")
-        shutil.rmtree(f"{state_dir}/cur", ignore_errors=True)
-        os.rename(f"{state_dir}/next", f"{state_dir}/cur")
-
-    s = spark.readStream.schema("event_id long, user_id long").parquet(src)
-    ckpt = scratch_dir(prefix="sg-fb-ckpt-")
-    q = (
-        s.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", ckpt)
-        .option("maxFilesPerTrigger", "1")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(f"{state_dir}/cur").orderBy("user_id")
 
 
 @query(

@@ -1,15 +1,11 @@
-"""Extras batch 27 module (r05 continuation): targeted erasure with
-partition-scoped rewrites, and checkpoint-driven exactly-once replay.
+"""Targeted erasure with partition-scoped rewrites.
 
-SURVEY §2 families extended: §2.M+governance (right-to-be-forgotten: a
-deletion list applied by rewriting ONLY the partitions that contain the
-subjects — the layout-aware erasure pattern), §2.J (the checkpoint
-contract: re-starting a finished stream against the same checkpoint
-replays NOTHING — exactly-once at the sink, demonstrated not asserted).
+SURVEY §2.M+governance (right-to-be-forgotten: a deletion list applied by
+rewriting ONLY the partitions that contain the subjects — the
+layout-aware erasure pattern).
 
 Determinism discipline (SURVEY §5.3): the deletion list is a fixed id
-set; audits are counts/sums; the second stream run's no-op-ness is
-measured by output row count equality.
+set; audits are counts/sums.
 """
 
 from __future__ import annotations
@@ -92,62 +88,4 @@ def etl_targeted_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("long")
         .alias("n_erased_left"),
-    )
-
-
-@query(
-    "stream_checkpoint_exactly_once",
-    oracle="""
-    SELECT count(*) AS n_rows,
-           CAST(count(*) AS BIGINT) AS n_after_replay,
-           TRUE AS replay_added_nothing
-    FROM events
-    WHERE event_type = 'purchase'
-    """,
-)
-def stream_checkpoint_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The checkpoint exactly-once contract, demonstrated: a filtered
-    stream runs AvailableNow into a parquet sink with a checkpoint; then
-    the SAME query is started AGAIN with the SAME checkpoint and source
-    — and writes nothing, because the checkpoint's commit log already
-    covers every input file. Output: sink row count after run 1, after
-    run 2, and the no-new-rows verdict; the oracle pins both counts to
-    the batch answer.
-
-    100 TB: this is the recovery story — a crashed or re-submitted job
-    resumes from the checkpoint's offsets instead of reprocessing (and
-    double-writing) the whole source. It holds because the file sink's
-    transaction log and the source's offset tracking are both inside the
-    checkpoint; wipe either and replays duplicate. Pair with
-    foreachBatch idempotent merges (stream_foreachbatch_upsert) for
-    sinks without a transaction log."""
-    src_dir = scratch_dir(prefix=f"sg-xo-src-{sftag(sf_dir)}-")
-    load(spark, sf_dir, "events").filter(
-        F.col("event_type") == "purchase"
-    ).select("event_id", "user_id", "value").coalesce(2).write.mode(
-        "overwrite"
-    ).parquet(src_dir)
-    out = scratch_dir(prefix=f"sg-xo-out-{sftag(sf_dir)}-")
-    ckpt = scratch_dir(prefix=f"sg-xo-ckpt-{sftag(sf_dir)}-")
-
-    def run_once() -> None:
-        s = spark.readStream.schema("event_id long, user_id long, value double").parquet(
-            src_dir
-        )
-        q = (
-            s.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    run_once()
-    n1 = spark.read.parquet(out).count()
-    run_once()  # same checkpoint: must be a no-op
-    n2 = spark.read.parquet(out).count()
-    return spark.createDataFrame(
-        [(n1, n2, n1 == n2)],
-        "n_rows long, n_after_replay long, replay_added_nothing boolean",
     )

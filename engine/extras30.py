@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from engine.registry import query
+from engine.streaming import merge_table
 from engine.tables import load, sftag
 from engine.tmpdirs import scratch_dir
 
@@ -89,10 +90,7 @@ def etl_incremental_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     the mergeable-sketch version of the same idea). 100 TB: the delta
     aggregate is one partial-agg pass over the new partition; the merge
     shuffles table-cardinality rows only."""
-    import os
-    import shutil
-
-    state_dir = scratch_dir(prefix=f"sg-incagg-{sftag(sf_dir)}-")
+    path = f"{scratch_dir(prefix=f'sg-incagg-{sftag(sf_dir)}-')}/table"
     e = load(spark, sf_dir, "events").select("event_id", "event_type", "value")
     for i in range(3):
         delta = (
@@ -100,24 +98,9 @@ def etl_incremental_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("event_type")
             .agg(F.count(F.lit(1)).alias("cnt"), F.sum("value").alias("sv"))
         )
-        if os.path.exists(f"{state_dir}/cur"):
-            cur = spark.read.parquet(f"{state_dir}/cur")
-            merged = (
-                cur.unionByName(delta)
-                .groupBy("event_type")
-                .agg(F.sum("cnt").alias("cnt"), F.sum("sv").alias("sv"))
-            )
-        else:
-            merged = delta
-        # r15 (guide §6 small-files, same as the foreachBatch keys): the
-        # merged table is |event_type| rows (5 here) yet inherited
-        # shuffle-partition-many part files per merge cycle; the narrow
-        # coalesce merges reduce outputs only. A real mart uses the table
-        # format's compaction; file count stays bounded either way.
-        merged.coalesce(1).write.mode("overwrite").parquet(f"{state_dir}/next")
-        shutil.rmtree(f"{state_dir}/cur", ignore_errors=True)
-        os.rename(f"{state_dir}/next", f"{state_dir}/cur")
-    table = spark.read.parquet(f"{state_dir}/cur")
+        # The merged table is |event_type| rows (5 here): one file.
+        merge_table(path, delta, ["event_type"], 1)
+    table = spark.read.parquet(path)
     full = e.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("f_cnt"), F.round(F.sum("value"), 2).alias("f_total")
     )

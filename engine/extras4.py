@@ -16,12 +16,11 @@ STREAMING Python DataSource (SURVEY §2 extensions; the reference at
 
 from __future__ import annotations
 
-from engine.tmpdirs import scratch_dir
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from engine.registry import query
+from engine.streaming import run_stream
 from engine.tables import load, sftag
 
 
@@ -199,21 +198,4 @@ def scan_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune(spark)
     _register_seq_stream_source(spark)
     df = spark.readStream.format("sg_seq_stream").option("n", "1000").load()
-    ckpt = scratch_dir(prefix=f"sg-pysds-{sftag(sf_dir)}-")
-    name = f"sg_pysds_{sftag(sf_dir)}"
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    finished = q.awaitTermination(120)
-    if not finished:
-        q.stop()
-        raise TimeoutError(
-            "scan_python_stream_source: streaming query missed the 120s "
-            "deadline — failing loudly rather than returning a partial "
-            "memory-sink table that would misread as a correctness bug"
-        )
-    return spark.table(name).orderBy("i")
+    return run_stream(df, f"sg_pysds_{sftag(sf_dir)}", sf_dir).orderBy("i")

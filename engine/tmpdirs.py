@@ -17,7 +17,10 @@ directory: a plan a key returned stays readable after the key runs again
 Dirs live for the PROCESS lifetime — required, because operators return
 LAZY DataFrames that resolve their files at execution time, so removal
 any earlier than exit could break a plan the caller hasn't collected yet —
-and one atexit sweep removes everything
+and one atexit sweep removes everything. The one exception is a dir that
+no returned plan can read: ``drop_scratch`` removes it at once (a
+finished stream's checkpoint, ``engine.streaming.run_stream``).
+Everything else goes in the sweep
 (``test_scratch_dirs_removed_at_process_exit``). Scratch dirs are
 per-process by construction (mkdtemp), so exit-time removal cannot race
 another process.
@@ -37,6 +40,12 @@ def scratch_dir(prefix: str) -> str:
     d = tempfile.mkdtemp(prefix=prefix)
     _SCRATCH.append(d)
     return d
+
+
+def drop_scratch(d: str) -> None:
+    """Remove a scratch dir now, for a caller that knows no plan reads it."""
+    _SCRATCH.remove(d)
+    shutil.rmtree(d, ignore_errors=True)
 
 
 @atexit.register

@@ -99,6 +99,61 @@ def test_scratch_location_decided_only_in_tmpdirs():
     assert found == {}
 
 
+def _owners(tree: ast.AST) -> dict[ast.AST, str]:
+    """Each node mapped to the name of the innermost function around it."""
+    owner: dict[ast.AST, str] = {}
+
+    def visit(node: ast.AST, name: str) -> None:
+        for child in ast.iter_child_nodes(node):
+            owner[child] = name
+            is_def = isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef))
+            visit(child, child.name if is_def else name)
+
+    visit(tree, "<module>")
+    return owner
+
+
+def _stream_sites() -> tuple[set, set]:
+    """(module, function) pairs that start a stream, and those that swap a
+    directory into place: rmtree a path, then rename another onto it."""
+    writers, swaps = set(), set()
+    for f in sorted(glob.glob(os.path.join(ENGINE, "*.py"))):
+        mod = os.path.basename(f)
+        owner = _owners(ast.parse(open(f).read()))
+        removed, renamed = set(), set()
+        for node, fn in owner.items():
+            if isinstance(node, ast.Attribute) and node.attr == "writeStream":
+                writers.add((mod, fn))
+            if not isinstance(node, ast.Call) or not node.args:
+                continue
+            call = ast.unparse(node.func)
+            if call == "shutil.rmtree":
+                removed.add((fn, ast.unparse(node.args[0])))
+            elif call in ("os.rename", "os.replace") and len(node.args) == 2:
+                renamed.add((fn, ast.unparse(node.args[1])))
+        swaps |= {(mod, fn) for fn, _ in removed & renamed}
+    return writers, swaps
+
+
+# Directory swaps that are not the keyed merge: each replaces one
+# directory of a layout the function owns.
+OTHER_SWAPS = {
+    ("extras27.py", "etl_targeted_erasure"): "rewrites one partition of a partitioned store",
+}
+
+
+def test_one_stream_runner_and_one_table_swap():
+    """Every bounded stream runs through engine.streaming.run_stream, and
+    every merge of a delta into a parquet table through merge_table. A
+    second writeStream block decides checkpoint, trigger, width and
+    cleanup its own way; a second write-then-swap copies the storage
+    protocol."""
+    writers, swaps = _stream_sites()
+    assert writers == {("streaming.py", "run_stream")}
+    assert swaps - set(OTHER_SWAPS) == {("streaming.py", "merge_table")}
+    assert set(OTHER_SWAPS) <= swaps, "stale OTHER_SWAPS entry"
+
+
 def _rewrite(path, text: str) -> None:
     st = os.stat(path)
     with open(path, "w") as fh:

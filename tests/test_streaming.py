@@ -1,6 +1,7 @@
 """Structured Streaming tests (SURVEY §5.4): AvailableNow replay of the events
 corpus compared to batch equivalents, plus synthetic late/duplicate injection
-for the watermark operators — the semantics the DuckDB oracle can't check."""
+for the watermark operators — the semantics the DuckDB oracle can't check —
+and the runner's own contract: micro-batch splits and checkpoint lifetime."""
 
 from __future__ import annotations
 
@@ -10,17 +11,20 @@ import tempfile
 
 import pyspark.sql.functions as F
 import pytest
+from pyspark.sql.streaming import StreamingQueryListener
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, assert_frames_match
 
 
-def _write_batches(spark, rows_per_file):
-    """Write each row-list as one parquet file in a fresh dir, with strictly
-    increasing mtimes so the file source replays them in order."""
-    src = tempfile.mkdtemp(prefix="sg-late-src-")
+def _write_batches(spark, rows_per_file, root):
+    """Write each row-list as one parquet file in a fresh dir under root,
+    with strictly increasing mtimes so the file source replays them in
+    order."""
+    src = f"{root}/src"
+    os.makedirs(src)
     for i, rows in enumerate(rows_per_file):
         df = spark.createDataFrame(rows, "event_id long, ts timestamp, user_id long")
-        sub = tempfile.mkdtemp(prefix=f"sg-late-part{i}-")
+        sub = f"{root}/part{i}"
         df.coalesce(1).write.mode("overwrite").parquet(sub)
         part = next(f for f in os.listdir(sub) if f.endswith(".parquet"))
         dest = f"{src}/batch{i}.parquet"
@@ -29,24 +33,10 @@ def _write_batches(spark, rows_per_file):
     return src
 
 
-def _run_stream(df, name, mode="append", max_files=None):
-    ckpt = tempfile.mkdtemp(prefix=f"sg-ckpt-{name}-")
-    w = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-    )
-    q = w.start()
-    q.awaitTermination()
-    return df.sparkSession.table(name)
-
-
 def test_stream_tumbling_equals_batch(spark):
     """readStream replay of events + complete-mode window agg == batch agg."""
     from engine.registry import collect
-    from engine.streaming import read_events_stream
+    from engine.streaming import read_events_stream, run_stream
 
     s = read_events_stream(spark, SF_DIR).withColumn("ts", F.col("ts").cast("timestamp"))
     agg = (
@@ -55,7 +45,7 @@ def test_stream_tumbling_equals_batch(spark):
         .select(F.col("w.start").cast("timestamp_ntz").alias("window_start"),
                 "event_type", "cnt", "sum_value")
     )
-    streamed = _run_stream(agg, "sg_t_tumbling", mode="complete").toPandas()
+    streamed = run_stream(agg, "sg_t_tumbling", SF_DIR, "complete").toPandas()
     queries, _ = collect()
     batch = queries["stream_tumbling_1h"](spark, SF_DIR).toPandas()
     key = ["window_start", "event_type"]
@@ -92,9 +82,11 @@ def test_watermark_dedup_distinct_ids(spark):
     assert n_stream == n_distinct
 
 
-def test_late_data_dropped(spark):
+def test_late_data_dropped(spark, tmp_path):
     """A row older than the watermark arriving in a later batch is excluded
     from its (already-finalized) window."""
+    from engine.streaming import run_stream
+
     t = lambda h, m: dt.datetime(2024, 1, 1, h, m)
     # Watermark advances one batch behind the data that establishes it
     # (computed at batch commit, applied from the next batch), so the late
@@ -107,6 +99,7 @@ def test_late_data_dropped(spark):
             # late: 10:15 is far behind the now-active watermark
             [(4, t(10, 15), 1), (6, t(13, 0), 1)],
         ],
+        tmp_path,
     )
     s = (
         spark.readStream.schema("event_id long, ts timestamp, user_id long")
@@ -119,7 +112,7 @@ def test_late_data_dropped(spark):
         .agg(F.count("*").alias("cnt"))
         .select(F.col("w.start").alias("ws"), "cnt")
     )
-    out = _run_stream(agg, "sg_t_late").toPandas()
+    out = run_stream(agg, "sg_t_late", SF_DIR).toPandas()
     w10 = out[out.ws == t(10, 0)]
     assert len(w10) == 1, f"window 10:00 should be finalized once, got {out}"
     assert int(w10.cnt.iloc[0]) == 2, "late event_id=4 must NOT be counted"
@@ -179,13 +172,13 @@ def test_stream_source_reads_directory_layout(spark, tmp_path):
 
 
 def test_derived_stream_parts_scales_with_source(spark):
-    """r15: the state-store instance default derives from the bounded
+    """The state-store instance default derives from the bounded
     source's row count (clamp(rows/25k, 2, 2*cores)) instead of the r14
     constant 4 — same value at the sf0.1 calibration point (the measured
     knee), floor of 2 below it, growing with the corpus above it, and
     ceiling-clamped by the session's parallelism so the derivation never
     out-scales the cluster. SPARK_GRAFT_STREAM_PARTS (applied in
-    _run_stream, not here) still wins over every derived value."""
+    run_stream, not here) still wins over every derived value."""
     from engine.streaming import (
         _STREAM_ROWS_PER_INSTANCE,
         _derived_stream_parts,
@@ -206,3 +199,145 @@ def test_derived_stream_parts_scales_with_source(spark):
         assert got == min(400, 2 * spark.sparkContext.defaultParallelism)
     # an unreadable source falls back to the r14 constant
     assert _derived_stream_parts(spark, "/nonexistent") == 4
+
+
+_SPLIT = dt.datetime(2024, 1, 30)
+
+
+def _q(name):
+    from engine.registry import collect
+
+    queries, _ = collect()
+    return queries[name]
+
+
+def test_event_time_timeout_waves(spark):
+    """Both timeout waves present, the data-path suppression (file-2 users
+    survive wave 1), and the end-of-stream non-emission of still-active
+    sessions."""
+    from engine.tables import load
+
+    rows = {
+        r["user_id"]: (r["n_events"], r["last_ts"])
+        for r in _q("stream_event_time_timeout")(spark, SF_DIR).collect()
+    }
+    assert rows
+    ev = load(spark, SF_DIR, "events").select("user_id", "ts").collect()
+    f1: dict[int, list] = {}
+    allv: dict[int, list] = {}
+    for e in ev:
+        allv.setdefault(e["user_id"], []).append(e["ts"])
+        if e["ts"] < _SPLIT:
+            f1.setdefault(e["user_id"], []).append(e["ts"])
+    wm1 = max(t for ts in f1.values() for t in ts) - dt.timedelta(hours=1)
+    wm2 = max(t for ts in allv.values() for t in ts) - dt.timedelta(hours=1)
+    idle = dt.timedelta(hours=2)
+    f2_users = {u for u, ts in allv.items() if any(t >= _SPLIT for t in ts)}
+    e1 = {
+        u: (len(ts), max(ts))
+        for u, ts in f1.items()
+        if max(ts) + idle < wm1 and u not in f2_users
+    }
+    e2 = {
+        u: (len(ts), max(ts))
+        for u, ts in allv.items()
+        if u not in e1 and max(ts) + idle < wm2
+    }
+    expect = {**e1, **e2}
+    assert rows == expect
+    # wave 2 exists (the closing no-data batch) and wave-1-suppressed
+    # file-2 users appear only with their FULL counts
+    assert e2
+    for u in e2:
+        if u in f2_users:
+            assert rows[u][0] == len(allv[u]) > len(f1.get(u, []))
+    # still-active sessions (last event within 2h of wm2) are NOT emitted
+    active = [u for u, ts in allv.items() if max(ts) + idle >= wm2]
+    assert active and all(u not in rows for u in active)
+
+
+def test_foreachbatch_upsert_equals_batch(spark):
+    """Three replayed micro-batches merged through foreachBatch must equal
+    the one-shot batch aggregate."""
+    from engine.streaming import stream_foreachbatch_upsert
+    from engine.tables import load
+
+    got = {
+        (r["user_id"], r["cnt"])
+        for r in stream_foreachbatch_upsert(spark, SF_DIR).collect()
+    }
+    want = {
+        (r["user_id"], r["cnt"])
+        for r in load(spark, SF_DIR, "events")
+        .groupBy("user_id")
+        .agg(F.count("*").alias("cnt"))
+        .collect()
+    }
+    assert got == want and len(want) > 0
+
+
+class _InputBatches(StreamingQueryListener):
+    """Counts progress events of micro-batches that read input rows."""
+
+    def __init__(self):
+        self.rows: list[int] = []
+
+    def onQueryStarted(self, event):
+        pass
+
+    def onQueryProgress(self, event):
+        if event.progress.numInputRows > 0:
+            self.rows.append(event.progress.numInputRows)
+
+    def onQueryIdle(self, event):
+        pass
+
+    def onQueryTerminated(self, event):
+        pass
+
+
+@pytest.mark.parametrize(
+    "key", ["stream_foreachbatch_upsert", "pipeline_stream_serving"]
+)
+def test_foreachbatch_keys_merge_three_micro_batches(spark, duck, key):
+    """maxFilesPerTrigger is a SOURCE option: on the reader, the three
+    replay files arrive as three micro-batches, so the merge into an
+    existing table runs twice. Set on the writer, the file source never
+    sees it and the whole replay is one batch — one merge, same answer,
+    so only the batch count shows the difference."""
+    from engine.registry import collect
+
+    queries, oracles = collect()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    listener = _InputBatches()
+    bus.waitUntilEmpty()
+    spark.streams.addListener(listener)
+    try:
+        got = queries[key].__wrapped__(spark, SF_DIR).toPandas()
+        bus.waitUntilEmpty()
+    finally:
+        spark.streams.removeListener(listener)
+    assert len(listener.rows) == 3, listener.rows
+    assert_frames_match(got, duck.sql(oracles[key]).df(), key)
+
+
+@pytest.mark.parametrize(
+    "key",
+    ["stream_watermark_dedup", "stream_static_enrich", "stream_foreachbatch_upsert"],
+)
+def test_stream_run_removes_its_checkpoint(spark, key):
+    """A run's own checkpoint is removed once the query terminates, and
+    the plan the key returned still collects: no returned plan reads it."""
+    from engine import tmpdirs
+    from engine.registry import collect
+
+    def checkpoints() -> set[str]:
+        root = tempfile.gettempdir()
+        dirs = {os.path.join(root, d) for d in os.listdir(root)}
+        return {d for d in dirs | set(tmpdirs._SCRATCH) if os.path.isdir(f"{d}/offsets")}
+
+    queries, _ = collect()
+    before = checkpoints()
+    df = queries[key].__wrapped__(spark, SF_DIR)
+    assert checkpoints() - before == set()
+    assert df.collect()
