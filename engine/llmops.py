@@ -688,13 +688,15 @@ def _broadcast_side(spark, sf_dir: str, emb) -> tuple:
 
 
 # Task sizing for the upper-triangle pair kernels (_triangle_pairs). A
-# Python task has a fixed cost that dwarfs small kernels: on a 4-vCPU
-# host a pass-through mapInArrow costs ~0.26 s of process-tree CPU over 1
-# task and ~0.98 s over 4, i.e. ~0.24 s per extra task before the UDF
-# runs (PySpark re-reads pyspark.zip on every task; docs/SCALE.md rule 2).
-# The tiled triangle kernel scores ~70M pairs/s (n = 2000, dim 64: 2M
-# pairs in ~28 ms). A task is split off only once it carries as much
-# kernel work as its own fixed cost: 0.24 s x 70M pairs/s ~ 16M pairs.
+# Python task has a fixed cost before its UDF runs. On a 4-vCPU host a
+# pass-through mapInArrow that imports engine costs ~0.28 s of
+# process-tree CPU over 1 task and ~0.40 s over 4, i.e. ~0.04 s per extra
+# task (scripts/_probe_python_task_cost.py; ~0.24 s before workers stopped
+# re-reading their zip archives on every task, docs/SCALE.md rule 2). The
+# tiled triangle kernel scores ~70M pairs/s (n = 2000, dim 64: 2M pairs in
+# ~28 ms), so break-even is now ~3M pairs. The constant stays at 16M: at
+# sf0.1 (2M pairs) an interleaved A/B found width 2 faster than width 1
+# (128 vs 147 ms) but dearer in CPU (0.265 vs 0.215 s per run).
 _PAIRS_PER_TASK = 1 << 24
 # Cells of one tile's similarity matrix: 4 MiB as f32 (8 MiB for an f64
 # source). Not below _MAX_BROADCAST_VECTORS, so one full row always fits.

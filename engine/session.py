@@ -6,7 +6,9 @@ Three entry points:
 - ``tune(spark)``: idempotently apply the *runtime-settable* subset of our
   tuning to a session we did NOT build (the driver's harness owns its session
   and constructs it with unknown confs). Called from every table loader so
-  driver-run queries still get nanosAsLong + sane shuffle parallelism.
+  driver-run queries still get nanosAsLong + sane shuffle parallelism, and
+  Python workers can import ``engine`` (it ships the package once per
+  context).
 - ``session_memo(spark, build, tag, *key)``: the one store for objects bound
   to a live SparkContext (built plans, table loads, persisted relations,
   broadcasts, tune state). A new context drops the whole store.
@@ -21,10 +23,14 @@ fans out to ~800k input splits; nothing in the engine assumes local mode.
 from __future__ import annotations
 
 import os
+import sys
 import warnings
+import zipfile
 from typing import Callable
 
 from pyspark.sql import SparkSession
+
+from engine.tmpdirs import scratch_dir
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -90,11 +96,28 @@ def session_memo(
     return value
 
 
+def _ship_engine(sc) -> None:
+    """Ship this package to the executors as one compiled zip, once per
+    context, so a Python worker imports ``engine`` (and installs its zip
+    guard, ``engine/__init__.py``) whatever its cwd. addPyFile also puts
+    the zip on the driver's sys.path; that is undone, so the driver keeps
+    importing from its source tree."""
+    if "engine.zip" in sc._python_includes:
+        return
+    path = os.path.join(scratch_dir("sg-engine-zip-"), "engine.zip")
+    with zipfile.PyZipFile(path, "w") as zf:
+        zf.writepy(os.path.dirname(os.path.abspath(__file__)))
+    driver_path = list(sys.path)
+    sc.addPyFile(path)
+    sys.path[:] = driver_path
+
+
 def tune(spark: SparkSession) -> SparkSession:
-    """Apply runtime confs to any session, once per session: each conf
-    get/set is a Py4J round-trip, and tune() sits on the per-query hot path
-    via the table loaders. A conf this build cannot set keeps its session
-    default, with a warning that names it."""
+    """Apply runtime confs to any session and ship the engine to its
+    executors, once per session: each conf get/set is a Py4J round-trip,
+    and tune() sits on the per-query hot path via the table loaders. A conf
+    this build cannot set keeps its session default, with a warning that
+    names it."""
 
     def apply() -> None:
         confs = dict(_RUNTIME_CONFS)
@@ -106,6 +129,7 @@ def tune(spark: SparkSession) -> SparkSession:
                     spark.conf.set(k, v)
             except Exception as e:
                 warnings.warn(f"tune: cannot set {k}={v!r}: {e!r}")
+        _ship_engine(spark.sparkContext)
 
     session_memo(spark, apply, "tuned")
     return spark

@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from engine import file_identity
 from engine.session import session_memo, tune
 from engine.tmpdirs import scratch_dir
 
@@ -261,17 +262,6 @@ def parquet_num_rows(path: str) -> int | None:
 # a new identity replaces the old entry, so the store is bounded by the
 # number of call sites × corpus files, whatever the process runs.
 _MEMO: dict[tuple, tuple] = {}
-
-
-def file_identity(path: str) -> "tuple | None":
-    """(realpath, st_mtime_ns, st_size) of ``path``; None when it cannot
-    be stat-ed. A rewrite in place changes it, so anything keyed on it
-    misses on a regenerated corpus."""
-    try:
-        st = os.stat(path)
-    except OSError:
-        return None
-    return (os.path.realpath(path), st.st_mtime_ns, st.st_size)
 
 
 def corpus_memo(path: str, tag: str, build: Callable, *extra):

@@ -5,7 +5,6 @@ from __future__ import annotations
 
 import glob
 import os
-import tempfile
 
 from tests.conftest import SF_DIR
 
@@ -47,14 +46,14 @@ def test_targeted_erasure_complete_and_partition_scoped(spark):
             assert r["n_rows"] == orig
 
 
-def test_erasure_leaves_unaffected_files_untouched(spark):
+def test_erasure_leaves_unaffected_files_untouched(spark, tmp_path):
     """Re-run the key's mechanics with mtime tracking: files in
     unaffected buckets keep identical (path, mtime) before and after."""
     from engine.extras27 import _ERASE_USERS
     from engine.tables import load
     from pyspark.sql import functions as F
 
-    base = tempfile.mkdtemp(prefix="sg-erase-test-")
+    base = str(tmp_path / "store")
     e = load(spark, SF_DIR, "events").select("event_id", "user_id")
     e.withColumn("bucket", F.col("user_id") % 16).write.mode("overwrite").partitionBy(
         "bucket"

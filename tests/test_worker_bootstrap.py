@@ -1,0 +1,176 @@
+"""Worker bootstrap: tune() ships ``engine`` to the executors, and a Python
+worker that imports it re-reads a zip archive's central directory only when
+the archive changed (engine/__init__.py).
+
+The guard tests drive ``zipimport`` directly on a temp zip, no Spark. The
+two Spark tests run in a child interpreter whose cwd holds no ``engine/``:
+a worker started from the repo root would import the source tree from its
+cwd and hide a missing ship."""
+
+from __future__ import annotations
+
+import importlib
+import json
+import os
+import subprocess
+import sys
+import textwrap
+import zipfile
+import zipimport
+
+import pytest
+
+import engine
+from tests.conftest import SF_DIR_MID
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _write_zip(path, members: dict) -> None:
+    with zipfile.ZipFile(path, "w") as zf:
+        for name, src in members.items():
+            zf.writestr(name, src)
+
+
+@pytest.fixture
+def guarded(monkeypatch):
+    monkeypatch.setattr(
+        zipimport.zipimporter, "invalidate_caches", engine._reread_if_changed
+    )
+
+
+def test_unchanged_archive_not_reread(tmp_path, guarded):
+    z = tmp_path / "a.zip"
+    _write_zip(z, {"sg_guard_a.py": "X = 1\n"})
+    imp = zipimport.zipimporter(str(z))
+    imp.invalidate_caches()  # first call on an importer reads
+    files = imp._files
+    imp.invalidate_caches()
+    imp.invalidate_caches()
+    assert imp._files is files
+    engine._stock_invalidate(imp)  # the stock call replaces it
+    assert imp._files is not files
+
+
+def test_rewritten_archive_is_reread(tmp_path, guarded, monkeypatch):
+    z = tmp_path / "b.zip"
+    _write_zip(z, {"sg_guard_b1.py": "X = 1\n"})
+    monkeypatch.syspath_prepend(str(z))
+    try:
+        assert importlib.import_module("sg_guard_b1").X == 1
+        importlib.invalidate_caches()  # records the identity
+        _write_zip(z, {"sg_guard_b1.py": "X = 1\n", "sg_guard_b2.py": "Y = 2\n"})
+        importlib.invalidate_caches()
+        assert importlib.import_module("sg_guard_b2").Y == 2
+    finally:
+        sys.modules.pop("sg_guard_b1", None)
+        sys.modules.pop("sg_guard_b2", None)
+
+
+def test_deleted_archive_falls_back_to_stock(tmp_path, guarded):
+    z = tmp_path / "c.zip"
+    _write_zip(z, {"sg_guard_c.py": "X = 1\n"})
+    imp = zipimport.zipimporter(str(z))
+    imp.invalidate_caches()
+    assert imp._files
+    z.unlink()
+    imp.invalidate_caches()
+    assert imp._files == {}
+    assert str(z) not in zipimport._zip_directory_cache
+
+
+# Runs in a child interpreter from a cwd without engine/. Three tasks on
+# one reused worker (mapInArrow, like the engine's kernels): the first
+# imports engine and installs the guard, the second is the guard's first
+# call per importer, which records each archive's identity for the third.
+_PROBE = textwrap.dedent(
+    """
+    import json, sys, zipimport
+    sys.path.insert(0, sys.argv[1])
+    import engine
+    from engine.session import tune
+    from pyspark.sql import SparkSession
+
+    spark = SparkSession.builder.master("local[1]").getOrCreate()
+    before = list(sys.path)
+    tune(spark)
+
+    def probe(batches):
+        import os
+        import pyarrow as pa
+        import engine
+        for _ in batches:
+            pass
+        zips = [
+            i for i in sys.path_importer_cache.values()
+            if isinstance(i, zipimport.zipimporter)
+        ]
+        yield pa.RecordBatch.from_pylist([{"report": json.dumps({
+            "pid": os.getpid(),
+            "engine_file": engine.__file__,
+            "guard": zipimport.zipimporter.invalidate_caches
+            is engine._reread_if_changed,
+            "zipimporters": len(zips),
+            "recorded": sum(
+                getattr(i, "_read_as", None) == engine.file_identity(i.archive)
+                for i in zips
+            ),
+        })}])
+
+    df = spark.range(1, numPartitions=1)
+    tasks = [
+        json.loads(df.mapInArrow(probe, "report string").collect()[0][0])
+        for _ in range(3)
+    ]
+    print(json.dumps({
+        "tasks": tasks,
+        "driver_path_kept": sys.path == before,
+        "driver_engine_file": engine.__file__,
+        "driver_stock": zipimport.zipimporter.invalidate_caches
+        is engine._stock_invalidate,
+    }))
+    """
+)
+
+
+def test_worker_imports_shipped_engine_and_installs_guard(tmp_path):
+    out = subprocess.run(
+        [sys.executable, "-c", _PROBE, REPO],
+        cwd=tmp_path,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    report = json.loads(out.stdout.strip().splitlines()[-1])
+    first, _, third = report["tasks"]
+    assert first["pid"] == third["pid"]
+    assert "engine.zip" in first["engine_file"]
+    assert first["guard"] and third["guard"]
+    assert third["zipimporters"] > 0
+    assert third["recorded"] == third["zipimporters"]
+    assert report["driver_path_kept"] and report["driver_stock"]
+    assert report["driver_engine_file"] == os.path.join(REPO, "engine", "__init__.py")
+
+
+def test_python_keys_pass_from_foreign_cwd(tmp_path):
+    keys = [
+        "udaf_pandas_group",
+        "stream_event_time_timeout",
+        "sim_topk_pairs",
+        "multimodal_decode_pipeline",
+    ]
+    out = subprocess.run(
+        [
+            sys.executable,
+            os.path.join(REPO, "scripts", "driver_sim.py"),
+            SF_DIR_MID,
+            *keys,
+        ],
+        cwd=tmp_path,
+        capture_output=True,
+        text=True,
+        timeout=900,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert "t2: 4 PASS, 0 ROWS-ONLY, 0 FAIL" in out.stdout, out.stdout[-3000:]
