@@ -497,15 +497,12 @@ def emb_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_semdedup, where the scaled k is what keeps pairwise dedup
     linear — measured in docs/SCALE.md's rehearsal).
 
-    r11 exact-dup collapse (piggybacking dedup_semdedup's machinery):
-    with duplicate embeddings the Lloyd step runs once per DISTINCT
-    vector via _rep_lloyd_assign, and the per-cluster aggregates are
-    weighted rep aggregates — n_members = Σ group sizes, inertia =
-    Σ d2·size (every member's d2 equals its rep's; the round-to-2dp
-    absorbs the weighted vs member-wise summation order). Dup-free
-    corpora take the original path bit-identically plus the probe."""
+    Exact-dup collapse (the engine.tables.clone_groups rule, weights
+    only): taken when embeddings duplicate under unique ids. The Lloyd
+    step runs once per distinct vector (_rep_lloyd_assign); n_members =
+    Σ group sizes and inertia = Σ d2·size (every member's d2 equals its
+    rep's; the round-to-2dp absorbs the summation order)."""
     from engine.tables import all_rows_distinct, swap_persist
-
     from engine.tables import vectors as _vectors
 
     emb_raw = _vectors(spark, sf_dir)
@@ -530,9 +527,10 @@ def emb_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = emb_raw.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("x")
     )
-    # reps feeds both _assign_step passes, the c1m join, and the output
-    # join — persist (r11 review: the unpersisted version recomputed the
-    # full-corpus groupBy up to 4x per run).
+    # reps feeds both _assign_step passes, the c1m join and the output
+    # join, so it is persisted. Not clone_groups: this key needs no
+    # member lists, and a collect_list in the persisted aggregate would
+    # only add work.
     reps = swap_persist(
         spark,
         emb.groupBy("x").agg(
@@ -585,25 +583,13 @@ def dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     verdict required of sim_ann_rp_lsh). The dot is the ordered JVM fold,
     so the τ comparison is bit-identical to the oracle's.
 
-    r11 exact-dup collapse (third member of the family: rp_lsh r07, IVF
-    r09): a clone corpus routes every duplicate into one cluster and the
-    within-cluster pairwise stage explodes quadratically in clone count —
-    the r11 100× rehearsal measured exponent 0.90 (2.9 s → 183 s) where
-    25× had read 0.39. One dup probe (footer rows vs
-    countDistinct(xxhash64(embedding)); a hash collision only
-    UNDER-counts, which routes to the collapse path whose grouping key is
-    the full array) decides: with dups the Lloyd step runs once per
-    DISTINCT embedding via _rep_lloyd_assign (k/seeds/update from the
-    full corpus — see its docstring for why that reproduces every
-    member's assignment), the ≥τ test runs once per qualifying REP pair,
-    and member-level output is recovered arithmetically: for dropped
-    member b, n_suppressors = Σ over qualifying suppressor groups of
-    |members < b| (an array filter, no join, no dots) and keeper = the
-    smallest qualifying group-min below b (group mins are the reps).
-    Dup-free corpora (every driver/test SF) take the original path
-    bit-identically at the cost of the one probe job."""
-    from engine.tables import all_rows_distinct, swap_persist
-
+    Exact-dup collapse (engine.tables.clone_groups): taken whenever
+    embeddings duplicate. The Lloyd step runs once per distinct vector
+    (_rep_lloyd_assign) and the ≥τ test once per qualifying rep pair; the
+    member-level output is arithmetic, with no pair expansion: a dropped
+    member b has n_suppressors = Σ over qualifying suppressor groups of
+    |members < b| and keeper = the smallest qualifying group min below b."""
+    from engine.tables import all_rows_distinct, clone_groups
     from engine.tables import vectors as _vectors
 
     emb_raw = _vectors(spark, sf_dir)
@@ -631,18 +617,7 @@ def dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_suppressors"),
         )
 
-    # Collapse path. grp feeds the rep pipeline twice and the pair join
-    # twice more — persist via the shared swap (at most one grp cached
-    # per session).
-    grp = swap_persist(
-        spark,
-        emb.groupBy("x").agg(
-            F.min("vec_id").alias("vec_id"),
-            F.sort_array(F.collect_list("vec_id")).alias("members"),
-            F.count("*").alias("grp_n"),
-        ),
-        "semdedup_grp",
-    )
+    grp = clone_groups(spark, emb, "vec_id", "x", "semdedup_grp")
     reps = grp.select("vec_id", "x", "grp_n")
     a2r = _rep_lloyd_assign(emb, reps).select("vec_id", "cid")
     g = a2r.join(grp, "vec_id")

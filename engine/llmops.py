@@ -159,90 +159,34 @@ def dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     nested-loop join. This formulation is explode -> partial-agg ->
     equi-join: every stage hash-partitions, the 100 TB shape.
 
-    EXACT-DUP COLLAPSE prestage (r14, closing the 0.49 5× exponent): on a
-    clone-heavy corpus (re-crawls; the 5× key-shifted rehearsal corpus IS
-    one) identical texts multiply every band bucket by the clone factor —
-    band-pair work grows quadratically in it, and worse, a true-dup
-    bucket inflated past LSH_BUCKET_CAP gets DROPPED, silently losing
-    real pairs. One rep per distinct text goes through the LSH (band
-    rows constant in the clone factor); rep pairs expand to member cross
-    pairs and clone groups emit their C(m,2) intra pairs at dist 0 —
-    exactly the oracle's all-pairs semantics for identical shingle sets.
-    Same gated shape as dedup_ngram_jaccard's collapse path (struct rep
-    key, r14 dup-id-safe); on duplicate-free corpora (every sf corpus)
-    the probe keeps the r13 single-pass plan unchanged.
+    Exact-dup collapse (engine.tables.clone_groups): taken when texts
+    duplicate under unique ids; identical texts pair at distance 0.0
+    when the text is not NULL.
     """
-    from engine.tables import all_rows_distinct, swap_persist
+    from engine.tables import all_rows_distinct, expand_clone_pairs
+    from engine.textops import text_clone_groups
 
     d = load(spark, sf_dir, "documents")
     path = f"{sf_dir}/documents.parquet"
-    # Gate: collapse only when texts DUPLICATE and ids are UNIQUE. Under
-    # COLLIDING ids this key's oracle semantics are per-doc_id UNION of
-    # the id's texts' shingle sets (its sh CTE is DISTINCT (doc_id, g)),
-    # which the direct path's groupBy(doc_id) min-agg reproduces
-    # naturally — a per-TEXT collapse would instead pair each colliding
-    # id's texts separately (r14 dup-id sweep caught exactly this).
+    # Colliding ids keep the direct path: the oracle's shingle set is per
+    # doc_id (the UNION of the id's texts), which the direct path's
+    # groupBy(doc_id) min-agg reproduces and a per-text collapse does not.
     if all_rows_distinct(spark, path, d, "text") or not all_rows_distinct(
         spark, path, d, "doc_id"
     ):
         return minhash_near_pairs(d).orderBy("a_id", "b_id")
 
-    grp = swap_persist(
-        spark,
-        d.groupBy("text")
-        .agg(
-            F.min("doc_id").alias("mid"),
-            F.sort_array(F.collect_list("doc_id")).alias("members"),
-            F.count("*").alias("w"),
-        )
-        .select(
-            F.struct(
-                F.col("mid").alias("i"), F.xxhash64("text").alias("h")
-            ).alias("doc_id"),
-            "text",
-            "members",
-            "w",
-        ),
-        "minhash_grp",
-    )
-    reps = grp.select("doc_id", "text")
-    rep_pairs = minhash_near_pairs(reps).select("a_id", "b_id", "jaccard_dist")
-    ma = grp.select(
-        F.col("doc_id").alias("a_id"), F.col("members").alias("members_a")
-    )
-    mb = grp.select(
-        F.col("doc_id").alias("b_id"), F.col("members").alias("members_b")
-    )
-    cross = (
-        rep_pairs.join(ma, "a_id")
-        .join(mb, "b_id")
-        .select("jaccard_dist", F.explode("members_a").alias("m"), "members_b")
-        .select("jaccard_dist", "m", F.explode("members_b").alias("m2"))
-        # m != m2: a colliding doc_id carrying two different texts would
-        # otherwise emit a degenerate self-pair (dup-id axis)
-        .filter(F.col("m") != F.col("m2"))
-        .select(
-            F.least("m", "m2").alias("a_id"),
-            F.greatest("m", "m2").alias("b_id"),
-            "jaccard_dist",
-        )
-    )
-    # Intra pairs: identical texts are distance 0 — but only for docs
-    # that SHINGLE (text IS NOT NULL): the oracle's hash-of-NULL is NULL
-    # and its gram join drops those docs, while an empty/short text DOES
-    # carry its whole-text gram and pairs (both sides agree).
-    intra = (
-        grp.filter((F.col("w") >= 2) & F.col("text").isNotNull())
-        .select(F.explode("members").alias("m"), "members")
-        .select("m", F.explode("members").alias("m2"))
-        .filter(F.col("m") < F.col("m2"))
-        .select(
-            F.col("m").alias("a_id"),
-            F.col("m2").alias("b_id"),
-            F.lit(0.0).alias("jaccard_dist"),
-        )
-    )
-    return cross.unionByName(intra).orderBy("a_id", "b_id")
+    grp = text_clone_groups(spark, d, "minhash_grp")
+    rep_pairs = minhash_near_pairs(grp.select("doc_id", "text"))
+    # the oracle's hash of a NULL text is NULL, so its gram join drops
+    # NULL docs, while an empty or short text keeps its whole-text gram
+    intra = F.when(F.col("text").isNotNull(), F.lit(0.0))
+    return expand_clone_pairs(
+        rep_pairs.select("a_id", "b_id", "jaccard_dist"),
+        grp,
+        "jaccard_dist",
+        intra,
+    ).orderBy("a_id", "b_id")
 
 
 # MinHash-LSH kernel parameters, shared by the one-shot pair kernel below

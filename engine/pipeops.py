@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from engine.registry import query
 from engine.tables import load, sftag
-from engine.textops import explode_nonempty, word_ngram_ids
+from engine.textops import explode_nonempty, has_word_ngrams, text_clone_groups, word_ngram_ids
 from engine.tmpdirs import scratch_dir
 
 
@@ -106,7 +106,11 @@ def text_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     r02 plan fixes (20 s → ~2 s warm at sf0.1): int64 gram ids, parallelized
     shingling, no duplicated transform in a pushed-down explode filter —
-    see engine.textops.word_ngram_ids / explode_nonempty."""
+    see engine.textops.word_ngram_ids / explode_nonempty.
+
+    Exact-dup collapse (engine.tables.clone_groups, directed expansion):
+    taken when texts duplicate under unique ids; identical texts contain
+    each other at 1.0 both ways when they have grams."""
     d = load(spark, sf_dir, "documents")
     # persisted: sh feeds three join inputs, and the joins push inferred
     # isnotnull filters into the gram projection, re-inlining split(text)
@@ -114,10 +118,11 @@ def text_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # _ngram_jaccard_kernel's docstring for the full mechanism). Routed
     # through swap_persist (r14 ADVICE) so each re-invocation evicts the
     # previous cached relation instead of accumulating across a sweep.
-    from engine.tables import all_rows_distinct, swap_persist
+    from engine.tables import all_rows_distinct, expand_clone_pairs, swap_persist
     from engine.textops import exact_gram_pair_counts
 
-    def directed(sh, who):
+    def directed(docs, who):
+        sh = swap_persist(spark, word_ngram_ids(docs, 3), "containment_sh")
         # shared-gram counts via the hot-gram-defended exact counter
         # (r14): unordered (u, v, c) expanded to both directions —
         # containment is directed but |A∩B| is symmetric. tiny_k = 1/t =
@@ -142,81 +147,17 @@ def text_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     path = f"{sf_dir}/documents.parquet"
-    # Collapse gating (r14, mirroring dedup_near_minhash): clone-heavy
-    # corpora (re-crawls) make the clone pairs quadratic THROUGH the gram
-    # join; one rep per distinct text runs the join, and clone pairs are
-    # generated by member expansion instead (intra pairs are containment
-    # 1.0 both ways by definition). Colliding ids keep the direct path —
-    # this key's oracle is per-row and the dup-id sweep pins the direct
-    # shape there.
+    # Colliding ids keep the direct path: this key's oracle is per row,
+    # and the dup-id sweep pins the direct shape there.
     if all_rows_distinct(spark, path, d, "text") or not all_rows_distinct(
         spark, path, d, "doc_id"
     ):
-        sh = swap_persist(spark, word_ngram_ids(d, 3), "containment_sh")
-        return directed(sh, "text_containment")
+        return directed(d, "text_containment")
 
-    grp = swap_persist(
-        spark,
-        d.groupBy("text")
-        .agg(
-            F.min("doc_id").alias("mid"),
-            F.sort_array(F.collect_list("doc_id")).alias("members"),
-            F.count("*").alias("w"),
-        )
-        .select(
-            F.struct(
-                F.col("mid").alias("i"), F.xxhash64("text").alias("h")
-            ).alias("doc_id"),
-            "text",
-            "members",
-            "w",
-        ),
-        "containment_grp",
-    )
-    reps = grp.select("doc_id", "text")
-    sh_reps = swap_persist(
-        spark, word_ngram_ids(reps, 3), "containment_reps_sh"
-    )
-    rep_cont = directed(sh_reps, "text_containment[collapse]")
-    ma = grp.select(
-        F.col("doc_id").alias("a_id"), F.col("members").alias("members_a")
-    )
-    mb = grp.select(
-        F.col("doc_id").alias("b_id"), F.col("members").alias("members_b")
-    )
-    # DIRECTED expansion: the source group's members keep the source
-    # role, so no least/greatest normalization
-    cross = (
-        rep_cont.join(ma, "a_id")
-        .join(mb, "b_id")
-        .select(
-            "containment", F.explode("members_a").alias("m"), "members_b"
-        )
-        .select("containment", "m", F.explode("members_b").alias("m2"))
-        .filter(F.col("m") != F.col("m2"))
-        .select(
-            F.col("m").alias("a_id"),
-            F.col("m2").alias("b_id"),
-            "containment",
-        )
-    )
-    # Intra pairs: identical texts contain each other fully (1.0, both
-    # directions) — but only when the gram set is non-empty: a sub-3-word
-    # doc has c = na = 0 and the oracle's 0/0 division excludes it.
-    nn = sh_reps.select("doc_id", F.size("s").alias("n"))
-    intra = (
-        grp.join(nn, "doc_id")
-        .filter((F.col("w") >= 2) & (F.col("n") > 0))
-        .select(F.explode("members").alias("m"), "members")
-        .select("m", F.explode("members").alias("m2"))
-        .filter(F.col("m") != F.col("m2"))
-        .select(
-            F.col("m").alias("a_id"),
-            F.col("m2").alias("b_id"),
-            F.lit(1.0).alias("containment"),
-        )
-    )
-    return cross.unionByName(intra)
+    grp = text_clone_groups(spark, d, "containment_grp")
+    rep_cont = directed(grp.select("doc_id", "text"), "text_containment[collapse]")
+    intra = F.when(has_word_ngrams("text", 3), F.lit(1.0))
+    return expand_clone_pairs(rep_cont, grp, "containment", intra, directed=True)
 
 
 @query(

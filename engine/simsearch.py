@@ -114,21 +114,9 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     for SINGLE-LEVEL IVF all-pair mining; the engine's near-linear ANN
     path is sim_ann_rp_lsh (bucket-capped, 25× exponent 0.33).
 
-    r09 exact-dup collapse (same design as sim_ann_rp_lsh's r07 fix,
-    engine/vecops.py): a clone corpus routes every duplicate into the
-    same probe clusters — no (nlist, nprobe) choice can separate
-    identical vectors — and the r09 25× rehearsal measured exponent 1.13
-    (1.5 s → 57 s) from dense blocks 25× taller. One cheap dup probe
-    (footer rows vs countDistinct(xxhash64(embedding)); a collision only
-    UNDER-counts, which routes to the collapse path whose grouping key
-    is the full array) decides: with dups, the whole
-    centroid/assign/search pipeline runs on min-id REPRESENTATIVES, then
-    winning rep pairs expand to member pairs (members truncated to the
-    k+1 smallest ids per group — decision-preserving for top-k under
-    (sim desc, a_id, b_id), same proof as vecops) and intra-group pairs
-    (sim = ‖v‖², identical vectors) bypass IVF entirely. Dup-free
-    corpora (every driver/test SF) take the original path bit-identically
-    at the cost of the one probe job."""
+    Exact-dup collapse (engine.tables.clone_groups, members truncated to
+    k+1): taken whenever embeddings duplicate; identical vectors pair at
+    sim = ‖v‖² (engine.vecops.clone_topk)."""
     import math
 
     import numpy as np
@@ -149,39 +137,19 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 10k -> 18; 1M -> 177), so every tested SF keeps its exact plan and
     # growth pays the extra Python cluster-groups only when cluster sizes
     # would otherwise grow past ~750 postings.
-    from engine.tables import all_rows_distinct, parquet_num_rows, swap_persist
+    from engine.tables import all_rows_distinct, clone_groups, parquet_num_rows, vectors
 
-    _n = parquet_num_rows(f"{sf_dir}/embeddings.parquet")
-    from engine.tables import vectors
-
+    path = f"{sf_dir}/embeddings.parquet"
+    _n = parquet_num_rows(path)
     emb = vectors(spark, sf_dir)
-    # r09 dup probe (see docstring), r11: shared memoized helper —
-    # int64 hashes shuffle, never arrays; cached per corpus file identity.
-    has_dups = not all_rows_distinct(
-        spark, f"{sf_dir}/embeddings.parquet", emb, "embedding"
-    )
-    if has_dups:
-        # The returned plan reads grp three times (ga/gb expansion +
-        # intra blocks) lazily — persist via the shared swap (ADVICE
-        # r10: at most one grp stays cached per session).
-        grp = swap_persist(
-            spark,
-            emb.groupBy("embedding").agg(
-                F.min("vec_id").alias("vec_id"),
-                F.slice(F.sort_array(F.collect_list("vec_id")), 1, k + 1).alias(
-                    "members"
-                ),
-                F.count("*").alias("grp_n"),
-            ),
-            "ivf_grp",
-        )
+    if all_rows_distinct(spark, path, emb, "embedding"):
+        grp, reps = None, emb
+    else:
+        grp = clone_groups(spark, emb, "vec_id", "embedding", "ivf_grp", keep=k + 1)
         reps = grp.select("vec_id", "embedding")
         # nlist sizes from the relation actually indexed (the reps); the
         # count doubles as grp's materialization for the later consumers.
         _n = grp.count()
-    else:
-        grp = None
-        reps = emb
     nlist = max(8, int(round(math.sqrt(_n / 32)))) if _n is not None else 8
     cents = (
         reps.orderBy("vec_id").limit(nlist).select("embedding").toPandas()
@@ -252,47 +220,6 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     rep_pairs = per_cluster.coalesce(1).dropDuplicates(["a_id", "b_id"])
     if grp is None:  # dup-free: reps ≡ vectors, nothing to expand
         return rep_pairs.orderBy(F.col("sim").desc(), "a_id", "b_id").limit(k)
-    # r09 expansion (same shape + proof as vecops.sim_ann_rp_lsh): each
-    # winning rep pair carries its sim to every member combination of its
-    # two dup groups (identical vectors ⇒ identical dots); intra-group
-    # blocks are all-pairs of a group at sim = ‖v‖². Members are the k+1
-    # smallest ids per group — enough to decide the global top-k under
-    # (sim desc, a_id, b_id); every block is ≤ (k+1)² rows and rep_pairs
-    # is ≤ nlist×(k+ties), so the expansion is driver-trivial.
-    ga = grp.select(F.col("vec_id").alias("a_id"), F.col("members").alias("ma"))
-    gb = grp.select(F.col("vec_id").alias("b_id"), F.col("members").alias("mb"))
-    cross = (
-        rep_pairs.join(ga, "a_id")
-        .join(gb, "b_id")
-        .select("sim", F.explode("ma").alias("va"), "mb")
-        .select("sim", "va", F.explode("mb").alias("vb"))
-        .select(
-            F.least("va", "vb").alias("a_id"),
-            F.greatest("va", "vb").alias("b_id"),
-            "sim",
-        )
-    )
-    vd = F.col("embedding").cast("array<double>")
-    # bround (half-even) matches np.round in cluster_topk — one rounding
-    # mode for every sim this operator emits (vecops r07 note).
-    normsq = F.bround(
-        F.aggregate(
-            F.zip_with(vd, vd, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        4,
-    )
-    intra = (
-        grp.filter(F.col("grp_n") >= 2)
-        .select(normsq.alias("sim"), F.col("members").alias("ms"))
-        .select("sim", F.explode("ms").alias("va"), "ms")
-        .select("sim", "va", F.explode("ms").alias("vb"))
-        .filter(F.col("va") < F.col("vb"))
-        .select(F.col("va").alias("a_id"), F.col("vb").alias("b_id"), "sim")
-    )
-    return (
-        cross.unionByName(intra)
-        .orderBy(F.col("sim").desc(), "a_id", "b_id")
-        .limit(k)
-    )
+    from engine.vecops import clone_topk
+
+    return clone_topk(rep_pairs, grp, k)

@@ -382,8 +382,8 @@ def all_rows_distinct(spark: SparkSession, path: str, df: DataFrame, col: str) -
     footer only costs work, never correctness (collisions UNDER-count).
     The probe is a full scan, so it runs once per corpus file identity
     (corpus_memo) rather than on every invocation of the collapse-family
-    keys (sim_ann_ivf, dedup_semdedup, emb_kmeans_lloyd,
-    dedup_ngram_jaccard)."""
+    keys (dedup_near_minhash, dedup_ngram_jaccard, text_containment,
+    sim_ann_rp_lsh, sim_ann_ivf, dedup_semdedup, emb_kmeans_lloyd)."""
     n = parquet_num_rows(path)
     if n is None:
         return False
@@ -414,3 +414,88 @@ def swap_persist(spark: SparkSession, df: DataFrame, tag: str) -> DataFrame:
         valid=df,
         release=lambda old: old.unpersist(blocking=False),
     )
+
+
+def clone_groups(
+    spark: SparkSession,
+    df: DataFrame,
+    id_col: str,
+    value_col: str,
+    tag: str,
+    keep: "int | None" = None,
+) -> DataFrame:
+    """The exact-dup collapse: one row per distinct ``value_col`` with
+    columns (``id_col`` = min member id, ``value_col``, ``members`` = the
+    sorted member ids, ``grp_n`` = the group size), persisted through
+    ``swap_persist(tag)`` because the returned plans read it several times.
+
+    Why: on a clone-heavy corpus (re-crawls, re-embeds) every kernel that
+    pairs rows by value — band buckets, gram equi-joins, IVF clusters,
+    within-cluster dots — does work quadratic in the clone multiplicity,
+    and a true-dup LSH bucket inflated past its cap is dropped. Running
+    the kernel once per distinct value keeps that work constant under
+    replication (docs/SCALE.md: rp-lsh 1.2–1.43 → 0.33 at 25×, the IVF
+    and semdedup clone-floor fixes, the r14 5× exponents).
+    ``expand_clone_pairs`` then restores the member-level answer: equal
+    values give equal scores.
+
+    Bound: ``members`` holds at most the clone multiplicity of its value,
+    or at most ``keep`` ids when set (the top-k keys keep k+1: the k
+    smallest combinations of one or two sorted lists draw only from each
+    list's first k+1 ids). A corpus whose multiplicity is itself
+    pathological should run dedup_exact or dedup_exact_embedding first.
+
+    Each caller decides when to collapse (its gate is pinned by the dup-id
+    sweep in tests/test_empty_corpus.py) and which rep id to key on: it
+    may rebuild ``id_col`` from this output, keeping the column first."""
+    members = F.sort_array(F.collect_list(id_col))
+    if keep is not None:
+        members = F.slice(members, 1, keep)
+    grp = df.groupBy(value_col).agg(
+        F.min(id_col).alias(id_col),
+        members.alias("members"),
+        F.count("*").alias("grp_n"),
+    )
+    return swap_persist(
+        spark, grp.select(id_col, value_col, "members", "grp_n"), tag
+    )
+
+
+def expand_clone_pairs(
+    rep_pairs: DataFrame,
+    groups: DataFrame,
+    score: str,
+    intra: Column,
+    directed: bool = False,
+) -> DataFrame:
+    """Member pairs (a_id, b_id, ``score``) from the kernel's rep pairs
+    (a_id, b_id, ``score``) over ``groups`` (clone_groups' output, rep id
+    first). Cross pairs: every member combination of the two groups takes
+    the rep pair's score; ``m != m2`` drops the self-pair a colliding id
+    in two groups would make, and pairs are oriented least/greatest unless
+    ``directed``. Intra pairs: each group's own member pairs (both orders
+    when ``directed``), scored by ``intra``, a column over ``groups``; a
+    NULL ``intra`` means the group emits none."""
+    rep = groups.columns[0]
+    ga = groups.select(F.col(rep).alias("a_id"), F.col("members").alias("ma"))
+    gb = groups.select(F.col(rep).alias("b_id"), F.col("members").alias("mb"))
+    m, m2 = F.col("m"), F.col("m2")
+    a, b = (m, m2) if directed else (F.least(m, m2), F.greatest(m, m2))
+    cross = (
+        rep_pairs.join(ga, "a_id")
+        .join(gb, "b_id")
+        .select(score, F.explode("ma").alias("m"), "mb")
+        .select(score, "m", F.explode("mb").alias("m2"))
+        .filter(m != m2)
+        .select(a.alias("a_id"), b.alias("b_id"), score)
+    )
+    own = (
+        groups.filter(F.col("grp_n") >= 2)
+        .select(intra.alias(score), "members")
+        .filter(F.col(score).isNotNull())
+        .select(score, F.explode("members").alias("m"), "members")
+        .select(score, "m", F.explode("members").alias("m2"))
+        .filter(m != m2 if directed else m < m2)
+        .select(m.alias("a_id"), m2.alias("b_id"), score)
+    )
+    return cross.unionByName(own)

@@ -19,7 +19,7 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from engine.registry import query
@@ -97,6 +97,13 @@ def word_ngram_ids(d: DataFrame, n: int = 3) -> DataFrame:
         .select("doc_id", F.split("text", " ").alias("toks"))
         .select("doc_id", F.expr(expr).alias("s"))
     )
+
+
+def has_word_ngrams(text: str, n: int = 3) -> Column:
+    """True iff word_ngram_ids gives ``text`` a non-empty gram set; not
+    true for a NULL text. The oracles exclude gramless docs by their NULL
+    0/0, so they take part in no pair."""
+    return F.size(F.split(text, " ")) >= n
 
 
 def explode_nonempty(df: DataFrame, arr: str, out: str) -> DataFrame:
@@ -412,22 +419,10 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan (spread_cpu), and the explode no longer duplicates the transform
     into a pushed-down size()>0 scan filter (explode_nonempty).
 
-    r11 exact-dup collapse (fourth of the family: rp_lsh r07, IVF r09,
-    semdedup r11): the gram equi-join emits Σ_g f_g² rows, so a clone
-    corpus multiplies join output by clone², — the r11 100× rehearsal's
-    first warm run was still grinding that join after 12 minutes (vs
-    ~1 s at 1×; 5× had read exponent 0.86). One probe (footer rows vs
-    countDistinct(xxhash64(text)); a collision only UNDER-counts, which
-    routes to the collapse path whose grouping key is the full text)
-    decides: with dups the kernel runs once per DISTINCT text — identical
-    text ⇒ identical gram set ⇒ identical candidate membership and
-    Jaccard — then rep pairs expand to all cross member pairs
-    (least/greatest keeps the a<b orientation, Jaccard rides along
-    unchanged) and intra-group pairs emit jaccard 1.0 directly (identical
-    sets; guarded on a non-empty gram set, matching the oracle's NULL
-    0/0 exclusion of gramless docs). Dup-free corpora take the original
-    path bit-identically at the cost of the one probe job."""
-    from engine.tables import all_rows_distinct, swap_persist
+    Exact-dup collapse (engine.tables.clone_groups): taken unless texts
+    AND ids are both distinct; identical texts pair at Jaccard 1.0 when
+    they have grams."""
+    from engine.tables import all_rows_distinct, expand_clone_pairs
 
     d = load(spark, sf_dir, "documents")
     path = f"{sf_dir}/documents.parquet"
@@ -442,72 +437,25 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     ):
         return _ngram_jaccard_kernel(d)
 
-    # Collapse path: rep pairs feed two member joins and the intra branch
-    # reads grp again — persist via the shared swap. The rep key is
-    # struct(min member id, xxhash64(text)) — min id ALONE collides when
-    # one doc_id carries two different texts whose groups both bottom out
-    # at that id (r14); the text-hash disambiguates (same negligible-
-    # collision rationale as word_ngram_ids' int64 gram ids, and a
-    # collision needs BOTH the same min id and the same 64-bit hash).
-    grp = swap_persist(
-        spark,
-        d.groupBy("text")
-        .agg(
-            F.min("doc_id").alias("mid"),
-            F.sort_array(F.collect_list("doc_id")).alias("members"),
-            F.count("*").alias("w"),
-        )
-        .select(
-            F.struct(
-                F.col("mid").alias("i"), F.xxhash64("text").alias("h")
-            ).alias("doc_id"),
-            "text",
-            "members",
-            "w",
-        ),
-        "ngram_grp",
+    grp = text_clone_groups(spark, d, "ngram_grp")
+    rep_pairs = _ngram_jaccard_kernel(grp.select("doc_id", "text"))
+    intra = F.when(has_word_ngrams("text", 3), F.lit(1.0))
+    return expand_clone_pairs(rep_pairs, grp, "jaccard", intra)
+
+
+def text_clone_groups(spark: SparkSession, d: DataFrame, tag: str) -> DataFrame:
+    """engine.tables.clone_groups over documents' text, keyed on
+    struct(min doc_id, xxhash64(text)): min id alone collides when one
+    doc_id carries two texts whose groups both bottom out at that id (r14
+    dup-id axis), and a collision of the struct needs the same min id AND
+    the same 64-bit hash."""
+    from engine.tables import clone_groups
+
+    grp = clone_groups(spark, d, "doc_id", "text", tag)
+    return grp.withColumn(
+        "doc_id",
+        F.struct(F.col("doc_id").alias("i"), F.xxhash64("text").alias("h")),
     )
-    reps = grp.select("doc_id", "text")
-    # persisted BEFORE the kernel: the intra branch's nn join below would
-    # otherwise push an inferred isnotnull filter into the gram projection
-    # and re-inline split(text) per lambda element (see kernel docstring).
-    # Via swap_persist (r14 ADVICE): per-tag eviction on re-invocation,
-    # and the kernel skips its own persist for a caller-provided sh, so
-    # the relation is no longer persisted twice.
-    sh_reps = swap_persist(spark, word_ngram_ids(reps, 3), "ngram_reps_sh")
-    rep_pairs = _ngram_jaccard_kernel(reps, sh=sh_reps)
-    ma = grp.select(F.col("doc_id").alias("a_id"), F.col("members").alias("members_a"))
-    mb = grp.select(F.col("doc_id").alias("b_id"), F.col("members").alias("members_b"))
-    cross = (
-        rep_pairs.join(ma, "a_id")
-        .join(mb, "b_id")
-        .select("jaccard", F.explode("members_a").alias("m"), "members_b")
-        .select("jaccard", "m", F.explode("members_b").alias("m2"))
-        # m != m2: two DIFFERENT texts sharing a colliding doc_id would
-        # otherwise emit a degenerate (id, id) self-pair the oracle's
-        # a_id < b_id excludes (r14 dup-id axis); disjoint member sets on
-        # unique-id corpora make this a no-op there
-        .filter(F.col("m") != F.col("m2"))
-        .select(
-            F.least("m", "m2").alias("a_id"),
-            F.greatest("m", "m2").alias("b_id"),
-            "jaccard",
-        )
-    )
-    nn = sh_reps.select("doc_id", F.size("s").alias("n"))
-    intra = (
-        grp.join(nn, "doc_id")
-        .filter((F.col("w") >= 2) & (F.col("n") > 0))
-        .select(F.explode("members").alias("m"), "members")
-        .select("m", F.explode("members").alias("m2"))
-        .filter(F.col("m") < F.col("m2"))
-        .select(
-            F.col("m").alias("a_id"),
-            F.col("m2").alias("b_id"),
-            F.lit(1.0).alias("jaccard"),
-        )
-    )
-    return cross.unionByName(intra)
 
 
 _NGRAM_JAC_T = 0.2  # the kernel's Jaccard threshold (oracle-pinned)
@@ -528,14 +476,12 @@ _NGRAM_HOT_MAX = 100_000
 _NGRAM_TINY_MAX = 200_000
 
 
-def _ngram_jaccard_kernel(d: DataFrame, sh: DataFrame | None = None) -> DataFrame:
+def _ngram_jaccard_kernel(d: DataFrame) -> DataFrame:
     """The count-aggregated inverted-index Jaccard join over a documents
     relation (see dedup_ngram_jaccard) — extracted r11 so the collapse
-    path can run it over representatives with an identical plan. Pass a
-    precomputed `sh` (word_ngram_ids output) to share the shingle
-    subtree with other consumers.
+    path can run it over representatives with an identical plan.
 
-    sh is PERSISTED here when the kernel builds it (r13 long-doc fix): it
+    The gram relation sh is PERSISTED here (r13 long-doc fix): it
     feeds four join inputs (inv×2, sizes×2), and joins make
     InferFiltersFromConstraints push an inferred isnotnull(size(grams))
     filter BELOW the defining projection — alias substitution re-inlines
@@ -544,16 +490,14 @@ def _ngram_jaccard_kernel(d: DataFrame, sh: DataFrame | None = None) -> DataFram
     stops pushdown/inlining AND the 4× recompute; same persist rationale
     as minhash_near_pairs' mins. Routed through swap_persist (r14
     ADVICE): per-tag eviction on re-invocation, no accumulation across a
-    sweep; a caller-provided sh arrives already persisted by the caller
-    and is NOT re-persisted here.
+    sweep.
 
     Pair counts come from exact_gram_pair_counts below — the r14
     hot-gram (boilerplate) defense lives there; this kernel only applies
     the Jaccard threshold algebra (tiny_k = (1+t)/t = 6 at t = 0.2)."""
-    if sh is None:
-        from engine.tables import swap_persist
+    from engine.tables import swap_persist
 
-        sh = swap_persist(d.sparkSession, word_ngram_ids(d, 3), "ngram_kernel_sh")
+    sh = swap_persist(d.sparkSession, word_ngram_ids(d, 3), "ngram_kernel_sh")
     sizes = sh.select("doc_id", F.size("s").alias("n"))
     # tiny bound k = (1+t)/t = 6 at t = 0.2: a pair sharing NO light gram
     # needs c = ch and jac >= t, forcing na+nb <= c(1+t)/t <= 6·min(Ha,Hb)

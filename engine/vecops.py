@@ -188,38 +188,20 @@ def sim_ann_rp_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrdered. tests/test_vecops.py proves the no-broadcast path by
     forcing the gate to 0 vectors and re-checking recall.
 
-    r07 exact-dup collapse (closes the r05/r06 clone-corpus floor): LSH
-    candidate work is Ω(#true near pairs), and a corpus with exact-dup
-    groups of size r has Θ(n·r) identical pairs — every clone shares
-    every signature, so no (L, b) choice can separate them and the r06
-    rehearsals measured an exponent-1.2–1.43 floor on replicated corpora.
-    The fix is to stop hashing duplicates at all: group identical
-    embeddings (one hash-groupBy shuffle, exact — the array value is the
-    key, no hash-collision risk), run the ENTIRE signature/bucket/verify
-    pipeline on the min-id representatives, then expand the winning
-    blocks afterward. Expansion is decision-preserving for top-k with
-    members truncated to the k+1 smallest ids per group: within a block
-    (fixed sim) pairs tie-order by (a_id, b_id), and the k smallest
-    combinations of one or two sorted lists only ever draw from each
-    list's first k+1 elements. Intra-group pairs (sim = ‖v‖², the dot of
-    identical vectors) bypass LSH entirely. On dup-free corpora (every
-    driver/test SF) reps == vectors and behavior is bit-identical; the
-    collect_list buffer is bounded by dup multiplicity — a corpus where
-    that is itself pathological should run dedup_exact_embedding as a
-    materialized pre-stage."""
+    Exact-dup collapse (engine.tables.clone_groups, members truncated to
+    k+1): taken whenever embeddings duplicate; identical vectors pair at
+    sim = ‖v‖²."""
     import numpy as np
     import pandas as pd
     import pyarrow as pa
-    from pyspark import StorageLevel
+
+    from engine.tables import all_rows_distinct, clone_groups, parquet_num_rows, vectors
 
     k, n_tables = 10, 16
     bucket_cap = 256  # non-discriminative-bucket guard, as in dedup_near_minhash
-    from engine.tables import parquet_num_rows
-
+    path = f"{sf_dir}/embeddings.parquet"
     # Footer-only row count: feeds the verify-path broadcast-budget gate.
-    _n_vec = parquet_num_rows(f"{sf_dir}/embeddings.parquet")
-    from engine.tables import vectors
-
+    _n_vec = parquet_num_rows(path)
     emb = vectors(spark, sf_dir)
     head = emb.select("embedding").first()
     if head is None:
@@ -227,36 +209,11 @@ def sim_ann_rp_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the oracle's empty pair list (r12 empty-corpus hardening)
         return spark.createDataFrame([], "a_id long, b_id long, sim double")
     dim = len(head[0])
-    # Dup probe: ONE cheap job (hashes shuffle as int64s, never the
-    # arrays) decides whether the collapse prestage is worth its ~5 extra
-    # stages. countDistinct(hash) == footer rows ⇒ provably dup-free
-    # (a hash collision can only UNDER-count, which routes to the
-    # collapse path — whose grouping key is the full array, so a
-    # collision costs a little time, never correctness). Unreadable
-    # footer ⇒ can't prove dup-free ⇒ collapse path.
-    n_distinct = (
-        emb.select(F.xxhash64("embedding").alias("gh"))
-        .agg(F.countDistinct("gh"))
-        .first()[0]
-    )
-    has_dups = _n_vec is None or n_distinct < _n_vec
-    if has_dups:
-        # Exact-dup collapse (see docstring): representatives + the k+1
-        # smallest member ids + true group size, persisted — five
-        # consumers (rep count, signature pass, expansion joins, intra).
-        g = (
-            emb.groupBy("embedding")
-            .agg(
-                F.min("vec_id").alias("vec_id"),
-                F.slice(F.sort_array(F.collect_list("vec_id")), 1, k + 1).alias(
-                    "members"
-                ),
-                F.count("*").alias("grp_n"),
-            )
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-    else:
+    if all_rows_distinct(spark, path, emb, "embedding"):
         g = None
+    else:
+        # five consumers read g: rep count, signature pass, expansion
+        g = clone_groups(spark, emb, "vec_id", "embedding", "rp_lsh_grp", keep=k + 1)
     # Signature width scales with log2(n_reps) — the contract this
     # docstring always claimed, implemented r06 after the 5× rehearsal
     # caught the fixed-b saturation: at b=8 the 4096-bucket space
@@ -270,7 +227,7 @@ def sim_ann_rp_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consumers hit cache. Dup-free corpora (every driver/test SF) give
     # n_reps == footer rows — oracle results and the pinned recall
     # floors are unchanged.
-    n_reps = g.count() if g is not None else n_distinct
+    n_reps = g.count() if g is not None else _n_vec
     bits = max(8, int(np.ceil(np.log2(max(n_reps / 8, 2)))))
     # Gaussian hyperplanes (the textbook RP-LSH construction — uniform
     # multiplicative-hash noise left rows linearly correlated and cost ~0.1
@@ -425,7 +382,7 @@ def sim_ann_rp_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             cand.join(ea, "a_id")
             .join(eb, "b_id")
             # bround (half-even) to match np.round on the broadcast path
-            # and the intra-group normsq below — one rounding mode for
+            # and clone_topk's ‖v‖² — one rounding mode for
             # every sim this operator emits. (Real dot products never
             # land on an exact 4-decimal tie, which is also why either
             # mode agrees with the DuckDB oracle's half-up round; the
@@ -434,33 +391,22 @@ def sim_ann_rp_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     if g is None:  # dup-free: reps ≡ vectors, nothing to expand
         return res.orderBy(F.col("sim").desc(), "a_id", "b_id").limit(k)
-    # Expand representative pairs back to member pairs (r07 collapse).
-    # Cross-group blocks carry the rep pair's sim (identical vectors ⇒
-    # identical dots); intra-group blocks are all-pairs of a dup group at
-    # sim = ‖v‖². Members are the k+1 smallest ids per group, which is
-    # exactly enough to decide the global top-k under (sim desc, a_id,
-    # b_id) ordering; the final TakeOrdered never sees more than
-    # (k+1)² rows per block.
-    ga = g.select(F.col("vec_id").alias("a_id"), F.col("members").alias("ma"))
-    gb = g.select(F.col("vec_id").alias("b_id"), F.col("members").alias("mb"))
-    cross = (
-        res.join(ga, "a_id")
-        .join(gb, "b_id")
-        .select("sim", F.explode("ma").alias("va"), "mb")
-        .select("sim", "va", F.explode("mb").alias("vb"))
-        .select(
-            F.least("va", "vb").alias("a_id"),
-            F.greatest("va", "vb").alias("b_id"),
-            "sim",
-        )
-    )
+    return clone_topk(res, g, k)
+
+
+def clone_topk(rep_pairs: DataFrame, grp: DataFrame, k: int) -> DataFrame:
+    """The top-k member pairs of an ANN key's clone corpus: its top-k rep
+    pairs expanded over ``grp`` (clone_groups with keep=k+1), with each
+    group's own pairs at sim = ‖v‖², the dot of identical vectors.
+
+    bround (half-even), not round (half-up): the kernels' cross sims come
+    from np.round, which is half-even, so a ‖v‖² landing exactly on a
+    0.00005 boundary rounds the same way as a cross sim of that value
+    (measure-zero for real dots; the exactness tests pin full equality
+    against a numpy reference)."""
+    from engine.tables import expand_clone_pairs
+
     vd = F.col("embedding").cast("array<double>")
-    # bround (half-even), not round (half-up): cross-pair sims on the
-    # broadcast verify path come from np.round, which is half-even — a
-    # ‖v‖² landing exactly on a 0.00005 boundary must not round
-    # differently from a cross sim of the same value (measure-zero for
-    # real dot products, but the dup-collapse exactness test pins full
-    # equality against a numpy reference).
     normsq = F.bround(
         F.aggregate(
             F.zip_with(vd, vd, lambda x, y: x * y),
@@ -469,16 +415,8 @@ def sim_ann_rp_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         4,
     )
-    intra = (
-        g.filter(F.col("grp_n") >= 2)
-        .select(normsq.alias("sim"), F.col("members").alias("ms"))
-        .select("sim", F.explode("ms").alias("va"), "ms")
-        .select("sim", "va", F.explode("ms").alias("vb"))
-        .filter(F.col("va") < F.col("vb"))
-        .select(F.col("va").alias("a_id"), F.col("vb").alias("b_id"), "sim")
-    )
     return (
-        cross.unionByName(intra)
+        expand_clone_pairs(rep_pairs, grp, "sim", normsq)
         .orderBy(F.col("sim").desc(), "a_id", "b_id")
         .limit(k)
     )

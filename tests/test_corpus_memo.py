@@ -154,6 +154,52 @@ def test_one_stream_runner_and_one_table_swap():
     assert set(OTHER_SWAPS) <= swaps, "stale OTHER_SWAPS entry"
 
 
+# Corpus payload columns (and the double cast of embedding): grouping on
+# one of these while collecting member ids builds a clone group.
+VALUE_COLS = {"text", "embedding", "x"}
+
+
+def _clone_group_sites() -> set:
+    """(module, function) pairs outside engine/tables.py that call
+    .groupBy(<value column>).agg(...) with a collect_list/collect_set of an
+    id column inside the agg."""
+    sites = set()
+    for f in sorted(glob.glob(os.path.join(ENGINE, "*.py"))):
+        if os.path.basename(f) == "tables.py":
+            continue
+        owner = _owners(ast.parse(open(f).read()))
+        for node, fn in owner.items():
+            if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+                continue
+            grp = node.func.value
+            if node.func.attr != "agg" or not (
+                isinstance(grp, ast.Call)
+                and isinstance(grp.func, ast.Attribute)
+                and grp.func.attr == "groupBy"
+            ):
+                continue
+            keys = {a.value for a in grp.args if isinstance(a, ast.Constant)}
+            collected = {
+                c.args[0].value
+                for c in ast.walk(node)
+                if isinstance(c, ast.Call)
+                and ast.unparse(c.func) in ("F.collect_list", "F.collect_set")
+                and c.args
+                and isinstance(c.args[0], ast.Constant)
+            }
+            if keys & VALUE_COLS and any(str(c).endswith("_id") for c in collected):
+                sites.add((os.path.basename(f), fn))
+    return sites
+
+
+def test_one_clone_collapse():
+    """engine.tables.clone_groups is the one place that groups a corpus by
+    value and collects the member ids. A second copy decides the member
+    bound and the persist its own way, and would pair its groups outside
+    expand_clone_pairs."""
+    assert _clone_group_sites() == set()
+
+
 def _rewrite(path, text: str) -> None:
     st = os.stat(path)
     with open(path, "w") as fh:

@@ -273,6 +273,8 @@ COMBO_KEYS = [
     "multimodal_frame_sample",
     "sql_lateral_view",
     # dup-collapse x NULL interaction pins (passed the sweep; keep green)
+    "dedup_near_minhash",
+    "text_containment",
     "dedup_ngram_jaccard",
     "dedup_semdedup",
     "emb_kmeans_lloyd",

@@ -179,3 +179,19 @@ def test_rp_lsh_dup_collapse_on_scale_verify_path(spark, tmp_path, monkeypatch):
         )[:10]
     }
     assert got == want
+
+
+def test_rp_lsh_dup_probe_is_the_corpus_memo(spark, monkeypatch):
+    """sim_ann_rp_lsh decides dup-free vs collapse through
+    engine.tables.all_rows_distinct, memoized per corpus file identity,
+    not through a dup-count job of its own on every plan build."""
+    import os
+
+    import engine.tables as tables
+    from engine.registry import collect
+
+    queries, _ = collect()
+    monkeypatch.setattr(tables, "_MEMO", {})
+    queries["sim_ann_rp_lsh"].__wrapped__(spark, SF_DIR)
+    path = os.path.realpath(f"{SF_DIR}/embeddings.parquet")
+    assert any(k[:2] == ("rows_distinct", path) for k in tables._MEMO)
