@@ -12,6 +12,8 @@ pipeline). Registered after the 50-key attestation window.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -19,7 +21,7 @@ from engine.registry import query
 from engine.tables import load
 
 
-def _mg_partition_fn(k: int):
+def _mg_partition(k: int, batches):
     """Vectorized batch-merge Misra-Gries summary over a partition's "t"
     batches (r14, guide §4.2: hand whole batches to pandas' C paths
     instead of the previous per-token Python dict loop — that
@@ -33,20 +35,16 @@ def _mg_partition_fn(k: int):
     partition count > n_partition/(k+1) survives; the recount pass keeps
     the OUTPUT exact for any candidate superset
     (test_heavy_hitters_mg_vectorized_no_false_negatives)."""
+    import pandas as pd
 
-    def mg_partition(batches):
-        import pandas as pd
-
-        counters = pd.Series(dtype="int64")
-        for pdf in batches:
-            counters = counters.add(pdf["t"].value_counts(), fill_value=0)
-            if len(counters) > k:
-                thresh = counters.nlargest(k + 1).iloc[-1]
-                counters = counters - thresh
-                counters = counters[counters > 0]
-        yield pd.DataFrame({"t": counters.index.astype(str)})
-
-    return mg_partition
+    counters = pd.Series(dtype="int64")
+    for pdf in batches:
+        counters = counters.add(pdf["t"].value_counts(), fill_value=0)
+        if len(counters) > k:
+            thresh = counters.nlargest(k + 1).iloc[-1]
+            counters = counters - thresh
+            counters = counters[counters > 0]
+    yield pd.DataFrame({"t": counters.index.astype(str)})
 
 
 @query(
@@ -81,7 +79,7 @@ def agg_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     tok = spread_cpu(d).select(F.explode(F.split("text", " ")).alias("t"))
 
-    candidates = tok.mapInPandas(_mg_partition_fn(k), "t string").distinct()
+    candidates = tok.mapInPandas(partial(_mg_partition, k), "t string").distinct()
     n = tok.agg(F.count("*").alias("n"))
     return (
         tok.join(F.broadcast(candidates), "t", "left_semi")

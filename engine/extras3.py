@@ -1,6 +1,4 @@
-"""Round-3 surface extensions: VARIANT semi-structured shredding and the
-Spark 4 Python DataSource API (SURVEY §2.A/H extensions; the reference at
-/root/reference is an empty directory — SURVEY §2 is the operative spec).
+"""VARIANT semi-structured shredding (SURVEY §2.H extension).
 
 - ``fn_variant_shred``: the modern semi-structured path. ``parse_json`` →
   VARIANT binary encoding → typed ``variant_get`` extraction. Unlike
@@ -8,11 +6,6 @@ Spark 4 Python DataSource API (SURVEY §2.A/H extensions; the reference at
   VARIANT column parses ONCE at ingest and every downstream path extraction
   is a binary traversal; at 100 TB that is the difference between N regex
   scans of the raw text and one.
-- ``scan_python_datasource``: a custom batch DataSource registered through
-  the Spark 4 ``pyspark.sql.datasource`` API with explicit input-partition
-  planning — the extension point a user would reach for when a source has
-  no built-in connector (internal APIs, bespoke formats). The demo source
-  is deterministic so it carries a FULL SQL oracle.
 """
 
 from __future__ import annotations
@@ -54,82 +47,3 @@ def fn_variant_shred(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         (F.expr("variant_get(parse_json(props), '$.k', 'bigint')") % 10).alias("k_mod"),
     )
-
-
-def _register_seq_source(spark: SparkSession) -> None:
-    """Register the demo Python DataSource once per session."""
-    from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
-
-    class SeqReader(DataSourceReader):
-        def __init__(self, options):
-            self.n = int(options.get("n", 1000))
-            self.parts = int(options.get("parts", 8))
-
-        def partitions(self):
-            # Explicit input-partition planning: each partition is an
-            # independent slice — this is what makes the source parallel
-            # and, at scale, lets Spark schedule N readers.
-            step = (self.n + self.parts - 1) // self.parts
-            return [
-                InputPartition((i * step, min((i + 1) * step, self.n)))
-                for i in range(self.parts)
-            ]
-
-        def read(self, partition):
-            # Yield pyarrow.RecordBatch, not Python tuples: the runtime
-            # detects Arrow batches and skips per-row pickling entirely —
-            # one columnar buffer per partition crosses the Python/JVM
-            # boundary instead of (hi - lo) serialized rows. This is the
-            # scale path for any real source on this API.
-            import numpy as np
-            import pyarrow as pa
-
-            lo, hi = partition.value
-            i = np.arange(lo, hi, dtype=np.int64)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(i),
-                    pa.array(i * i),
-                    pa.array([f"row-{v}" for v in i]),
-                ],
-                names=["i", "sq", "tag"],
-            )
-
-    class SeqDataSource(DataSource):
-        @classmethod
-        def name(cls):
-            return "sg_seq"
-
-        def schema(self):
-            return "i bigint, sq bigint, tag string"
-
-        def reader(self, schema):
-            return SeqReader(self.options)
-
-    try:
-        spark.dataSource.register(SeqDataSource)
-    except Exception:
-        pass  # already registered in this session
-
-
-@query(
-    "scan_python_datasource",
-    oracle="""
-    SELECT i, i * i AS sq, 'row-' || CAST(i AS VARCHAR) AS tag
-    FROM generate_series(0, 999) AS g(i)
-    """,
-)
-def scan_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom batch source through the Spark 4 Python DataSource API: a
-    deterministic sequence source with explicit partition planning (8 input
-    partitions → 8 parallel reader tasks). The FULL oracle pins the
-    contract: a user-defined source feeds the same DataFrame machinery as
-    any built-in format.
-
-    100 TB: the reader yields one pyarrow.RecordBatch per partition (the
-    Arrow fast path of the API — no per-row pickling), so a bespoke-API
-    source scales horizontally exactly like a file scan; the partitions()
-    plan is where you encode splits (key ranges, shard ids, file
-    manifests)."""
-    _register_seq_source(spark)
-    return spark.read.format("sg_seq").option("n", "1000").option("parts", "8").load()

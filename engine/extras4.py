@@ -1,5 +1,4 @@
-"""Round-4 batch 19b: XML extraction, higher statistical moments, and the
-STREAMING Python DataSource (SURVEY §2 extensions; the reference at
+"""XML extraction and higher statistical moments (SURVEY §2 extensions; the reference at
 /root/reference is an empty directory — SURVEY §2 is the operative spec).
 
 - ``fn_xml_extract``: the xpath_* expression family over synthesized XML —
@@ -9,9 +8,6 @@ STREAMING Python DataSource (SURVEY §2 extensions; the reference at
   skewness/kurtosis are POPULATION g1 / excess g2 — DuckDB's built-ins are
   the sample-corrected forms, so the oracle computes the population
   moments explicitly from avg((x−μ)^k).
-- ``scan_python_stream_source``: the streaming half of the Spark 4 Python
-  DataSource API (SimpleDataSourceStreamReader) — offset-managed ingest
-  from a bespoke API; the batch half is scan_python_datasource.
 """
 
 from __future__ import annotations
@@ -20,8 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from engine.registry import query
-from engine.streaming import run_stream
-from engine.tables import load, sftag
+from engine.tables import load
 
 
 @query(
@@ -122,80 +117,3 @@ def agg_skew_kurtosis(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("l_returnflag")
     )
-
-
-def _register_seq_stream_source(spark: SparkSession) -> None:
-    """Register the demo streaming Python DataSource once per session."""
-    from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
-
-    class SeqStreamReader(SimpleDataSourceStreamReader):
-        def __init__(self, options):
-            self.n = int(options.get("n", 1000))
-
-        def initialOffset(self):
-            return {"i": 0}
-
-        def read(self, start):
-            i = start["i"]
-            if i >= self.n:
-                return iter([]), start
-            # One read() call returns the whole sequence: Python stream
-            # sources don't support Trigger.AvailableNow (Spark falls back
-            # to single-batch execution), so the batch must be the full
-            # deterministic payload for the FULL oracle to hold.
-            return iter([(x, x * x, f"ev-{x}") for x in range(i, self.n)]), {
-                "i": self.n
-            }
-
-        def readBetweenOffsets(self, start, end):
-            return iter(
-                [(x, x * x, f"ev-{x}") for x in range(start["i"], end["i"])]
-            )
-
-    class SeqStreamSource(DataSource):
-        @classmethod
-        def name(cls):
-            return "sg_seq_stream"
-
-        def schema(self):
-            return "i bigint, sq bigint, tag string"
-
-        def simpleStreamReader(self, schema):
-            return SeqStreamReader(self.options)
-
-    try:
-        spark.dataSource.register(SeqStreamSource)
-    except Exception:
-        pass  # already registered in this session
-
-
-@query(
-    "scan_python_stream_source",
-    oracle="""
-    SELECT i, i * i AS sq, 'ev-' || CAST(i AS VARCHAR) AS tag
-    FROM generate_series(0, 999) AS g(i)
-    ORDER BY i
-    """,
-)
-def scan_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The STREAMING half of the Spark 4 Python DataSource API: a custom
-    source implementing SimpleDataSourceStreamReader (initialOffset / read
-    / readBetweenOffsets) feeding a real Structured Streaming query into a
-    memory sink. Offset management — the contract that gives a bespoke API
-    exactly-once replay — is the point: readBetweenOffsets re-serves a
-    committed range after failure. Python stream sources don't support
-    Trigger.AvailableNow (single-batch fallback, warned at runtime), so
-    the demo source emits its full deterministic sequence in one batch,
-    making the memory-sink contents FULL-oracle-checkable.
-
-    100 TB/day: this is the entry point for queue-like internal APIs with
-    no native connector; the simple reader funnels through the driver
-    (prefetch + serialize), so high-throughput sources should implement
-    the partition-planning DataSourceStreamReader variant instead — same
-    trade as the batch reader's Arrow path (scan_python_datasource)."""
-    from engine.session import tune
-
-    tune(spark)
-    _register_seq_stream_source(spark)
-    df = spark.readStream.format("sg_seq_stream").option("n", "1000").load()
-    return run_stream(df, f"sg_pysds_{sftag(sf_dir)}", sf_dir).orderBy("i")

@@ -1,10 +1,5 @@
-"""Round-4 batch 20: remaining API-surface corners (SURVEY §2 extensions;
-the reference at /root/reference is an empty directory — SURVEY §2 is the
-operative spec).
+"""Remaining API-surface corners (SURVEY §2 extensions).
 
-- ``udaf_arrow_group``: grouped-map ``applyInArrow`` — the pyarrow-native
-  sibling of applyInPandas (udaf_pandas_group): zero pandas
-  materialization, compute via pyarrow.compute kernels.
 - ``fn_explode_outer_structs``: generator functions with OUTER semantics —
   posexplode_outer over a derived array<struct> that is sometimes empty;
   the null-preserving row is the point (plain explode silently drops the
@@ -21,62 +16,6 @@ from pyspark.sql import functions as F
 
 from engine.registry import query
 from engine.tables import load
-
-
-@query(
-    "udaf_arrow_group",
-    oracle="""
-    SELECT l_returnflag, count(*) AS n,
-           round(sum(l_extendedprice), 2) AS sum_price,
-           round(min(l_discount), 2) AS min_disc,
-           round(max(l_discount), 2) AS max_disc
-    FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
-    """,
-)
-def udaf_arrow_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grouped-map UDAF on the pyarrow-native path: ``applyInArrow``
-    receives each group as a pyarrow.Table and aggregates with
-    pyarrow.compute kernels — no pandas object materialization at all
-    (compare udaf_pandas_group, the pandas sibling). Right shape for
-    binary/nested columns pandas would box per-cell.
-
-    100 TB: one shuffle on the group key; per-group work is a handful of
-    SIMD compute kernels over Arrow buffers. Same caveat as every grouped
-    map: a group must fit one executor — pre-aggregate partial results
-    when keys are heavy (the built-in agg path does this for free, which
-    is why applyInArrow is for logic builtins CAN'T express; the simple
-    aggregates here exist to be oracle-checkable)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    # no type hints: applyInArrow infers the eval type from the SIGNATURE,
-    # and annotated params break its inference (UserWarning + eval_type
-    # UnboundLocalError on Spark 4.1)
-    def summarize(key, table):
-        price = table.column("l_extendedprice")
-        disc = table.column("l_discount")
-        return pa.Table.from_pydict(
-            {
-                "l_returnflag": [key[0]],
-                "n": [table.num_rows],
-                "sum_price": [round(pc.sum(price).as_py(), 2)],
-                "min_disc": [round(pc.min(disc).as_py(), 2)],
-                "max_disc": [round(pc.max(disc).as_py(), 2)],
-            }
-        )
-
-    li = load(spark, sf_dir, "lineitem").select(
-        "l_returnflag", "l_extendedprice", "l_discount"
-    )
-    return (
-        li.groupBy("l_returnflag")
-        .applyInArrow(
-            summarize,
-            "l_returnflag string, n long, sum_price double, "
-            "min_disc double, max_disc double",
-        )
-        .orderBy("l_returnflag")
-    )
 
 
 @query(

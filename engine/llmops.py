@@ -17,6 +17,7 @@ Scale designs (100 TB):
 from __future__ import annotations
 
 import os
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -689,12 +690,9 @@ def _triangle_pairs(spark, sf_dir: str, floor, keep, limit=None) -> DataFrame:
     a block's tile results with the (-sim, a_id, b_id) lexsort and emits
     its first k; limit None emits every kept pair, tile by tile.
 
-    floor/keep must be closures that need only numpy: the kernel is
-    shipped by value, and the engine package is imported on the worker
-    only for the optional per-process side cache."""
-    import numpy as np
-    import pyarrow as pa
-
+    floor and keep run on the worker, so they are module-level defs (or a
+    functools.partial of one) like the kernel itself: all three pickle by
+    reference and the worker imports them from the shipped engine."""
     from engine.tables import vectors
 
     emb = vectors(spark, sf_dir)
@@ -702,61 +700,61 @@ def _triangle_pairs(spark, sf_dir: str, floor, keep, limit=None) -> DataFrame:
     bc, side_key, n = _side_broadcast(spark, sf_dir, emb)
     width = _pair_width(spark, n)
     bounds = _triangle_bounds(n, width)
-    tile_cells = _TILE_CELLS
-
-    def emit(a, b, v):
-        return pa.RecordBatch.from_pydict(
-            {
-                "a_id": pa.array(a, pa.int64()),
-                "b_id": pa.array(b, pa.int64()),
-                "sim": pa.array(v, pa.float64()),
-            }
-        )
-
-    def kernel(batches):
-        try:  # per-worker-process cache (see _side_value)
-            from engine.llmops import _side_value
-
-            ids, m = _side_value(bc, side_key)
-        except ImportError:
-            ids, m = bc.value
-        n = len(ids)
-        for rb in batches:
-            for blk in rb.column("id").to_pylist():
-                parts = []
-                s, hi = min(bounds[blk], n), min(bounds[blk + 1], n)
-                while s < hi:
-                    e = min(hi, s + max(1, tile_cells // (n - s)))
-                    sims = m[s:e] @ m[s:].T
-                    # a_id < b_id. ids are sorted, so a_id >= b_id holds
-                    # only left of the end of the tile's last id run.
-                    w = int(np.searchsorted(ids, ids[e - 1], "right")) - s
-                    sims[:, :w][ids[s:e, None] >= ids[None, s : s + w]] = -np.inf
-                    fs = sims.ravel()
-                    ai, bi = np.unravel_index(
-                        np.flatnonzero(fs >= floor(fs)), sims.shape
-                    )
-                    ai, bi = ai + s, bi + s
-                    exact = np.einsum(
-                        "ij,ij->i",
-                        m[ai].astype(np.float64),
-                        m[bi].astype(np.float64),
-                    )
-                    sel, vals = keep(exact)
-                    part = (ids[ai[sel]], ids[bi[sel]], vals[sel])
-                    if limit is None:
-                        yield emit(*part)
-                    else:
-                        parts.append(part)
-                    s = e
-                if parts:
-                    a, b, v = (np.concatenate(c) for c in zip(*parts))
-                    order = np.lexsort((b, a, -v))[:limit]
-                    yield emit(a[order], b[order], v[order])
-
     return spark.range(0, width, 1, width).mapInArrow(
-        kernel, "a_id long, b_id long, sim double"
+        partial(_triangle_kernel, bc, side_key, bounds, _TILE_CELLS, floor, keep, limit),
+        "a_id long, b_id long, sim double",
     )
+
+
+def _pair_batch(a, b, v):
+    import pyarrow as pa
+
+    return pa.RecordBatch.from_pydict(
+        {
+            "a_id": pa.array(a, pa.int64()),
+            "b_id": pa.array(b, pa.int64()),
+            "sim": pa.array(v, pa.float64()),
+        }
+    )
+
+
+def _triangle_kernel(bc, side_key, bounds, tile_cells, floor, keep, limit, batches):
+    """Worker side of _triangle_pairs: the tiles of each block id in
+    ``batches``, against the per-process cached side (_side_value)."""
+    import numpy as np
+
+    ids, m = _side_value(bc, side_key)
+    n = len(ids)
+    for rb in batches:
+        for blk in rb.column("id").to_pylist():
+            parts = []
+            s, hi = min(bounds[blk], n), min(bounds[blk + 1], n)
+            while s < hi:
+                e = min(hi, s + max(1, tile_cells // (n - s)))
+                sims = m[s:e] @ m[s:].T
+                # a_id < b_id. ids are sorted, so a_id >= b_id holds
+                # only left of the end of the tile's last id run.
+                w = int(np.searchsorted(ids, ids[e - 1], "right")) - s
+                sims[:, :w][ids[s:e, None] >= ids[None, s : s + w]] = -np.inf
+                fs = sims.ravel()
+                ai, bi = np.unravel_index(np.flatnonzero(fs >= floor(fs)), sims.shape)
+                ai, bi = ai + s, bi + s
+                exact = np.einsum(
+                    "ij,ij->i",
+                    m[ai].astype(np.float64),
+                    m[bi].astype(np.float64),
+                )
+                sel, vals = keep(exact)
+                part = (ids[ai[sel]], ids[bi[sel]], vals[sel])
+                if limit is None:
+                    yield _pair_batch(*part)
+                else:
+                    parts.append(part)
+                s = e
+            if parts:
+                a, b, v = (np.concatenate(c) for c in zip(*parts))
+                order = np.lexsort((b, a, -v))[:limit]
+                yield _pair_batch(a[order], b[order], v[order])
 
 
 def _dot(a, b):  # JVM-side higher-order dot product, float→double first
@@ -769,6 +767,26 @@ def _dot(a, b):  # JVM-side higher-order dot product, float→double first
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
+
+
+def _topk_floor(k: int, fs):
+    import numpy as np
+
+    lowest = np.finfo(fs.dtype).min  # excludes the -inf masked cells
+    if fs.size <= k:
+        return lowest
+    vk = np.partition(fs, fs.size - k)[fs.size - k]
+    return max(vk - 2e-4, lowest)
+
+
+def _topk_keep(k: int, exact):
+    import numpy as np
+
+    vals = np.round(exact, 4)
+    if len(vals) <= k:
+        return np.ones(len(vals), bool), vals
+    # keep every pair tied with the k-th sim
+    return vals >= np.sort(vals)[len(vals) - k], vals
 
 
 @query(
@@ -806,25 +824,10 @@ def sim_topk_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     same per-block kernel then runs over LSH/IVF candidate buckets instead
     (engine.simsearch), keeping this exact path as the per-bucket inner loop.
     """
-    import numpy as np
-
     k = 10
-
-    def floor(fs):
-        lowest = np.finfo(fs.dtype).min  # excludes the -inf masked cells
-        if fs.size <= k:
-            return lowest
-        vk = np.partition(fs, fs.size - k)[fs.size - k]
-        return max(vk - 2e-4, lowest)
-
-    def keep(exact):
-        vals = np.round(exact, 4)
-        if len(vals) <= k:
-            return np.ones(len(vals), bool), vals
-        # keep every pair tied with the k-th sim
-        return vals >= np.sort(vals)[len(vals) - k], vals
-
-    out = _triangle_pairs(spark, sf_dir, floor, keep, limit=k)
+    out = _triangle_pairs(
+        spark, sf_dir, partial(_topk_floor, k), partial(_topk_keep, k), limit=k
+    )
     return out.orderBy(F.col("sim").desc(), "a_id", "b_id").limit(k)
 
 

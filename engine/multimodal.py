@@ -99,6 +99,30 @@ def _decode_fake(buf: "bytes", n_cells: int) -> "list[float]":
     return np.round(a.reshape(n_cells, -1).mean(axis=1), 8).tolist()
 
 
+def _decode_batches(batches):
+    import pandas as pd
+
+    for pb in batches:
+        # a NULL payload (NULL source text / failed fetch) decodes to
+        # NULL metadata + NULL features — the downstream byte_sum
+        # arithmetic NULL-propagates exactly like the oracle's
+        feats = [
+            None
+            if buf is None
+            else ",".join(f"{v:.8f}" for v in _decode_fake(buf, THUMB * THUMB))
+            for buf in pb["payload"]
+        ]
+        yield pd.DataFrame(
+            {
+                "doc_id": pb["doc_id"],
+                "width": THUMB,
+                "height": THUMB,
+                "n_bytes": [None if buf is None else len(buf) for buf in pb["payload"]],
+                "features": feats,
+            }
+        )
+
+
 def decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decode / feature-extract over binary payloads with ``mapInPandas``:
     each Arrow batch of (doc_id, payload, meta) rows yields (doc_id, width,
@@ -108,35 +132,9 @@ def decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-format CSV string, not array<float>: the driver's canonicalizer
     sorts result columns with pandas, which cannot order array cells
     (scalar-columns-only output convention)."""
-    import pandas as pd
-
     b = binary_table(spark, sf_dir)
-
-    def decode(batches):
-        for pb in batches:
-            # a NULL payload (NULL source text / failed fetch) decodes to
-            # NULL metadata + NULL features — the downstream byte_sum
-            # arithmetic NULL-propagates exactly like the oracle's (r12)
-            feats = [
-                None
-                if buf is None
-                else ",".join(f"{v:.8f}" for v in _decode_fake(buf, THUMB * THUMB))
-                for buf in pb["payload"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pb["doc_id"],
-                    "width": THUMB,
-                    "height": THUMB,
-                    "n_bytes": [
-                        None if buf is None else len(buf) for buf in pb["payload"]
-                    ],
-                    "features": feats,
-                }
-            )
-
     return b.mapInPandas(
-        decode, "doc_id long, width int, height int, n_bytes long, features string"
+        _decode_batches, "doc_id long, width int, height int, n_bytes long, features string"
     )
 
 

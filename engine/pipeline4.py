@@ -11,6 +11,8 @@ capstone exercises that storage contract end-to-end.
 
 from __future__ import annotations
 
+from functools import partial
+
 from engine.tmpdirs import scratch_dir
 
 from pyspark.sql import DataFrame, SparkSession
@@ -73,8 +75,8 @@ def pipeline_ann_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     stay bounded. Exactly the FAISS IVF file layout, expressed as
     parquet + directories."""
     import numpy as np
-    import pandas as pd
 
+    from engine.simsearch import ivf_assign
     from engine.tables import vectors
 
     emb = vectors(spark, sf_dir)
@@ -103,32 +105,11 @@ def pipeline_ann_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = scratch_dir(prefix=f"sg-annidx-{sftag(sf_dir)}-")
 
     # BUILD: multi-assignment — every vector is stored in its top-nprobe
-    # clusters (postings replicated ×nprobe). Single home-cluster postings
-    # were measured at recall ~0.64 on this corpus (true neighbors living
-    # in unprobed clusters); multi-assignment is the standard IVF spill
-    # that restores recall 1.0 here, trading ×nprobe storage — the same
-    # contract sim_ann_ivf uses.
-    def assign_multi(batches):
-        c = bc.value
-        for pb in batches:
-            v_ids = pb["vec_id"].to_numpy()
-            mat = np.stack(pb["embedding"].to_numpy()).astype(np.float64)
-            top = np.argsort(-(mat @ c.T), axis=1)[:, :_NPROBE]
-            # fewer centroids than nprobe (tiny corpus/shard): the probe
-            # width is whatever argsort produced, not the nominal nprobe
-            p = top.shape[1]
-            n = len(v_ids)
-            rep = np.repeat(np.arange(n), p)
-            yield pd.DataFrame(
-                {
-                    "cluster": top.ravel().astype("int32"),
-                    "vec_id": np.repeat(v_ids, p),
-                    "embedding": [pb["embedding"].iloc[i] for i in rep],
-                }
-            )
-
+    # clusters (postings replicated ×nprobe), which restores recall 1.0
+    # here at ×nprobe storage; sim_ann_ivf runs the same kernel.
     postings = emb.mapInPandas(
-        assign_multi, "cluster int, vec_id long, embedding array<float>"
+        partial(ivf_assign, bc, _NPROBE),
+        "cluster int, vec_id long, embedding array<float>",
     )
     # PERSIST: the index = centroids + cluster-partitioned postings.
     spark.createDataFrame(cents_pdf).write.mode("overwrite").parquet(

@@ -57,6 +57,44 @@ def scan_json_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.schema(SCHEMAS["region"]).json(path)
 
 
+@query(
+    "scan_xml_roundtrip",
+    oracle="""
+    SELECT o_orderkey, o_orderstatus, o_totalprice, o_orderpriority
+    FROM orders WHERE o_orderkey % 40 = 0
+    """,
+)
+def scan_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Native XML round-trip (Spark 4 built-in XML source): an orders
+    slice written with rowTag granularity and read back with a pinned
+    schema — the oracle is the source slice, so element naming, escaping,
+    and numeric re-parse must all survive. Completes the format matrix
+    beside parquet/ORC/CSV×4/JSON-lines/text/binary. Doubles are written
+    by Spark and re-parsed by Spark — same formatter, no float ambiguity.
+
+    Plan: both sides are parallel map-side scans (XML parse is per-row
+    within rowTag splits); the pinned schema avoids the inference job.
+    XML is the interchange format here, not the analytics format — at
+    100 TB you land XML once and convert to parquet (this key IS that
+    landing step)."""
+    src = (
+        load(spark, sf_dir, "orders")
+        .filter(F.col("o_orderkey") % 40 == 0)
+        .select("o_orderkey", "o_orderstatus", "o_totalprice", "o_orderpriority")
+    )
+    out = scratch_dir(prefix=f"sg-xml-rt-{sftag(sf_dir)}-")
+    src.write.mode("overwrite").option("rowTag", "order").format("xml").save(out)
+    return (
+        spark.read.format("xml")
+        .option("rowTag", "order")
+        .schema(
+            "o_orderkey bigint, o_orderstatus string, "
+            "o_totalprice double, o_orderpriority string"
+        )
+        .load(out)
+    )
+
+
 _LINEITEM_COLS = ", ".join(f.name for f in SCHEMAS["lineitem"].fields)
 
 

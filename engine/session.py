@@ -23,6 +23,7 @@ fans out to ~800k input splits; nothing in the engine assumes local mode.
 from __future__ import annotations
 
 import os
+import shutil
 import sys
 import warnings
 import zipfile
@@ -101,15 +102,24 @@ def _ship_engine(sc) -> None:
     context, so a Python worker imports ``engine`` (and installs its zip
     guard, ``engine/__init__.py``) whatever its cwd. addPyFile also puts
     the zip on the driver's sys.path; that is undone, so the driver keeps
-    importing from its source tree."""
+    importing from its source tree. A Python stream source's reader runs
+    in a driver-side process that Spark 4.1 points at
+    ``<SparkFiles root>/streaming_job`` for its pyFiles
+    (PythonStreamingSourceRunner), a directory classic mode never fills,
+    so the zip is copied there too."""
     if "engine.zip" in sc._python_includes:
         return
+    from pyspark import SparkFiles
+
     path = os.path.join(scratch_dir("sg-engine-zip-"), "engine.zip")
     with zipfile.PyZipFile(path, "w") as zf:
         zf.writepy(os.path.dirname(os.path.abspath(__file__)))
     driver_path = list(sys.path)
     sc.addPyFile(path)
     sys.path[:] = driver_path
+    stream_dir = os.path.join(SparkFiles.getRootDirectory(), "streaming_job")
+    os.makedirs(stream_dir, exist_ok=True)
+    shutil.copy(path, stream_dir)
 
 
 def tune(spark: SparkSession) -> SparkSession:

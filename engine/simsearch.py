@@ -21,12 +21,24 @@ cost. Embeddings are L2-normalized (FIXTURES) so cosine ≡ dot everywhere.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from engine.registry import query
 
 _COS_THRESH = 0.4  # corpus max pair-sim is 0.51; 0.4 keeps a small stable set
+
+
+def _cosine_floor(thresh, fs):
+    return thresh - 2e-4
+
+
+def _cosine_keep(thresh, exact):
+    import numpy as np
+
+    return exact >= thresh, np.round(exact, 4)
 
 
 @query(
@@ -63,19 +75,66 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     boolean pass finds candidates above thresh − 2e-4 (margin covers f32 dot
     error on unit vectors); exact f64 dots decide the REAL >= thresh cut on
     the small candidate set, so the published sims are full-precision."""
-    import numpy as np
-
     from engine.llmops import _triangle_pairs
 
-    thresh = _COS_THRESH
+    return _triangle_pairs(
+        spark,
+        sf_dir,
+        partial(_cosine_floor, _COS_THRESH),
+        partial(_cosine_keep, _COS_THRESH),
+    )
 
-    def floor(fs):
-        return thresh - 2e-4
 
-    def keep(exact):
-        return exact >= thresh, np.round(exact, 4)
+def ivf_assign(bc, nprobe: int, batches):
+    """IVF build step: each vector of a (vec_id, embedding) batch, once per
+    cluster of its top-nprobe broadcast centroids (bc: the (nlist, dim)
+    centroid matrix) — multi-assigned postings, the standard IVF spill
+    (single home-cluster postings measured recall ~0.64 on this corpus).
+    Fewer centroids than nprobe (tiny corpus/shard): the probe width is
+    whatever argsort produced, not the nominal nprobe."""
+    import numpy as np
+    import pandas as pd
 
-    return _triangle_pairs(spark, sf_dir, floor, keep)
+    c = bc.value
+    for pb in batches:
+        v_ids = pb["vec_id"].to_numpy()
+        mat = np.stack(pb["embedding"].to_numpy()).astype(np.float64)
+        top = np.argsort(-(mat @ c.T), axis=1)[:, :nprobe]
+        p = top.shape[1]
+        rep = np.repeat(np.arange(len(v_ids)), p)
+        yield pd.DataFrame(
+            {
+                "cluster": top.ravel().astype("int32"),
+                "vec_id": np.repeat(v_ids, p),
+                "embedding": [pb["embedding"].iloc[i] for i in rep],
+            }
+        )
+
+
+def _cluster_topk(k: int, key, pdf):
+    """One IVF cluster's top-k pairs (a_id < b_id) by rounded dot."""
+    import numpy as np
+    import pandas as pd
+
+    v_ids = pdf["vec_id"].to_numpy()
+    mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+    sims = np.round(mat @ mat.T, 4)
+    ai, bi = np.nonzero(v_ids[:, None] < v_ids[None, :])
+    s = sims[ai, bi]
+    if len(s) > k:
+        thresh = np.partition(s, len(s) - k)[len(s) - k]
+        keep = s >= thresh
+        ai, bi, s = ai[keep], bi[keep], s[keep]
+    order = np.lexsort((v_ids[bi], v_ids[ai], -s))
+    # keep boundary TIES past k: a same-sim pair cut here could out-rank a
+    # kept pair on the global (sim desc, a_id, b_id) order — measure-zero
+    # for real dots, routine for dup-group expansion.
+    if len(order) > k:
+        cutoff = s[order[k - 1]]
+        order = order[s[order] >= cutoff]
+    return pd.DataFrame(
+        {"a_id": v_ids[ai][order], "b_id": v_ids[bi][order], "sim": s[order]}
+    )
 
 
 @query(
@@ -120,7 +179,6 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
 
     import numpy as np
-    import pandas as pd
 
     k = 10
     nprobe = 3
@@ -160,27 +218,10 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame([], "a_id long, b_id long, sim double")
     c_mat = np.stack(cents["embedding"].to_numpy()).astype(np.float64)
     bc = spark.sparkContext.broadcast(c_mat)
-
-    def assign(batches):
-        c = bc.value
-        for pb in batches:
-            v_ids = pb["vec_id"].to_numpy()
-            mat = np.stack(pb["embedding"].to_numpy()).astype(np.float64)
-            sims = mat @ c.T
-            top = np.argsort(-sims, axis=1)[:, :nprobe]
-            # fewer centroids than nprobe (tiny corpus/shard): the probe
-            # width is whatever argsort produced, not the nominal nprobe
-            p = top.shape[1]
-            n = len(v_ids)
-            yield pd.DataFrame(
-                {
-                    "cluster": top.ravel(),
-                    "vec_id": np.repeat(v_ids, p),
-                    "embedding": [pb["embedding"].iloc[i] for i in np.repeat(np.arange(n), p)],
-                }
-            )
-
-    assigned = reps.mapInPandas(assign, "cluster int, vec_id long, embedding array<float>")
+    assigned = reps.mapInPandas(
+        partial(ivf_assign, bc, nprobe),
+        "cluster int, vec_id long, embedding array<float>",
+    )
     # Shuffle into exactly n_centroids partitions keyed by cluster: the
     # downstream applyInPandas otherwise inherits spark.sql.shuffle.partitions
     # (32 locally) and fans a mostly-empty Python-worker task per partition —
@@ -188,30 +229,8 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Partition count tracks the index layout (nlist grows ~sqrt(n) at scale),
     # so this stays right as the corpus grows.
     assigned = assigned.repartition(nlist, "cluster")
-
-    def cluster_topk(key, pdf):
-        v_ids = pdf["vec_id"].to_numpy()
-        mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-        sims = np.round(mat @ mat.T, 4)
-        ai, bi = np.nonzero(v_ids[:, None] < v_ids[None, :])
-        s = sims[ai, bi]
-        if len(s) > k:
-            thresh = np.partition(s, len(s) - k)[len(s) - k]
-            keep = s >= thresh
-            ai, bi, s = ai[keep], bi[keep], s[keep]
-        order = np.lexsort((v_ids[bi], v_ids[ai], -s))
-        # keep boundary TIES past k (r09): a same-sim pair cut here could
-        # out-rank a kept pair on the global (sim desc, a_id, b_id) order
-        # — measure-zero for real dots, routine for dup-group expansion.
-        if len(order) > k:
-            cutoff = s[order[k - 1]]
-            order = order[s[order] >= cutoff]
-        return pd.DataFrame(
-            {"a_id": v_ids[ai][order], "b_id": v_ids[bi][order], "sim": s[order]}
-        )
-
     per_cluster = assigned.groupBy("cluster").applyInPandas(
-        cluster_topk, "a_id long, b_id long, sim double"
+        partial(_cluster_topk, k), "a_id long, b_id long, sim double"
     )
     # a pair probed into two shared clusters appears twice — dedup, then
     # top-k. per_cluster is ≤ nlist×(k+ties) rows by construction, so

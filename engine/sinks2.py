@@ -1,6 +1,5 @@
-"""Sink/source batch 2 (r05, registered after the attestation window):
-dynamic partition overwrite and recursive globbed directory ingest — the
-two layout-level contracts every warehouse-shaped pipeline relies on.
+"""Dynamic partition overwrite and recursive globbed directory ingest —
+the two layout-level contracts every warehouse-shaped pipeline relies on.
 """
 
 from __future__ import annotations
@@ -111,85 +110,3 @@ def scan_recursive_glob(spark: SparkSession, sf_dir: str) -> DataFrame:
     return back.groupBy("source").agg(
         F.count("*").alias("n_docs"), F.sum("n_chars").alias("total_chars")
     )
-
-
-@query(
-    "sink_python_datasource",
-    oracle="""
-    SELECT lang, count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS total_chars
-    FROM documents GROUP BY 1
-    """,
-)
-def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark 4 Python DataSource WRITER API — the write-side sibling of
-    scan_python_datasource's reader: a custom `DataSourceWriter` whose
-    `write(iterator)` receives each partition's rows in Python, persists
-    them as JSON-lines shards (one per partition, named by
-    TaskContext.partitionId), and returns a commit message the driver's
-    `commit()` sees — the full two-phase write protocol (write per task →
-    driver commit/abort). The key writes per-language aggregates through
-    the custom sink, reads the shards back with the native JSON reader,
-    and re-aggregates; the oracle recomputes from the source table, so a
-    dropped shard, duplicated task output, or mangled row breaks the
-    hash.
-
-    100 TB: each task writes its own shard and reports via commit
-    messages; nothing funnels through the driver except the O(#tasks)
-    commit metadata — the same contract parquet committers implement. A
-    real connector adds abort() cleanup + idempotent task retries (write
-    to temp, rename on commit)."""
-    import json as _json
-
-    from pyspark.sql.datasource import DataSource, DataSourceWriter, WriterCommitMessage
-
-    out_dir = scratch_dir(prefix=f"sg-pyds-sink-{sftag(sf_dir)}-")
-
-    class JsonShardWriter(DataSourceWriter):
-        def __init__(self, options):
-            self.path = options.get("path")
-
-        def write(self, iterator):
-            from pyspark import TaskContext
-
-            pid = TaskContext.get().partitionId()
-            n = 0
-            shard = f"{self.path}/part-{pid:05d}.jsonl"
-            with open(shard, "w") as fh:
-                for row in iterator:
-                    fh.write(
-                        _json.dumps(
-                            {"lang": row["lang"], "n_docs": row["n_docs"],
-                             "total_chars": row["total_chars"]}
-                        )
-                        + "\n"
-                    )
-                    n += 1
-            return WriterCommitMessage()
-
-    class JsonShardSink(DataSource):
-        @classmethod
-        def name(cls):
-            return "sg_jsonl_sink"
-
-        def writer(self, schema, overwrite):
-            return JsonShardWriter(self.options)
-
-    try:
-        spark.dataSource.register(JsonShardSink)
-    except Exception:
-        pass  # already registered in this session
-
-    agg = (
-        load(spark, sf_dir, "documents")
-        .groupBy("lang")
-        .agg(F.count("*").alias("n_docs"), F.sum("n_chars").alias("total_chars"))
-        # shard count should track data volume, not the shuffle-partition
-        # conf: 32 near-empty Python writer tasks cost ~4 s of worker forks
-        # for a |languages|-row relation.
-        .coalesce(4)
-    )
-    agg.write.format("sg_jsonl_sink").option("path", out_dir).mode("append").save()
-    back = spark.read.schema("lang string, n_docs long, total_chars long").json(
-        out_dir
-    )
-    return back.select("lang", "n_docs", "total_chars")

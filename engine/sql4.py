@@ -13,9 +13,6 @@ executes it with standard-SQL-equivalent semantics:
 - ``fn_collation_group``: UTF8_LCASE collation — case-insensitive
   compare/group/distinct as a TYPE property instead of lower() wrapping
   every expression site.
-- ``udtf_arrow_expand``: Arrow-optimized Python UDTF (useArrow=True) —
-  batch-serialized UDTF I/O replacing per-row pickling (the UDTF analogue
-  of the scan_python_datasource Arrow fix).
 - ``plan_observe_metrics``: df.observe() — pipeline metrics accumulated
   DURING execution (one pass, no second scan), the operational telemetry
   hook a 100 TB job needs to self-report row counts / sums per stage.
@@ -205,66 +202,6 @@ def fn_collation_group(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_case_variants",
         )
         .orderBy("type_key")
-    )
-
-
-@query(
-    "udtf_arrow_expand",
-    oracle="""
-    SELECT o_orderkey, CAST(d AS INT) AS day_offset,
-           o_orderdate + to_days(CAST(d AS INT)) AS followup_date
-    FROM orders, UNNEST(range(0, 3)) AS t(d)
-    WHERE o_orderpriority = '1-URGENT' AND o_orderdate >= TIMESTAMP '1998-01-01'
-    ORDER BY o_orderkey, day_offset
-    """,
-)
-def udtf_arrow_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arrow-optimized Python UDTF (Spark 4 ``useArrow=True``): expand each
-    urgent order into a 3-day follow-up schedule via a LATERAL table
-    function. Same API as udtf_python but the UDTF I/O crosses the Python
-    boundary as Arrow batches instead of pickled rows — the UDTF analogue
-    of the scan_python_datasource Arrow-reader fix (~10× on wide
-    expansions).
-
-    100 TB: the expansion factor (3×) happens INSIDE the Python worker per
-    batch; only the already-filtered urgent rows reach Python (predicate
-    stays JVM-side). The filtered input goes through spread_cpu
-    (engine/textops.py:43) before the lateral join: per-row Python eval
-    is the slow stage, and the selective filter collapses the small scan
-    to one partition (sf0.1: 16k rows → 1 partition → one serial Python
-    worker, ~4 s; spread across the session's cores the same eval runs
-    ~0.6 s). The shuffle moves only the filtered keys — noise next to
-    the eval it parallelizes — and spread_cpu's under-parallel gate
-    makes it a no-op on a cluster scan that already has real splits."""
-    import datetime as dt
-
-    from pyspark.sql.functions import udtf
-
-    @udtf(returnType="o_orderkey bigint, day_offset int, followup_date timestamp_ntz", useArrow=True)
-    class Followups:
-        def eval(self, o_orderkey: int, o_orderdate: dt.datetime):
-            for d in range(3):
-                yield o_orderkey, d, o_orderdate + dt.timedelta(days=d)
-
-    tag = sftag(sf_dir)
-    # 1998 slice: the key demonstrates the Arrow UDTF path, and per-row
-    # eval() in Python dominates regardless of Arrow I/O — bound the input
-    # so the 184-key sweep doesn't pay ~6 s for an API demo.
-    from engine.textops import spread_cpu
-
-    spread_cpu(
-        load(spark, sf_dir, "orders").filter(
-            (F.col("o_orderpriority") == "1-URGENT")
-            & (F.col("o_orderdate") >= "1998-01-01")
-        )
-    ).createOrReplaceTempView(f"sg_urgent_{tag}")
-    spark.udtf.register("sg_followups", Followups)
-    return spark.sql(
-        f"""
-        SELECT t.o_orderkey, t.day_offset, t.followup_date
-        FROM sg_urgent_{tag}, LATERAL sg_followups(o_orderkey, o_orderdate) t
-        ORDER BY t.o_orderkey, t.day_offset
-        """
     )
 
 

@@ -13,6 +13,8 @@ All registered after the 50-key attestation window (engine.registry order).
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -127,6 +129,90 @@ def etl_funnel_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _rp_signatures(bc, n_tables: int, bits: int, bucket_cap: int, batches):
+    """(bucket, vec_id) rows of a (vec_id, embedding) batch: per table, the
+    home bucket of the bits-wide hyperplane signature (bc: the
+    (n_tables*bits, dim) planes) and every 1-bit-flip neighbor
+    (multi-probe)."""
+    import numpy as np
+    import pandas as pd
+
+    pl = bc.value
+    weights = 1 << np.arange(bits)
+    for pb in batches:
+        v_ids = pb["vec_id"].to_numpy()
+        if len(v_ids) == 0:
+            continue
+        mat = np.stack(pb["embedding"].to_numpy()).astype(np.float64)
+        allbits = (mat @ pl.T) > 0  # (n, L*b)
+        bucket_list = []
+        for t in range(n_tables):
+            sig = allbits[:, t * bits : (t + 1) * bits].astype(np.int64) @ weights
+            home = (t << bits) | sig
+            bucket_list.append(home)
+            for b in range(bits):
+                bucket_list.append(home ^ (1 << b))
+        buckets = np.concatenate(bucket_list)
+        ids = np.tile(v_ids, n_tables * (bits + 1))
+        # Per-batch pre-cap: keep at most bucket_cap+1 members of any
+        # bucket from this batch. Decision-preserving: if a bucket's
+        # TRUE total is <= cap no batch ever trims it (collected size
+        # = true size); if the total exceeds the cap the collected
+        # size still reaches >= cap+1 (either some batch trimmed, or
+        # none did and the full total arrives), so the downstream size
+        # filter drops it either way. This bounds the collect_list
+        # group for a degenerate bucket (identical vectors) to
+        # #batches*(cap+1) ids instead of |bucket|.
+        order = np.argsort(buckets, kind="stable")
+        sb = buckets[order]
+        run_start = np.where(
+            np.concatenate(([True], sb[1:] != sb[:-1])), np.arange(len(sb)), 0
+        )
+        cumcount = np.arange(len(sb)) - np.maximum.accumulate(run_start)
+        keep = order[cumcount <= bucket_cap]
+        yield pd.DataFrame({"bucket": buckets[keep], "vec_id": ids[keep]})
+
+
+def _rp_pair_sims(bc_side, side_key, k: int, batches):
+    """Exact rounded dots of (a_id, b_id) candidate batches against the
+    per-process cached broadcast side (llmops._side_value), pruned to the
+    batch's top-k (ties kept)."""
+    import numpy as np
+
+    from engine.llmops import _pair_batch, _side_value
+
+    ids, m = _side_value(bc_side, side_key)
+    order = np.argsort(ids)
+    sids = ids[order]
+    for rb in batches:
+        a = rb.column("a_id").to_numpy(zero_copy_only=False)
+        if len(a) == 0:
+            continue
+        b = rb.column("b_id").to_numpy(zero_copy_only=False)
+        # Membership guard: if candidate ids ever diverge from the
+        # broadcast side (filtered load, corpus change), searchsorted
+        # would silently gather a wrong row — fail loudly instead.
+        pa_idx = np.searchsorted(sids, a).clip(max=len(sids) - 1)
+        pb_idx = np.searchsorted(sids, b).clip(max=len(sids) - 1)
+        if not ((sids[pa_idx] == a).all() and (sids[pb_idx] == b).all()):
+            raise ValueError(
+                "sim_ann_rp_lsh: candidate vec_id absent from the "
+                "broadcast embedding matrix"
+            )
+        ia = order[pa_idx]
+        ib = order[pb_idx]
+        # f32→f64 upcast is exact (source column is array<float>)
+        s = np.round(
+            np.einsum("ij,ij->i", m[ia].astype(np.float64), m[ib].astype(np.float64)),
+            4,
+        )
+        if len(s) > k:  # per-batch prune: ≤k rows reach the sort
+            thresh = np.partition(s, len(s) - k)[len(s) - k]
+            keep = s >= thresh
+            a, b, s = a[keep], b[keep], s[keep]
+        yield _pair_batch(a, b, s)
+
+
 @query(
     "sim_ann_rp_lsh",
     # FULL oracle (r04): signature bucketing is not SQL-expressible, but the
@@ -192,8 +278,6 @@ def sim_ann_rp_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     k+1): taken whenever embeddings duplicate; identical vectors pair at
     sim = ‖v‖²."""
     import numpy as np
-    import pandas as pd
-    import pyarrow as pa
 
     from engine.tables import all_rows_distinct, clone_groups, parquet_num_rows, vectors
 
@@ -236,50 +320,14 @@ def sim_ann_rp_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     planes = np.random.default_rng(42).standard_normal((n_tables * bits, dim))
     bc = spark.sparkContext.broadcast(planes)
 
-    def signatures(batches):
-        pl = bc.value
-        weights = 1 << np.arange(bits)
-        for pb in batches:
-            v_ids = pb["vec_id"].to_numpy()
-            if len(v_ids) == 0:
-                continue
-            mat = np.stack(pb["embedding"].to_numpy()).astype(np.float64)
-            allbits = (mat @ pl.T) > 0  # (n, L*b)
-            bucket_list = []
-            for t in range(n_tables):
-                sig = allbits[:, t * bits : (t + 1) * bits].astype(np.int64) @ weights
-                home = (t << bits) | sig
-                # home bucket + every 1-bit-flip neighbor (multi-probe)
-                bucket_list.append(home)
-                for b in range(bits):
-                    bucket_list.append(home ^ (1 << b))
-            buckets = np.concatenate(bucket_list)
-            ids = np.tile(v_ids, n_tables * (bits + 1))
-            # Per-batch pre-cap: keep at most bucket_cap+1 members of any
-            # bucket from this batch. Decision-preserving: if a bucket's
-            # TRUE total is <= cap no batch ever trims it (collected size
-            # = true size); if the total exceeds the cap the collected
-            # size still reaches >= cap+1 (either some batch trimmed, or
-            # none did and the full total arrives), so the downstream size
-            # filter drops it either way. This bounds the collect_list
-            # group for a degenerate bucket (identical vectors) to
-            # #batches*(cap+1) ids instead of |bucket|.
-            order = np.argsort(buckets, kind="stable")
-            sb = buckets[order]
-            run_start = np.where(
-                np.concatenate(([True], sb[1:] != sb[:-1])), np.arange(len(sb)), 0
-            )
-            cumcount = np.arange(len(sb)) - np.maximum.accumulate(run_start)
-            keep = order[cumcount <= bucket_cap]
-            yield pd.DataFrame({"bucket": buckets[keep], "vec_id": ids[keep]})
-
     from engine.textops import spread_cpu
 
     src = g.select("vec_id", "embedding") if g is not None else emb.select(
         "vec_id", "embedding"
     )
     sigs = spread_cpu(src, width=8).mapInPandas(
-        signatures, "bucket long, vec_id long"
+        partial(_rp_signatures, bc, n_tables, bits, bucket_cap),
+        "bucket long, vec_id long",
     )
     # Candidate generation in ONE shuffle of the signature explosion:
     # groupBy(bucket) -> collect_list, drop oversized buckets by array
@@ -314,54 +362,10 @@ def sim_ann_rp_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the parquet source precision, upcast to f64 at the gather).
         bc_side, side_key, _ = llmops._side_broadcast(spark, sf_dir, emb)
 
-        def pair_sims(batches):
-            try:  # per-worker cache of the f32 side (see llmops._side_value)
-                from engine.llmops import _side_value
-
-                ids, m = _side_value(bc_side, side_key)
-            except ImportError:
-                ids, m = bc_side.value
-            order = np.argsort(ids)
-            sids = ids[order]
-            for rb in batches:
-                a = rb.column("a_id").to_numpy(zero_copy_only=False)
-                if len(a) == 0:
-                    continue
-                b = rb.column("b_id").to_numpy(zero_copy_only=False)
-                # Membership guard: if candidate ids ever diverge from the
-                # broadcast side (filtered load, corpus change), searchsorted
-                # would silently gather a wrong row — fail loudly instead.
-                pa_idx = np.searchsorted(sids, a).clip(max=len(sids) - 1)
-                pb_idx = np.searchsorted(sids, b).clip(max=len(sids) - 1)
-                if not ((sids[pa_idx] == a).all() and (sids[pb_idx] == b).all()):
-                    raise ValueError(
-                        "sim_ann_rp_lsh: candidate vec_id absent from the "
-                        "broadcast embedding matrix"
-                    )
-                ia = order[pa_idx]
-                ib = order[pb_idx]
-                # f32→f64 upcast is exact (source column is array<float>)
-                s = np.round(
-                    np.einsum(
-                        "ij,ij->i",
-                        m[ia].astype(np.float64),
-                        m[ib].astype(np.float64),
-                    ),
-                    4,
-                )
-                if len(s) > k:  # per-batch prune: ≤k rows reach the sort
-                    thresh = np.partition(s, len(s) - k)[len(s) - k]
-                    keep = s >= thresh
-                    a, b, s = a[keep], b[keep], s[keep]
-                yield pa.RecordBatch.from_pydict(
-                    {
-                        "a_id": pa.array(a, pa.int64()),
-                        "b_id": pa.array(b, pa.int64()),
-                        "sim": pa.array(s, pa.float64()),
-                    }
-                )
-
-        res = cand.mapInArrow(pair_sims, "a_id long, b_id long, sim double")
+        res = cand.mapInArrow(
+            partial(_rp_pair_sims, bc_side, side_key, k),
+            "a_id long, b_id long, sim double",
+        )
     else:
         # Scale path (no ceiling): embeddings join onto the candidate pairs
         # (two hash joins keyed on vec_id), dot product folded JVM-side.
@@ -422,6 +426,32 @@ def clone_topk(rep_pairs: DataFrame, grp: DataFrame, k: int) -> DataFrame:
     )
 
 
+def _gram_block(batches):
+    """One (n, x_sum, outer-product sum) row for a partition's embedding
+    batches; nothing for an empty partition."""
+    import numpy as np
+    import pyarrow as pa
+
+    s = None
+    for rb in batches:
+        flat = rb.column("embedding").flatten().to_numpy(zero_copy_only=False)
+        mat = flat.astype(np.float64).reshape(rb.num_rows, -1)
+        if s is None:
+            s = [0.0, np.zeros(mat.shape[1]), np.zeros((mat.shape[1],) * 2)]
+        s[0] += len(mat)
+        s[1] += mat.sum(axis=0)
+        s[2] += mat.T @ mat
+    if s is None:
+        return
+    yield pa.RecordBatch.from_pydict(
+        {
+            "n": pa.array([float(s[0])]),
+            "xsum": pa.array([s[1].tolist()]),
+            "gram": pa.array([s[2].ravel().tolist()]),
+        }
+    )
+
+
 def pca_fit(spark: SparkSession, sf_dir: str) -> "dict | None":
     """Top-4 PCA fit of the corpus's embeddings (None when empty): one
     distributed pass accumulates per-partition Gram blocks (x_sum,
@@ -432,36 +462,15 @@ def pca_fit(spark: SparkSession, sf_dir: str) -> "dict | None":
     and the diagnostics emb_pca_project validates. 100 TB: one
     (1 + d + d²)-float row per PARTITION leaves the executors."""
     import numpy as np
-    import pyarrow as pa
+
+    from engine.tables import vectors
+    from engine.textops import spread_cpu
 
     n_comp = 4
-    from engine.tables import vectors
-
-    def gram(batches):
-        s = None
-        for rb in batches:
-            flat = rb.column("embedding").flatten().to_numpy(zero_copy_only=False)
-            mat = flat.astype(np.float64).reshape(rb.num_rows, -1)
-            if s is None:
-                s = [0.0, np.zeros(mat.shape[1]), np.zeros((mat.shape[1],) * 2)]
-            s[0] += len(mat)
-            s[1] += mat.sum(axis=0)
-            s[2] += mat.T @ mat
-        if s is None:
-            return
-        yield pa.RecordBatch.from_pydict(
-            {
-                "n": pa.array([float(s[0])]),
-                "xsum": pa.array([s[1].tolist()]),
-                "gram": pa.array([s[2].ravel().tolist()]),
-            }
-        )
-
-    from engine.textops import spread_cpu
 
     parts = (
         spread_cpu(vectors(spark, sf_dir).select("embedding"), width=8)
-        .mapInArrow(gram, "n double, xsum array<double>, gram array<double>")
+        .mapInArrow(_gram_block, "n double, xsum array<double>, gram array<double>")
         .collect()  # bounded: one (1 + d + d²)-float row PER PARTITION
     )
     if not parts:
@@ -489,6 +498,27 @@ def pca_fit(spark: SparkSession, sf_dir: str) -> "dict | None":
     }
 
 
+def _pca_project(bc, batches):
+    """(vec_id, pc1..pc4) of embedding batches: (x - mean) @ comps, with
+    bc the broadcast (mean, comps) of pca_fit."""
+    import numpy as np
+    import pyarrow as pa
+
+    mu, w = bc.value
+    for rb in batches:
+        ids = rb.column("vec_id").to_numpy(zero_copy_only=False)
+        flat = rb.column("embedding").flatten().to_numpy(zero_copy_only=False)
+        mat = flat.astype(np.float64).reshape(len(ids), -1)
+        proj = np.round((mat - mu) @ w, 6)
+        # One scalar column per component (not array<double>): the
+        # driver's canonicalizer sorts result columns with pandas, which
+        # cannot order array cells (scalar-columns-only convention).
+        cols = {"vec_id": pa.array(ids, pa.int64())}
+        for j in range(proj.shape[1]):
+            cols[f"pc{j + 1}"] = pa.array(proj[:, j])
+        yield pa.RecordBatch.from_pydict(cols)
+
+
 def pca_project_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed PCA: project every embedding onto the corpus's top-4
     principal components — (vec_id, pc1..pc4) — by a broadcast matmul over
@@ -497,7 +527,6 @@ def pca_project_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``emb_pca_project`` key validates the fit itself (the projection floats
     are eigh-derived, not SQL-reproducible)."""
     import numpy as np
-    import pyarrow as pa
 
     from engine.tables import vectors
     from engine.textops import spread_cpu
@@ -508,24 +537,12 @@ def pca_project_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
         # empty corpus/shard: no fit, no projections
         return spark.createDataFrame([], schema)
     bc = spark.sparkContext.broadcast((np.array(fit["mean"]), np.array(fit["comps"])))
-
-    def project(batches):
-        mu, w = bc.value
-        for rb in batches:
-            ids = rb.column("vec_id").to_numpy(zero_copy_only=False)
-            flat = rb.column("embedding").flatten().to_numpy(zero_copy_only=False)
-            mat = flat.astype(np.float64).reshape(len(ids), -1)
-            proj = np.round((mat - mu) @ w, 6)
-            # One scalar column per component (not array<double>): the
-            # driver's canonicalizer sorts result columns with pandas, which
-            # cannot order array cells (scalar-columns-only convention).
-            cols = {"vec_id": pa.array(ids, pa.int64())}
-            for j in range(proj.shape[1]):
-                cols[f"pc{j + 1}"] = pa.array(proj[:, j])
-            yield pa.RecordBatch.from_pydict(cols)
-
     emb = vectors(spark, sf_dir).select("vec_id", "embedding")
-    return spread_cpu(emb, width=8).mapInArrow(project, schema).orderBy("vec_id")
+    return (
+        spread_cpu(emb, width=8)
+        .mapInArrow(partial(_pca_project, bc), schema)
+        .orderBy("vec_id")
+    )
 
 
 @query(

@@ -1,12 +1,25 @@
 """Fixed cost of one Python task (docs/SCALE.md rule 2), the figure that
-sizes engine.llmops._PAIRS_PER_TASK.
+sizes engine.llmops._PAIRS_PER_TASK, for worker code shipped by reference
+and for a closure shipped by value.
 
 A pass-through mapInArrow over 1 and over 4 partitions of a 1,000-row
-range on a local[4] session: 3 warm-up jobs, then 10 timed jobs per
-width, interleaved. The pass-through imports ``engine`` in the worker, as
-every engine kernel does. Reports the median wall time and process-tree CPU
-(driver, JVM and Python workers, perfbench/procstat.py) per job. The
-per-task fixed cost is (cpu(4) - cpu(1)) / 3.
+range on a local[4] session, in two variants:
+
+- ``engine``: the pass-through imports ``engine`` in the worker. Every
+  engine kernel is a module-level def pickled by reference, so the worker
+  imports ``engine`` (and installs its zip guard) when it unpickles one.
+  A def in this script is shipped by value, so it imports ``engine``
+  itself to stand for that.
+- ``closure``: a nested pass-through that never imports ``engine``, the
+  way a nested def, lambda or decorated UDF reaches the worker. It pays
+  PySpark's per-task zip re-read.
+
+3 warm-up jobs, then 10 timed jobs per (variant, width), interleaved.
+Reports the median wall time and process-tree CPU (driver, JVM and Python
+workers, perfbench/procstat.py) per job. The per-task fixed cost is
+(cpu(4) - cpu(1)) / 3. A reused worker keeps the guard once any task
+imported ``engine``, so each variant runs in its own session: the closure
+first, before any worker has imported ``engine``.
 
 Usage: python scripts/_probe_python_task_cost.py
 """
@@ -30,19 +43,24 @@ WIDTHS = (1, 4)
 
 
 def _pass(batches):
-    # An engine kernel's worker imports engine, which installs the zip
-    # guard; a closure that never does pays the stock per-task re-read.
     import engine  # noqa: F401
 
     yield from batches
 
 
-def main() -> int:
+def _closure():
+    def passthrough(batches):
+        yield from batches
+
+    return passthrough
+
+
+def _measure(fn) -> dict[int, tuple[float, float]]:
+    """Median (wall, CPU) per job at each width, in a fresh session."""
     spark = get_spark("python-task-cost", cpus="4")
     spark.sparkContext.setLogLevel("ERROR")
     frames = {
-        w: spark.range(1000, numPartitions=w).mapInArrow(_pass, "id long")
-        for w in WIDTHS
+        w: spark.range(1000, numPartitions=w).mapInArrow(fn, "id long") for w in WIDTHS
     }
     for _ in range(3):
         for df in frames.values():
@@ -53,13 +71,22 @@ def main() -> int:
             c0, t0 = tree_cpu_s(), time.perf_counter()
             df.collect()
             runs[w].append((time.perf_counter() - t0, tree_cpu_s() - c0))
-    cpu = {}
-    for w in WIDTHS:
-        wall = statistics.median(r[0] for r in runs[w])
-        cpu[w] = statistics.median(r[1] for r in runs[w])
-        print(f"{w} task(s): wall {wall:.3f} s, process-tree CPU {cpu[w]:.3f} s per job")
-    print(f"per-task fixed cost: {(cpu[4] - cpu[1]) / 3:.3f} CPU-s")
     spark.stop()
+    return {
+        w: (
+            statistics.median(r[0] for r in runs[w]),
+            statistics.median(r[1] for r in runs[w]),
+        )
+        for w in WIDTHS
+    }
+
+
+def main() -> int:
+    for name, fn in (("closure", _closure()), ("engine", _pass)):
+        res = _measure(fn)
+        for w, (wall, cpu) in res.items():
+            print(f"{name}: {w} task(s): wall {wall:.3f} s, process-tree CPU {cpu:.3f} s per job")
+        print(f"{name}: per-task fixed cost {(res[4][1] - res[1][1]) / 3:.3f} CPU-s")
     return 0
 
 

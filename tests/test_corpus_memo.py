@@ -200,6 +200,113 @@ def test_one_clone_collapse():
     assert _clone_group_sites() == set()
 
 
+# Calls whose first argument runs in a Python worker, and the decorators
+# that would wrap worker code in place.
+WORKER_ENTRIES = {
+    "udf",
+    "pandas_udf",
+    "udtf",
+    "mapInArrow",
+    "mapInPandas",
+    "applyInPandas",
+    "applyInArrow",
+    "applyInPandasWithState",
+}
+WORKER_DECORATORS = {"udf", "pandas_udf", "udtf"}
+
+
+def _callee(node: ast.AST) -> str | None:
+    if isinstance(node, ast.Call):
+        node = node.func
+    if isinstance(node, ast.Name):
+        return node.id
+    if isinstance(node, ast.Attribute):
+        return node.attr
+    return None
+
+
+def _plain_defs(tree: ast.Module) -> set[str]:
+    """The module's undecorated top-level defs and classes."""
+    return {
+        n.name
+        for n in tree.body
+        if isinstance(n, (ast.FunctionDef, ast.ClassDef)) and not n.decorator_list
+    }
+
+
+def _local_binds(fn: ast.AST) -> set[str]:
+    """Names a top-level function binds other than by import: a worker
+    def of the same name there would shadow the module-level one."""
+    names = set()
+    for n in ast.walk(fn):
+        if n is not fn and isinstance(n, (ast.FunctionDef, ast.ClassDef)):
+            names.add(n.name)
+        elif isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store):
+            names.add(n.id)
+        elif isinstance(n, ast.arg):
+            names.add(n.arg)
+    return names
+
+
+def _worker_code_sites() -> list[str]:
+    """module:line of every worker-code argument in engine/ that is not a
+    module-level plain def/class name or functools.partial of one, and of
+    every worker decorator."""
+    trees = {
+        os.path.basename(f)[:-3]: ast.parse(open(f).read())
+        for f in sorted(glob.glob(os.path.join(ENGINE, "*.py")))
+    }
+    plain = {mod: _plain_defs(t) for mod, t in trees.items()}
+    bad = []
+    for mod, tree in trees.items():
+        ok = set(plain[mod])
+        for n in ast.walk(tree):
+            if isinstance(n, ast.ImportFrom) and (n.module or "").startswith("engine."):
+                there = plain.get(n.module.split(".", 1)[1], set())
+                ok |= {a.asname or a.name for a in n.names if a.name in there}
+
+        def by_reference(arg: ast.AST, shadowed: set) -> bool:
+            if isinstance(arg, ast.Call) and ast.unparse(arg.func) in (
+                "partial",
+                "functools.partial",
+            ):
+                arg = arg.args[0] if arg.args else None
+            return isinstance(arg, ast.Name) and arg.id in ok - shadowed
+
+        for top in tree.body:
+            shadowed = _local_binds(top)
+            decorators = set()
+            for n in ast.walk(top):
+                if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                    decorators.update(map(id, n.decorator_list))
+                    if any(_callee(d) in WORKER_DECORATORS for d in n.decorator_list):
+                        bad.append(f"{mod}:{n.lineno} @{n.name}")
+                if not isinstance(n, ast.Call) or id(n) in decorators:
+                    continue
+                f = n.func
+                register = (
+                    isinstance(f, ast.Attribute)
+                    and f.attr == "register"
+                    and _callee(f.value) == "dataSource"
+                )
+                if _callee(f) not in WORKER_ENTRIES and not register:
+                    continue
+                if not n.args or not by_reference(n.args[0], shadowed):
+                    bad.append(f"{mod}:{n.lineno} {ast.unparse(n)[:80]}")
+    return bad
+
+
+def test_worker_code_pickles_by_reference():
+    """Everything engine/ hands to a Python worker is a plain module-level
+    def or class, passed as is or through functools.partial. cloudpickle
+    ships such code as a module reference, so the worker imports engine
+    (and its zip guard) from the shipped archive. A nested def, lambda,
+    factory closure or decorated definition is shipped by value and never
+    imports engine: its tasks keep paying PySpark's per-task zip re-read
+    (docs/SCALE.md rule 2)."""
+    assert _worker_code_sites() == []
+
+
 def _rewrite(path, text: str) -> None:
     st = os.stat(path)
     with open(path, "w") as fh:

@@ -38,7 +38,7 @@ def test_heavy_hitters_mg_vectorized_no_false_negatives():
     decrement step repeatedly, and hitters spread across small batches."""
     import pandas as pd
 
-    from engine.extras2 import _mg_partition_fn
+    from engine.extras2 import _mg_partition
 
     k = 5
     # 3 true hitters (100 occurrences each) diluted by 200 distinct
@@ -56,7 +56,7 @@ def test_heavy_hitters_mg_vectorized_no_false_negatives():
     batches = [
         pd.DataFrame({"t": toks[i : i + 16]}) for i in range(0, len(toks), 16)
     ]
-    out = pd.concat(list(_mg_partition_fn(k)(iter(batches))))
+    out = pd.concat(list(_mg_partition(k, iter(batches))))
     survivors = set(out["t"])
     n = len(toks)
     for j in range(3):

@@ -1,4 +1,5 @@
-"""Unit tests for the r04 batch-20 keys (engine/extras5.py)."""
+"""Unit tests for the r04 batch-20 keys (engine/extras5.py, and
+udaf_arrow_group, now in engine/udfs.py)."""
 
 from __future__ import annotations
 

@@ -1,7 +1,8 @@
-"""Unit tests for the r04 sql4 keys (engine/sql4.py) — cross-checks the
-oracle compare can't express: recursion vs an explicit driver loop, pipe
-syntax vs the classic plan, Arrow UDTF vs the pickled path, collation
-actually merging case variants, observe() vs a direct aggregate."""
+"""Unit tests for the r04 sql4 keys (engine/sql4.py, and udtf_arrow_expand,
+now in engine/udfs.py) — cross-checks the oracle compare can't express:
+recursion vs an explicit driver loop, pipe syntax vs the classic plan,
+Arrow UDTF vs the pickled path, collation actually merging case variants,
+observe() vs a direct aggregate."""
 
 from __future__ import annotations
 

@@ -1,5 +1,6 @@
 """Unit tests for the r04 batch-19 keys (engine/timeseries.py,
-engine/extras4.py) — invariants the oracle compare can't express."""
+engine/extras4.py, and the stream source now in engine/udfs.py) —
+invariants the oracle compare can't express."""
 
 from __future__ import annotations
 
@@ -87,11 +88,6 @@ def test_skew_kurtosis_sane_ranges(spark):
 def test_python_stream_source_offset_replay(spark):
     """readBetweenOffsets must re-serve a committed range identically —
     the exactly-once replay contract."""
-    from engine.extras4 import _register_seq_stream_source
-
-    _register_seq_stream_source(spark)
-    from pyspark.sql.datasource import SimpleDataSourceStreamReader  # noqa: F401
-
     from engine.registry import collect
 
     queries, _ = collect()

@@ -1,8 +1,10 @@
-"""Named tests for engine/udfs2.py: table-arg UDTF partition isolation,
-mapInPandas batch-boundary invariance, XML special-char escaping."""
+"""Named tests for engine/udfs.py, the Python family: table-arg UDTF
+partition isolation, mapInPandas batch-boundary invariance, and Python
+data sources that fail loudly when they cannot register."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
@@ -47,18 +49,18 @@ def test_mapinpandas_batch_boundary_invariance(spark):
     assert baseline == tiny and baseline
 
 
-def test_xml_roundtrip_escapes_special_chars(spark, tmp_path):
-    """A value containing XML metacharacters must survive the write+read
-    (entity escaping), proven on a synthetic frame."""
-    df = spark.createDataFrame(
-        [(1, 'a<b>&"c"'), (2, "plain")], "id int, s string"
-    )
-    out = str(tmp_path / "sg_xml_escape_probe")
-    df.write.mode("overwrite").option("rowTag", "r").format("xml").save(out)
-    back = (
-        spark.read.format("xml")
-        .option("rowTag", "r")
-        .schema("id int, s string")
-        .load(out)
-    )
-    assert sorted(map(tuple, back.collect())) == sorted(map(tuple, df.collect()))
+def test_python_datasource_registration_fails_loudly(spark, monkeypatch):
+    """Registering the same DataSource class twice in one session succeeds,
+    so a failing registration is a real fault: the key must raise it, not
+    run on against whatever source was registered before."""
+    from pyspark.sql.datasource import DataSourceRegistration
+
+    build = _q("scan_python_datasource").__wrapped__
+    assert build(spark, SF_DIR).count() == 1000
+
+    def refuse(self, dataSource):
+        raise RuntimeError("registration refused")
+
+    monkeypatch.setattr(DataSourceRegistration, "register", refuse)
+    with pytest.raises(RuntimeError, match="registration refused"):
+        build(spark, SF_DIR)

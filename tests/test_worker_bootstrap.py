@@ -3,8 +3,8 @@ worker that imports it re-reads a zip archive's central directory only when
 the archive changed (engine/__init__.py).
 
 The guard tests drive ``zipimport`` directly on a temp zip, no Spark. The
-two Spark tests run in a child interpreter whose cwd holds no ``engine/``:
-a worker started from the repo root would import the source tree from its
+Spark tests run in a child interpreter whose cwd holds no ``engine/``: a
+worker started from the repo root would import the source tree from its
 cwd and hide a missing ship."""
 
 from __future__ import annotations
@@ -153,24 +153,77 @@ def test_worker_imports_shipped_engine_and_installs_guard(tmp_path):
     assert report["driver_engine_file"] == os.path.join(REPO, "engine", "__init__.py")
 
 
+# Every key that runs Python worker code, found by running each key at
+# sf0.01 on a session with spark.python.worker.reuse=false and a copy of
+# the engine that logs each worker-side `import engine`.
+PYTHON_KEYS = [
+    "agg_heavy_hitters",
+    "dedup_embedding_cosine",
+    "emb_pca_project",
+    "multimodal_decode_pipeline",
+    "pipeline_ann_index_build",
+    "scan_python_datasource",
+    "scan_python_stream_source",
+    "sim_ann_ivf",
+    "sim_ann_rp_lsh",
+    "sim_topk_pairs",
+    "sink_python_datasource",
+    "stream_event_time_timeout",
+    "stream_stateful_counter",
+    "udaf_arrow_group",
+    "udaf_pandas_group",
+    "udf_mapinpandas_stream",
+    "udf_pandas_vectorized",
+    "udf_python_arrow_scalar",
+    "udf_python_scalar",
+    "udtf_arrow_expand",
+    "udtf_python",
+    "udtf_table_argument",
+]
+
+
 def test_python_keys_pass_from_foreign_cwd(tmp_path):
-    keys = [
-        "udaf_pandas_group",
-        "stream_event_time_timeout",
-        "sim_topk_pairs",
-        "multimodal_decode_pipeline",
-    ]
     out = subprocess.run(
         [
             sys.executable,
             os.path.join(REPO, "scripts", "driver_sim.py"),
             SF_DIR_MID,
-            *keys,
+            *PYTHON_KEYS,
         ],
         cwd=tmp_path,
         capture_output=True,
         text=True,
-        timeout=900,
+        timeout=1200,
     )
     assert out.returncode == 0, out.stderr[-3000:]
-    assert "t2: 4 PASS, 0 ROWS-ONLY, 0 FAIL" in out.stdout, out.stdout[-3000:]
+    want = f"t2: {len(PYTHON_KEYS)} PASS, 0 ROWS-ONLY, 0 FAIL"
+    assert want in out.stdout, out.stdout[-3000:]
+
+
+# A plain session whose first engine call is a key that reads no table:
+# the key itself must ship the engine its worker classes are pickled
+# against.
+_FIRST_KEY = textwrap.dedent(
+    """
+    import sys
+    sys.path.insert(0, sys.argv[1])
+    from pyspark.sql import SparkSession
+    from engine.registry import collect
+
+    spark = SparkSession.builder.master("local[2]").getOrCreate()
+    build = collect()[0]["scan_python_datasource"].__wrapped__
+    print(build(spark, sys.argv[2]).count())
+    """
+)
+
+
+def test_unmemoized_datasource_key_ships_engine_first(tmp_path):
+    out = subprocess.run(
+        [sys.executable, "-c", _FIRST_KEY, REPO, SF_DIR_MID],
+        cwd=tmp_path,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert out.stdout.strip().splitlines()[-1] == "1000"
