@@ -634,14 +634,15 @@ def _broadcast_side(spark, sf_dir: str, emb) -> tuple:
 
 # Task sizing for the upper-triangle pair kernels (_triangle_pairs). A
 # Python task has a fixed cost before its UDF runs. On a 4-vCPU host a
-# pass-through mapInArrow that imports engine costs ~0.28 s of
-# process-tree CPU over 1 task and ~0.40 s over 4, i.e. ~0.04 s per extra
-# task (scripts/_probe_python_task_cost.py; ~0.24 s before workers stopped
-# re-reading their zip archives on every task, docs/SCALE.md rule 2). The
-# tiled triangle kernel scores ~70M pairs/s (n = 2000, dim 64: 2M pairs in
-# ~28 ms), so break-even is now ~3M pairs. The constant stays at 16M: at
-# sf0.1 (2M pairs) an interleaved A/B found width 2 faster than width 1
-# (128 vs 147 ms) but dearer in CPU (0.265 vs 0.215 s per run).
+# pass-through mapInArrow that imports engine costs 0.085-0.090 s of
+# process-tree CPU over 1 task and 0.175-0.200 s over 4, i.e. ~0.03 s per
+# extra task (scripts/_probe_python_task_cost.py, get_spark's Unix-socket
+# workers; ~0.2 s for code that never imports engine, docs/SCALE.md rule 2).
+# The tiled triangle kernel scores ~100M pairs/s (n = 2000, dim 64: 2M
+# pairs in 16-21 ms), so break-even is ~3M pairs. The constant stays at
+# 16M: at sf0.1 (2M pairs) an interleaved A/B found width 2 about as fast
+# as width 1 (60-67 vs 64-69 ms) but dearer in CPU (0.18-0.19 vs
+# 0.13-0.15 s per run; width 4: 75-84 ms, 0.25-0.30 s).
 _PAIRS_PER_TASK = 1 << 24
 # Cells of one tile's similarity matrix: 4 MiB as f32 (8 MiB for an f64
 # source). Not below _MAX_BROADCAST_VECTORS, so one full row always fits.
@@ -684,7 +685,7 @@ def _triangle_pairs(spark, sf_dir: str, floor, keep, limit=None) -> DataFrame:
     a tile has at least one row, and the broadcast gate keeps a row
     (n <= _MAX_BROADCAST_VECTORS) within _TILE_CELLS.
 
-    Per tile: f32 select (cells >= floor(flat tile sims); masked cells
+    Per tile: f32 select (cells >= floor(2-D tile sims); masked cells
     are -inf), exact f64 refine of those candidates (the f32->f64 upcast
     is exact), then keep(exact) -> (mask, published sims). limit=k merges
     a block's tile results with the (-sim, a_id, b_id) lexsort and emits
@@ -736,8 +737,7 @@ def _triangle_kernel(bc, side_key, bounds, tile_cells, floor, keep, limit, batch
                 # only left of the end of the tile's last id run.
                 w = int(np.searchsorted(ids, ids[e - 1], "right")) - s
                 sims[:, :w][ids[s:e, None] >= ids[None, s : s + w]] = -np.inf
-                fs = sims.ravel()
-                ai, bi = np.unravel_index(np.flatnonzero(fs >= floor(fs)), sims.shape)
+                ai, bi = np.unravel_index(np.flatnonzero(sims >= floor(sims)), sims.shape)
                 ai, bi = ai + s, bi + s
                 exact = np.einsum(
                     "ij,ij->i",
@@ -769,13 +769,20 @@ def _dot(a, b):  # JVM-side higher-order dot product, float→double first
     )
 
 
-def _topk_floor(k: int, fs):
+def _topk_floor(k: int, sims):
+    """Candidate cut for one 2-D tile: its k-th largest row maximum minus
+    a 2e-4 margin (the flat cells when the tile has fewer than k rows).
+    The k largest row maxima are k distinct cells, so the cut is never
+    above the tile's k-th largest cell: the candidates are a superset of
+    a flat cut's and _topk_keep selects the same pairs. Partitioning one
+    value per row instead of every cell is most of the kernel's saving."""
     import numpy as np
 
-    lowest = np.finfo(fs.dtype).min  # excludes the -inf masked cells
-    if fs.size <= k:
+    lowest = np.finfo(sims.dtype).min  # excludes the -inf masked cells
+    if sims.size <= k:
         return lowest
-    vk = np.partition(fs, fs.size - k)[fs.size - k]
+    top = sims.max(axis=1) if len(sims) >= k else sims.ravel()
+    vk = np.partition(top, top.size - k)[top.size - k]
     return max(vk - 2e-4, lowest)
 
 
@@ -814,9 +821,10 @@ def sim_topk_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical across engines.
 
     Kernel shape (r02): SELECT in float32, REFINE in float64. The f32 matmul
-    + flat partition finds a candidate superset (k-th value minus a 2e-4
-    margin — covering the 5e-5 rounding-tie window plus f32 dot error ~1e-6
-    on unit vectors); exact f64 dots + rounding run only on those few
+    + a partition of the tile's row maxima finds a candidate superset (k-th
+    largest row maximum minus a 2e-4 margin — covering the 5e-5
+    rounding-tie window plus f32 dot error ~1e-6 on unit vectors;
+    _topk_floor); exact f64 dots + rounding run only on those few
     candidates. I/O is mapInArrow (zero pandas materialization on either
     side of the Python boundary).
 

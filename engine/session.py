@@ -31,7 +31,7 @@ from typing import Callable
 
 from pyspark.sql import SparkSession
 
-from engine.tmpdirs import scratch_dir
+from engine.tmpdirs import scratch_dir, socket_dir
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -146,6 +146,12 @@ def tune(spark: SparkSession) -> SparkSession:
 
 
 def get_spark(app: str = "spark-graft", cpus: str | None = None) -> SparkSession:
+    """A tuned local session. Python workers talk to the JVM over Unix
+    domain sockets: over loopback TCP, whose sockets Spark opens without
+    TCP_NODELAY, a 1-task pass-through mapInArrow waits ~40 ms longer for
+    its data (scripts/_probe_python_task_cost.py). The socket dir is set
+    explicitly because Spark's default, java.io.tmpdir, can be too long
+    for a socket path (engine.tmpdirs.socket_dir)."""
     cpus = cpus or _cpus()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -154,6 +160,8 @@ def get_spark(app: str = "spark-graft", cpus: str | None = None) -> SparkSession
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
+        .config("spark.python.unix.domain.socket.enabled", "true")
+        .config("spark.python.unix.domain.socket.dir", socket_dir())
     )
     for k, v in _RUNTIME_CONFS.items():
         builder = builder.config(k, v)

@@ -31,7 +31,7 @@ from engine.registry import query
 _COS_THRESH = 0.4  # corpus max pair-sim is 0.51; 0.4 keeps a small stable set
 
 
-def _cosine_floor(thresh, fs):
+def _cosine_floor(thresh, sims):
     return thresh - 2e-4
 
 

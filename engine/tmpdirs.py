@@ -29,6 +29,7 @@ another process.
 from __future__ import annotations
 
 import atexit
+import os
 import shutil
 import tempfile
 
@@ -38,6 +39,27 @@ _SCRATCH: list[str] = []
 def scratch_dir(prefix: str) -> str:
     """mkdtemp registered for one process-exit rmtree."""
     d = tempfile.mkdtemp(prefix=prefix)
+    _SCRATCH.append(d)
+    return d
+
+
+# A Unix socket path holds at most 107 bytes (sun_path, less its NUL).
+# Spark names each Python worker socket "<dir>/.<uuid4>.sock", 43 bytes
+# past its directory.
+_SUN_PATH = 107
+_SOCKET_NAME = 43
+
+
+def socket_dir() -> str:
+    """Scratch dir for Spark's Python worker sockets, short enough that
+    every socket path in it fits sun_path: in the temp dir when that is
+    short enough, else under /tmp. Removed at exit like every scratch dir."""
+    prefix = "sg-sock-"
+    base = tempfile.gettempdir()
+    # mkdtemp appends 8 random characters to the prefix
+    if len(os.path.join(base, prefix + "x" * 8)) + _SOCKET_NAME > _SUN_PATH:
+        base = "/tmp"
+    d = tempfile.mkdtemp(prefix=prefix, dir=base)
     _SCRATCH.append(d)
     return d
 

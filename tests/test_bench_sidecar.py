@@ -66,3 +66,14 @@ def test_sweep_sidecar_guard_protects_quiet_claim(tmp_path):
     # corrupt record never blocks the write
     primary.write_text("{not json")
     assert bench._sweep_sidecar_path({"quiet_host": False}, str(tmp_path)) == str(primary)
+
+
+def test_quiet_host_needs_low_steal_in_every_pass():
+    """A quiet start is not enough: one headline pass with steal above 3%
+    marks the whole run non-quiet."""
+    calm = {"loadavg_1m": 0.5}
+    assert bench._quiet_host(calm, {"a": [0.1, 2.9], "b": [3.0, None]})
+    assert not bench._quiet_host(calm, {"a": [0.1, 0.2], "b": [3.1, 0.0]})
+    assert not bench._quiet_host({"loadavg_1m": 2.5}, {"a": [0.0]})
+    assert not bench._quiet_host({}, {"a": [0.0]})  # no reading: not quiet
+    assert bench._quiet_host(calm, {"a": [None, None]})  # no steal counter

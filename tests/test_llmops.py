@@ -311,3 +311,107 @@ def test_triangle_kernel_many_blocks_and_tiles_match_oracle(
         # the cut really falls inside the 0.81 tie
         assert (du["sim"] == 0.81).sum() == 4 and (du["sim"] == 1.0).sum() == 6
     assert_frames_match(sp, du, key)
+
+
+# ---------------------------------------------------------------------------
+# top-k candidate floor: the k-th largest row maximum of a tile
+# ---------------------------------------------------------------------------
+
+
+def _flat_floor(k, sims):
+    """The reference cut: the tile's k-th largest cell minus the margin."""
+    import numpy as np
+
+    fs = sims.ravel()
+    lowest = np.finfo(fs.dtype).min
+    if fs.size <= k:
+        return lowest
+    vk = np.partition(fs, fs.size - k)[fs.size - k]
+    return max(vk - 2e-4, lowest)
+
+
+def _random_tile(rng, kind):
+    """A masked f32 tile like the kernel's: random sims, tie-heavy sims
+    (a few distinct values), some rows fully masked, or fewer rows than k."""
+    import numpy as np
+
+    rows = int(rng.integers(1, 4)) if kind == "few_rows" else int(rng.integers(1, 40))
+    cols = int(rng.integers(1, 60))
+    if kind == "ties":
+        sims = rng.choice(np.float32([0.81, 0.5, 0.2, 1.0]), size=(rows, cols))
+    else:
+        sims = rng.uniform(-1, 1, (rows, cols)).astype(np.float32)
+    sims[rng.random((rows, cols)) < 0.2] = -np.inf
+    if kind == "masked_rows":
+        sims[rng.random(rows) < 0.5] = -np.inf
+    return sims
+
+
+@pytest.mark.parametrize("kind", ["random", "ties", "masked_rows", "few_rows"])
+def test_row_max_floor_never_above_flat_floor(kind):
+    """The row-max cut is a lower bound of the flat cut on any tile: the k
+    largest row maxima are k distinct cells."""
+    import numpy as np
+
+    from engine.llmops import _topk_floor
+
+    rng = np.random.default_rng(7)
+    for _ in range(500):
+        sims = _random_tile(rng, kind)
+        for k in (1, 3, 10):
+            assert _topk_floor(k, sims) <= _flat_floor(k, sims), (k, sims)
+
+
+def _kernel_table(ids, m, tile_cells, floor, k):
+    from functools import partial
+    from types import SimpleNamespace
+
+    import pyarrow as pa
+
+    from engine.llmops import _topk_keep, _triangle_bounds, _triangle_kernel
+
+    width = 3
+    blocks = [pa.RecordBatch.from_pydict({"id": pa.array(range(width), pa.int64())})]
+    out = _triangle_kernel(
+        SimpleNamespace(value=(ids, m)),
+        None,
+        _triangle_bounds(len(ids), width),
+        tile_cells,
+        partial(floor, k),
+        partial(_topk_keep, k),
+        k,
+        blocks,
+    )
+    schema = pa.schema([("a_id", pa.int64()), ("b_id", pa.int64()), ("sim", pa.float64())])
+    return pa.Table.from_batches(list(out), schema=schema)
+
+
+@pytest.mark.parametrize("kind", ["random", "ties", "dup_ids"])
+@pytest.mark.parametrize("tile_cells", [16, 64, 400, 1 << 20])
+def test_row_max_floor_kernel_output_identical(kind, tile_cells):
+    """The kernel emits byte-identical batches with the row-max cut and
+    with the flat cut: tiles of fewer than k rows (small tile_cells), tie
+    groups crossing tiles, duplicate-id runs and the fully masked last rows
+    of the triangle."""
+    import numpy as np
+
+    from engine.llmops import _topk_floor
+
+    rng = np.random.default_rng(3)
+    for _ in range(5):
+        n = int(rng.integers(20, 80))
+        m = _unit_rows(rng, n, 8)
+        if kind == "ties":
+            m = m[rng.integers(0, 4, n)]  # 4 distinct vectors: sims tie
+        ids = np.arange(n, dtype=np.int64)
+        if kind == "dup_ids":
+            ids = np.sort(rng.integers(0, n // 2, n))
+        for k in (1, 10):
+            got = _kernel_table(ids, m, tile_cells, _topk_floor, k)
+            want = _kernel_table(ids, m, tile_cells, _flat_floor, k)
+            assert got.num_rows > 0
+            assert got.equals(want), (kind, tile_cells, n, k)
+            for a, b in zip(got.columns, want.columns):
+                assert a.combine_chunks().buffers()[1].to_pybytes() == (
+                    b.combine_chunks().buffers()[1].to_pybytes()
+                )

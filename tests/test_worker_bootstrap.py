@@ -227,3 +227,82 @@ def test_unmemoized_datasource_key_ships_engine_first(tmp_path):
     )
     assert out.returncode == 0, out.stderr[-3000:]
     assert out.stdout.strip().splitlines()[-1] == "1000"
+
+
+# get_spark's Python workers use Unix domain sockets in a short socket
+# dir. Run in a child whose TMPDIR and java.io.tmpdir are ~100 characters:
+# a socket named in either would overflow sun_path.
+_UDS = textwrap.dedent(
+    """
+    import json, os, sys
+    sys.path.insert(0, sys.argv[1])
+    from engine.session import get_spark
+
+    def passthrough(batches):
+        yield from batches
+
+    spark = get_spark("uds", cpus="1")
+    sock_dir = spark.conf.get("spark.python.unix.domain.socket.dir")
+    print(json.dumps({
+        "uds": spark.conf.get("spark.python.unix.domain.socket.enabled"),
+        "sock_dir": sock_dir,
+        "rows": spark.range(5, numPartitions=1)
+        .mapInArrow(passthrough, "id long").count(),
+        "collected": len(spark.range(7).collect()),
+        "sockets": [f for f in os.listdir(sock_dir) if f.endswith(".sock")],
+    }))
+    """
+)
+
+
+def test_get_spark_workers_on_unix_sockets_with_long_tmpdir(tmp_path):
+    long_tmp = tmp_path / ("t" * max(1, 100 - len(str(tmp_path)) - 1))
+    long_tmp.mkdir()
+    assert len(str(long_tmp)) >= 99
+    env = dict(
+        os.environ,
+        TMPDIR=str(long_tmp),
+        JAVA_TOOL_OPTIONS=f"-Djava.io.tmpdir={long_tmp}",
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", _UDS, REPO],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    report = json.loads(out.stdout.strip().splitlines()[-1])
+    assert report["uds"] == "true"
+    assert report["rows"] == 5 and report["collected"] == 7
+    assert report["sockets"]  # the accumulator and worker sockets live there
+    assert len(report["sock_dir"]) + 43 <= 107
+    assert not os.path.exists(report["sock_dir"])  # removed at exit
+
+
+def test_socket_dir_in_temp_dir_when_short_enough(monkeypatch, tmp_path):
+    """socket_dir is a scratch dir in the temp dir when every socket path
+    in it fits sun_path, else one under /tmp."""
+    import shutil
+    import tempfile
+
+    from engine import tmpdirs
+
+    short = tempfile.mkdtemp(prefix="s", dir="/tmp")
+    try:
+        monkeypatch.setattr(tmpdirs.tempfile, "tempdir", short)
+        d = tmpdirs.socket_dir()
+        assert os.path.dirname(d) == short
+        assert len(d) + 43 <= 107
+        tmpdirs.drop_scratch(d)
+    finally:
+        shutil.rmtree(short)
+    long_tmp = tmp_path / ("t" * 70)
+    long_tmp.mkdir()
+    monkeypatch.setattr(tmpdirs.tempfile, "tempdir", str(long_tmp))
+    d = tmpdirs.socket_dir()
+    try:
+        assert os.path.dirname(d) == "/tmp"
+    finally:
+        tmpdirs.drop_scratch(d)
