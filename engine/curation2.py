@@ -1,13 +1,13 @@
-"""Training-corpus curation, batch 2 (r05): provenance-aware dedup,
-paragraph-level duplication scoring, frozen-model quality classification,
-temperature-scaled source mixing, and token-entropy distribution checks.
+"""Training-corpus curation, batch 2 (r05): frozen-model quality
+classification, temperature-scaled source mixing, and token-entropy
+distribution checks.
 
-These extend §2.L/§2.I toward the curation passes a pretraining pipeline
-actually chains: cross-dump dedup (the same page crawled by two sources),
-RefinedWeb-style intra-corpus chunk duplication, model-based quality
-filtering (here a frozen linear scorer — the Spark-side shape of "apply a
-trained classifier at scale" without per-row Python), the n_s^α temperature
-mix that balances head and tail sources, and corpus-health entropy metrics.
+These extend §2.L toward the curation passes a pretraining pipeline
+actually chains: model-based quality filtering (here a frozen linear
+scorer — the Spark-side shape of "apply a trained classifier at scale"
+without per-row Python), the n_s^α temperature mix that balances head and
+tail sources, and corpus-health entropy metrics. Its dedup passes live in
+engine.dedup.
 
 Determinism discipline (SURVEY §5.3): per-row arithmetic stays raw IEEE and
 is written with the SAME association order in both engines; every
@@ -25,121 +25,6 @@ from engine.registry import query
 from engine.tables import load
 
 _STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "on", "for", "with")
-
-
-@query(
-    "dedup_cross_source",
-    oracle="""
-    SELECT md5(array_to_string(string_split(text, ' ')[1:16], ' ')) AS fp,
-           count(*) AS n_copies,
-           count(DISTINCT source) AS n_sources,
-           min(doc_id) AS keeper_doc_id
-    FROM documents
-    GROUP BY 1
-    HAVING count(DISTINCT source) >= 2
-    """,
-)
-def dedup_cross_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-source duplicate groups: documents whose 16-token prefix
-    fingerprint appears under ≥2 distinct sources — the cross-dump dedup
-    pass (same page in two crawls) that exact whole-text hashing misses
-    when boilerplate tails differ. Reports group size, source spread, and
-    the deterministic keeper (lowest doc_id). 21 groups at sf0.01 —
-    non-vacuous at every SF (exact whole-text duplicates are 0 in this
-    corpus, which is why the prefix fingerprint is the right key).
-
-    100 TB: one hash shuffle on the 16-token fingerprint (bytes-bounded
-    key), count-distinct on source collapses map-side via partial
-    distinct aggregation."""
-    d = load(spark, sf_dir, "documents")
-    # concat_ws SKIPS null args (md5('') for NULL text) where the oracle's
-    # array_to_string(NULL) is NULL — null-propagate explicitly so NULL
-    # texts group under fp NULL on both engines (r12 NULL-text hardening)
-    fp = F.md5(
-        F.when(
-            F.col("text").isNull(), F.lit(None).cast("string")
-        ).otherwise(F.concat_ws(" ", F.slice(F.split("text", " "), 1, 16)))
-    )
-    return (
-        d.groupBy(fp.alias("fp"))
-        .agg(
-            F.count("*").alias("n_copies"),
-            F.countDistinct("source").alias("n_sources"),
-            F.min("doc_id").alias("keeper_doc_id"),
-        )
-        .filter(F.col("n_sources") >= 2)
-    )
-
-
-@query(
-    "dedup_paragraph_chunks",
-    oracle="""
-    WITH d AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-    c AS (SELECT doc_id,
-                 md5(array_to_string(toks[(k-1)*10+1:k*10], ' ')) AS h
-          FROM d, unnest(range(1, 1 + len(toks) // 10)) AS u(k)),
-    dup AS (SELECT h FROM c GROUP BY h HAVING count(DISTINCT doc_id) > 1),
-    per AS (SELECT c.doc_id,
-                   count(*) AS n_chunks,
-                   CAST(sum(CASE WHEN dup.h IS NOT NULL THEN 1 ELSE 0 END)
-                        AS BIGINT) AS n_dup
-            FROM c LEFT JOIN dup ON c.h = dup.h
-            GROUP BY c.doc_id)
-    SELECT doc_id, n_chunks, n_dup,
-           round(CAST(n_dup AS DOUBLE) / CAST(n_chunks AS DOUBLE), 4) AS dup_frac
-    FROM per
-    WHERE CAST(n_dup AS DOUBLE) / CAST(n_chunks AS DOUBLE) >= 0.3
-    """,
-)
-def dedup_paragraph_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Paragraph-level duplication scoring (the RefinedWeb/Falcon pass):
-    documents cut into non-overlapping 10-token chunks ("paragraphs" in
-    this whitespace corpus), a chunk is duplicated if it occurs in more
-    than one document, and documents whose duplicated-chunk fraction is
-    ≥ 0.3 are flagged for removal. Complements text_containment (directed
-    subset detection) and dedup_near_minhash (whole-doc similarity):
-    chunk-level granularity catches stitched/boilerplate contamination
-    that whole-doc measures dilute. 47 flagged docs at sf0.01.
-
-    100 TB: chunking is a map-side array transform; duplication needs one
-    shuffle on chunk hash; the flag join ships only duplicated hashes
-    (a small fraction — broadcastable after the HAVING)."""
-    d = load(spark, sf_dir, "documents").select(
-        "doc_id", F.split("text", " ").alias("toks")
-    )
-    n_chunks = F.floor(F.size("toks") / 10).cast("int")
-    chunks = d.select(
-        "doc_id",
-        F.explode(
-            F.when(
-                n_chunks >= 1,
-                F.transform(
-                    F.sequence(F.lit(1), n_chunks),
-                    lambda k: F.md5(
-                        F.concat_ws(" ", F.slice("toks", (k - 1) * 10 + 1, 10))
-                    ),
-                ),
-            ).otherwise(F.array().cast("array<string>"))
-        ).alias("h"),
-    )
-    dup = (
-        chunks.groupBy("h")
-        .agg(F.countDistinct("doc_id").alias("nd"))
-        .filter(F.col("nd") > 1)
-        .select("h", F.lit(1).alias("is_dup"))
-    )
-    per = (
-        chunks.join(F.broadcast(dup), "h", "left")
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").alias("n_chunks"),
-            F.sum(F.coalesce(F.col("is_dup"), F.lit(0))).alias("n_dup"),
-        )
-    )
-    frac = F.col("n_dup").cast("double") / F.col("n_chunks").cast("double")
-    return per.filter(frac >= 0.3).select(
-        "doc_id", "n_chunks", "n_dup", F.round(frac, 4).alias("dup_frac")
-    )
 
 
 @query(

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from engine.registry import query
-from engine.tables import load, sftag
+from engine.tables import dot, load, sftag
 
 # LCG mixers for synthetic 2-D coordinates: pure 64-bit integer arithmetic,
 # bit-identical across engines (ANSI mode needs the explicit BIGINT casts).
@@ -251,14 +251,9 @@ def emb_cosine_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = e.select(
         (F.col("vec_id") - 97).alias("join_id"), F.col("embedding").alias("eb")
     )
-    dot = F.aggregate(
-        F.zip_with("ea", "eb", lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
     pairs = (
         a.join(b, a["vec_id"] == b["join_id"])
-        .select(F.round(dot, 4).alias("cos"))
+        .select(F.round(dot("ea", "eb"), 4).alias("cos"))
     )
     return (
         pairs.select(

@@ -1,16 +1,11 @@
-"""Extras batch 31 module (r05 continuation): user-journey path mining
-and exact vector deduplication.
+"""Extras batch 31 module (r05 continuation): user-journey path mining.
 
 SURVEY §2 families extended: §2.E+§2.D (top journey paths — each user's
 first-k ordered event types folded into a path string, then ranked: the
-product-analytics "common flows" report), §2.I (exact-duplicate VECTORS —
-the embedding-side sibling of dedup_exact, keyed on a canonical hash of
-the component bytes).
+product-analytics "common flows" report).
 
 Determinism discipline (SURVEY §5.3): paths take the first 5 events in
-(ts, event_id) order; the path top-k is tie-broken by path string; vector
-hashes canonicalize components through a fixed 6-dp decimal rendering so
-both engines hash identical bytes.
+(ts, event_id) order; the path top-k is tie-broken by path string.
 """
 
 from __future__ import annotations
@@ -86,68 +81,3 @@ def agg_top_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "dedup_exact_embedding",
-    oracle="""
-    WITH canon AS (
-      SELECT vec_id, label,
-             md5(array_to_string(
-               list_transform(embedding,
-                 x -> printf('%.6f', CAST(x AS DOUBLE))), ',')) AS vhash
-      FROM embeddings
-    ),
-    grouped AS (
-      SELECT vhash, min(vec_id) AS keeper, count(*) AS n_copies
-      FROM canon GROUP BY vhash
-    )
-    SELECT CAST(count(*) AS BIGINT) AS n_vectors,
-           CAST((SELECT count(*) FROM grouped) AS BIGINT) AS n_distinct,
-           CAST((SELECT count(*) FROM grouped WHERE n_copies > 1) AS BIGINT)
-             AS n_dup_groups,
-           CAST((SELECT coalesce(sum(n_copies - 1), 0) FROM grouped)
-                AS BIGINT) AS n_removable
-    FROM canon
-    """,
-)
-def dedup_exact_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-duplicate vectors: embeddings canonicalized through a fixed
-    6-dp component rendering and hashed — identical vectors collapse to
-    one keeper (min vec_id), and the audit reports corpus size, distinct
-    count, duplicate-group count, and removable rows. The embedding-side
-    sibling of dedup_exact: re-encoded or re-ingested shards produce
-    byte-identical vectors long before they produce near-duplicates,
-    and this O(n) hash pass removes them before any LSH work runs.
-
-    The canonical rendering (not raw float bytes) is deliberate: it
-    makes the hash portable across engines and storage float widths —
-    float32 parquet and float64 compute agree at 6 dp. Plan: one
-    row-local hash + one hash-keyed aggregate; at 100 TB this is the
-    zeroth, cheapest stage of the dedup cascade (pipeline_dedup_cascade
-    runs the same idea on text via md5)."""
-    e = load(spark, sf_dir, "embeddings")
-    vhash = F.md5(
-        F.array_join(
-            F.transform(
-                F.col("embedding"),
-                lambda x: F.format_string("%.6f", x.cast("double")),
-            ),
-            ",",
-        )
-    )
-    canon = e.select("vec_id", vhash.alias("vhash"))
-    grouped = canon.groupBy("vhash").agg(
-        F.min("vec_id").alias("keeper"), F.count(F.lit(1)).alias("n_copies")
-    )
-    stats = grouped.agg(
-        F.count(F.lit(1)).alias("n_distinct"),
-        F.coalesce(F.sum(F.when(F.col("n_copies") > 1, 1).otherwise(0)), F.lit(0))
-        .cast("long")
-        .alias("n_dup_groups"),
-        F.coalesce(F.sum(F.col("n_copies") - 1), F.lit(0))
-        .cast("long")
-        .alias("n_removable"),
-    )
-    total = canon.agg(F.count(F.lit(1)).alias("n_vectors"))
-    return total.crossJoin(F.broadcast(stats)).select(
-        "n_vectors", "n_distinct", "n_dup_groups", "n_removable"
-    )

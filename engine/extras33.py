@@ -1,17 +1,16 @@
-"""Extras batch 33 module (r05 continuation): NDCG ranking evaluation,
-rounding-mode semantics, and sweep-line concurrency.
+"""Extras batch 33 module (r05 continuation): rounding-mode semantics and
+sweep-line concurrency.
 
-SURVEY §2 families extended: §2.I (NDCG@5 over label-relevance for the
-ANN query set — the ranking-quality metric retrieval stacks report),
-§2.H (round vs bround: HALF_UP vs HALF_EVEN on exact .5 ties — the
-financial-rounding contract, aligned engine-by-engine), §2.E (the
-sweep-line: interval starts/ends as ±1 events, running sum = concurrent
-sessions, per-day peak — max-concurrency without interval self-joins).
+SURVEY §2 families extended: §2.H (round vs bround: HALF_UP vs HALF_EVEN
+on exact .5 ties — the financial-rounding contract, aligned
+engine-by-engine), §2.E (the sweep-line: interval starts/ends as ±1
+events, running sum = concurrent sessions, per-day peak —
+max-concurrency without interval self-joins).
 
 Determinism discipline (SURVEY §5.3): tie values are exact dyadic
-numbers (k + 0.5 is representable); NDCG's log2 discounts are identical
-closed forms rounded once; sweep events order by (ts, delta, event_id)
-so starts/ends at the same instant resolve identically.
+numbers (k + 0.5 is representable); sweep events order by
+(ts, delta, event_id) so starts/ends at the same instant resolve
+identically.
 """
 
 from __future__ import annotations
@@ -22,114 +21,6 @@ from pyspark.sql.window import Window
 
 from engine.registry import query
 from engine.tables import load
-
-_NDCG_QUERIES = [0, 50, 100, 150, 200]
-
-
-@query(
-    "sim_eval_ndcg",
-    oracle=f"""
-    WITH v AS (
-      SELECT vec_id, embedding, label FROM embeddings
-      WHERE embedding IS NOT NULL AND len(embedding) = (SELECT len(embedding) FROM embeddings WHERE embedding IS NOT NULL GROUP BY 1 ORDER BY count(*) DESC, len(embedding) LIMIT 1)
-    ),
-    q AS (
-      SELECT vec_id AS query_id, embedding, label FROM v
-      WHERE vec_id IN ({", ".join(str(i) for i in _NDCG_QUERIES)})
-    ),
-    ranked AS (
-      SELECT q.query_id, q.label AS q_label, e.label AS n_label,
-             row_number() OVER (
-               PARTITION BY q.query_id
-               ORDER BY list_dot_product(q.embedding::DOUBLE[],
-                                         e.embedding::DOUBLE[]) DESC,
-                        e.vec_id) AS rnk
-      FROM q JOIN v e ON e.vec_id != q.query_id
-    ),
-    top5 AS (SELECT * FROM ranked WHERE rnk <= 5),
-    dcg AS (
-      SELECT query_id,
-             sum(CASE WHEN n_label = q_label THEN 1.0 ELSE 0.0 END
-                 / log2(rnk + 1)) AS dcg,
-             sum(CASE WHEN n_label = q_label THEN 1 ELSE 0 END) AS n_rel
-      FROM top5 GROUP BY query_id
-    ),
-    ideal AS (
-      SELECT query_id, sum(1.0 / log2(k + 1)) AS idcg
-      FROM dcg, UNNEST(range(1, 6)) AS t(k)
-      WHERE k <= greatest(n_rel, 1)
-      GROUP BY query_id
-    )
-    SELECT d.query_id,
-           CAST(d.n_rel AS BIGINT) AS n_relevant,
-           round(CASE WHEN d.n_rel = 0 THEN 0.0 ELSE d.dcg / i.idcg END, 4)
-             AS ndcg5
-    FROM dcg d JOIN ideal i ON i.query_id = d.query_id
-    """,
-)
-def sim_eval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NDCG@5 for the standard ANN query set: neighbors ranked by exact
-    cosine (sim tie-broken by vec_id), binary relevance = the neighbor
-    shares the query's cluster label, DCG discounted by log2(rank+1) and
-    normalized by the ideal ordering of the relevant items actually
-    retrieved. The ranking-quality readout every retrieval deployment
-    tracks next to recall (sim_ann_* keys) — recall says WHETHER the
-    right items surfaced, NDCG says how HIGH.
-
-    Plan: the query side is 5 rows (broadcast); scoring is one pass over
-    the corpus per the brute-force contract (sim_knn_query's shape), the
-    metric itself runs over 25 ranked rows. 100 TB: swap the scorer for
-    the stored-index serve path (pipeline_ann_index_build) and the
-    metric stage is unchanged — eval math never touches corpus scale."""
-    from engine.tables import vectors
-
-    emb = vectors(spark, sf_dir)
-    q = emb.filter(F.col("vec_id").isin(_NDCG_QUERIES)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("label").alias("q_label"),
-    )
-    dot = F.aggregate(
-        F.zip_with(
-            "q_emb", "embedding", lambda a, b: a.cast("double") * b.cast("double")
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    scored = emb.crossJoin(F.broadcast(q)).filter(
-        F.col("vec_id") != F.col("query_id")
-    ).select(
-        "query_id",
-        "q_label",
-        F.col("label").alias("n_label"),
-        dot.alias("sim"),
-        "vec_id",
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), "vec_id")
-    top5 = scored.withColumn("rnk", F.row_number().over(w)).filter(
-        F.col("rnk") <= 5
-    )
-    rel = F.when(F.col("n_label") == F.col("q_label"), 1.0).otherwise(0.0)
-    dcg = top5.groupBy("query_id").agg(
-        F.sum(rel / F.log2(F.col("rnk") + 1)).alias("dcg"),
-        F.sum(rel).cast("long").alias("n_rel"),
-    )
-    ks = spark.range(1, 6).select(F.col("id").alias("k"))
-    ideal = (
-        dcg.join(F.broadcast(ks), F.col("k") <= F.greatest("n_rel", F.lit(1)))
-        .groupBy("query_id")
-        .agg(F.sum(1.0 / F.log2(F.col("k") + 1)).alias("idcg"))
-    )
-    return dcg.join(ideal, "query_id").select(
-        "query_id",
-        F.col("n_rel").alias("n_relevant"),
-        F.round(
-            F.when(F.col("n_rel") == 0, 0.0).otherwise(
-                F.col("dcg") / F.col("idcg")
-            ),
-            4,
-        ).alias("ndcg5"),
-    )
 
 
 @query(

@@ -30,12 +30,12 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from engine.registry import query
 from engine.session import session_memo
-from engine.tables import load
+from engine.tables import dot, load
 
 _EDGE_SQL = """
       SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
@@ -275,14 +275,6 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out_p.unionAll(out_s)
 
 
-def _dot(x: Column, c: Column) -> Column:
-    """Ordered left-fold dot product — same evaluation order as DuckDB's
-    list_dot_product, so per-row values are bit-comparable."""
-    return F.aggregate(
-        F.zip_with(x, c, lambda a, b: a * b), F.lit(0.0), lambda acc, v: acc + v
-    )
-
-
 # The k-means CTE chain shared by the emb_kmeans_lloyd oracle and the
 # dedup_semdedup oracle (SemDeDup clusters with the same Lloyd step).
 _KMEANS_CTES = """
@@ -384,11 +376,7 @@ def _assign_step(pts: DataFrame, cents: DataFrame) -> DataFrame:
     association: |x|² − 2·(x·c) + |c|², every dot an ordered fold. min
     over (d2, cid) structs ≡ the oracle's row_number ORDER BY d2, cid —
     lexicographic struct ordering, partial-aggregable."""
-    d2 = (
-        _dot(F.col("x"), F.col("x"))
-        - 2 * _dot(F.col("x"), F.col("cl"))
-        + _dot(F.col("cl"), F.col("cl"))
-    )
+    d2 = dot("x", "x") - 2 * dot("x", "cl") + dot("cl", "cl")
     scored = pts.select("vec_id", "x").crossJoin(F.broadcast(cents)).select(
         "vec_id", F.struct(d2.alias("d2"), F.col("cid").alias("cid")).alias("s")
     )
@@ -550,109 +538,3 @@ def emb_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "dedup_semdedup",
-    oracle=_KMEANS_CTES
-    + """
-    , pairs AS (
-      SELECT x.vec_id AS a, y.vec_id AS b
-      FROM a2 x JOIN a2 y ON x.cid = y.cid AND x.vec_id < y.vec_id
-      JOIN emb ex ON ex.vec_id = x.vec_id
-      JOIN emb ey ON ey.vec_id = y.vec_id
-      WHERE list_dot_product(ex.x, ey.x) >= 0.4)
-    SELECT b AS dropped_vec_id, min(a) AS keeper_vec_id,
-           count(*) AS n_suppressors
-    FROM pairs GROUP BY b
-    """,
-)
-def dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup (Abbas et al. 2023 shape): semantic near-duplicates found
-    by clustering embeddings (the shared Lloyd step) and comparing pairs
-    ONLY within a cluster — the cluster is the blocking structure that
-    turns O(n²) into Σ_c |c|². A vector is dropped when a lower-id vector
-    in its cluster has cosine ≥ 0.4; output = every dropped vector with
-    its deterministic keeper (lowest suppressor id) and suppressor count.
-    29–333 drops across the SFs — non-vacuous everywhere. Complements the
-    lexical dedup family (minhash/simhash/ngram): this catches
-    paraphrases with zero token overlap.
-
-    100 TB: per-cluster self-join after one shuffle on cid — with k grown
-    ~n/5000 (SemDeDup's regime) cluster sizes stay bounded, so candidate
-    work is linear in n at fixed cluster size. Embeddings ride the
-    shuffle (no broadcast matrix, no size gate — the same posture the r04
-    verdict required of sim_ann_rp_lsh). The dot is the ordered JVM fold,
-    so the τ comparison is bit-identical to the oracle's.
-
-    Exact-dup collapse (engine.tables.clone_groups): taken whenever
-    embeddings duplicate. The Lloyd step runs once per distinct vector
-    (_rep_lloyd_assign) and the ≥τ test once per qualifying rep pair; the
-    member-level output is arithmetic, with no pair expansion: a dropped
-    member b has n_suppressors = Σ over qualifying suppressor groups of
-    |members < b| and keeper = the smallest qualifying group min below b."""
-    from engine.tables import all_rows_distinct, clone_groups
-    from engine.tables import vectors as _vectors
-
-    emb_raw = _vectors(spark, sf_dir)
-    emb = emb_raw.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("x")
-    )
-    if all_rows_distinct(
-        spark, f"{sf_dir}/embeddings.parquet", emb_raw, "embedding"
-    ):
-        a2 = kmeans_assign(spark, sf_dir).select("vec_id", "cid")
-        av = a2.join(emb, "vec_id")
-        x = av.select(
-            F.col("cid"), F.col("vec_id").alias("a"), F.col("x").alias("xa")
-        )
-        y = av.select(
-            F.col("cid"), F.col("vec_id").alias("b"), F.col("x").alias("xb")
-        )
-        pairs = (
-            x.join(y, "cid")
-            .filter(F.col("a") < F.col("b"))
-            .filter(_dot(F.col("xa"), F.col("xb")) >= 0.4)
-        )
-        return pairs.groupBy(F.col("b").alias("dropped_vec_id")).agg(
-            F.min("a").alias("keeper_vec_id"),
-            F.count("*").alias("n_suppressors"),
-        )
-
-    grp = clone_groups(spark, emb, "vec_id", "x", "semdedup_grp")
-    reps = grp.select("vec_id", "x", "grp_n")
-    a2r = _rep_lloyd_assign(emb, reps).select("vec_id", "cid")
-    g = a2r.join(grp, "vec_id")
-    ga = g.select(
-        "cid",
-        F.col("vec_id").alias("gid_a"),
-        F.col("x").alias("xa"),
-        F.col("members").alias("members_a"),
-    )
-    gb = g.select(
-        "cid",
-        F.col("x").alias("xb"),
-        F.col("members").alias("members_b"),
-    )
-    # Symmetric rep-pair join INCLUDING the self pair (ga == gb): a
-    # group suppresses its own later members iff dot(x, x) ≥ τ, the
-    # same test the oracle applies to each identical member pair.
-    qual = ga.join(gb, "cid").filter(
-        _dot(F.col("xa"), F.col("xb")) >= 0.4
-    )
-    ex = qual.select("gid_a", "members_a", F.explode("members_b").alias("b"))
-    cnt = F.size(
-        F.filter("members_a", lambda m: m < F.col("b"))
-    )
-    return (
-        ex.select(
-            F.col("b"),
-            cnt.alias("cnt"),
-            F.when(F.col("gid_a") < F.col("b"), F.col("gid_a")).alias("kc"),
-        )
-        .groupBy(F.col("b").alias("dropped_vec_id"))
-        .agg(
-            F.min("kc").alias("keeper_vec_id"),
-            F.sum("cnt").alias("n_suppressors"),
-        )
-        .filter(F.col("n_suppressors") >= 1)
-        .select("dropped_vec_id", "keeper_vec_id", "n_suppressors")
-    )

@@ -273,7 +273,7 @@ def pipeline_dedup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     # prefix; the third term differs (xxhash64 vs md5) but only breaks
     # ties WITHIN a (doc_id, source) pair, which the per-source manifest
     # cannot observe.
-    from engine.llmops import minhash_near_pairs
+    from engine.dedup import minhash_near_pairs
 
     kid = F.struct(
         F.col("doc_id"), F.col("source"), F.xxhash64("text").alias("h")

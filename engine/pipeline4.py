@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from engine.registry import query
-from engine.tables import load, sftag
+from engine.tables import dot, sftag
 
 _QUERY_IDS = [0, 50, 100, 150, 200]
 _K = 5
@@ -147,15 +147,10 @@ def pipeline_ann_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = post_back.join(F.broadcast(qdf), "cluster").filter(
         F.col("vec_id") != F.col("query_id")
     )
-    dot = F.aggregate(
-        F.zip_with("q_emb", "embedding", lambda a, b: a * b.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
     scored = cand.select(
         "query_id",
         F.col("vec_id").alias("neighbor_id"),
-        F.round(dot, 4).alias("sim"),
+        F.round(dot("q_emb", "embedding"), 4).alias("sim"),
     ).dropDuplicates(["query_id", "neighbor_id"])  # multi-assigned postings
     from pyspark.sql.window import Window
 

@@ -59,7 +59,7 @@ def _within_new_losers(
     small graphs collect once into a driver union-find (path-halving;
     cheaper than 1+ distributed rounds when the pair list is KBs); past
     _UNION_FIND_MAX_PAIRS the pairs are never fully collected — the
-    shared Pregel min-label kernel (engine.trainext.min_label_components,
+    shared Pregel min-label kernel (engine.dedup.min_label_components,
     the dedup_cluster_components engine) labels them in O(diameter)
     shuffles. Guard mechanics: ``n_pairs_bound`` is a caller-provided
     UPPER bound on nn's row count (pipeline_incremental_refresh passes a
@@ -97,7 +97,7 @@ def _within_new_losers(
             return spark.createDataFrame([(x,) for x in losers], "doc_id long")
         return spark.createDataFrame([], "doc_id long")
 
-    from engine.trainext import min_label_components
+    from engine.dedup import min_label_components
 
     # Truncate the gate lineage before iterating: min_label_components
     # re-reads its edge relation EVERY round, and nn's plan hangs the
@@ -515,7 +515,7 @@ def _compact_impl(spark: SparkSession, base: str) -> None:
     gen = _current_gen(base)
     if gen is None:
         raise FileNotFoundError(f"no published refresh index under {base}")
-    from engine.llmops import capped_lsh_band_rows
+    from engine.dedup import capped_lsh_band_rows
 
     tmp = tempfile.mkdtemp(dir=base, prefix=".gen-tmp-")
     spark.read.parquet(*_artifact_paths(gen, "exact")).distinct().write.parquet(
@@ -563,7 +563,7 @@ def _write_index_artifacts(
     there would throttle the expensive shingle pass itself, so the sig
     write repartitions instead (shuffling batch-sized rows to keep the
     compute wide)."""
-    from engine.llmops import capped_lsh_band_rows, minhash_signatures
+    from engine.dedup import capped_lsh_band_rows, minhash_signatures
 
     exact = accepted.select(F.md5("text").alias("h")).distinct()
     sigs = minhash_signatures(accepted)
@@ -605,7 +605,7 @@ def refresh_decisions(
     columns and the exact stage only (doc_id, hs)."""
     from pyspark import StorageLevel
 
-    from engine.llmops import (
+    from engine.dedup import (
         capped_lsh_band_rows,
         lsh_self_candidates,
         minhash_signatures,

@@ -1,14 +1,12 @@
-"""Retrieval + curation batch (r05 continuation): hybrid lexical+vector
-rank fusion, embedding dimension-variance ranking, corpus n-gram novelty,
-hierarchical share-of-parent, and deterministic k-fold assignment.
+"""Retrieval + curation batch (r05 continuation): embedding
+dimension-variance ranking, corpus n-gram novelty, hierarchical
+share-of-parent, and deterministic k-fold assignment.
 
-SURVEY §2 families extended: §2.I (hybrid RRF retrieval — the fusion step a
-RAG stack runs between BM25-ish lexical and vector ANN lists), §2.L
-(dimension pruning, novelty curves, k-fold splits), §2.D (share-of-parent).
+SURVEY §2 families extended: §2.L (dimension pruning, novelty curves,
+k-fold splits), §2.D (share-of-parent).
 
 Determinism discipline (SURVEY §5.3): every rank is computed over a rounded
-score with a doc_id tie-break (total order); RRF contributions are two exact
-rationals summed in fixed order then rounded; fold assignment is the
+score with a tie-break (total order); fold assignment is the
 multiplicative-hash idiom (engine-agnostic integer arithmetic, reproducible
 outside Spark — same rationale as sample_hash_repro).
 """
@@ -21,112 +19,6 @@ from pyspark.sql.window import Window
 
 from engine.registry import query
 from engine.tables import load
-
-
-@query(
-    "sim_hybrid_rrf_fusion",
-    oracle="""
-    WITH lex AS (
-      SELECT doc_id,
-             len(list_filter(string_split(text, ' '),
-                             x -> x = 'table' OR x = 'join' OR x = 'spark'))
-               AS tf
-      FROM documents
-    ),
-    lexrank AS (
-      SELECT doc_id,
-             row_number() OVER (ORDER BY tf DESC, doc_id) AS r_lex
-      FROM lex WHERE tf > 0
-    ),
-    vv AS MATERIALIZED (
-      SELECT vec_id, embedding FROM embeddings
-      WHERE embedding IS NOT NULL AND len(embedding) = (SELECT len(embedding) FROM embeddings WHERE embedding IS NOT NULL GROUP BY 1 ORDER BY count(*) DESC, len(embedding) LIMIT 1)
-    ),
-    vec AS (
-      SELECT e.vec_id AS doc_id,
-             round(list_dot_product(e.embedding::DOUBLE[],
-                                    p.embedding::DOUBLE[]), 4) AS sim
-      FROM vv e, (SELECT embedding FROM vv WHERE vec_id = 0) p
-      WHERE e.vec_id <> 0
-    ),
-    vecrank AS (
-      SELECT doc_id,
-             row_number() OVER (ORDER BY sim DESC, doc_id) AS r_vec
-      FROM vec
-    ),
-    fused AS (
-      SELECT coalesce(l.doc_id, v.doc_id) AS doc_id,
-             l.r_lex, v.r_vec,
-             round(coalesce(1.0 / (60 + l.r_lex), 0.0)
-                   + coalesce(1.0 / (60 + v.r_vec), 0.0), 6) AS rrf
-      FROM lexrank l FULL OUTER JOIN vecrank v ON l.doc_id = v.doc_id
-    )
-    SELECT doc_id, r_lex, r_vec, rrf
-    FROM fused ORDER BY rrf DESC, doc_id LIMIT 20
-    """,
-)
-def sim_hybrid_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hybrid retrieval via Reciprocal Rank Fusion: a lexical list (term
-    frequency of the fixed query {table, join, spark}) and a vector list
-    (dot-product similarity to the probe vec_id=0, the 1:1 doc↔vec
-    alignment of the corpus) are fused with RRF(k=60) — the
-    score-scale-free combination every hybrid RAG stack uses. Docs present
-    in only one list keep the other contribution at 0 (full outer join).
-
-    Plan: the lexical side is a zero-shuffle scan + one global top-rank
-    window over the tf>0 survivors (bounded by query selectivity); the
-    vector side is the O(1)-probe broadcast pattern of sim_knn_query; the
-    fusion joins two rank lists — both already tiny next to the corpus.
-    At 100 TB each list would come from its own index (LSH/IVF for
-    vectors, inverted index for terms) and the fusion stage is unchanged:
-    RRF only needs ranks, never raw scores."""
-    from engine.llmops import _dot
-
-    from engine.tables import vectors
-
-    d = load(spark, sf_dir, "documents")
-    emb = vectors(spark, sf_dir)
-    qterms = F.expr(
-        "size(filter(split(text, ' '), x -> x = 'table' OR x = 'join' OR x = 'spark'))"
-    )
-    lex = d.select("doc_id", qterms.alias("tf")).filter(F.col("tf") > 0)
-    lexrank = lex.select(
-        "doc_id",
-        F.row_number()
-        .over(Window.orderBy(F.col("tf").desc(), "doc_id"))
-        .alias("r_lex"),
-    )
-    probe = emb.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("probe_emb")
-    )
-    vec = (
-        emb.filter(F.col("vec_id") != 0)
-        .join(F.broadcast(probe))
-        .select(
-            F.col("vec_id").alias("doc_id"),
-            F.round(_dot(F.col("embedding"), F.col("probe_emb")), 4).alias("sim"),
-        )
-    )
-    vecrank = vec.select(
-        "doc_id",
-        F.row_number()
-        .over(Window.orderBy(F.col("sim").desc(), "doc_id"))
-        .alias("r_vec"),
-    )
-    fused = (
-        lexrank.join(vecrank, "doc_id", "full_outer")
-        .select(
-            "doc_id",
-            "r_lex",
-            "r_vec",
-            F.round(
-                F.coalesce(F.lit(1.0) / (F.lit(60) + F.col("r_lex")), F.lit(0.0))
-                + F.coalesce(F.lit(1.0) / (F.lit(60) + F.col("r_vec")), F.lit(0.0)),
-                6,
-            ).alias("rrf"),
-        )
-    )
-    return fused.orderBy(F.col("rrf").desc(), "doc_id").limit(20)
 
 
 @query(

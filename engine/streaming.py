@@ -309,9 +309,8 @@ def run_stream(
     per-batch fixed cost. The width derives from the source
     (``_derived_stream_parts``: clamp(ceil(rows / 25k), 2, 2×cores), 4 at
     sf0.1). ``parts`` overrides it for a query whose per-batch cost is not
-    state-store-bound. SPARK_GRAFT_STREAM_PARTS wins over both: it is the
-    cluster-sizing knob, set to the keys-in-watermark-horizon scale. The
-    conf is restored after the blocking wait, so batch plans in the
+    state-store-bound, or on a cluster, sized to the keys-in-watermark-
+    horizon scale. The conf is restored after the blocking wait, so batch plans in the
     session never see it.
 
     Checkpoint: a run gets a fresh one (a reused checkpoint would replay
@@ -329,9 +328,7 @@ def run_stream(
         w = w.format("parquet").option("path", sink)
     else:
         w = w.format("memory").queryName(sink)
-    width = os.environ.get("SPARK_GRAFT_STREAM_PARTS") or str(
-        parts or _derived_stream_parts(spark, sf_dir)
-    )
+    width = str(parts or _derived_stream_parts(spark, sf_dir))
     old = spark.conf.get("spark.sql.shuffle.partitions")
     ckpt = checkpoint or scratch_dir(prefix="sg-ckpt-")
     spark.conf.set("spark.sql.shuffle.partitions", width)

@@ -197,6 +197,19 @@ def vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     return e if d is None else e.filter(F.size("embedding") == d)
 
 
+def dot(a: "Column | str", b: "Column | str") -> Column:
+    """JVM-side dot product of two array columns: each side cast to
+    array<double> (f32→f64 is exact), then an ordered left fold — the same
+    evaluation order as DuckDB's list_dot_product over ::DOUBLE[] casts,
+    so per-row values are bit-comparable with the oracles."""
+    a, b = (F.col(c) if isinstance(c, str) else c for c in (a, b))
+    return F.aggregate(
+        F.zip_with(a.cast("array<double>"), b.cast("array<double>"), lambda x, y: x * y),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
 def lit_table(spark: SparkSession, rows: list, cols: list[str]) -> DataFrame:
     """Small literal lookup table (lexicons, profiles) as a pure-JVM VALUES
     relation.

@@ -1,20 +1,19 @@
-"""Training-data text analysis + content-hash dedup operators.
+"""Training-data text analysis operators and the shared text helpers.
 
 Language-ID (weighted keyword profiles), quality scoring, BPE-ish token
-statistics, document fingerprinting (rolling polynomial hash), SimHash, and
-n-gram Jaccard near-dup via an inverted shingle index. All are pure
-DataFrame/SQL expressions (zero Python UDFs) so every key is FULL
+statistics and document fingerprinting (rolling polynomial hash). All are
+pure DataFrame/SQL expressions (zero Python UDFs) so every key is FULL
 oracle-checkable, and all hash math uses an explicit polynomial
 (base 131 mod 2^31-1) that both Spark and DuckDB evaluate identically —
 engine-builtin hashes (xxhash64 vs duckdb hash) would never cross-match.
 
-Scale notes (100 TB):
-- every operator is explode → hash-aggregate, shuffling on (doc, token)-ish
-  keys: linear, no cross joins anywhere.
-- ngram-jaccard candidates come from an inverted index (shingle equi-join),
-  the standard set-similarity-join shape; hot shingles can be additionally
-  frequency-capped (drop shingles with df > N) to bound the candidate
-  blow-up on pathological corpora.
+The module also holds the text helpers shared with the dedup family
+(engine.dedup) and text_containment (engine.pipeops): word n-gram ids,
+the exact-dup text collapse, and exact_gram_pair_counts, the inverted-index
+shared-gram count with its hot-gram (df-cap) defense.
+
+Scale note (100 TB): every operator is explode → hash-aggregate, shuffling
+on (doc, token)-ish keys: linear, no cross joins anywhere.
 """
 
 from __future__ import annotations
@@ -32,7 +31,7 @@ from engine.tables import load
 _POLY = "(acc * 131 + c) % 2147483647"
 
 
-def _tok_hash_expr(col: str) -> str:
+def tok_hash_expr(col: str) -> str:
     """Spark SQL expr hashing a token string column. Folds over
     split(col, '') — a char array built ONCE — instead of per-index
     substring(col, j, 1), which scans from the string start every call
@@ -323,124 +322,8 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# SimHash
+# shared with the dedup family and text_containment
 # ---------------------------------------------------------------------------
-
-
-@query(
-    "dedup_simhash",
-    oracle="""
-    WITH tok AS (
-      SELECT doc_id,
-             list_reduce(list_prepend(0::BIGINT,
-               list_transform(range(1, length(token) + 1),
-                 j -> ascii(substr(token, j, 1)))),
-               (acc, c) -> (acc * 131 + c) % 2147483647) AS h
-      FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents)),
-    bits AS (
-      SELECT doc_id, j, sum(CASE WHEN (h >> j) & 1 = 1 THEN 1 ELSE -1 END) AS s
-      FROM tok, unnest(range(0, 32)) AS u(j) GROUP BY 1, 2)
-    SELECT doc_id,
-           sum(CASE WHEN s > 0 THEN (1::BIGINT << j) ELSE 0 END)::BIGINT AS simhash
-    FROM bits GROUP BY doc_id
-    """,
-)
-def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """32-bit SimHash per document over frequency-weighted token hashes:
-    bit j of the signature is the sign of Σ_tokens (±1 by bit j of the token
-    hash). Near-duplicate docs land within small Hamming distance
-    (tests/test_textops.py); banding the signature turns pair search into an
-    equi-join, same as MinHash-LSH.
-
-    Two hash aggregations keyed (doc, bit) then (doc) — the 32× bit expansion
-    happens map-side and collapses immediately; linear in corpus size."""
-    d = load(spark, sf_dir, "documents")
-    tok = d.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("token")
-    ).select("doc_id", F.expr(_tok_hash_expr("token")).alias("h"))
-    bits = (
-        tok.select("doc_id", "h", F.explode(F.expr("sequence(0, 31)")).alias("j"))
-        .groupBy("doc_id", "j")
-        .agg(F.sum(F.expr("CASE WHEN (h >> j) & 1 = 1 THEN 1 ELSE -1 END")).alias("s"))
-    )
-    return bits.groupBy("doc_id").agg(
-        F.sum(F.expr("CASE WHEN s > 0 THEN shiftleft(cast(1 as bigint), j) ELSE 0 END"))
-        .alias("simhash")
-    )
-
-
-# ---------------------------------------------------------------------------
-# n-gram Jaccard near-dup (inverted-index candidate join)
-# ---------------------------------------------------------------------------
-
-
-@query(
-    "dedup_ngram_jaccard",
-    oracle="""
-    WITH tok AS MATERIALIZED (
-      -- MATERIALIZED: bind the split array ONCE per row (r14, mirroring
-      -- the engine's r13 bound-array fix) — string_split inside the
-      -- lambda re-splits per element, O(tokens²) per doc
-      SELECT doc_id, string_split(text, ' ') AS w FROM documents
-    ),
-    sh AS (
-      SELECT doc_id, list_distinct(list_transform(
-               range(1, greatest(len(w) - 2, 0) + 1),
-               i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS s
-      FROM tok),
-    inv AS (SELECT doc_id, unnest(s) AS g FROM sh),
-    cand AS (SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-             FROM inv a JOIN inv b ON a.g = b.g AND a.doc_id < b.doc_id)
-    SELECT a_id, b_id,
-           round(len(list_intersect(x.s, y.s))::DOUBLE
-                 / (len(x.s) + len(y.s) - len(list_intersect(x.s, y.s))), 4) AS jaccard
-    FROM cand JOIN sh x ON x.doc_id = a_id JOIN sh y ON y.doc_id = b_id
-    WHERE len(list_intersect(x.s, y.s))::DOUBLE
-          / (len(x.s) + len(y.s) - len(list_intersect(x.s, y.s))) >= 0.2
-    """,
-)
-def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact word-3-gram Jaccard near-dup pairs (≥ 0.2) via the
-    count-aggregated inverted-index join (r02 shape): the gram equi-join
-    emits one row per (pair, shared gram); a single groupBy(a,b).count()
-    IS the intersection size |A∩B| (grams are per-doc distinct), so Jaccard
-    falls out of c/(|A|+|B|−c) with two broadcast size joins. This replaces
-    the old distinct-pairs shuffle PLUS the array_intersect re-verify join
-    (which re-shuffled every candidate with both full shingle arrays) —
-    lossless, same rows, ~3× faster at sf0.1 (16.5 s → ~5 s warm).
-
-    100 TB: map-side partial aggregation collapses the (pair, gram) stream
-    before the shuffle, so shuffle volume is O(distinct candidate pairs),
-    not O(shared-gram occurrences); hot-gram blow-up is bounded the same way
-    as dedup_near_minhash (df-cap) when the threshold allows it.
-
-    r02 plan fixes (19 s → ~2 s warm at sf0.1): grams are int64 xxhash64 ids
-    (word_ngram_ids), the shingling stage is parallelized past the 1-split
-    scan (spread_cpu), and the explode no longer duplicates the transform
-    into a pushed-down size()>0 scan filter (explode_nonempty).
-
-    Exact-dup collapse (engine.tables.clone_groups): taken unless texts
-    AND ids are both distinct; identical texts pair at Jaccard 1.0 when
-    they have grams."""
-    from engine.tables import all_rows_distinct, expand_clone_pairs
-
-    d = load(spark, sf_dir, "documents")
-    path = f"{sf_dir}/documents.parquet"
-    # The direct kernel keys its inverted index on doc_id, which merges a
-    # COLLIDING id's two different texts into one garbage gram multiset
-    # (r14 dup-id axis) — it requires BOTH distinct texts and unique ids.
-    # The collapse path below is the general form: it operates per
-    # distinct TEXT and expands to member rows, which reproduces the
-    # oracle's per-row-combination fan under colliding ids too.
-    if all_rows_distinct(spark, path, d, "text") and all_rows_distinct(
-        spark, path, d, "doc_id"
-    ):
-        return _ngram_jaccard_kernel(d)
-
-    grp = text_clone_groups(spark, d, "ngram_grp")
-    rep_pairs = _ngram_jaccard_kernel(grp.select("doc_id", "text"))
-    intra = F.when(has_word_ngrams("text", 3), F.lit(1.0))
-    return expand_clone_pairs(rep_pairs, grp, "jaccard", intra)
 
 
 def text_clone_groups(spark: SparkSession, d: DataFrame, tag: str) -> DataFrame:
@@ -458,7 +341,6 @@ def text_clone_groups(spark: SparkSession, d: DataFrame, tag: str) -> DataFrame:
     )
 
 
-_NGRAM_JAC_T = 0.2  # the kernel's Jaccard threshold (oracle-pinned)
 # Grams appearing in more documents than this take the HOT path (r14
 # boilerplate defense). On every swept corpus the max gram df is ~25, so
 # the cap never engages there and the plan is byte-identical to r13's;
@@ -474,45 +356,6 @@ _NGRAM_HOT_MAX = 100_000
 # docs are small enough to pass the threshold on hot grams alone, fall
 # back to the exact full join (correct, pre-r14 shape) with a warning.
 _NGRAM_TINY_MAX = 200_000
-
-
-def _ngram_jaccard_kernel(d: DataFrame) -> DataFrame:
-    """The count-aggregated inverted-index Jaccard join over a documents
-    relation (see dedup_ngram_jaccard) — extracted r11 so the collapse
-    path can run it over representatives with an identical plan.
-
-    The gram relation sh is PERSISTED here (r13 long-doc fix): it
-    feeds four join inputs (inv×2, sizes×2), and joins make
-    InferFiltersFromConstraints push an inferred isnotnull(size(grams))
-    filter BELOW the defining projection — alias substitution re-inlines
-    split(text) INTO the gram lambda, resurrecting the O(tokens²) per-doc
-    shape no projection binding can prevent. The materialization barrier
-    stops pushdown/inlining AND the 4× recompute; same persist rationale
-    as minhash_near_pairs' mins. Routed through swap_persist (r14
-    ADVICE): per-tag eviction on re-invocation, no accumulation across a
-    sweep.
-
-    Pair counts come from exact_gram_pair_counts below — the r14
-    hot-gram (boilerplate) defense lives there; this kernel only applies
-    the Jaccard threshold algebra (tiny_k = (1+t)/t = 6 at t = 0.2)."""
-    from engine.tables import swap_persist
-
-    sh = swap_persist(d.sparkSession, word_ngram_ids(d, 3), "ngram_kernel_sh")
-    sizes = sh.select("doc_id", F.size("s").alias("n"))
-    # tiny bound k = (1+t)/t = 6 at t = 0.2: a pair sharing NO light gram
-    # needs c = ch and jac >= t, forcing na+nb <= c(1+t)/t <= 6·min(Ha,Hb)
-    co = exact_gram_pair_counts(sh, tiny_k=6, who="_ngram_jaccard_kernel")
-    x = sizes.select(F.col("doc_id").alias("a_id"), F.col("n").alias("na"))
-    y = sizes.select(F.col("doc_id").alias("b_id"), F.col("n").alias("nb"))
-    jac = F.col("c").cast("double") / (F.col("na") + F.col("nb") - F.col("c"))
-    # no broadcast hint: sizes is O(docs) — tiny here, executor-sized at
-    # 100 TB; Catalyst picks broadcast when stats allow, shuffle otherwise
-    return (
-        co.join(x, "a_id")
-        .join(y, "b_id")
-        .filter(jac >= _NGRAM_JAC_T)
-        .select("a_id", "b_id", F.round(jac, 4).alias("jaccard"))
-    )
 
 
 def exact_gram_pair_counts(

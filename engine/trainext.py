@@ -1,11 +1,10 @@
-"""Training-data pipeline extensions, round 1 batch 2: document chunking,
-normalization, and fuzzy (edit-distance) vocabulary dedup.
+"""Training-data pipeline extensions: document chunking, normalization and
+tf-idf document cosine.
 
 These extend SURVEY §2.L — the LLM-corpus preparation surface. Chunking is
 the step between dedup and tokenization in every pretraining pipeline
 (fixed-token windows with overlap); normalization is the canonical text
-cleanup (stopword/short-token removal); fuzzy dedup canonicalizes a
-near-duplicate value vocabulary via banded edit-distance join.
+cleanup (stopword/short-token removal).
 """
 
 from __future__ import annotations
@@ -18,52 +17,6 @@ from engine.tables import load
 
 CHUNK = 32  # tokens per chunk
 STRIDE = 24  # tokens between chunk starts (CHUNK - STRIDE = 8 overlap)
-
-
-def min_label_components(
-    edges: DataFrame,
-    nodes: DataFrame,
-    *,
-    broadcast_edges: bool = False,
-    max_rounds: int = 32,
-) -> DataFrame:
-    """Pregel-style min-label propagation: connected components over
-    ``edges`` (columns src, dst — one row per directed edge; callers pass
-    the symmetrized graph) for ``nodes`` (column node), returning
-    (node, label) with label = min node id in the component.
-
-    Shared kernel for dedup_cluster_components and the large-batch path of
-    pipeline_incremental_refresh. Rounds = graph diameter; each round is
-    one shuffle on node id and the convergence probe collects ONE scalar
-    (sum of labels — monotonically decreasing integers, so an unchanged
-    sum ⇔ fixpoint), never row data. ``broadcast_edges`` is for callers
-    whose edge list is known tiny (post-aggregation vocab graphs); the
-    default shuffles the join, which is the 100 TB-safe shape."""
-    if broadcast_edges:
-        edges = F.broadcast(edges.cache())
-    labels = nodes.select(F.col("node"), F.col("node").alias("label"))
-    prev_sum = None
-    for _ in range(max_rounds):  # hard bound >> any real diameter
-        msgs = (
-            edges.join(labels, edges.src == labels.node)
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        labels = (
-            labels.join(msgs, "node", "left")
-            .select(
-                "node",
-                F.least(F.col("label"), F.coalesce("nbr_label", F.col("label"))).alias(
-                    "label"
-                ),
-            )
-            .localCheckpoint()  # truncate the growing iterative lineage
-        )
-        cur_sum = labels.agg(F.sum("label")).first()[0]
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    return labels
 
 
 @query(
@@ -143,235 +96,6 @@ def text_normalize_stopwords(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.size(kept).cast("long").alias("n_kept"),
         F.array_join(kept, " ").alias("normalized"),
-    )
-
-
-def length_band_candidate_pairs(
-    df: DataFrame, name_col: str, key_col: str, k: int
-) -> DataFrame:
-    """Lossless length-band candidate generation for levenshtein <= k
-    matching over a vocabulary relation: |len(a)-len(b)| <= k is
-    NECESSARY for lev <= k, so banding by floor(len/(k+1)) with ±1-band
-    explosion on the a-side turns the all-pairs filter into a hash join
-    on the band key — no cartesian, and the expensive levenshtein runs
-    only on band survivors. Each qualifying pair is produced exactly
-    once: the b-side sits in its single home band, array_distinct
-    collapses the a-side explosion when adjacent bands coincide, and
-    the key ordering (a < b) picks one orientation. The int cast
-    truncates toward zero, so (len-k)/(k+1) at len < k lands in band 0
-    rather than -1 — conservative (extra candidates, never lost ones).
-    Returns every input column twice, prefixed a_/b_, for pairs with
-    a_<key_col> < b_<key_col> and levenshtein <= k. Shared by
-    dedup_fuzzy_edit and dedup_cluster_components."""
-    band = (F.length(name_col) / (k + 1)).cast("int")
-    a = df.select(
-        *[F.col(c).alias(f"a_{c}") for c in df.columns],
-        F.explode(
-            F.array_distinct(
-                F.array(
-                    ((F.length(name_col) - k) / (k + 1)).cast("int"),
-                    band,
-                    ((F.length(name_col) + k) / (k + 1)).cast("int"),
-                )
-            )
-        ).alias("band"),
-    )
-    b = df.select(
-        *[F.col(c).alias(f"b_{c}") for c in df.columns],
-        band.alias("band"),
-    )
-    an, bn = f"a_{name_col}", f"b_{name_col}"
-    return a.join(b, "band").filter(
-        (F.col(f"a_{key_col}") < F.col(f"b_{key_col}"))
-        & (F.abs(F.length(an) - F.length(bn)) <= k)
-        & (F.levenshtein(an, bn) <= k)
-    )
-
-
-@query(
-    "dedup_fuzzy_edit",
-    oracle="""
-    WITH names AS (
-      SELECT p_name, min(p_partkey) AS rep_key, count(*) AS n_parts
-      FROM part GROUP BY p_name)
-    SELECT a.p_name AS name_a, b.p_name AS name_b,
-           a.rep_key AS rep_a, b.rep_key AS rep_b,
-           a.n_parts AS cnt_a, b.n_parts AS cnt_b,
-           CAST(levenshtein(a.p_name, b.p_name) AS BIGINT) AS edit_dist
-    FROM names a JOIN names b
-      ON a.rep_key < b.rep_key
-     AND abs(length(a.p_name) - length(b.p_name)) <= 2
-    WHERE levenshtein(a.p_name, b.p_name) <= 2
-    """,
-)
-def dedup_fuzzy_edit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fuzzy vocabulary dedup: collapse the value column to its distinct
-    vocabulary (with representative key + support count), then find
-    near-duplicate name pairs with levenshtein <= 2.
-
-    Scale design: the vocabulary aggregate shrinks the data by orders of
-    magnitude before any pairing (64 names from 2000 parts here; at 100 TB a
-    name/URL/title vocabulary is MB-scale from TB-scale input). Candidate
-    generation is a LOSSLESS length-band equi-join — |len(a)-len(b)| <= k is
-    a necessary condition for lev <= k, so banding by floor(len/(k+1)) with
-    +-1-band expansion on one side prunes the quadratic pair space without
-    losing a single true pair (same inverted-index idea as
-    dedup_ngram_jaccard). The expensive levenshtein runs only on survivors."""
-    names = (
-        load(spark, sf_dir, "part")
-        .groupBy("p_name")
-        .agg(F.min("p_partkey").alias("rep_key"), F.count(F.lit(1)).alias("n_parts"))
-    )
-    return length_band_candidate_pairs(names, "p_name", "rep_key", k=2).select(
-        F.col("a_p_name").alias("name_a"),
-        F.col("b_p_name").alias("name_b"),
-        F.col("a_rep_key").alias("rep_a"),
-        F.col("b_rep_key").alias("rep_b"),
-        F.col("a_n_parts").alias("cnt_a"),
-        F.col("b_n_parts").alias("cnt_b"),
-        F.levenshtein("a_p_name", "b_p_name").cast("long").alias("edit_dist"),
-    )
-
-
-# fixed permutation constants for the 4 minhash functions: h_i(x) = (a_i*x + b_i) mod p
-_MH = [(1299721, 11), (2750161, 101), (4256249, 1009), (7368787, 10007)]
-_P = 2147483647
-
-
-def _mh_cols_sql_duck() -> str:
-    return ",\n".join(
-        f"           list_aggregate(list_transform(hh, h -> ({a} * h + {b}) % {_P}), 'min') AS mh{i}"
-        for i, (a, b) in enumerate(_MH)
-    )
-
-
-@query(
-    "dedup_minhash_signature",
-    oracle=f"""
-    WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-    sh AS (
-      SELECT doc_id,
-             list_transform(range(1, greatest(len(toks) - 2, 0) + 1),
-                            i -> toks[i] || ' ' || toks[i + 1] || ' ' || toks[i + 2]) AS shingles
-      FROM t),
-    hs AS (
-      SELECT doc_id,
-             list_transform(shingles,
-               s -> list_reduce(
-                      list_prepend(0::BIGINT,
-                        list_transform(range(1, length(s) + 1), j -> ascii(substr(s, j, 1)))),
-                      (acc, c) -> (acc * 131 + c) % {_P})) AS hh
-      FROM sh)
-    SELECT doc_id,
-{_mh_cols_sql_duck()}
-    FROM hs
-    """,
-)
-def dedup_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FULL-oracle MinHash signatures: word-3-gram shingles → polynomial
-    string hash (base 131 mod 2^31-1, the engine-agnostic hash shared with
-    dedup_simhash) → 4 fixed affine permutations, min each.
-
-    This is the hash-verifiable complement to dedup_near_minhash (which is
-    ROWS-only because it uses Spark-side xxhash64 banding): here every
-    arithmetic step is expressible in both engines, so the exact signature
-    bytes are oracle-checked. Per-row array math only — zero shuffle, zero
-    Python; signature width k=4 trades recall for column count and is a
-    constant in both texts. a_i*h < 7.4e6 * 2^31 ~ 1.6e16 stays in int64.
-
-    Sub-3-token docs produce an EMPTY shingle list, hence NULL signature
-    columns — the oracle's range(1, 1) = [] → list_aggregate(min) = NULL.
-    The CASE guard (not greatest()) avoids sequence(1, 0) = [1, 0], whose
-    i=0 entry makes element_at() throw (r12 short-text fix)."""
-    # toks is BOUND in its own projection (r13 long-doc fix): the old
-    # inline element_at(split(text, ' '), i) re-tokenized the document per
-    # shingle — O(tokens²) per doc, which hung this key on a 1M-token doc.
-    # The inner per-char fold runs over split(s, '') (each shingle is ~3
-    # words, so it was never the hot loop, but substring(s, j, 1) is
-    # O(j) on UTF8String regardless).
-    hh = F.expr(
-        "CASE WHEN size(toks) < 3 THEN cast(array() as array<bigint>) ELSE "
-        "transform(transform(sequence(1, size(toks) - 2),"
-        " i -> concat_ws(' ', toks[i-1], toks[i], toks[i+1])),"
-        " s -> aggregate(transform(split(s, ''), c -> ascii(c)),"
-        "      cast(0 as bigint), (acc, c) -> (acc * 131 + c) % 2147483647)) END"
-    )
-    d = (
-        load(spark, sf_dir, "documents")
-        .select("doc_id", F.split("text", " ").alias("toks"))
-        .select("doc_id", hh.alias("hh"))
-    )
-    return d.select(
-        "doc_id",
-        *[
-            F.array_min(F.expr(f"transform(hh, h -> ({a} * h + {b}) % {_P})")).alias(f"mh{i}")
-            for i, (a, b) in enumerate(_MH)
-        ],
-    )
-
-
-@query(
-    "dedup_cluster_components",
-    oracle="""
-    WITH RECURSIVE
-    vocab AS (SELECT p_name, min(p_partkey) AS rep_key FROM part GROUP BY p_name),
-    edges AS (
-      SELECT a.rep_key AS src, b.rep_key AS dst
-      FROM vocab a JOIN vocab b
-        ON a.rep_key < b.rep_key
-       AND abs(length(a.p_name) - length(b.p_name)) <= 2
-       AND levenshtein(a.p_name, b.p_name) <= 2),
-    undirected AS (SELECT src, dst FROM edges
-                   UNION ALL SELECT dst AS src, src AS dst FROM edges),
-    walk(node, label) AS (
-      SELECT rep_key, rep_key FROM vocab
-      UNION
-      SELECT u.dst, w.label FROM walk w JOIN undirected u ON u.src = w.node
-    )
-    SELECT v.p_name, w.node AS rep_key, min(w.label) AS cluster_id
-    FROM walk w JOIN vocab v ON v.rep_key = w.node
-    GROUP BY v.p_name, w.node
-    """,
-)
-def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-duplicate CLUSTERING: connected components over the fuzzy-match
-    graph (nodes = distinct name vocabulary, edges = levenshtein <= 2 pairs
-    from dedup_fuzzy_edit's lossless length-band join), cluster_id = min
-    node id in the component — the canonicalization step that turns pairwise
-    near-dup hits into dedup groups.
-
-    This is the engine's iterative-algorithm surface: Spark has no recursive
-    SQL, so components run as Pregel-style min-label propagation — each
-    round joins labels to edges, takes min(neighbor label, own label), and
-    stops when a round changes nothing. Rounds = graph diameter (<= 5 here);
-    the convergence test collects ONE scalar per round (sum of labels — a
-    monotonically decreasing integer, so unchanged sum ⇔ fixpoint), never
-    row data. At 100 TB each round is one shuffle on node id; the oracle
-    side is DuckDB's WITH RECURSIVE reachability closure — same fixpoint,
-    declared instead of iterated."""
-    vocab = (
-        load(spark, sf_dir, "part")
-        .groupBy("p_name")
-        .agg(F.min("p_partkey").alias("rep_key"))
-    )
-    # Candidate generation is dedup_fuzzy_edit's shared lossless
-    # length-band equi-join (length_band_candidate_pairs) — no cartesian,
-    # levenshtein only on band survivors. The vocabulary is
-    # post-aggregation (64 names from 2k parts; MB-scale from TB-scale
-    # input), but the band join costs the same here and stays
-    # sub-quadratic if the vocabulary ever grows with the catalog.
-    edges = length_band_candidate_pairs(vocab, "p_name", "rep_key", k=2).select(
-        F.col("a_rep_key").alias("src"), F.col("b_rep_key").alias("dst")
-    )
-    und = edges.union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    labels = min_label_components(
-        und,
-        vocab.select(F.col("rep_key").alias("node")),
-        broadcast_edges=True,  # post-aggregation vocab graph — tiny by construction
-    )
-    return (
-        vocab.join(labels, vocab.rep_key == labels.node)
-        .select("p_name", "rep_key", F.col("label").alias("cluster_id"))
     )
 
 

@@ -1,14 +1,12 @@
-"""Vector/embedding pipeline operators, batch 3 (r02): scalar quantization,
-funnel-stage analysis, random-hyperplane LSH ANN, and distributed PCA.
+"""Vector/embedding pipeline operators: scalar quantization, funnel-stage
+analysis, distributed PCA and the embedding norm profile.
 
-These extend SURVEY §2.N from "find similar vectors" to the surrounding
-training-pipeline plumbing: compressing an embedding column for serving
-(quantize), ordering behavioral events into conversion funnels (the
-MATCH_RECOGNIZE-lite every analytics stack ships), a second ANN family with a
-different recall/cost point than IVF, and the dimensionality-reduction pass
-that precedes clustering/visualization at corpus scale.
-
-All registered after the 50-key attestation window (engine.registry order).
+These extend SURVEY §2.N from "find similar vectors" (engine.simsearch) to
+the surrounding training-pipeline plumbing: compressing an embedding column
+for serving (quantize), ordering behavioral events into conversion funnels
+(the MATCH_RECOGNIZE-lite every analytics stack ships), the
+dimensionality-reduction pass that precedes clustering/visualization at
+corpus scale, and the norm audit every cosine-based op relies on.
 """
 
 from __future__ import annotations
@@ -17,10 +15,9 @@ from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from engine.registry import query
-from engine.tables import load
+from engine.tables import dot, load
 
 
 @query(
@@ -126,303 +123,6 @@ def etl_funnel_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return v.join(c, "user_id").join(p, "user_id").select(
         "user_id", "view_ts", "click_ts", "purchase_ts"
-    )
-
-
-def _rp_signatures(bc, n_tables: int, bits: int, bucket_cap: int, batches):
-    """(bucket, vec_id) rows of a (vec_id, embedding) batch: per table, the
-    home bucket of the bits-wide hyperplane signature (bc: the
-    (n_tables*bits, dim) planes) and every 1-bit-flip neighbor
-    (multi-probe)."""
-    import numpy as np
-    import pandas as pd
-
-    pl = bc.value
-    weights = 1 << np.arange(bits)
-    for pb in batches:
-        v_ids = pb["vec_id"].to_numpy()
-        if len(v_ids) == 0:
-            continue
-        mat = np.stack(pb["embedding"].to_numpy()).astype(np.float64)
-        allbits = (mat @ pl.T) > 0  # (n, L*b)
-        bucket_list = []
-        for t in range(n_tables):
-            sig = allbits[:, t * bits : (t + 1) * bits].astype(np.int64) @ weights
-            home = (t << bits) | sig
-            bucket_list.append(home)
-            for b in range(bits):
-                bucket_list.append(home ^ (1 << b))
-        buckets = np.concatenate(bucket_list)
-        ids = np.tile(v_ids, n_tables * (bits + 1))
-        # Per-batch pre-cap: keep at most bucket_cap+1 members of any
-        # bucket from this batch. Decision-preserving: if a bucket's
-        # TRUE total is <= cap no batch ever trims it (collected size
-        # = true size); if the total exceeds the cap the collected
-        # size still reaches >= cap+1 (either some batch trimmed, or
-        # none did and the full total arrives), so the downstream size
-        # filter drops it either way. This bounds the collect_list
-        # group for a degenerate bucket (identical vectors) to
-        # #batches*(cap+1) ids instead of |bucket|.
-        order = np.argsort(buckets, kind="stable")
-        sb = buckets[order]
-        run_start = np.where(
-            np.concatenate(([True], sb[1:] != sb[:-1])), np.arange(len(sb)), 0
-        )
-        cumcount = np.arange(len(sb)) - np.maximum.accumulate(run_start)
-        keep = order[cumcount <= bucket_cap]
-        yield pd.DataFrame({"bucket": buckets[keep], "vec_id": ids[keep]})
-
-
-def _rp_pair_sims(bc_side, side_key, k: int, batches):
-    """Exact rounded dots of (a_id, b_id) candidate batches against the
-    per-process cached broadcast side (llmops._side_value), pruned to the
-    batch's top-k (ties kept)."""
-    import numpy as np
-
-    from engine.llmops import _pair_batch, _side_value
-
-    ids, m = _side_value(bc_side, side_key)
-    order = np.argsort(ids)
-    sids = ids[order]
-    for rb in batches:
-        a = rb.column("a_id").to_numpy(zero_copy_only=False)
-        if len(a) == 0:
-            continue
-        b = rb.column("b_id").to_numpy(zero_copy_only=False)
-        # Membership guard: if candidate ids ever diverge from the
-        # broadcast side (filtered load, corpus change), searchsorted
-        # would silently gather a wrong row — fail loudly instead.
-        pa_idx = np.searchsorted(sids, a).clip(max=len(sids) - 1)
-        pb_idx = np.searchsorted(sids, b).clip(max=len(sids) - 1)
-        if not ((sids[pa_idx] == a).all() and (sids[pb_idx] == b).all()):
-            raise ValueError(
-                "sim_ann_rp_lsh: candidate vec_id absent from the "
-                "broadcast embedding matrix"
-            )
-        ia = order[pa_idx]
-        ib = order[pb_idx]
-        # f32→f64 upcast is exact (source column is array<float>)
-        s = np.round(
-            np.einsum("ij,ij->i", m[ia].astype(np.float64), m[ib].astype(np.float64)),
-            4,
-        )
-        if len(s) > k:  # per-batch prune: ≤k rows reach the sort
-            thresh = np.partition(s, len(s) - k)[len(s) - k]
-            keep = s >= thresh
-            a, b, s = a[keep], b[keep], s[keep]
-        yield _pair_batch(a, b, s)
-
-
-@query(
-    "sim_ann_rp_lsh",
-    # FULL oracle (r04): signature bucketing is not SQL-expressible, but the
-    # exact top-10 pair list is — and the L=16 multi-probe configuration
-    # achieves recall 1.0 on this corpus deterministically (fixed PCG64
-    # hyperplanes, fixed data; verified at sf0.001 and sf0.01; the ≥0.8
-    # recall floor stays unit-tested in tests/test_vecops.py). A recall
-    # regression now surfaces as a driver hash mismatch.
-    oracle="""
-    SELECT a_id, b_id, sim FROM (
-      SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-             round(list_dot_product(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 4) AS sim
-      FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-      WHERE a.embedding IS NOT NULL AND b.embedding IS NOT NULL
-        AND len(a.embedding) = (SELECT len(embedding) FROM embeddings WHERE embedding IS NOT NULL GROUP BY 1 ORDER BY count(*) DESC, len(embedding) LIMIT 1)
-        AND len(b.embedding) = (SELECT len(embedding) FROM embeddings WHERE embedding IS NOT NULL GROUP BY 1 ORDER BY count(*) DESC, len(embedding) LIMIT 1)
-    ) ORDER BY sim DESC, a_id, b_id LIMIT 10
-    """,
-)
-def sim_ann_rp_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate top-10 similar pairs via random-hyperplane LSH (SimHash
-    for cosine): L=16 independent tables of b=8-bit signatures from
-    deterministic pseudo-random hyperplanes, candidates = exact search
-    within each (table, signature) bucket plus 1-bit-flip multi-probe
-    neighbors, global top-k merge. The (L, b) operating point is set by the
-    corpus's similarity regime: the exact top pairs here sit near cosine
-    0.5 (bit-agreement p ≈ 0.67), where a single table is hopeless
-    (p^12 ≈ 0.008 — measured recall 0.2) but 16 tables with multi-probe
-    reach ≈ 1-(1-0.20)^16 ≈ 0.97 predicted; tests/test_vecops.py pins
-    ≥ 0.8 at both SFs. Complements sim_ann_ivf: no training pass (no
-    centroid job), tunable recall without re-clustering, at ~L× the
-    candidate cost — the classic LSH-vs-IVF trade.
-
-    100 TB: signatures are ONE map-side matmul vs a broadcast (L*b x dim)
-    matrix; multi-probe multiplies rows by L*(1 + b) BEFORE the single
-    shuffle on bucket id; per-bucket work is bounded by the frequency cap —
-    Σ_b min(|b|, cap)² replaces the O(n²) pair space, the same contract as
-    IVF and the minhash band join. b scales with log2(n) to hold bucket
-    sizes constant as the corpus grows.
-
-    r03 plan reshape (9.9 s → ~1.5 s at sf0.1): the signature explosion now
-    ships (bucket, vec_id) int64 pairs ONLY — the old shape replicated each
-    64-float embedding L*(1+b)=144× through the shuffle and re-stacked it in
-    ~36k tiny pandas groups, which was pure Arrow/pandas overhead. Candidate
-    pairs come from a JVM self-equi-join on bucket (same shape as the
-    minhash band join).
-
-    r05 verify reshape (removes the one scale ceiling the r04 judge flagged):
-    the exact-verify stage now has TWO paths chosen by a footer-only row
-    count against the broadcast budget. Small corpus (≤1M vectors): the
-    r04 gather+einsum against the broadcast float64 matrix — fastest at
-    bench scale. Large corpus: the (a_id, b_id) candidates join back to the
-    embeddings table twice on vec_id (plain hash joins — Spark broadcasts
-    the emb side while it is small and switches to sort-merge beyond that)
-    and the dot product folds JVM-side (zip_with + aggregate). The key
-    therefore REFUSES NOTHING at any size: past the budget it degrades to
-    the join shape instead of raising, candidate volume stays bounded by
-    the bucket cap (Σ_b min(|b|,cap)²), and the final top-10 is a
-    TakeOrdered. tests/test_vecops.py proves the no-broadcast path by
-    forcing the gate to 0 vectors and re-checking recall.
-
-    Exact-dup collapse (engine.tables.clone_groups, members truncated to
-    k+1): taken whenever embeddings duplicate; identical vectors pair at
-    sim = ‖v‖²."""
-    import numpy as np
-
-    from engine.tables import all_rows_distinct, clone_groups, parquet_num_rows, vectors
-
-    k, n_tables = 10, 16
-    bucket_cap = 256  # non-discriminative-bucket guard, as in dedup_near_minhash
-    path = f"{sf_dir}/embeddings.parquet"
-    # Footer-only row count: feeds the verify-path broadcast-budget gate.
-    _n_vec = parquet_num_rows(path)
-    emb = vectors(spark, sf_dir)
-    head = emb.select("embedding").first()
-    if head is None:
-        # empty corpus/shard: no hyperplanes to draw, no pairs — matches
-        # the oracle's empty pair list (r12 empty-corpus hardening)
-        return spark.createDataFrame([], "a_id long, b_id long, sim double")
-    dim = len(head[0])
-    if all_rows_distinct(spark, path, emb, "embedding"):
-        g = None
-    else:
-        # five consumers read g: rep count, signature pass, expansion
-        g = clone_groups(spark, emb, "vec_id", "embedding", "rp_lsh_grp", keep=k + 1)
-    # Signature width scales with log2(n_reps) — the contract this
-    # docstring always claimed, implemented r06 after the 5× rehearsal
-    # caught the fixed-b saturation: at b=8 the 4096-bucket space
-    # saturates (~70 members/bucket at n=2000), so growing n 5× produced
-    # 11.7M candidate pairs and a 1.88 scaling exponent.
-    # b = max(8, ceil(log2(n/8))) holds home-bucket occupancy ~constant
-    # (n / 2^b ≈ 8 per table), so candidate volume stays ~linear in n.
-    # r07: n is the REPRESENTATIVE count (the relation being hashed —
-    # sizing from raw rows would over-widen b on dup-heavy corpora and
-    # cost recall); the count doubles as g's materialization, so later
-    # consumers hit cache. Dup-free corpora (every driver/test SF) give
-    # n_reps == footer rows — oracle results and the pinned recall
-    # floors are unchanged.
-    n_reps = g.count() if g is not None else _n_vec
-    bits = max(8, int(np.ceil(np.log2(max(n_reps / 8, 2)))))
-    # Gaussian hyperplanes (the textbook RP-LSH construction — uniform
-    # multiplicative-hash noise left rows linearly correlated and cost ~0.1
-    # measured recall), seeded PCG64 so every run/executor derives the
-    # identical (L*b, dim) matrix — one matmul covers all tables' signatures.
-    planes = np.random.default_rng(42).standard_normal((n_tables * bits, dim))
-    bc = spark.sparkContext.broadcast(planes)
-
-    from engine.textops import spread_cpu
-
-    src = g.select("vec_id", "embedding") if g is not None else emb.select(
-        "vec_id", "embedding"
-    )
-    sigs = spread_cpu(src, width=8).mapInPandas(
-        partial(_rp_signatures, bc, n_tables, bits, bucket_cap),
-        "bucket long, vec_id long",
-    )
-    # Candidate generation in ONE shuffle of the signature explosion:
-    # groupBy(bucket) -> collect_list, drop oversized buckets by array
-    # size (the non-discriminative-bucket guard — same semantics as r05's
-    # window count thanks to the decision-preserving per-batch pre-cap in
-    # the generator above, which also bounds the collected group for a
-    # degenerate bucket), then emit pairs with a double explode. The r05
-    # shape (window count for the cap, then a bucket self-equi-join)
-    # shuffled the L*(1+b)*n rows AND sorted them for the window; this
-    # shape does the same Σ_b min(|b|,cap)² pair work with no sort and no
-    # join (r06 quiet-host: 2.15 s -> ~1.8 s at sf0.1).
-    cand = (
-        sigs.groupBy("bucket")
-        .agg(F.collect_list("vec_id").alias("ids"))
-        .filter(F.size("ids") <= bucket_cap)
-        .select(F.explode("ids").alias("a_id"), F.col("ids"))
-        .select("a_id", F.explode("ids").alias("b_id"))
-        .filter(F.col("a_id") < F.col("b_id"))
-        .distinct()
-    )
-
-    # Path choice: footer-only row count vs the broadcast budget (read
-    # dynamically off the module so tests can force the scale path); the
-    # count itself was already read above for the signature-width choice.
-    import engine.llmops as llmops
-
-    n_vec = _n_vec  # None for non-parquet: can't prove it's small — join path
-
-    if n_vec is not None and n_vec <= llmops._MAX_BROADCAST_VECTORS:
-        # Small-corpus fast path: one gather+einsum per Arrow batch against
-        # the broadcast float32 matrix (reusing sim_topk_pairs' side; f32 is
-        # the parquet source precision, upcast to f64 at the gather).
-        bc_side, side_key, _ = llmops._side_broadcast(spark, sf_dir, emb)
-
-        res = cand.mapInArrow(
-            partial(_rp_pair_sims, bc_side, side_key, k),
-            "a_id long, b_id long, sim double",
-        )
-    else:
-        # Scale path (no ceiling): embeddings join onto the candidate pairs
-        # (two hash joins keyed on vec_id), dot product folded JVM-side.
-        ea = emb.select(
-            F.col("vec_id").alias("a_id"),
-            F.col("embedding").cast("array<double>").alias("ea"),
-        )
-        eb = emb.select(
-            F.col("vec_id").alias("b_id"),
-            F.col("embedding").cast("array<double>").alias("eb"),
-        )
-        dot = F.aggregate(
-            F.zip_with("ea", "eb", lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        res = (
-            cand.join(ea, "a_id")
-            .join(eb, "b_id")
-            # bround (half-even) to match np.round on the broadcast path
-            # and clone_topk's ‖v‖² — one rounding mode for
-            # every sim this operator emits. (Real dot products never
-            # land on an exact 4-decimal tie, which is also why either
-            # mode agrees with the DuckDB oracle's half-up round; the
-            # consistency matters for the dup-collapse exactness tests.)
-            .select("a_id", "b_id", F.bround(dot, 4).alias("sim"))
-        )
-    if g is None:  # dup-free: reps ≡ vectors, nothing to expand
-        return res.orderBy(F.col("sim").desc(), "a_id", "b_id").limit(k)
-    return clone_topk(res, g, k)
-
-
-def clone_topk(rep_pairs: DataFrame, grp: DataFrame, k: int) -> DataFrame:
-    """The top-k member pairs of an ANN key's clone corpus: its top-k rep
-    pairs expanded over ``grp`` (clone_groups with keep=k+1), with each
-    group's own pairs at sim = ‖v‖², the dot of identical vectors.
-
-    bround (half-even), not round (half-up): the kernels' cross sims come
-    from np.round, which is half-even, so a ‖v‖² landing exactly on a
-    0.00005 boundary rounds the same way as a cross sim of that value
-    (measure-zero for real dots; the exactness tests pin full equality
-    against a numpy reference)."""
-    from engine.tables import expand_clone_pairs
-
-    vd = F.col("embedding").cast("array<double>")
-    normsq = F.bround(
-        F.aggregate(
-            F.zip_with(vd, vd, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        4,
-    )
-    return (
-        expand_clone_pairs(rep_pairs, grp, "sim", normsq)
-        .orderBy(F.col("sim").desc(), "a_id", "b_id")
-        .limit(k)
     )
 
 
@@ -600,14 +300,9 @@ def emb_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     pc_energy = None
     for j in range(4):
         wj = F.array(*[F.lit(float(row[j])) for row in comps])
-        dot = F.aggregate(
-            F.zip_with(centered, wj, lambda x, w: x * w),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        )
         # kernel projections are rounded to 6dp before the energy sum —
         # mirror that so the check tests what pca_project_vectors emits
-        term = F.round(dot, 6) ** 2
+        term = F.round(dot(centered, wj), 6) ** 2
         pc_energy = term if pc_energy is None else pc_energy + term
     viol = emb.select(
         (pc_energy > centered_energy + F.lit(1e-6)).cast("long").alias("v")
@@ -659,14 +354,7 @@ def emb_norm_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from engine.tables import vectors
 
     e = vectors(spark, sf_dir)
-    x = F.col("embedding").cast("array<double>")
-    nrm = F.sqrt(
-        F.aggregate(
-            F.zip_with(x, x, lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
+    nrm = F.sqrt(dot("embedding", "embedding"))
     n = e.select("label", nrm.alias("nrm"))
     return n.groupBy("label").agg(
         F.count("*").alias("n_vectors"),

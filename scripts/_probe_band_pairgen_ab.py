@@ -21,7 +21,7 @@ SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 from pyspark import StorageLevel  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
-from engine.llmops import (  # noqa: E402
+from engine.dedup import (  # noqa: E402
     capped_lsh_band_rows,
     lsh_band_rows,
     lsh_self_candidates,

@@ -1,5 +1,5 @@
 """Fixed cost of one Python task (docs/SCALE.md rule 2), the figure that
-sizes engine.llmops._PAIRS_PER_TASK, for worker code shipped by reference
+sizes engine.simsearch._PAIRS_PER_TASK, for worker code shipped by reference
 and for a closure shipped by value.
 
 A pass-through mapInArrow over 1 and over 4 partitions of a 1,000-row

@@ -29,7 +29,7 @@ def main() -> int:
     tune(spark)
 
     from engine import pipeline6 as p6
-    from engine.llmops import (
+    from engine.dedup import (
         capped_lsh_band_rows,
         minhash_signatures,
         verify_near_pairs,

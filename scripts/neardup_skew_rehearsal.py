@@ -104,7 +104,7 @@ def band_stats(spark, sf_dir: str) -> tuple[int, int, int]:
     pairs) over the minhash kernel's own banding."""
     from pyspark.sql import functions as F
 
-    from engine.llmops import LSH_BUCKET_CAP, lsh_band_rows, minhash_signatures
+    from engine.dedup import LSH_BUCKET_CAP, lsh_band_rows, minhash_signatures
     from engine.tables import load
 
     d = load(spark, sf_dir, "documents")

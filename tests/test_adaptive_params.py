@@ -76,9 +76,8 @@ def test_formulas_match_operator_source():
     """Guard against the formulas here drifting from the operators: the
     source must contain the exact expressions these tests pin."""
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    vec = open(os.path.join(root, "engine", "vecops.py")).read()
     sim = open(os.path.join(root, "engine", "simsearch.py")).read()
     p4 = open(os.path.join(root, "engine", "pipeline4.py")).read()
-    assert "max(8, int(np.ceil(np.log2(max(n_reps / 8, 2)))))" in vec
+    assert "max(8, int(np.ceil(np.log2(max(n_reps / 8, 2)))))" in sim
     assert "max(8, int(round(math.sqrt(_n / 32))))" in sim
     assert "int(round(math.sqrt(_n / 32)))" in p4

@@ -21,7 +21,7 @@ ENGINE = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))
 ALLOWED_MODULE_DICTS = {
     ("tables.py", "_MEMO"): "the corpus memo's store: facts that outlive a session",
     ("session.py", "_STORE"): "the session store: objects bound to a live SparkContext",
-    ("llmops.py", "_SIDE_CACHE"): "worker-process broadcast sides, bounded by bytes",
+    ("simsearch.py", "_SIDE_CACHE"): "worker-process broadcast sides, bounded by bytes",
     ("registry.py", "QUERIES"): "the key registry, filled by @query at import",
     ("registry.py", "ORACLES"): "the oracle registry, filled by @query at import",
 }
@@ -152,6 +152,34 @@ def test_one_stream_runner_and_one_table_swap():
     assert writers == {("streaming.py", "run_stream")}
     assert swaps - set(OTHER_SWAPS) == {("streaming.py", "merge_table")}
     assert set(OTHER_SWAPS) <= swaps, "stale OTHER_SWAPS entry"
+
+
+# Key prefix -> the one module its operator family lives in.
+FAMILY_MODULES = {
+    "stream_": "engine.streaming",
+    "dedup_": "engine.dedup",
+    "sim_": "engine.simsearch",
+    **dict.fromkeys(
+        ("udf_", "udaf_", "udtf_", "scan_python_", "sink_python_"), "engine.udfs"
+    ),
+}
+
+
+def test_families_register_from_their_modules():
+    """A family's keys are registered from its own module, so its shared
+    kernels stay private to one file. A key of the family registered
+    anywhere else fails here (functools.wraps copies the defining module
+    onto the registered function)."""
+    from engine.registry import collect
+
+    queries, _ = collect()
+    wrong = sorted(
+        f"{key}: {fn.__module__}"
+        for key, fn in queries.items()
+        for prefix, mod in FAMILY_MODULES.items()
+        if key.startswith(prefix) and fn.__module__ != mod
+    )
+    assert wrong == []
 
 
 # Corpus payload columns (and the double cast of embedding): grouping on

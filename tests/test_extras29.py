@@ -1,4 +1,4 @@
-"""Named tests for engine/extras29.py: evidence-column invariants and
+"""Named tests for dedup_pair_explain (engine/dedup.py): evidence-column invariants and
 agreement with the kernel's pair set."""
 
 from __future__ import annotations

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import pytest
 
+import engine.dedup as dd
 import engine.textops as tx
 
 
@@ -67,7 +68,7 @@ def test_defended_counts_equal_plain_join(spark, boiler_docs):
             assert dmap[(a, b)] == c, f"count mismatch on pair {(a, b)}"
         else:
             jac = c / (sizes[a] + sizes[b] - c)
-            assert jac < tx._NGRAM_JAC_T, (
+            assert jac < dd._NGRAM_JAC_T, (
                 f"omitted pair {(a, b)} passes the threshold: {jac}"
             )
     assert set(dmap) <= {(a, b) for a, b, _ in plain}  # no phantom pairs
@@ -84,7 +85,7 @@ def test_defended_jaccard_output_identical(spark, boiler_docs):
         try:
             return sorted(
                 (r["a_id"], r["b_id"], r["jaccard"])
-                for r in tx._ngram_jaccard_kernel(boiler_docs).collect()
+                for r in dd._ngram_jaccard_kernel(boiler_docs).collect()
             )
         finally:
             tx._NGRAM_DF_CAP = old

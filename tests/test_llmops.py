@@ -69,12 +69,11 @@ def test_minhash_deterministic(spark):
 
 def test_cosine_self_similarity(spark):
     """Embeddings are L2-normalized: self-dot == 1 +/- 1e-3."""
-    from engine.llmops import _dot
-    from engine.tables import load
+    from engine.tables import dot, load
 
     emb = load(spark, SF_DIR, "embeddings")
     bad = (
-        emb.select(_dot(F.col("embedding"), F.col("embedding")).alias("s"))
+        emb.select(dot(F.col("embedding"), F.col("embedding")).alias("s"))
         .filter((F.col("s") < 0.999) | (F.col("s") > 1.001))
         .count()
     )
@@ -101,7 +100,7 @@ def test_side_broadcast_cached_per_session_corpus(spark, tmp_path):
 
     import pyarrow.parquet as pq
 
-    from engine.llmops import _side_broadcast
+    from engine.simsearch import _side_broadcast
     from engine.session import _STORE
     from engine.tables import load
 
@@ -145,7 +144,7 @@ def test_broadcast_side_keeps_double_source_precision(spark, tmp_path):
     pyarrow-direct path on a double-written copy of the corpus."""
     from pyspark.sql import functions as F
 
-    from engine.llmops import _broadcast_side
+    from engine.simsearch import _broadcast_side
     from engine.tables import load
 
     base = load(spark, SF_DIR, "embeddings")
@@ -231,7 +230,7 @@ def test_sim_topk_pairs_one_task_at_bench_size(spark, tmp_path):
 def test_triangle_bounds_balance_pairs(n, width):
     """Bounds cover [0, n), are monotone, and each block's pair count is
     within one row's pairs (n - 1) of an equal share."""
-    from engine.llmops import _triangle_bounds
+    from engine.simsearch import _triangle_bounds
 
     b = _triangle_bounds(n, width)
     assert len(b) == width + 1 and b[0] == 0 and b[-1] == n
@@ -277,7 +276,7 @@ def test_triangle_kernel_many_blocks_and_tiles_match_oracle(
     import duckdb
     import numpy as np
 
-    import engine.llmops as llmops
+    import engine.simsearch as simsearch
     from engine.registry import collect
     from tests.conftest import assert_frames_match
 
@@ -294,9 +293,9 @@ def test_triangle_kernel_many_blocks_and_tiles_match_oracle(
     sf = _write_embeddings(tmp_path / corpus, ids, m, order)
 
     cells = 64
-    monkeypatch.setattr(llmops, "_PAIRS_PER_TASK", 1)
-    monkeypatch.setattr(llmops, "_TILE_CELLS", cells)
-    assert llmops._pair_width(spark, n) > 1  # several blocks
+    monkeypatch.setattr(simsearch, "_PAIRS_PER_TASK", 1)
+    monkeypatch.setattr(simsearch, "_TILE_CELLS", cells)
+    assert simsearch._pair_width(spark, n) > 1  # several blocks
     first_tile_rows = cells // n or 1
     # the tie group's rows straddle many tiles, not one
     assert max(ties) - min(ties) > 10 * first_tile_rows
@@ -353,7 +352,7 @@ def test_row_max_floor_never_above_flat_floor(kind):
     largest row maxima are k distinct cells."""
     import numpy as np
 
-    from engine.llmops import _topk_floor
+    from engine.simsearch import _topk_floor
 
     rng = np.random.default_rng(7)
     for _ in range(500):
@@ -368,7 +367,7 @@ def _kernel_table(ids, m, tile_cells, floor, k):
 
     import pyarrow as pa
 
-    from engine.llmops import _topk_keep, _triangle_bounds, _triangle_kernel
+    from engine.simsearch import _topk_keep, _triangle_bounds, _triangle_kernel
 
     width = 3
     blocks = [pa.RecordBatch.from_pydict({"id": pa.array(range(width), pa.int64())})]
@@ -395,7 +394,7 @@ def test_row_max_floor_kernel_output_identical(kind, tile_cells):
     of the triangle."""
     import numpy as np
 
-    from engine.llmops import _topk_floor
+    from engine.simsearch import _topk_floor
 
     rng = np.random.default_rng(3)
     for _ in range(5):

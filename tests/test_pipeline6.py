@@ -207,7 +207,7 @@ def test_refresh_matches_reference_algebra_across_splits(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from engine.llmops import minhash_near_pairs
+    from engine.dedup import minhash_near_pairs
     from engine.pipeline6 import build_refresh_index, refresh_against_index
     from engine.tables import load
 
@@ -332,7 +332,7 @@ def test_refresh_index_append_loop(spark, tmp_path):
     # The manifest aggregates per source; reconstruct A's doc-level
     # accepted set independently (same set algebra as the cross-split
     # reference test) to know exactly which docs to append.
-    from engine.llmops import minhash_near_pairs
+    from engine.dedup import minhash_near_pairs
 
     pairs = [
         (r["a_id"], r["b_id"])

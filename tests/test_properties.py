@@ -216,7 +216,7 @@ def test_length_band_pairs_match_brute_force(spark):
     import pyspark.sql.functions as F
 
     from engine.tables import load
-    from engine.trainext import length_band_candidate_pairs
+    from engine.dedup import length_band_candidate_pairs
 
     vocab = (
         load(spark, SF_DIR, "part")

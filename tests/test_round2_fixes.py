@@ -107,13 +107,13 @@ def test_broadcast_side_gate_refuses_oversize(spark, monkeypatch):
     loudly (pointing at the IVF path), not collect unbounded data."""
     import pytest
 
-    import engine.llmops as llmops
+    import engine.simsearch as simsearch
     from engine.tables import load
 
-    monkeypatch.setattr(llmops, "_MAX_BROADCAST_VECTORS", 10)
+    monkeypatch.setattr(simsearch, "_MAX_BROADCAST_VECTORS", 10)
     emb = load(spark, SF_DIR, "embeddings")
     with pytest.raises(RuntimeError, match="IVF"):
-        llmops._broadcast_side(spark, SF_DIR, emb)
+        simsearch._broadcast_side(spark, SF_DIR, emb)
 
 
 def test_lit_table_escapes_backslash_and_rejects_nonfinite(spark):

@@ -177,8 +177,8 @@ def test_derived_stream_parts_scales_with_source(spark):
     constant 4 — same value at the sf0.1 calibration point (the measured
     knee), floor of 2 below it, growing with the corpus above it, and
     ceiling-clamped by the session's parallelism so the derivation never
-    out-scales the cluster. SPARK_GRAFT_STREAM_PARTS (applied in
-    run_stream, not here) still wins over every derived value."""
+    out-scales the cluster. A caller's ``parts`` (applied in run_stream,
+    not here) still wins over every derived value."""
     from engine.streaming import (
         _STREAM_ROWS_PER_INSTANCE,
         _derived_stream_parts,

@@ -11,7 +11,7 @@ from tests.conftest import SF_DIR, SF_DIR_MID
 
 
 def _exact_topk_pairs(spark, sf_dir, k=10):
-    from engine.llmops import sim_topk_pairs
+    from engine.simsearch import sim_topk_pairs
 
     return {
         (r["a_id"], r["b_id"])
@@ -24,7 +24,7 @@ def test_rp_lsh_recall(spark, sf_dir):
     """Multi-probe RP-LSH must recover >= 80% of the exact top-10 pairs at
     both the unit SF and the driver's verify SF (mirrors the IVF recall
     bound VERDICT r01 item 6 asked for)."""
-    from engine.vecops import sim_ann_rp_lsh
+    from engine.simsearch import sim_ann_rp_lsh
 
     exact = _exact_topk_pairs(spark, sf_dir)
     approx = {(r["a_id"], r["b_id"]) for r in sim_ann_rp_lsh(spark, sf_dir).collect()}
@@ -38,11 +38,11 @@ def test_rp_lsh_no_broadcast_dependency(spark, monkeypatch):
     corpus and prove the key still runs and still hits the recall floor.
     (sim_topk_pairs, which legitimately uses the broadcast side, computes
     the exact reference BEFORE the gate is zeroed.)"""
-    import engine.llmops as llmops
-    from engine.vecops import sim_ann_rp_lsh
+    import engine.simsearch as simsearch
+    from engine.simsearch import sim_ann_rp_lsh
 
     exact = _exact_topk_pairs(spark, SF_DIR)
-    monkeypatch.setattr(llmops, "_MAX_BROADCAST_VECTORS", 0)
+    monkeypatch.setattr(simsearch, "_MAX_BROADCAST_VECTORS", 0)
     approx = {
         (r["a_id"], r["b_id"])
         for r in sim_ann_rp_lsh.__wrapped__(spark, SF_DIR).collect()
@@ -152,14 +152,14 @@ def test_rp_lsh_dup_collapse_on_scale_verify_path(spark, tmp_path, monkeypatch):
     import numpy as np
     from pyspark.sql import functions as F
 
-    import engine.llmops as llmops
+    import engine.simsearch as simsearch
     from engine.registry import QUERIES
 
     base = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     dup = base.unionByName(base.withColumn("vec_id", F.col("vec_id") + 1_000_000))
     dup.write.parquet(str(tmp_path / "embeddings.parquet"))
 
-    monkeypatch.setattr(llmops, "_MAX_BROADCAST_VECTORS", 0)
+    monkeypatch.setattr(simsearch, "_MAX_BROADCAST_VECTORS", 0)
     res = QUERIES["sim_ann_rp_lsh"].__wrapped__(spark, str(tmp_path)).collect()
     got = {(r["a_id"], r["b_id"]) for r in res}
     assert len(got) == 10
