@@ -3,13 +3,16 @@
 - exact: text-prefix and key-latest survivors, cross-source fingerprints,
   paragraph-chunk duplication and canonical-hash vector duplicates;
 - MinHash-LSH near-dup over 5-char shingles: signatures, 16 bands x r=2,
-  bucket-capped candidates, two-stage exact verify. pipeline3 and
-  pipeline6 run the same kernel on their own relations;
+  bucket-capped candidates, two-stage exact verify. The dedup capstones
+  in engine.pipeline run the same kernel on their own relations;
 - oracle-exact MinHash signatures and SimHash over the engine-agnostic
   polynomial hash;
 - word-3-gram Jaccard via the inverted-index count join;
 - fuzzy vocabulary dedup: lossless length-band levenshtein pairs and their
   min-label connected components;
+- near-dup pairs to components: component_losers, the one keeper rule of
+  the dedup capstones (driver union-find under a pair cap, the min-label
+  loop past it);
 - embedding near-dup: the cosine threshold over engine.simsearch's pair
   kernel, and SemDeDup over the shared k-means step (engine.graphops).
 
@@ -390,7 +393,7 @@ def dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # MinHash-LSH kernel parameters, shared by the one-shot pair kernel below
-# and the persisted band index (engine.pipeline6): 16 bands x r=2 over 32
+# and the persisted band index (engine.pipeline): 16 bands x r=2 over 32
 # permutations mod p = 2^31-1 (so (a*h+b) % p never overflows int64), with
 # band buckets larger than 50 docs dropped as non-discriminative. A stored
 # index and a fresh signature pass MUST agree on all three or cross-side
@@ -564,8 +567,8 @@ def verify_near_pairs(
     survivors only.
 
     Any extra columns on ``cand`` beyond (a_id, b_id) ride through to the
-    output — pipeline6 tags candidates by gate and verifies both gates'
-    candidates in ONE tree.
+    output — pipeline_incremental_refresh tags candidates by gate and
+    verifies both gates' candidates in ONE tree.
 
     ``detail=True`` additionally returns the exact per-pair evidence the
     verify stage computes anyway — (n_inter, n_a, n_b) shingle-set
@@ -1075,30 +1078,44 @@ def dedup_fuzzy_edit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Past this many pairs, component_losers never collects its pair list and
+# labels components with the distributed min-label loop instead of a
+# driver union-find. A typical near-dup graph is KBs, but a pathological
+# batch (a recrawl of a mirror site) can yield O(batch²) pairs that would
+# OOM the driver if collected.
+_UNION_FIND_MAX_PAIRS = 100_000
+
+# Round bound of the min-label loop: far above any real near-dup component
+# diameter, so reaching it is a data anomaly worth a human look.
+_MAX_LABEL_ROUNDS = 32
+
+
 def min_label_components(
     edges: DataFrame,
     nodes: DataFrame,
     *,
     broadcast_edges: bool = False,
-    max_rounds: int = 32,
 ) -> DataFrame:
     """Pregel-style min-label propagation: connected components over
     ``edges`` (columns src, dst — one row per directed edge; callers pass
     the symmetrized graph) for ``nodes`` (column node), returning
-    (node, label) with label = min node id in the component.
+    (node, label) with label = min node id in the component under Spark's
+    ascending order (ids may be any orderable type, structs included).
 
-    Shared kernel for dedup_cluster_components and the large-batch path of
-    pipeline_incremental_refresh. Rounds = graph diameter; each round is
-    one shuffle on node id and the convergence probe collects ONE scalar
-    (sum of labels — monotonically decreasing integers, so an unchanged
-    sum ⇔ fixpoint), never row data. ``broadcast_edges`` is for callers
+    Shared kernel for dedup_cluster_components and the large path of
+    component_losers. Rounds = graph diameter; each round is one shuffle
+    on node id, and its select also flags the rows whose label fell. The
+    convergence probe counts those flags over the checkpointed labels —
+    ONE scalar per round, never row data. Labels never rise, so zero
+    changes ⇔ fixpoint, and the count is bounded by the node count. A
+    graph that has not converged within _MAX_LABEL_ROUNDS raises instead
+    of returning unconverged labels. ``broadcast_edges`` is for callers
     whose edge list is known tiny (post-aggregation vocab graphs); the
     default shuffles the join, which is the 100 TB-safe shape."""
     if broadcast_edges:
         edges = F.broadcast(edges.cache())
     labels = nodes.select(F.col("node"), F.col("node").alias("label"))
-    prev_sum = None
-    for _ in range(max_rounds):  # hard bound >> any real diameter
+    for _ in range(_MAX_LABEL_ROUNDS):
         msgs = (
             edges.join(labels, edges.src == labels.node)
             .groupBy(F.col("dst").alias("node"))
@@ -1111,14 +1128,96 @@ def min_label_components(
                 F.least(F.col("label"), F.coalesce("nbr_label", F.col("label"))).alias(
                     "label"
                 ),
+                (F.col("nbr_label") < F.col("label")).alias("changed"),
             )
             .localCheckpoint()  # truncate the growing iterative lineage
         )
-        cur_sum = labels.agg(F.sum("label")).first()[0]
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    return labels
+        if labels.agg(F.count_if("changed")).first()[0] == 0:
+            return labels.select("node", "label")
+    raise RuntimeError(
+        "min_label_components: min-label loop did not reach a fixpoint "
+        f"within {_MAX_LABEL_ROUNDS} rounds (component diameter > "
+        f"{_MAX_LABEL_ROUNDS}?); refusing to return unconverged component "
+        "labels"
+    )
+
+
+def _nf_key(t):
+    """Total order on a (possibly NULL-field) struct tuple that mirrors
+    Spark's ascending struct comparison: field by field, NULL first."""
+    return tuple((v is not None, v) for v in t)
+
+
+def component_losers(
+    spark: SparkSession, pairs: DataFrame, n_pairs_bound: int | None = None
+) -> DataFrame:
+    """Connected components over near-dup ``pairs`` (columns a_id, b_id);
+    returns the LOSERS — every pair participant except its component's
+    minimum under Spark's ascending order — as one column ``node`` typed
+    like a_id. Nodes absent from every pair are singletons and keep
+    themselves.
+
+    Up to _UNION_FIND_MAX_PAIRS pairs, ONE bounded collect feeds a
+    path-halving driver union-find: the distributed loop costs a join,
+    a checkpoint and a probe job per round, pure round-trip latency for a
+    pair list that is KBs. ``n_pairs_bound`` is a caller-provided UPPER
+    bound on the pair count (e.g. the count of an already-checkpointed
+    superset), which lets the small case run one plain collect; without
+    it the guard is limit(cap+1).collect(), so driver memory stays bounded
+    by construction and an under-cap result is provably the complete set
+    (a separate count() doubled pipeline_incremental_refresh at sf0.1).
+    Past the cap the pairs are never fully collected: min_label_components
+    labels them in O(diameter) shuffles, with the same keeper by
+    construction."""
+    import pyspark.sql.types as T
+
+    id_type = pairs.schema["a_id"].dataType
+    rows = None
+    if n_pairs_bound is None:
+        rows = pairs.limit(_UNION_FIND_MAX_PAIRS + 1).collect()
+    elif n_pairs_bound <= _UNION_FIND_MAX_PAIRS:
+        rows = pairs.collect()
+    if rows is not None and len(rows) <= _UNION_FIND_MAX_PAIRS:
+        if isinstance(id_type, T.StructType):
+            ident, key = tuple, _nf_key
+        else:
+            ident = key = lambda x: x
+        parent: dict = {}
+
+        def find(x):
+            while parent[x] != x:
+                parent[x] = parent[parent[x]]
+                x = parent[x]
+            return x
+
+        for r in rows:
+            a, b = ident(r["a_id"]), ident(r["b_id"])
+            parent.setdefault(a, a)
+            parent.setdefault(b, b)
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                lo, hi = (ra, rb) if key(ra) <= key(rb) else (rb, ra)
+                parent[hi] = lo
+        losers = [(x,) for x in parent if find(x) != x]
+        schema = T.StructType([T.StructField("node", id_type)])
+        return spark.createDataFrame(losers, schema)
+
+    # Truncate the caller's lineage before iterating: min_label_components
+    # re-reads its edge relation EVERY round, and a pair list's plan can
+    # hang a whole gate subtree under it — at a 25x-batch refresh
+    # rehearsal the uncheckpointed recompute piled up to a driver OOM.
+    # The pair list itself is row-tiny.
+    pairs = pairs.localCheckpoint()
+    edges = pairs.select(
+        F.col("a_id").alias("src"), F.col("b_id").alias("dst")
+    ).union(pairs.select(F.col("b_id").alias("src"), F.col("a_id").alias("dst")))
+    nodes = (
+        pairs.select(F.col("a_id").alias("node"))
+        .union(pairs.select(F.col("b_id").alias("node")))
+        .distinct()
+    )
+    labels = min_label_components(edges, nodes)
+    return labels.filter(F.col("node") != F.col("label")).select("node")
 
 
 @query(
@@ -1155,8 +1254,8 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL, so components run as Pregel-style min-label propagation — each
     round joins labels to edges, takes min(neighbor label, own label), and
     stops when a round changes nothing. Rounds = graph diameter (<= 5 here);
-    the convergence test collects ONE scalar per round (sum of labels — a
-    monotonically decreasing integer, so unchanged sum ⇔ fixpoint), never
+    the convergence test collects ONE scalar per round (the count of labels
+    that fell — labels never rise, so zero changes ⇔ fixpoint), never
     row data. At 100 TB each round is one shuffle on node id; the oracle
     side is DuckDB's WITH RECURSIVE reachability closure — same fixpoint,
     declared instead of iterated."""

@@ -187,112 +187,3 @@ def text_cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(pmi, 6).alias("pmi"),
         )
     )
-
-
-@query(
-    "pipeline_rag_index",
-    oracle="""
-    WITH d AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-    ch AS (SELECT doc_id, k AS chunk_idx,
-                  array_to_string(toks[(k-1)*10+1:k*10], ' ') AS chunk
-           FROM d, unnest(range(1, 1 + len(toks) // 10)) AS u(k)),
-    dd AS (SELECT doc_id, chunk_idx, chunk FROM (
-             SELECT doc_id, chunk_idx, chunk,
-                    row_number() OVER (PARTITION BY md5(chunk)
-                                       ORDER BY doc_id, chunk_idx) AS rn
-             FROM ch) WHERE rn = 1),
-    st AS (SELECT CAST(count(*) AS DOUBLE) AS n,
-                  CAST(sum(CASE WHEN list_contains(string_split(chunk, ' '), 'spark')
-                           THEN 1 ELSE 0 END) AS DOUBLE) AS df1,
-                  CAST(sum(CASE WHEN list_contains(string_split(chunk, ' '), 'join')
-                           THEN 1 ELSE 0 END) AS DOUBLE) AS df2,
-                  CAST(sum(CASE WHEN list_contains(string_split(chunk, ' '), 'fast')
-                           THEN 1 ELSE 0 END) AS DOUBLE) AS df3
-           FROM dd),
-    sc AS (SELECT doc_id, chunk_idx,
-             CAST(len(list_filter(string_split(chunk, ' '), x -> x = 'spark')) AS DOUBLE)
-               * ln((SELECT n FROM st) / ((SELECT df1 FROM st) + 1.0))
-             + CAST(len(list_filter(string_split(chunk, ' '), x -> x = 'join')) AS DOUBLE)
-               * ln((SELECT n FROM st) / ((SELECT df2 FROM st) + 1.0))
-             + CAST(len(list_filter(string_split(chunk, ' '), x -> x = 'fast')) AS DOUBLE)
-               * ln((SELECT n FROM st) / ((SELECT df3 FROM st) + 1.0))
-               AS score
-           FROM dd)
-    SELECT doc_id, chunk_idx, round(score, 6) AS score
-    FROM sc WHERE score > 0
-    ORDER BY round(score, 6) DESC, doc_id, chunk_idx LIMIT 50
-    """,
-)
-def pipeline_rag_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CAPSTONE #2 — the RAG indexing pipeline as ONE composed plan:
-    (1) cut documents into 10-token chunks, (2) exact-dedup chunks with a
-    deterministic first-occurrence keeper (duplicated boilerplate must
-    not dominate retrieval), (3) tf-idf score every surviving chunk
-    against the fixed query {spark, join, fast} with idf from the DEDUPED
-    chunk corpus, (4) emit the top-50 chunk references
-    (doc_id, chunk_idx). This is the retrieval sibling of
-    pipeline_corpus_datasheet: chunk → dedup → score → select, stages
-    chained as views over one lazy plan so Catalyst fuses them.
-
-    Determinism: per-term contributions sum in explicit fixed order; the
-    score rounds to 6 dp before the (score DESC, doc_id, chunk_idx) cut.
-
-    100 TB: chunking is a map-side explode; the dedup is one shuffle on
-    chunk hash with a WindowGroupLimit-class rn=1 cut; corpus stats
-    collapse to a one-row broadcast; scoring is a map; the final top-50
-    is a TakeOrdered. The real index sink would add the inverted term
-    list (text_tfidf's explode→agg shape) and the chunk embedding job
-    (sim_ann_ivf's assignment shape) as parallel branches off stage 2."""
-    terms = ("spark", "join", "fast")
-    d = load(spark, sf_dir, "documents").select(
-        "doc_id", F.split("text", " ").alias("toks")
-    )
-    n_chunks = F.floor(F.size("toks") / 10).cast("int")
-    ch = d.select(
-        "doc_id",
-        F.posexplode(
-            F.when(
-                n_chunks >= 1,
-                F.transform(
-                    F.sequence(F.lit(1), n_chunks),
-                    lambda k: F.concat_ws(
-                        " ", F.slice("toks", (k - 1) * 10 + 1, 10)
-                    ),
-                ),
-            ).otherwise(F.array().cast("array<string>"))
-        ).alias("pos", "chunk"),
-    ).select("doc_id", (F.col("pos") + 1).alias("chunk_idx"), "chunk")
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy(F.md5("chunk")).orderBy("doc_id", "chunk_idx")
-    dd = (
-        ch.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("doc_id", "chunk_idx", F.split("chunk", " ").alias("ctoks"))
-    )
-    st = dd.agg(
-        F.count("*").cast("double").alias("n"),
-        *[
-            F.sum(
-                F.when(F.array_contains("ctoks", t), 1).otherwise(0)
-            ).cast("double").alias(f"df{i + 1}")
-            for i, t in enumerate(terms)
-        ],
-    )
-    j = dd.join(F.broadcast(st))
-
-    def _tf(term: str):
-        return F.size(F.filter("ctoks", lambda x: x == F.lit(term))).cast(
-            "double"
-        )
-
-    score = None
-    for i, t in enumerate(terms):
-        part = _tf(t) * F.log(F.col("n") / (F.col(f"df{i + 1}") + 1.0))
-        score = part if score is None else score + part
-    return (
-        j.select("doc_id", "chunk_idx", F.round(score, 6).alias("score"))
-        .filter(F.col("score") > 0)
-        .orderBy(F.col("score").desc(), "doc_id", "chunk_idx")
-        .limit(50)
-    )

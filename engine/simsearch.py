@@ -7,8 +7,8 @@
   through triangle_pairs, the one entry point other modules call;
 - probe-vector scoring with the JVM dot product: kNN, NDCG@5 evaluation
   and hybrid lexical+vector rank fusion;
-- ANN: the IVF-bucketed search (ivf_assign is shared with the stored
-  index in engine.pipeline4) and random-hyperplane LSH, with the
+- ANN: the IVF-bucketed search (ivf_assign and ivf_nlist are shared with
+  the stored index in engine.pipeline) and random-hyperplane LSH, with the
   exact-dup collapse of both (clone_topk).
 
 Scale notes (100 TB): broadcasting one full side stops scaling past ~1M
@@ -22,6 +22,7 @@ everywhere.
 
 from __future__ import annotations
 
+import math
 import os
 from functools import partial
 
@@ -726,6 +727,23 @@ def _cluster_topk(k: int, key, pdf):
     )
 
 
+def ivf_nlist(_n: int | None) -> int:
+    """IVF coarse-quantizer size for an ``_n``-row corpus (None: no footer
+    count, the floor). It scales ~sqrt(n): a fixed nlist=8 measured scaling
+    exponent 1.32 in the 5× rehearsal — Σ_c |c|² is quadratic in n when the
+    cluster count stands still. nlist stays exactly 8 at every driver/test
+    SF (n=50/500 → the max() floor binds), so oracle results and the
+    pinned recall floor are unchanged; past that, cluster population
+    n·nprobe/nlist tracks sqrt(n), keeping per-cluster dense blocks
+    bounded. Calibration: sqrt(n/32) releases the floor just past the
+    bench corpus (n=2000 -> 8, the measured-recall operating point; 10k ->
+    18; 1M -> 177), so every tested SF keeps its exact plan and growth pays
+    the extra Python cluster-groups only when cluster sizes would otherwise
+    grow past ~750 postings. sim_ann_ivf and pipeline_ann_index_build both
+    size their index with it."""
+    return max(8, int(round(math.sqrt(_n / 32)))) if _n is not None else 8
+
+
 @query(
     "sim_ann_ivf",
     # FULL oracle: centroid assignment is not SQL-expressible, but the
@@ -765,24 +783,11 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exact-dup collapse (engine.tables.clone_groups, members truncated to
     k+1): taken whenever embeddings duplicate; identical vectors pair at
     sim = ‖v‖² (clone_topk)."""
-    import math
-
     import numpy as np
 
     k = 10
     nprobe = 3
-    # Coarse-quantizer size scales ~sqrt(n): a fixed nlist=8 measured
-    # scaling exponent 1.32 in the 5× rehearsal — Σ_c |c|² is quadratic in
-    # n when the cluster count stands still. nlist stays exactly 8 at every
-    # driver/test SF (n=50/500 → the max() floor binds), so oracle results
-    # and the pinned recall floor are unchanged; past that, cluster
-    # population n·nprobe/nlist tracks sqrt(n), keeping per-cluster dense
-    # blocks bounded. Footer-only count; non-parquet sources fall back to
-    # the floor. Calibration: sqrt(n/32) releases the floor just past the
-    # bench corpus (n=2000 -> 8, the measured-recall operating point;
-    # 10k -> 18; 1M -> 177), so every tested SF keeps its exact plan and
-    # growth pays the extra Python cluster-groups only when cluster sizes
-    # would otherwise grow past ~750 postings.
+    # Footer-only count; non-parquet sources fall back to the nlist floor.
     from engine.tables import all_rows_distinct, clone_groups, parquet_num_rows, vectors
 
     path = f"{sf_dir}/embeddings.parquet"
@@ -796,7 +801,7 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         # nlist sizes from the relation actually indexed (the reps); the
         # count doubles as grp's materialization for the later consumers.
         _n = grp.count()
-    nlist = max(8, int(round(math.sqrt(_n / 32)))) if _n is not None else 8
+    nlist = ivf_nlist(_n)
     cents = (
         reps.orderBy("vec_id").limit(nlist).select("embedding").toPandas()
     )

@@ -18,7 +18,7 @@ SF_DIR = "/root/testdata/sf0.1"
 def main() -> int:
     from pyspark.sql import functions as F
 
-    import engine.pipeline6 as p6
+    import engine.pipeline as p6
     from engine.session import get_spark
     from engine.tables import load
 

@@ -28,9 +28,10 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     tune(spark)
 
-    from engine import pipeline6 as p6
+    from engine import pipeline as p6
     from engine.dedup import (
         capped_lsh_band_rows,
+        component_losers,
         minhash_signatures,
         verify_near_pairs,
     )
@@ -109,15 +110,19 @@ def main() -> int:
         ).join(new2_ids, within_pairs["b_id"] == new2_ids["doc_id"], "left_semi")
         npairs = pairs.count()
         lap(f"pairs.count ({npairs})")
-        within_drop = p6._within_new_losers(
+        within_drop = component_losers(
             spark, nn.select("a_id", "b_id"), n_pairs_bound=npairs
         )
-        lap("_within_new_losers")
+        lap("component_losers")
         tag_df = (
             new.select("doc_id", "source")
             .join(ex_drop.withColumn("g1", F.lit(1)), "doc_id", "left")
             .join(near_old_drop.withColumn("g2", F.lit(1)), "doc_id", "left")
-            .join(within_drop.withColumn("g3", F.lit(1)), "doc_id", "left")
+            .join(
+                within_drop.select(F.col("node").alias("doc_id"), F.lit(1).alias("g3")),
+                "doc_id",
+                "left",
+            )
         )
         dec = tag_df.select(
             "doc_id",

@@ -64,7 +64,7 @@ def aging(
 ) -> int:
     from pyspark.sql import functions as F
 
-    import engine.pipeline6 as p6
+    import engine.pipeline as p6
     from engine.session import get_spark
     from engine.tables import load
 
@@ -174,7 +174,7 @@ def main() -> int:
     reps = [int(a) for a in sys.argv[1:]] or [1, 5, 25]
     from pyspark.sql import functions as F
 
-    from engine.pipeline6 import build_refresh_index, refresh_against_index
+    from engine.pipeline import build_refresh_index, refresh_against_index
     from engine.session import get_spark
     from engine.tables import load
 

@@ -77,7 +77,9 @@ def test_formulas_match_operator_source():
     source must contain the exact expressions these tests pin."""
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sim = open(os.path.join(root, "engine", "simsearch.py")).read()
-    p4 = open(os.path.join(root, "engine", "pipeline4.py")).read()
+    pipe = open(os.path.join(root, "engine", "pipeline.py")).read()
     assert "max(8, int(np.ceil(np.log2(max(n_reps / 8, 2)))))" in sim
     assert "max(8, int(round(math.sqrt(_n / 32))))" in sim
-    assert "int(round(math.sqrt(_n / 32)))" in p4
+    # one nlist rule, in simsearch.ivf_nlist, sizes both IVF indexes
+    assert "nlist = ivf_nlist(_n)" in sim
+    assert "nlist = ivf_nlist(" in pipe

@@ -159,6 +159,7 @@ FAMILY_MODULES = {
     "stream_": "engine.streaming",
     "dedup_": "engine.dedup",
     "sim_": "engine.simsearch",
+    "pipeline_": "engine.pipeline",
     **dict.fromkeys(
         ("udf_", "udaf_", "udtf_", "scan_python_", "sink_python_"), "engine.udfs"
     ),

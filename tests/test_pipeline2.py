@@ -1,4 +1,4 @@
-"""Named tests for capstone #3 (engine/pipeline2.py): stage monotonicity,
+"""Named tests for pipeline_pretrain_mix (engine/pipeline.py): stage monotonicity,
 mix-rate normalization, budget conservation, and eval exclusion."""
 
 from __future__ import annotations

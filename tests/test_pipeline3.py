@@ -1,8 +1,10 @@
-"""Named tests for engine/pipeline3.py (capstone #4, dedup cascade):
+"""Named tests for engine/pipeline.py (pipeline_dedup_cascade):
 stage monotonicity, exact-stage keeper identity, and near-stage agreement
 with an independent union-find over the pair kernel's output."""
 
 from __future__ import annotations
+
+import pytest
 
 from tests.conftest import SF_DIR
 
@@ -68,16 +70,16 @@ def test_cascade_stages_and_counts(spark):
     assert losers, "corpus is documented to contain planted near-dups"
 
 
-def test_component_losers_driver_vs_distributed_paths(spark):
-    """r14 optimization A/B: _component_losers' bounded driver union-find
-    must produce exactly the distributed min-label loop's loser set —
+def test_component_losers_driver_vs_distributed_paths(spark, monkeypatch):
+    """component_losers' bounded driver union-find must produce exactly
+    the distributed min-label loop's loser set —
     including the NULLS-FIRST struct keeper order (a NULL source beats a
     non-NULL one at equal doc_id) — on a multi-component graph with a
     chain (transitivity), an isolated pair, and a NULL-source node."""
     import pyspark.sql.functions as F
     import pyspark.sql.types as T
 
-    from engine import pipeline3 as p3
+    from engine import dedup
 
     kid_t = T.StructType(
         [
@@ -99,21 +101,41 @@ def test_component_losers_driver_vs_distributed_paths(spark):
         ],
         pair_t,
     )
-    fast = {
-        tuple(r["kid"])
-        for r in p3._component_losers(spark, pairs, kid_t).collect()
-    }
-    old_cap = p3._UNION_FIND_MAX_PAIRS
-    p3._UNION_FIND_MAX_PAIRS = 0  # force the distributed fallback
-    try:
-        slow = {
-            tuple(r["kid"])
-            for r in p3._component_losers(spark, pairs, kid_t).collect()
-        }
-    finally:
-        p3._UNION_FIND_MAX_PAIRS = old_cap
+    fast = {tuple(r["node"]) for r in dedup.component_losers(spark, pairs).collect()}
+    monkeypatch.setattr(dedup, "_UNION_FIND_MAX_PAIRS", 0)  # distributed path
+    slow = {tuple(r["node"]) for r in dedup.component_losers(spark, pairs).collect()}
     assert fast == slow == {
         (2, "b", 20),
         (3, None, 30),
         (5, "b", 51),
     }
+
+
+def test_min_label_components_exact_and_loud(spark, monkeypatch):
+    """The min-label loop stops on an exact change count, which cannot
+    overflow on large 64-bit ids (a sum of labels does), and a graph that
+    has not converged within the round bound raises instead of returning
+    unconverged labels."""
+    import pyspark.sql.functions as F
+
+    from engine import dedup
+
+    def chain(base, n):
+        nodes = spark.range(n).select((F.col("id") + F.lit(base)).alias("node"))
+        fwd = nodes.select(
+            F.col("node").alias("src"), (F.col("node") + 1).alias("dst")
+        ).filter(F.col("dst") < F.lit(base + n))
+        edges = fwd.union(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+        return edges, nodes
+
+    big = 2**62
+    labels = dedup.min_label_components(*chain(big, 3)).collect()
+    assert sorted((r["node"], r["label"]) for r in labels) == [
+        (big, big),
+        (big + 1, big),
+        (big + 2, big),
+    ]
+
+    monkeypatch.setattr(dedup, "_MAX_LABEL_ROUNDS", 5)
+    with pytest.raises(RuntimeError, match="did not reach a fixpoint"):
+        dedup.min_label_components(*chain(0, 40))

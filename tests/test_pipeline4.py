@@ -1,6 +1,6 @@
-"""Named tests for engine/pipeline4.py (capstone #5, ANN index
-lifecycle): recall floor vs exact search, index artifact shape, and the
-serve-side join strategy."""
+"""Named tests for engine/pipeline.py (pipeline_ann_index_build, ANN
+index lifecycle): recall floor vs exact search, index artifact shape, and
+the serve-side join strategy."""
 
 from __future__ import annotations
 
@@ -23,7 +23,7 @@ def test_ann_index_recall_and_shape(spark):
     by_q: dict[int, list] = {}
     for r in rows:
         by_q.setdefault(r["query_id"], []).append(r)
-    from engine.pipeline4 import _K, _QUERY_IDS
+    from engine.pipeline import _K, _QUERY_IDS
 
     assert set(by_q) == set(_QUERY_IDS)
     emb = {

@@ -1,4 +1,4 @@
-"""Named tests for engine/pipeline5.py (capstone #6, streaming serving):
+"""Named tests for engine/pipeline.py (pipeline_stream_serving):
 batch equivalence, quality-gate accounting, and multi-batch merge
 evidence."""
 

@@ -1,5 +1,5 @@
-"""Named tests for engine/pipeline6.py (capstone #7, incremental
-refresh): conservation, old-side immunity, and gate precedence."""
+"""Named tests for engine/pipeline.py (pipeline_incremental_refresh):
+conservation, old-side immunity, and gate precedence."""
 
 from __future__ import annotations
 
@@ -52,15 +52,15 @@ def test_incremental_refresh_accounting(spark):
     assert sum(r["n_accepted"] for r in rows) > total_dropped
 
 
-def test_within_new_losers_distributed_matches_union_find(spark):
-    """r06 hardening: a pathological 10k-pair batch must route through the
+def test_within_new_losers_distributed_matches_union_find(spark, monkeypatch):
+    """A pathological 10k-pair batch must route through component_losers'
     distributed Pregel path with keepers identical to the union-find path.
     Graph: 1000 chains of 10 nodes (9 edges each) + 1000 extra random
     intra-chain edges + a 100-node clique (4950 pairs) — 14,950 pairs,
     components with nontrivial diameter, min-id keeper per component."""
     from pyspark.sql import functions as F
 
-    from engine.pipeline6 import _UNION_FIND_MAX_PAIRS, _within_new_losers
+    from engine import dedup
 
     chain = spark.range(1000 * 9).select(
         (F.col("id") % F.lit(9) + (F.col("id") / 9).cast("long") * 10).alias("a_id"),
@@ -82,19 +82,16 @@ def test_within_new_losers_distributed_matches_union_find(spark):
     nn = chain.union(extra).union(clique).localCheckpoint()
     n_pairs = nn.count()
     assert n_pairs > 10_000  # genuinely a large batch
-    got_uf = sorted(
-        r["doc_id"] for r in _within_new_losers(spark, nn).collect()
-    )
+    # the default cap admits this batch, so the first call is the union-find
+    assert n_pairs < dedup._UNION_FIND_MAX_PAIRS
+    got_uf = sorted(r["node"] for r in dedup.component_losers(spark, nn).collect())
+    monkeypatch.setattr(dedup, "_UNION_FIND_MAX_PAIRS", 0)  # distributed path
     got_dist = sorted(
-        r["doc_id"]
-        for r in _within_new_losers(spark, nn, force_distributed=True).collect()
+        r["node"] for r in dedup.component_losers(spark, nn).collect()
     )
     assert got_uf == got_dist
     # ground truth: chains of 10 lose 9 of 10 per chain; clique loses 99
     assert len(got_dist) == 1000 * 9 + 99
-    # with the guard lowered the SAME call takes the distributed path —
-    # prove the threshold actually gates (monkeypatch-free: count check)
-    assert n_pairs < _UNION_FIND_MAX_PAIRS  # default path was union-find
 
 
 def test_refresh_reads_only_index_and_new_batch(spark, tmp_path):
@@ -106,7 +103,7 @@ def test_refresh_reads_only_index_and_new_batch(spark, tmp_path):
     the index base or the new-batch directory."""
     from pyspark.sql import functions as F
 
-    from engine.pipeline6 import build_refresh_index, refresh_against_index
+    from engine.pipeline import build_refresh_index, refresh_against_index
     from engine.tables import load
 
     d = load(spark, SF_DIR, "documents").select("doc_id", "source", "text")
@@ -159,7 +156,7 @@ def test_decisions_partition_batch_and_roll_up_to_manifest(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from engine.pipeline6 import (
+    from engine.pipeline import (
         build_refresh_index,
         refresh_against_index,
         refresh_decisions,
@@ -208,7 +205,7 @@ def test_refresh_matches_reference_algebra_across_splits(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from engine.dedup import minhash_near_pairs
-    from engine.pipeline6 import build_refresh_index, refresh_against_index
+    from engine.pipeline import build_refresh_index, refresh_against_index
     from engine.tables import load
 
     d = load(spark, SF_DIR, "documents").select("doc_id", "source", "text")
@@ -286,7 +283,7 @@ def test_refresh_shuffle_path_matches_broadcast_path(spark, tmp_path, monkeypatc
     manifest to be identical to the broadcast path's."""
     from pyspark.sql import functions as F
 
-    import engine.pipeline6 as p6
+    import engine.pipeline as p6
     from engine.tables import load
 
     d = load(spark, SF_DIR, "documents").select("doc_id", "source", "text")
@@ -317,7 +314,7 @@ def test_refresh_index_append_loop(spark, tmp_path):
     one a from-scratch rebuild over (old ∪ accepted-A) produces."""
     from pyspark.sql import functions as F
 
-    import engine.pipeline6 as p6
+    import engine.pipeline as p6
     from engine.tables import load
 
     d = load(spark, SF_DIR, "documents").select("doc_id", "source", "text")
@@ -407,13 +404,13 @@ def test_increment_artifacts_are_file_bounded(spark, tmp_path):
     tiny files per append) — the LSM small-file problem that dominates
     on object stores. Generation builds are corpus-sized and keep full
     parallelism, so only increments are bounded (rationale at the
-    constant, engine/pipeline6.py)."""
+    constant, engine/pipeline.py)."""
     import glob
     import os
 
     from pyspark.sql import functions as F
 
-    import engine.pipeline6 as p6
+    import engine.pipeline as p6
     from engine.tables import load
 
     d = load(spark, SF_DIR, "documents").select("doc_id", "source", "text")
@@ -440,7 +437,7 @@ def test_torn_append_is_invisible_to_readers(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    import engine.pipeline6 as p6
+    import engine.pipeline as p6
     from engine.tables import load
 
     d = load(spark, SF_DIR, "documents").select("doc_id", "source", "text")
@@ -475,7 +472,7 @@ def test_compaction_restores_fresh_build_exactly(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    import engine.pipeline6 as p6
+    import engine.pipeline as p6
     from engine.tables import load
 
     d = load(spark, SF_DIR, "documents").select("doc_id", "source", "text")
@@ -530,7 +527,7 @@ def test_manifest_survives_one_compaction(spark, tmp_path):
     FileNotFoundException."""
     from pyspark.sql import functions as F
 
-    import engine.pipeline6 as p6
+    import engine.pipeline as p6
     from engine.tables import load
 
     d = load(spark, SF_DIR, "documents").select("doc_id", "source", "text")
@@ -554,7 +551,7 @@ def test_append_warns_past_compaction_bound(spark, tmp_path, monkeypatch):
     import pytest as _pytest
     from pyspark.sql import functions as F
 
-    import engine.pipeline6 as p6
+    import engine.pipeline as p6
     from engine.tables import load
 
     d = load(spark, SF_DIR, "documents").select("doc_id", "source", "text")
@@ -576,7 +573,7 @@ def test_auto_compaction_bounds_increment_count(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    import engine.pipeline6 as p6
+    import engine.pipeline as p6
     from engine.tables import load
 
     d = load(spark, SF_DIR, "documents").select("doc_id", "source", "text")
@@ -614,7 +611,7 @@ def test_failed_index_build_leaves_no_tmp_dir(spark, monkeypatch):
     concurrent test/bench processes creating their own index dirs."""
     import pytest as _pytest
 
-    import engine.pipeline6 as p6
+    import engine.pipeline as p6
     import engine.tables as tables
     from engine.tmpdirs import scratch_dir as real_scratch
 
@@ -651,7 +648,7 @@ def test_torn_cache_entry_is_evicted_but_kept_on_disk(spark, monkeypatch, tmp_pa
     scratch_dir allocations, removed by the exit sweep."""
     import shutil as _shutil
 
-    import engine.pipeline6 as p6
+    import engine.pipeline as p6
     import engine.tables as tables
     from engine import tmpdirs
 
@@ -724,7 +721,7 @@ def test_append_waits_for_writer_lock(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    import engine.pipeline6 as p6
+    import engine.pipeline as p6
     from engine.tables import load
 
     d = load(spark, SF_DIR, "documents").select("doc_id", "source", "text")
@@ -760,7 +757,7 @@ def test_writer_lock_times_out_loudly(tmp_path):
     pins the lock primitive itself against a real second process)."""
     import pytest
 
-    import engine.pipeline6 as p6
+    import engine.pipeline as p6
 
     base = str(tmp_path / "idx")
     os.makedirs(base)
